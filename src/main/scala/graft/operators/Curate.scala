@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.sources.{Manifest, AnnIndex, InvertedIndex}
+import graft.sources.{Manifest, MetaTable, AnnIndex, InvertedIndex}
 import graft.functions.TextFunctions
 
 /** Incremental curation: the production form of the one-shot
@@ -90,6 +90,14 @@ object Curate {
     StructField("doc_id", LongType), StructField("source", StringType),
     StructField("quality", DoubleType)))
   private val ledgerSchema = StructType(Seq(StructField("fp", StringType)))
+  private val catalogSchema = StructType(Seq(
+    StructField("kind", StringType), StructField("segment", StringType),
+    StructField("n_rows", LongType)))
+  private val stateSchema = StructType(Seq(
+    StructField("source", StringType), StructField("used_tokens", LongType)))
+  private val metaSchema = StructType(Seq(
+    StructField("ann_version", LongType), StructField("inv_version", LongType),
+    StructField("batch_note", StringType)))
 
   private def subDir(spark: SparkSession, root: String, v: Long,
                      sub: String): String =
@@ -123,22 +131,22 @@ object Curate {
                         v: Option[Long] = None): Seq[(String, String, Long)] = {
     val ver = v.orElse(Manifest.currentVersion(spark, root))
       .getOrElse(throw new IllegalStateException(s"no curation commits at $root"))
-    spark.read.parquet(subDir(spark, root, ver, "catalog"))
-      .select("kind", "segment", "n_rows").collect()
+    MetaTable.read(spark, subDir(spark, root, ver, "catalog"), catalogSchema)
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._2).toSeq
+      .sortBy(_._2)
   }
 
   /** One multi-path scan of a kind's segments at version `v` (default
     * current); schema-correct empty frame when the kind has no
-    * segments yet. */
+    * segments yet. The segments were written with `schema`, so the
+    * scan takes it instead of inferring it. */
   private def readKind(spark: SparkSession, root: String, kind: String,
                        schema: StructType, v: Option[Long] = None)
       : DataFrame = {
     val paths = catalogOf(spark, root, v).filter(_._1 == kind).map(_._2)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.parquet(paths: _*)
+    else spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** The published curated corpus: (doc_id, source, quality). Pass a
@@ -155,22 +163,13 @@ object Curate {
   /** Batch note of a committed curation version, or "" for pre-note
     * versions. Replay detection keys on it. Current commits write the
     * note as a FILE in the version dir (one FS read, no Spark job —
-    * the check runs once per retained version per batch); the meta
-    * parquet fallback covers versions written before r13. */
+    * the check runs once per retained version per batch); the `meta`
+    * table fallback covers versions written before r13. */
   def noteOf(spark: SparkSession, roots: Roots, v: Long): String = {
-    val np = new org.apache.hadoop.fs.Path(
-      subDir(spark, roots.curation, v, "note"))
-    val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(np)) {
-      val in = fs.open(np)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } else {
-      val df = spark.read.parquet(subDir(spark, roots.curation, v, "meta"))
-      if (df.columns.contains("batch_note"))
-        df.select(col("batch_note")).head().getString(0)
-      else ""
-    }
+    val dir = Manifest.resolvedDataDir(spark, roots.curation, v)
+    MetaTable.readNote(spark, dir).getOrElse(
+      MetaTable.read(spark, s"$dir/meta", metaSchema).headOption
+        .flatMap(r => Option(r.getString(2))).getOrElse(""))
   }
 
   /** Ingest one batch. `batch` must carry (doc_id, source, text) with
@@ -277,9 +276,11 @@ object Curate {
     // `mixture_token_budget`: arrival order is the only order an
     // incremental cut can share with its from-scratch twin.
     import spark.implicits._
-    val priorState = priorVs.lastOption
-      .map(v => spark.read.parquet(subDir(spark, roots.curation, v, "state")))
-      .getOrElse(Seq.empty[(String, Long)].toDF("source", "used_tokens"))
+    val priorCounts: Seq[(String, Long)] = priorVs.lastOption.toSeq
+      .flatMap(v => MetaTable.read(spark,
+        subDir(spark, roots.curation, v, "state"), stateSchema))
+      .map(r => (r.getString(0), r.getLong(1)))
+    val priorState = priorCounts.toDF("source", "used_tokens")
     val scoredTok = scored
       .withColumn("n_tokens", TextFunctions.bpeTokenCount(col("text")).cast("long"))
     // Two-phase cumsum (r18 verdict item 2 — the plain per-source
@@ -360,13 +361,13 @@ object Curate {
 
     // new state: prior counters carried forward, batch's FULL
     // quality-passed token mass added (see object doc — rejected rows
-    // still advance the from-scratch cumsum)
+    // still advance the from-scratch cumsum), folded on the driver
+    // from one collect of the per-source batch sums
     val batchTokens = budgeted.groupBy(col("source"))
-      .agg(sum(col("n_tokens")).as("batch_tokens"))
-    val newState = priorState.join(batchTokens, Seq("source"), "full_outer")
-      .select(col("source"),
-        (coalesce(col("used_tokens"), lit(0L)) +
-          coalesce(col("batch_tokens"), lit(0L))).as("used_tokens"))
+      .agg(sum(col("n_tokens")))
+      .collect().map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+    val newState = (priorCounts ++ batchTokens).groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.map { case (src, n) => Row(src, n) }
 
     // ---- stage 4: corpus/ledger segments (immutable, outside the
     // version dirs — orphaned by a crash before the commit below,
@@ -467,13 +468,9 @@ object Curate {
     // meta are all metadata-sized; the data went to _segments/ above)
     val committed = prof("commit") {
       Manifest.commitWith(spark, roots.curation, retain) { dir =>
-        writeNote(spark, dir, note0)
-        (priorCatalog ++ newEntries)
-          .toDF("kind", "segment", "n_rows")
-          .coalesce(1).write.parquet(s"$dir/catalog")
-        newState.write.parquet(s"$dir/state")
-        Seq((annV, invV, note0)).toDF("ann_version", "inv_version", "batch_note")
-          .coalesce(1).write.parquet(s"$dir/meta")
+        MetaTable.writeNote(spark, dir, note0)
+        writeMeta(spark, dir, priorCatalog ++ newEntries, newState,
+          Row(annV, invV, note0))
       }
     }
     Manifest.clearStaging(spark, newEntries.map(_._2))
@@ -495,15 +492,16 @@ object Curate {
     committed
   }
 
-  /** The note lands INSIDE the staged dir, so it publishes (or
-    * vanishes) atomically with the CAS marker — same discipline as the
-    * index commit notes. */
-  private def writeNote(spark: SparkSession, dir: String,
-                        note: String): Unit = {
-    val np = new org.apache.hadoop.fs.Path(s"$dir/note")
-    val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(np, false)
-    try o.write(note.getBytes("UTF-8")) finally o.close()
+  /** A version's metadata tables, written from the driver into the
+    * staged dir: the segment catalog, the per-source state and the
+    * one-row index-pin meta. */
+  private def writeMeta(spark: SparkSession, dir: String,
+                        catalog: Seq[(String, String, Long)],
+                        state: Seq[Row], meta: Row): Unit = {
+    MetaTable.write(spark, s"$dir/catalog", catalogSchema,
+      catalog.map { case (k, seg, n) => Row(k, seg, n) })
+    MetaTable.write(spark, s"$dir/state", stateSchema, state)
+    MetaTable.write(spark, s"$dir/meta", metaSchema, Seq(meta))
   }
 
   /** OPTIMIZE for the curation log: fold all corpus segments into ONE
@@ -517,7 +515,6 @@ object Curate {
     * [[vacuumSegments]] collects them. */
   def compact(spark: SparkSession, roots: Roots, nFiles: Int = 4,
               retain: Int = 16): Long = {
-    import spark.implicits._
     val vs = Manifest.versions(spark, roots.curation)
     require(vs.nonEmpty, s"no curation commits at ${roots.curation}")
     val cur = vs.last
@@ -536,19 +533,15 @@ object Curate {
     }
     // state and index pins carry forward unchanged; the note marks the
     // version as a compaction (it can never collide with a batch note)
-    val state = spark.read.parquet(subDir(spark, roots.curation, cur, "state"))
-      .localCheckpoint()
-    val meta = spark.read.parquet(subDir(spark, roots.curation, cur, "meta"))
-      .select(col("ann_version"), col("inv_version"))
-      .withColumn("batch_note", lit(s"compaction-of-$nSegs"))
-      .localCheckpoint()
+    val state = MetaTable.read(spark,
+      subDir(spark, roots.curation, cur, "state"), stateSchema)
+    val pins = MetaTable.read(spark,
+      subDir(spark, roots.curation, cur, "meta"), metaSchema).head
+    val note = s"compaction-of-$nSegs"
     val v = Manifest.commitWith(spark, roots.curation, retain) { dir =>
-      writeNote(spark, dir, s"compaction-of-$nSegs")
-      (corpusSeg.toSeq ++ ledgerSeg.toSeq)
-        .toDF("kind", "segment", "n_rows")
-        .coalesce(1).write.parquet(s"$dir/catalog")
-      state.write.parquet(s"$dir/state")
-      meta.coalesce(1).write.parquet(s"$dir/meta")
+      MetaTable.writeNote(spark, dir, note)
+      writeMeta(spark, dir, corpusSeg.toSeq ++ ledgerSeg.toSeq, state,
+        Row(pins.get(0), pins.get(1), note))
     }
     Manifest.clearStaging(spark,
       (corpusSeg.toSeq ++ ledgerSeg.toSeq).map(_._2))

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Similarity}
 
 /** Persisted ANN index: build-once / probe-many IVF over the lake.
@@ -74,6 +75,17 @@ object AnnIndex {
   private def catalogPath(dataDir: String) = s"$dataDir/catalog"
   private def codebooksPath(dataDir: String) = s"$dataDir/codebooks"
 
+  private val CentroidsSchema = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("centroid", ArrayType(FloatType, containsNull = false))))
+  // `codes_segment` is absent from catalogs written before PQ codes
+  private val CatalogSchema = StructType(Seq(
+    StructField("segment", StringType), StructField("n_rows", LongType),
+    StructField("mean_cos", DoubleType), StructField("codes_segment", StringType)))
+  private val CodebooksSchema = StructType(Seq(
+    StructField("subspace", IntegerType), StructField("code", IntegerType),
+    StructField("codeword", ArrayType(FloatType, containsNull = false))))
+
   /** One immutable cell-clustered segment + its stats index (and,
     * with codebooks, the parallel PQ code table). */
   private def writeSegment(spark: SparkSession, root: String, df: DataFrame,
@@ -103,15 +115,16 @@ object AnnIndex {
     // domain, so boundaries need no sampling — repartitionByRange ran
     // the nearest-centroid assignment TWICE per segment (once for the
     // sampler, once for the write)
-    Layout.repartitionByKeyRange(assigned, col("cell"),
+    val laid = Layout.repartitionByKeyRange(assigned, col("cell"),
         centroids.size, math.max(nFiles, 1))
       .sortWithinPartitions("cell")
-      .write.mode("errorifexists")
-      .parquet(seg)
+    laid.write.mode("errorifexists").parquet(seg)
     StatsIndex.write(spark, seg, Seq("cell"))
     // stats come from the WRITTEN segment (one cheap agg over what was
-    // persisted, not a recompute of the assignment expression)
-    val row = spark.read.parquet(seg)
+    // persisted, not a recompute of the assignment expression), read
+    // with the written frame's schema (no inference job)
+    def written = spark.read.schema(laid.schema).parquet(seg)
+    val row = written
       .agg(count(lit(1)).as("n"), avg(col("ccos")).as("mc")).head()
     val codesSeg = codebooks match {
       case Some(cbs) =>
@@ -124,7 +137,7 @@ object AnnIndex {
         // enumerated cell layout — the range sampler re-ran pqEncode
         Layout.repartitionByKeyRange(
             Similarity.pqEncode(
-              spark.read.parquet(seg).select(col("cell"), col("vec_id"),
+              written.select(col("cell"), col("vec_id"),
                 col("embedding")),
               "embedding", cbs)
               .select(col("cell"), col("vec_id"), col("codes")),
@@ -157,27 +170,17 @@ object AnnIndex {
                                 retain: Int, note: String = "",
                                 maxRetries: Int = 0): Long =
     Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      // the note lands INSIDE the staged dir, so it publishes (or
-      // vanishes) atomically with the CAS marker — the anchor
-      // streaming ingestion dedupes micro-batch retries against
-      if (note.nonEmpty) {
-        val np = new org.apache.hadoop.fs.Path(s"$dir/note")
-        val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val o = fs.create(np, false)
-        try o.write(note.getBytes("UTF-8")) finally o.close()
-      }
-      spark.createDataFrame(centroids).toDF("cell", "centroid")
-        .coalesce(1).write.parquet(centroidsPath(dir))
-      spark.createDataFrame(
-          catalog().map(g => (g.path, g.nRows, g.meanCos, g.codesPath)))
-        .toDF("segment", "n_rows", "mean_cos", "codes_segment")
-        .coalesce(1).write.parquet(catalogPath(dir))
+      // the note is the anchor streaming ingestion dedupes
+      // micro-batch retries against
+      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
+      MetaTable.write(spark, centroidsPath(dir), CentroidsSchema,
+        centroids.map { case (cell, c) => Row(cell, c) })
+      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
+        catalog().map(g => Row(g.path, g.nRows, g.meanCos, g.codesPath)))
       codebooks.foreach { cbs =>
-        spark.createDataFrame(
-            for ((cb, sub) <- cbs.zipWithIndex; (code, word) <- cb)
-              yield (sub, code, word.toSeq))
-          .toDF("subspace", "code", "codeword")
-          .coalesce(1).write.parquet(codebooksPath(dir))
+        MetaTable.write(spark, codebooksPath(dir), CodebooksSchema,
+          for ((cb, sub) <- cbs.zipWithIndex; (code, word) <- cb)
+            yield Row(sub, code, word))
       }
     }
 
@@ -226,39 +229,26 @@ object AnnIndex {
     * cells × dim floats. */
   def centroidsOf(spark: SparkSession, root: String,
                   version: Option[Long] = None): Seq[(Int, Array[Float])] =
-    spark.read.parquet(centroidsPath(dataDirOf(spark, root, version)))
-      .collect()
+    MetaTable.read(spark, centroidsPath(dataDirOf(spark, root, version)),
+        CentroidsSchema)
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1).toSeq
+      .sortBy(_._1)
 
-  /** The segment catalog of `version`. */
+  /** The segment catalog of `version`, read on the driver. */
   def catalogOf(spark: SparkSession, root: String,
-                version: Option[Long] = None): Seq[Segment] = {
-    var df = spark.read.parquet(catalogPath(dataDirOf(spark, root, version)))
-    if (!df.columns.contains("codes_segment"))
-      df = df.withColumn("codes_segment", lit(""))
-    df.select("segment", "n_rows", "mean_cos", "codes_segment")
-      .collect()
+                version: Option[Long] = None): Seq[Segment] =
+    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
+        CatalogSchema)
       .map(r => Segment(r.getString(0), r.getLong(1), r.getDouble(2),
-        r.getString(3)))
-      .sortBy(_.path).toSeq
-  }
+        Option(r.getString(3)).getOrElse("")))
+      .sortBy(_.path)
 
   /** The commit note of `version` ("" when none) — set by writers
     * that need replay dedup (streaming appends tag versions with
     * their micro-batch id). */
   def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String = {
-    val np = new org.apache.hadoop.fs.Path(
-      s"${dataDirOf(spark, root, version)}/note")
-    val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(np)) ""
-    else {
-      val in = fs.open(np)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-  }
+             version: Option[Long] = None): String =
+    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
 
   /** The persisted PQ codebooks of `version`, if the index carries
     * them (always tiny: m × ksub × dim/m floats). */
@@ -270,7 +260,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
     else Some(
-      spark.read.parquet(p).collect()
+      MetaTable.read(spark, p, CodebooksSchema)
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq))
@@ -358,7 +348,8 @@ object AnnIndex {
     // (callers declare its bound in-plan), while cells ≈ √n can reach
     // tens of thousands on a production index — streaming centroids
     // against a broadcast probe set is the shape that survives that
-    val centroidDf = spark.read.parquet(centroidsPath(dataDir))
+    val centroidDf = spark.read.schema(CentroidsSchema)
+      .parquet(centroidsPath(dataDir))
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("centroid_cos").desc, col("cell"))
     val probes = broadcast(

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
 
 /** Persisted character-trigram index for corpus-scale LITERAL search —
@@ -134,6 +135,19 @@ object GrepIndex {
 
   private def catalogPath(dataDir: String) = s"$dataDir/catalog"
 
+  private val CatalogSchema = StructType(Seq(
+    StructField("postings", StringType), StructField("stats", StringType),
+    StructField("docs", StringType), StructField("n_docs", LongType)))
+
+  // the segment tables' schemas, fixed by writeSegment: reads pass
+  // them, so no scan starts a schema-inference job
+  private val PostingsSchema = StructType(Seq(
+    StructField("h", LongType), StructField("doc_id", LongType)))
+  private val StatsSchema = StructType(Seq(
+    StructField("h", LongType), StructField("df", LongType)))
+  private val DocsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
   private def dataDirOf(spark: SparkSession, root: String,
                         version: Option[Long]): String = {
     val v = version.orElse(Manifest.currentVersion(spark, root))
@@ -145,27 +159,18 @@ object GrepIndex {
     * need replay dedup (the streaming leg, [[
     * graft.streaming.GrepIndexStream]]). */
   def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String = {
-    val np = new org.apache.hadoop.fs.Path(
-      s"${dataDirOf(spark, root, version)}/note")
-    val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(np)) ""
-    else {
-      val in = fs.open(np)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-  }
+             version: Option[Long] = None): String =
+    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
 
-  /** The segment catalog of `version` (default: current). */
+  /** The segment catalog of `version` (default: current), read on the
+    * driver. */
   def catalogOf(spark: SparkSession, root: String,
                 version: Option[Long] = None): Seq[Segment] =
-    spark.read.parquet(catalogPath(dataDirOf(spark, root, version)))
-      .select("postings", "stats", "docs", "n_docs")
-      .collect()
+    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
+        CatalogSchema)
       .map(r => Segment(r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
-      .sortBy(_.postings).toSeq
+      .sortBy(_.postings)
 
   /** Trigram only `docs`, write one immutable segment triple. Only the
     * BATCH is read — nothing touches prior segments (the lifecycle
@@ -204,7 +209,7 @@ object GrepIndex {
     // data, never a recompute of the gram pass): postings carry one
     // row per (doc, gram), so count = the segment's df
     Layout.repartitionByHashRange(
-        spark.read.parquet(post)
+        spark.read.schema(PostingsSchema).parquet(post)
           .groupBy(col("h")).agg(count(lit(1)).as("df")),
         col("h"), math.max(nFiles, 1))
       .sortWithinPartitions("h")
@@ -253,18 +258,9 @@ object GrepIndex {
                                 catalog: () => Seq[Segment], retain: Int,
                                 note: String, maxRetries: Int = 0): Long =
     Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      // the note lands INSIDE the staged dir — published (or lost)
-      // atomically with the CAS marker
-      if (note.nonEmpty) {
-        val np = new org.apache.hadoop.fs.Path(s"$dir/note")
-        val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val o = fs.create(np, false)
-        try o.write(note.getBytes("UTF-8")) finally o.close()
-      }
-      spark.createDataFrame(catalog().map(g =>
-          (g.postings, g.stats, g.docs, g.nDocs)))
-        .toDF("postings", "stats", "docs", "n_docs")
-        .coalesce(1).write.parquet(catalogPath(dir))
+      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
+      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
+        catalog().map(g => Row(g.postings, g.stats, g.docs, g.nDocs)))
     }
 
   /** Commit with staged-segment lifecycle: clear the staging
@@ -346,19 +342,19 @@ object GrepIndex {
     val stat = s"$root/$SegmentsDir/stats-$token"
     val dcs = s"$root/$SegmentsDir/docs-$token"
     Layout.repartitionByHashRange(
-        spark.read.parquet(catalog.map(_.postings): _*),
+        spark.read.schema(PostingsSchema).parquet(catalog.map(_.postings): _*),
         col("h"), math.max(nFiles, 1))
       .sortWithinPartitions("h")
       .write.option("parquet.block.size", 4 * 1024 * 1024)
       .mode("overwrite").parquet(post)
     StatsIndex.write(spark, post, Seq("h"))
     Layout.repartitionByHashRange(
-        spark.read.parquet(catalog.map(_.stats): _*)
+        spark.read.schema(StatsSchema).parquet(catalog.map(_.stats): _*)
           .groupBy(col("h")).agg(sum(col("df")).as("df")),
         col("h"), math.max(nFiles, 1))
       .sortWithinPartitions("h")
       .write.mode("errorifexists").parquet(stat)
-    spark.read.parquet(catalog.map(_.docs): _*)
+    spark.read.schema(DocsSchema).parquet(catalog.map(_.docs): _*)
       .repartitionByRange(math.max(nFiles, 1), col("doc_id"))
       .sortWithinPartitions("doc_id")
       .write.option("parquet.block.size", 8 * 1024 * 1024)
@@ -489,7 +485,7 @@ object GrepIndex {
     val allHs = pg.map(_._2).distinct.toSeq
     // df of each probe trigram: exact integer sum across segment
     // stats (missing ⇒ 0: no doc holds it)
-    val dfOf = spark.read.parquet(segs.map(_.stats): _*)
+    val dfOf = spark.read.schema(StatsSchema).parquet(segs.map(_.stats): _*)
       .where(col("h").isin(allHs: _*))
       .groupBy(col("h")).agg(sum(col("df")).as("df"))
       .as[(Long, Long)].collect().toMap
@@ -503,7 +499,7 @@ object GrepIndex {
       else ranked.take(maxProbeGrams).map { case (h, _) => (pid, h) }
     }
     val nDocs = segs.map(_.nDocs).sum
-    def docsAll = spark.read.parquet(segs.map(_.docs): _*)
+    def docsAll = spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*)
     // per-pattern posting mass decides each pattern's leg; matchless
     // (df-0-settled) patterns belong to the index leg — the index
     // answered them without touching a posting
@@ -582,7 +578,7 @@ object GrepIndex {
     val total = pruned.map(_._2.size).sum
     spark.conf.set("spark.graft.grep.lastPruned", s"${kept.size}/$total")
     if (kept.isEmpty) return scanLeg
-    val candPlan = spark.read.parquet(kept: _*)
+    val candPlan = spark.read.schema(PostingsSchema).parquet(kept: _*)
       .where(col("h").isin(hs: _*)) // row-group skipping inside survivors
       .join(broadcast(pgDf), "h")
       .groupBy(col("doc_id"), col("pattern_id"))
@@ -666,11 +662,11 @@ object GrepIndex {
           keptD.size >= locFrac * totalD && ids.size >= minScatter
         if (scattered) {
           spark.conf.set("spark.graft.grep.lastFetchRoute", "scan")
-          spark.read.parquet(segs.map(_.docs): _*)
+          spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*)
             .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
         } else {
           spark.conf.set("spark.graft.grep.lastFetchRoute", "point")
-          spark.read.parquet(keptD: _*)
+          spark.read.schema(DocsSchema).parquet(keptD: _*)
             .where(col("doc_id").isInCollection(ids))
             .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
         }
@@ -678,7 +674,7 @@ object GrepIndex {
         // over the bound: recompute the candidate plan distributed
         spark.conf.set("spark.graft.grep.lastDocsPruned", "all")
         spark.conf.set("spark.graft.grep.lastFetchRoute", "scan")
-        spark.read.parquet(segs.map(_.docs): _*).join(candPlan, "doc_id")
+        spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*).join(candPlan, "doc_id")
       }
     docsSide
       .join(broadcast(pat), "pattern_id")
@@ -724,7 +720,7 @@ object GrepIndex {
     val segs = catalogOf(spark, root)
     require(segs.nonEmpty, s"no grep index at $root")
     val pat = patterns.toDF("pattern_id", "pattern")
-    def docsAll = spark.read.parquet(segs.map(_.docs): _*)
+    def docsAll = spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*)
     def emptyResult =
       pat.select(col("pattern_id"), lit(0L).as("doc_id")).limit(0)
     // ONE pass over the docs with every scan pattern as a LITERAL
@@ -770,7 +766,7 @@ object GrepIndex {
         GraftFunctions.charGramHashes(col("lit"), 3))).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
     val allHs = bg.map(_._2).distinct.toSeq
-    val dfOf = spark.read.parquet(segs.map(_.stats): _*)
+    val dfOf = spark.read.schema(StatsSchema).parquet(segs.map(_.stats): _*)
       .where(col("h").isin(allHs: _*))
       .groupBy(col("h")).agg(sum(col("df")).as("df"))
       .as[(Long, Long)].collect().toMap
@@ -816,7 +812,7 @@ object GrepIndex {
     spark.conf.set("spark.graft.grep.lastPruned",
       s"${kept.size}/${pruned.map(_._2.size).sum}")
     if (kept.isEmpty) return scanLeg(scanAll)
-    val candPlan = spark.read.parquet(kept: _*)
+    val candPlan = spark.read.schema(PostingsSchema).parquet(kept: _*)
       .where(col("h").isin(hs: _*))
       .join(broadcast(bgDf), "h")
       .groupBy(col("doc_id"), col("bkey"))

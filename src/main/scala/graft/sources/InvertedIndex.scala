@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
 
 /** Persisted inverted index: build-once / probe-many BM25 over the
@@ -60,6 +61,11 @@ object InvertedIndex {
                            nDocs: Long, sumDl: Long, nBuckets: Int)
 
   private def catalogPath(dataDir: String) = s"$dataDir/catalog"
+
+  private val CatalogSchema = StructType(Seq(
+    StructField("postings", StringType), StructField("dictionary", StringType),
+    StructField("n_docs", LongType), StructField("sum_dl", LongType),
+    StructField("n_buckets", IntegerType)))
 
   /** The term→bucket map — xxhash64 so engine-side bucket derivation
     * at probe time is the same expression that clustered the write. */
@@ -140,7 +146,8 @@ object InvertedIndex {
     // per segment (this path runs twice per bm25_index_incremental
     // and once per curate batch).
     val obs = org.apache.spark.sql.Observation()
-    laid.select("bucket", "term", "doc_id", "tf", "dl", "d0")
+    val postings = laid.select("bucket", "term", "doc_id", "tf", "dl", "d0")
+    postings
       .observe(obs,
         count(when(col("d0"), lit(1))).as("n"),
         sum(when(col("d0"), col("dl"))).as("s"))
@@ -148,8 +155,9 @@ object InvertedIndex {
     StatsIndex.write(spark, post, Seq("bucket"))
     // dictionary + stats from the WRITTEN postings (one cheap re-agg
     // of what was persisted, never a recompute of the tokenization):
-    // postings carry one row per (doc, term), so count = df
-    val written = spark.read.parquet(post)
+    // postings carry one row per (doc, term), so count = df; the
+    // re-read takes the written frame's schema (no inference job)
+    val written = spark.read.schema(postings.schema).parquet(post)
     Layout.repartitionByKeyRange(
         written.groupBy(col("bucket"), col("term"))
           .agg(count(lit(1)).as("df")),
@@ -181,19 +189,11 @@ object InvertedIndex {
                                 note: String = "",
                                 maxRetries: Int = 0): Long =
     Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      // the note lands INSIDE the staged dir — published (or lost)
-      // atomically with the CAS marker; streaming appends dedupe
-      // micro-batch replays against it (AnnIndex discipline)
-      if (note.nonEmpty) {
-        val np = new org.apache.hadoop.fs.Path(s"$dir/note")
-        val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val o = fs.create(np, false)
-        try o.write(note.getBytes("UTF-8")) finally o.close()
-      }
-      spark.createDataFrame(catalog().map(g =>
-          (g.postings, g.dictionary, g.nDocs, g.sumDl, g.nBuckets)))
-        .toDF("postings", "dictionary", "n_docs", "sum_dl", "n_buckets")
-        .coalesce(1).write.parquet(catalogPath(dir))
+      // streaming appends dedupe micro-batch replays against the note
+      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
+      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
+        catalog().map(g =>
+          Row(g.postings, g.dictionary, g.nDocs, g.sumDl, g.nBuckets)))
     }
 
   /** Commit with staged-segment lifecycle: sentinels cleared on
@@ -228,17 +228,8 @@ object InvertedIndex {
   /** The commit note of `version` ("" when none) — set by writers that
     * need replay dedup. */
   def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String = {
-    val np = new org.apache.hadoop.fs.Path(
-      s"${dataDirOf(spark, root, version)}/note")
-    val fs = np.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(np)) ""
-    else {
-      val in = fs.open(np)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-  }
+             version: Option[Long] = None): String =
+    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
 
   private def dataDirOf(spark: SparkSession, root: String,
                         version: Option[Long]): String = {
@@ -248,15 +239,15 @@ object InvertedIndex {
     Manifest.resolvedDataDir(spark, root, v)
   }
 
-  /** The segment catalog of `version` (default: current). */
+  /** The segment catalog of `version` (default: current), read on the
+    * driver. */
   def catalogOf(spark: SparkSession, root: String,
                 version: Option[Long] = None): Seq[Segment] =
-    spark.read.parquet(catalogPath(dataDirOf(spark, root, version)))
-      .select("postings", "dictionary", "n_docs", "sum_dl", "n_buckets")
-      .collect()
+    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
+        CatalogSchema)
       .map(r => Segment(r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getInt(4)))
-      .sortBy(_.postings).toSeq
+      .sortBy(_.postings)
 
   /** Tokenize the corpus once, publish version 0-or-next. `nFiles`
     * sizes the posting segment (nFiles ≈ nBuckets gives ~1 bucket per
@@ -408,14 +399,14 @@ object InvertedIndex {
     val token = java.util.UUID.randomUUID().toString.take(8)
     val post = s"$root/$SegmentsDir/post-$token"
     val dict = s"$root/$SegmentsDir/dict-$token"
-    Layout.repartitionByKeyRange(
+    val postings = Layout.repartitionByKeyRange(
         spark.read.parquet(catalog.map(_.postings): _*),
         col("bucket"), nBuckets, math.max(nFiles, 1))
       .sortWithinPartitions("bucket", "term")
       .select("bucket", "term", "doc_id", "tf", "dl")
-      .write.mode("errorifexists").parquet(post)
+    postings.write.mode("errorifexists").parquet(post)
     StatsIndex.write(spark, post, Seq("bucket"))
-    val written = spark.read.parquet(post)
+    val written = spark.read.schema(postings.schema).parquet(post)
     Layout.repartitionByKeyRange(
         written.groupBy(col("bucket"), col("term"))
           .agg(count(lit(1)).as("df")),

@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 /** File-level min/max stats index + stats-pruned reads — the
@@ -119,109 +120,112 @@ object StatsIndex {
     } finally reader.close()
   }
 
-  /** Build (or rebuild) the index for `cols` of the parquet table at
-    * `table`, stored under `table/_graft_stats`. */
-  def write(spark: SparkSession, table: String, cols: Seq[String]): Unit = {
-    import spark.implicits._
-    val files = listDataFiles(spark, table)
-    val colSet = cols.toSet
-    val stats = spark.createDataset(files)
-      .repartition(math.max(1, math.min(files.size,
-        spark.sparkContext.defaultParallelism)))
-      .flatMap(p => footerStats(p, colSet))
-      .toDF("file", "n_rows", "col", "min_num", "max_num",
-            "min_str", "max_str")
-    stats.repartition(1).write.mode("overwrite")
-      .parquet(s"$table/$IndexDir")
-  }
+  /** The index table's schema: one row per (file, column); `col` is
+    * "" for a file none of whose requested columns exist. */
+  private val IndexSchema = StructType(Seq(
+    StructField("file", StringType), StructField("n_rows", LongType),
+    StructField("col", StringType),
+    StructField("min_num", DoubleType), StructField("max_num", DoubleType),
+    StructField("min_str", StringType), StructField("max_str", StringType)))
 
-  /** The index frame (empty-schema-safe read). */
+  /** Footer stats of `files` as index rows: ONE job whose tasks read
+    * only footers; the rows come back to the driver (file-count-bounded
+    * metadata). */
+  private def footerRows(spark: SparkSession, files: Seq[String],
+                         cols: Set[String]): Seq[Row] =
+    spark.sparkContext
+      .parallelize(files, math.max(1, math.min(files.size,
+        spark.sparkContext.defaultParallelism)))
+      .flatMap(p => footerStats(p, cols))
+      .collect().toSeq
+      .map { case (f, n, c, mn, mx, smn, smx) =>
+        Row(f, n, c, mn.orNull, mx.orNull, smn.orNull, smx.orNull) }
+
+  /** Build (or rebuild) the index for `cols` of the parquet table at
+    * `table`, stored under `table/_graft_stats`: one footer job, the
+    * rows written from the driver. */
+  def write(spark: SparkSession, table: String, cols: Seq[String]): Unit =
+    MetaTable.write(spark, s"$table/$IndexDir", IndexSchema,
+      footerRows(spark, listDataFiles(spark, table), cols.toSet),
+      overwrite = true)
+
+  /** The index frame. */
   def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"$table/$IndexDir")
+    spark.read.schema(IndexSchema).parquet(s"$table/$IndexDir")
 
   /** Incremental maintenance for append-only tables: index ONLY the
     * files not yet covered (the common case — a day's append adds a
     * handful of files to a million-file table; re-footering
     * everything would make index cost grow with table age instead of
     * append size). Columns come from the existing index, so the
-    * covered set stays consistent. Rewrites the (tiny) index file
-    * atomically via overwrite-after-union. */
+    * covered set stays consistent. Rewrites the (tiny) index table
+    * from the driver. */
   def update(spark: SparkSession, table: String): Unit = {
-    import spark.implicits._
-    val existing = read(spark, table)
-    val cols = existing.select("col").where(col("col") =!= "")
-      .distinct().as[String].collect().toSet
-    val indexed = existing.select("file").distinct().as[String].collect().toSet
+    val existing = MetaTable.read(spark, s"$table/$IndexDir", IndexSchema)
+    val cols = existing.map(_.getString(2)).filter(_ != "").toSet
+    val indexed = existing.map(_.getString(0)).toSet
     val fresh = listDataFiles(spark, table).filterNot(indexed)
-    if (fresh.nonEmpty) {
-      val stats = spark.createDataset(fresh)
-        .repartition(math.max(1, math.min(fresh.size,
-          spark.sparkContext.defaultParallelism)))
-        .flatMap(p => footerStats(p, cols))
-        .toDF("file", "n_rows", "col", "min_num", "max_num",
-              "min_str", "max_str")
-      val merged = existing.unionByName(stats).repartition(1)
-        .collect() // tiny: file-count-bounded metadata
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(merged.toSeq, 1), existing.schema)
-        .write.mode("overwrite").parquet(s"$table/$IndexDir")
-    }
+    if (fresh.nonEmpty)
+      MetaTable.write(spark, s"$table/$IndexDir", IndexSchema,
+        existing ++ footerRows(spark, fresh, cols), overwrite = true)
   }
+
+  /** (min_num, max_num) rows of column `c` per indexed file, read from
+    * every table's index on the driver. A file may carry several rows
+    * (an index rebuilt by [[update]] after a rewrite). */
+  private def numericStats(spark: SparkSession, tables: Seq[String],
+                           c: String)
+      : Map[String, Seq[(Option[Double], Option[Double])]] =
+    tables.flatMap(t => MetaTable.read(spark, s"$t/$IndexDir", IndexSchema))
+      .filter(_.getString(2) == c)
+      .groupBy(_.getString(0))
+      .map { case (f, rs) => (f, rs.map(r =>
+        (Option(r.get(3)).map(_.asInstanceOf[Double]),
+         Option(r.get(4)).map(_.asInstanceOf[Double])))) }
 
   /** Files of `table` whose indexed [min, max] on `c` may contain ANY
     * of `values` — the set-valued sibling of [[readPruned]]'s interval
     * test (probe cells of an ANN index, a GDPR key batch). Files
     * absent from the index or without stats for `c` are KEPT
     * (conservative, like every prune here); callers must re-apply
-    * their predicate. Returns (kept files, total files). The decision
-    * runs as a join against the index frame; only the surviving list
-    * comes back to the driver — which it must, since the caller reads
-    * exactly those paths. `values` is a bounded probe/delete request,
-    * fine as a plan literal. */
+    * their predicate. Returns (kept files, total files). Delegates to
+    * [[prunedFilesInMany]]: the index rows are read and the decision
+    * is made on the driver, with no Spark job. */
   def prunedFilesIn(spark: SparkSession, table: String, c: String,
                     values: Seq[Long]): (Seq[String], Seq[String]) =
     prunedFilesInMany(spark, Seq(table), c, values).head
 
   /** Batched [[prunedFilesIn]] over MANY segment tables: every probe
     * of a multi-segment index (ANN cells, inverted-index buckets, grep
-    * trigrams) needs the same set-membership prune per segment, and
-    * the per-table form costs one driver-serial Spark job EACH — a
-    * 32-segment streamed index paid 32 scheduling round-trips per
-    * probe before any data work (r20, guide §2.6: the wall of the
-    * index rows is driver-serial small jobs). This form reads every
-    * table's stats index in ONE scan (the index is file-count-bounded
-    * metadata by design — see [[write]]) and decides driver-side.
-    * Results are positionally aligned with `tables` and IDENTICAL to
-    * per-table [[prunedFilesIn]] calls: a file absent from its index,
-    * or without numeric stats for `c`, is KEPT (conservative); callers
-    * re-apply their predicate. */
+    * trigrams) needs the same set-membership prune per segment. The
+    * stats indexes are file-count-bounded metadata (see [[write]]), so
+    * they are read on the driver and the decision runs there — zero
+    * Spark jobs, however many segments. Results are positionally
+    * aligned with `tables` (empty `tables` → empty result): a file
+    * absent from its index, or without numeric stats for `c`, is KEPT
+    * (conservative); callers re-apply their predicate. */
   def prunedFilesInMany(spark: SparkSession, tables: Seq[String], c: String,
                         values: Seq[Long])
       : Seq[(Seq[String], Seq[String])] = {
+    if (tables.isEmpty) return Seq.empty
     require(values.nonEmpty, "no values to prune by")
-    val all = tables.map(listDataFiles(spark, _))
-    // one metadata scan for every index dir; grouped because a file
-    // may carry several stats rows — kept if ANY row passes (matches
-    // the join semantics of the per-table form)
-    val stats: Map[String, Array[(Option[Double], Option[Double])]] =
-      spark.read.parquet(tables.map(t => s"$t/$IndexDir"): _*)
-        .where(col("col") === c)
-        .select(col("file"), col("min_num"), col("max_num"))
-        .collect()
-        .map(r => (r.getString(0),
-          (if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-           if (r.isNullAt(2)) None else Some(r.getDouble(2)))))
-        .groupBy(_._1).map { case (f, rs) => (f, rs.map(_._2)) }
-    def keepFile(f: String): Boolean = stats.get(f) match {
-      case None => true // not indexed (stale index) — scan it
-      case Some(rows) => rows.exists {
-        case (Some(mn), Some(mx)) =>
-          values.exists(v => v >= mn && v <= mx)
-        case _ => true // no usable stats — scan it
-      }
-    }
-    all.map(files => (files.filter(keepFile), files))
+    val stats = numericStats(spark, tables, c)
+    tables.map(listDataFiles(spark, _)).map(files =>
+      (unprunable(stats, files)((mn, mx) => values.exists(v => v >= mn && v <= mx)),
+       files))
   }
+
+  /** The `files` the index cannot rule out: kept when `mayHold(min,
+    * max)` holds for ANY of the file's rows, and — conservatively —
+    * when the file is not indexed (stale index) or a row carries no
+    * numeric stats. */
+  private def unprunable(stats: Map[String, Seq[(Option[Double], Option[Double])]],
+                         files: Seq[String])
+                        (mayHold: (Double, Double) => Boolean): Seq[String] =
+    files.filter(f => stats.get(f).forall(_.exists {
+      case (Some(mn), Some(mx)) => mayHold(mn, mx)
+      case _ => true
+    }))
 
   /** Targeted delete (GDPR / right-to-be-forgotten): remove every row
     * whose `keyCol` is in `keys`, REWRITING ONLY the files whose
@@ -264,22 +268,14 @@ object StatsIndex {
     * ratio in `spark.graft.lake.lastPruned` as "kept/total". */
   def readPruned(spark: SparkSession, table: String, c: String,
                  lo: Double, hi: Double, maxKeptFiles: Int = 1000000): DataFrame = {
-    import spark.implicits._
     val all = listDataFiles(spark, table)
-    // interval test as a distributed join against the index frame —
-    // the driver holds only the SURVIVING file list (which it must:
-    // Spark's reader takes paths driver-side, exactly like its own
-    // InMemoryFileIndex holds the listing). `maxKeptFiles` caps that
-    // list: a range too wide to prune fails loudly instead of
+    // interval test on the driver against the index rows; the kept
+    // list is what Spark's reader takes anyway (paths are driver-side,
+    // like its own InMemoryFileIndex listing). `maxKeptFiles` caps
+    // that list: a range too wide to prune fails loudly instead of
     // ballooning the driver.
-    val idxC = read(spark, table).where(col("col") === c)
-      .select(col("file"), col("min_num"), col("max_num"))
-    val keptDf = spark.createDataset(all).toDF("file")
-      .join(idxC, Seq("file"), "left")
-      .where(col("min_num").isNull || col("max_num").isNull ||
-        !(col("max_num") < lo || col("min_num") > hi)) // stale/stats-less: scan
-      .select("file")
-    val kept = keptDf.as[String].collect()
+    val kept = unprunable(numericStats(spark, Seq(table), c), all)(
+      (mn, mx) => !(mx < lo || mn > hi))
     require(kept.length <= maxKeptFiles,
       s"range [$lo, $hi] on '$c' keeps ${kept.length} files " +
         s"(> maxKeptFiles=$maxKeptFiles) - the prune is not selective " +

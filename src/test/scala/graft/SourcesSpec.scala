@@ -452,6 +452,10 @@ class SourcesSpec extends SparkSpec {
     assert(noStats(0)._1.size === noStats(0)._2.size)
   }
 
+  test("StatsIndex.prunedFilesInMany over no tables returns no decisions") {
+    assert(StatsIndex.prunedFilesInMany(spark, Seq.empty, "k", Seq(1L)) === Seq.empty)
+  }
+
   test("StatsIndex.deleteByKeys rewrites only the files holding the keys") {
     val tmp = Files.createTempDirectory("delkeys").toString
     val orders = Tables.orders(spark, sfDir)
