@@ -283,77 +283,17 @@ object Curate {
     val priorState = priorCounts.toDF("source", "used_tokens")
     val scoredTok = scored
       .withColumn("n_tokens", TextFunctions.bpeTokenCount(col("text")).cast("long"))
-    // Two-phase cumsum (r18 verdict item 2 — the plain per-source
-    // window is the flagship's last single-task-per-source stage:
-    // 20 sources → at most 20 parallel tasks). Decomposition:
-    // tokenize ONCE into a NARROW (text-free) checkpoint (a first cut
-    // computed band sums and the window off the UNcheckpointed
-    // tokenize and measured 15.7-18.8 s/batch at tier — the
-    // shared-subtree double eval), then order-preserving doc_id BANDS
-    // per source → per-band partial sums over the MATERIALIZED ints →
-    // exclusive per-source band offsets (tiny, broadcast) → local
-    // cumsum within (source, band) + offset. Bit-exact by
-    // construction: long addition regrouped, same (source, doc_id)
-    // order — tier-verified corpus-hash-identical at 5M docs
-    // (SCALE1000_r19_curate_2ph vs _1ph).
-    //
-    // DEFAULT OFF (the r17 refute-with-artifact precedent): at the
-    // 20-source tier the back-to-back A/B measured a WASH — budget
-    // stage 25.8 → 24.2 s over 3 batches, but the window re-eval
-    // moved ~+4.8 s into accept-ckpt and task time rose 1603 → 2026 s
-    // (SCALE1000_r19 rows). r18's decomposition already showed the
-    // stage is tokenize-bound (window alone 0.86 s of ~10 s). Flip
-    // `spark.graft.curate.budgetTwoPhase=true` when rows-per-source
-    // grows until the single-task window rivals tokenize time — the
-    // known escape at extreme per-source cardinality, measured and
-    // ready rather than hypothesized.
-    val twoPhase = spark.conf
-      .get("spark.graft.curate.budgetTwoPhase", "false") == "true"
+    // one window per source: the stage is tokenize-bound (r18 measured
+    // the window alone at 0.86 s of ~10 s), so the single-task-per-
+    // source window is not worth splitting into doc_id bands
+    val wCum = Window.partitionBy(col("source")).orderBy(col("doc_id"))
     val budgeted = prof("budget-ckpt") {
-      if (!twoPhase) {
-        val wCum = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        scoredTok
-          .join(broadcast(priorState), Seq("source"), "left")
-          .withColumn("cum",
-            sum(col("n_tokens")).over(wCum) +
-              coalesce(col("used_tokens"), lit(0L)))
-          .localCheckpoint()
-      } else {
-        // NARROW materialization: tokenize once into a text-free
-        // checkpoint (doc_id, source, fp, quality, n_tokens — the
-        // 1-phase form checkpoints the full row WITH text, the
-        // pipeline's second text copy after `fresh`; the accepted
-        // texts come off the fresh checkpoint downstream instead)
-        val tok = scoredTok
-          .select(col("doc_id"), col("source"), col("fp"),
-            col("quality"), col("n_tokens"))
-          .localCheckpoint()
-        val mm = tok.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val lo = if (mm.isNullAt(0)) 0L else mm.getLong(0)
-        val hi = if (mm.isNullAt(1)) lo else mm.getLong(1)
-        val nBands = math.max(spark.sparkContext.defaultParallelism, 1)
-        val width = math.max(1L, (hi - lo) / nBands + 1L)
-        val banded = tok
-          .withColumn("bkt", expr(s"(doc_id - ${lo}L) div ${width}L"))
-        val wOff = Window.partitionBy(col("source")).orderBy(col("bkt"))
-        val offsets = banded.groupBy(col("source"), col("bkt"))
-          .agg(sum(col("n_tokens")).as("bt"))
-          .withColumn("off", sum(col("bt")).over(wOff) - col("bt"))
-          .select(col("source"), col("bkt"), col("off"))
-        val wCumB = Window.partitionBy(col("source"), col("bkt"))
-          .orderBy(col("doc_id"))
-        // NOT re-checkpointed: downstream consumers re-run only the
-        // broadcast joins + the (source, band)-parallel window over
-        // the narrow checkpoint (r18 measured the window alone at
-        // 0.86 s over 0.9M tier rows — re-evaluation of a text-free
-        // frame is far cheaper than a second text materialization)
-        banded
-          .join(broadcast(offsets), Seq("source", "bkt"))
-          .join(broadcast(priorState), Seq("source"), "left")
-          .withColumn("cum",
-            sum(col("n_tokens")).over(wCumB) + col("off") +
-              coalesce(col("used_tokens"), lit(0L)))
-      }
+      scoredTok
+        .join(broadcast(priorState), Seq("source"), "left")
+        .withColumn("cum",
+          sum(col("n_tokens")).over(wCum) +
+            coalesce(col("used_tokens"), lit(0L)))
+        .localCheckpoint()
     }
     val accepted = prof("accept-ckpt") { budgeted.where(col("cum") <= budgetPerSource)
       .select(col("doc_id"), col("source"), col("quality"), col("fp"))
@@ -393,18 +333,9 @@ object Curate {
     def notedVersion(root: String, noteAt: Long => String): Option[Long] =
       Manifest.versions(spark, root).find(v => noteAt(v) == note0)
     // embeddings are corpus-aligned, not batch-carried, so this join
-    // is unavoidable; `spark.graft.curate.annBloomPrune=true` swaps
-    // in the bloom-pruned exact semi join (Prune.bloomSemiJoin) so
-    // the embedding scan drops non-accepted rows BEFORE the shuffle —
-    // a tier A/B lever (r18), default off until measured to win
-    val annIds = accepted.select(col("doc_id").as("vec_id"))
+    // is unavoidable
     val annBatch =
-      if (spark.conf.get("spark.graft.curate.annBloomPrune",
-                         "false") == "true")
-        graft.operators.Prune.bloomSemiJoin(
-          embeddings.select(col("vec_id"), col("embedding")),
-          "vec_id", annIds, "vec_id")
-      else embeddings.join(annIds, "vec_id")
+      embeddings.join(accepted.select(col("doc_id").as("vec_id")), "vec_id")
     // the two index appends are INDEPENDENT (separate Manifest roots,
     // separate replay notes, inputs derived from the already-
     // checkpointed `accepted`) and each is a sequence of small
@@ -434,21 +365,10 @@ object Curate {
     // accepted texts come off a CHECKPOINT, never a re-join of the raw
     // batch: the old batch⋈accepted form shuffled the batch's full
     // text column every time (r18 tier probe: ~1 GB shuffle per
-    // 1.67M-doc batch inside the dominant inv-append stage). 1-phase:
-    // re-filter the budgeted checkpoint (join-free). 2-phase: budgeted
-    // is text-free, so join the fresh checkpoint with the accepted ids
-    // — `accepted` is materialized, so AQE sizes the join (broadcasts
-    // the id side at batch scale) and the text column never exchanges.
-    val invBatch =
-      if (twoPhase)
-        // explicit broadcast: AQE cannot size a checkpoint scan (the
-        // r19 A/B showed the unhinted join shuffling ~150 MB of text
-        // per tier batch); accepted ids are 8 bytes/doc — bound the
-        // batch size accordingly when enabling two-phase
-        fresh.join(broadcast(accepted.select(col("doc_id"))), "doc_id")
-          .select(col("doc_id"), col("text"))
-      else budgeted.where(col("cum") <= budgetPerSource)
-        .select(col("doc_id"), col("text"))
+    // 1.67M-doc batch inside the dominant inv-append stage), so
+    // re-filter the budgeted checkpoint (join-free)
+    val invBatch = budgeted.where(col("cum") <= budgetPerSource)
+      .select(col("doc_id"), col("text"))
     val invF = Future { prof("inv-append") { notedVersion(roots.inv,
         v => InvertedIndex.noteOf(spark, roots.inv, Some(v))).getOrElse {
       val exists = Manifest.currentVersion(spark, roots.inv).isDefined

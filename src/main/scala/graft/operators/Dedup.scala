@@ -639,8 +639,7 @@ object Dedup {
     * the same as the jump loop on shallow graphs (1.2 s vs 1.15 s,
     * BENCH_r06), so mis-routing a benign graph to star is nearly free,
     * while routing a super-node graph to the jump loop concentrates
-    * the hub's whole edge list in single join partitions every round.
-    * Tunable via session conf `spark.graft.autoStarMaxDegree`. */
+    * the hub's whole edge list in single join partitions every round. */
   private final val AutoStarMaxDegree = 10000L
 
   /** MEAN-degree cutoff above which [[clustersAuto]] prefers star even
@@ -654,8 +653,7 @@ object Dedup {
     * jump 25.0 s spilling 6.5 GB mem + 0.8 GB disk (SCALE100.md). At
     * mean degree ~1.2 (1× pair graph) they tie. The cutoff sits well
     * inside that bracket, biased low because star's worst case is a
-    * modest constant factor while jump's is executor spill. Tunable
-    * via session conf `spark.graft.autoStarMeanDegree`. */
+    * modest constant factor while jump's is executor spill. */
   private final val AutoStarMeanDegree = 16.0
 
   /** Auto-selecting connected components: measures the pair graph's
@@ -686,11 +684,7 @@ object Dedup {
         .agg(coalesce(max("count"), lit(0L)).as("mx"),
              coalesce(avg("count"), lit(0.0)).as("mean")).head
       val (maxDeg, meanDeg) = (deg.getLong(0), deg.getDouble(1))
-      val hubCut = sess.conf.get("spark.graft.autoStarMaxDegree",
-                                 AutoStarMaxDegree.toString).toLong
-      val denseCut = sess.conf.get("spark.graft.autoStarMeanDegree",
-                                   AutoStarMeanDegree.toString).toDouble
-      val useStar = maxDeg >= hubCut || meanDeg >= denseCut
+      val useStar = maxDeg >= AutoStarMaxDegree || meanDeg >= AutoStarMeanDegree
       sess.conf.set("spark.graft.cc.lastChoice",
                     if (useStar) "star" else "jump")
       if (useStar) clustersStar(canon, "lo", "hi")

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * (one partial-agg groupBy — cheap next to any iteration round). A
   * graph is DENSE when its max out-degree passes the hub cutoff or
   * its mean passes the density cutoff; dense graphs are degree-capped
-  * to `denseCap` out-edges per node (deterministic: smallest
+  * to [[DefaultCap]] out-edges per node (deterministic: smallest
   * neighbor ids — reproducible run to run and engine-portable) before
   * the iteration runs. Non-dense graphs — every kNN similarity graph,
   * every bounded-degree planted gate — route through UNTOUCHED, and
@@ -50,13 +50,9 @@ import org.apache.spark.sql.functions._
   * super-nodes — a 600k-degree hub's per-edge contribution was
   * rank/600k ≈ 0 anyway); BFS/SSSP distances become UPPER BOUNDS
   * (a dropped edge can only lengthen a path). Callers for whom the
-  * exact dense iteration is worth its pool cost opt out explicitly:
-  *
-  *  - `spark.graft.graph.denseRoute = direct` — run uncapped (the
-  *    loud opt-out; the default is `cap`);
-  *  - `spark.graft.graph.denseCap` (default 20) — the per-node cap;
-  *  - `spark.graft.graph.denseMeanDegree` (64) /
-  *    `spark.graft.graph.hubMaxDegree` (100000) — detection cutoffs.
+  * exact dense iteration is worth its pool cost opt out explicitly
+  * with `spark.graft.graph.denseRoute = direct` — run uncapped (the
+  * loud opt-out; the default is `cap`).
   *
   * Every call records its decision in session conf
   * `spark.graft.graph.lastRoute` ("direct" | "direct-forced" |
@@ -89,11 +85,7 @@ object GraphRoute {
       .agg(coalesce(max(col("d")), lit(0L)).as("mx"),
            coalesce(avg(col("d")), lit(0.0)).as("mean")).head
     val (maxDeg, meanDeg) = (prof.getLong(0), prof.getDouble(1))
-    val hubCut = sess.conf.get("spark.graft.graph.hubMaxDegree",
-                               HubMaxDegree.toString).toLong
-    val meanCut = sess.conf.get("spark.graft.graph.denseMeanDegree",
-                                DenseMeanDegree.toString).toDouble
-    val dense = maxDeg >= hubCut || meanDeg >= meanCut
+    val dense = maxDeg >= HubMaxDegree || meanDeg >= DenseMeanDegree
     val optOut = sess.conf.get("spark.graft.graph.denseRoute", "cap") == "direct"
     if (!dense) {
       sess.conf.set("spark.graft.graph.lastRoute", "direct")
@@ -102,9 +94,6 @@ object GraphRoute {
       sess.conf.set("spark.graft.graph.lastRoute", "direct-forced")
       e0
     } else {
-      val cap = sess.conf.get("spark.graft.graph.denseCap",
-                              DefaultCap.toString).toInt
-      require(cap >= 1, s"spark.graft.graph.denseCap must be >= 1: $cap")
       // deterministic kept set: the cap smallest (dst, rest) tuples
       // per src — value-total order so reruns and engines agree.
       //
@@ -129,11 +118,11 @@ object GraphRoute {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("src")).orderBy(ord: _*)
       val capped = e0.withColumn("__rk", row_number().over(w))
-        .where(col("__rk") <= cap).drop("__rk")
+        .where(col("__rk") <= DefaultCap).drop("__rk")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       capped.count() // materialize from the old cache before dropping it
       e0.unpersist(false)
-      sess.conf.set("spark.graft.graph.lastRoute", s"capped($cap)")
+      sess.conf.set("spark.graft.graph.lastRoute", s"capped($DefaultCap)")
       capped
     }
   }

@@ -94,40 +94,6 @@ object GrepIndex {
     * uses the plain join instead (no driver collect). */
   val FetchPruneMax = 100000
 
-  /** Locality router inputs for the candidate fetch (r18 verdict
-    * item 7 — SCALE1000.md r17 measured a uniformly-scattered
-    * 1-in-50k needle LOSING the wall race through the point fetch,
-    * 5.17 vs 2.86 s, while winning CPU 2.4×: its candidates touched
-    * every clustered docs file, so the "point" reads decompressed
-    * row groups across the whole fleet with seek overhead on top;
-    * the router could not see that before fetching). The signal is
-    * free — the StatsIndex file prune already computes which docs
-    * files the candidate ids touch: when candidates keep at least
-    * [[FetchLocalityFraction]] of the files AND there are at least
-    * [[FetchScatterMinDocs]] of them (few matches point-fetch fine
-    * no matter how scattered), the sweep is scatter-shaped and rides
-    * a sequential scan + broadcast join instead.
-    *
-    * DEFAULT OFF (fraction 2.0 never fires — the refute-with-artifact
-    * discipline applied to the router itself): the r19 tier A/B
-    * re-measured the scattered case on the CURRENT fetch path and the
-    * point fetch now WINS it — 4.96 s / 81 task-s forced-point vs
-    * 6.75 s / 96 task-s scan-routed for a 1,016-doc uniform plant
-    * touching 32/32 docs files (SCALE1000_r19_grep.json). The r17
-    * negative predates the 8 MB docs row groups + bounded candidate
-    * broadcast; with row-group skipping a scattered point fetch reads
-    * ~candidates × one row group, which beats the full sequential
-    * scan whenever candidates × rowGroup ≪ corpus — and the
-    * FetchPruneMax bound already diverts match-dense sweeps to the
-    * plain join. Asymptotically (ranged object-store GETs at 100 TB)
-    * point is the right default; opt the router in per sweep via
-    * `spark.graft.grep.fetchLocalityFraction` (e.g. 0.5) where
-    * scattered point reads do lose (cold stores, tiny row groups).
-    * The decision lands in `spark.graft.grep.lastFetchRoute`
-    * ("point" | "scan"). */
-  val FetchLocalityFraction = 2.0
-  val FetchScatterMinDocs = 256
-
   /** One immutable posting+stats+docs segment triple with its exact
     * doc-count contribution. */
   final case class Segment(postings: String, stats: String,
@@ -442,13 +408,13 @@ object GrepIndex {
     * mass exceeds `scanFraction` × corpus docs — the degenerate
     * regime of a tiny-vocabulary corpus where its trigrams are
     * near-universal, measured at 1000×: index probe 70 s vs 20 s for
-    * the plain scan — rides ONE shared exact scan leg (a single
-    * Aho-Corasick pass answering every scan-routed pattern at once)
-    * over the doc-clustered table; the rest probe the index. Both
-    * legs return the same exact result; the union is the sweep. The
-    * outcome lands in `spark.graft.grep.lastRoute` ("index" | "scan"
-    * | "split"), the final per-pattern split in
-    * `spark.graft.grep.lastSplit` ("index=N scan=M"), the postings
+    * the plain scan — is scan-routed, and then the WHOLE sweep rides
+    * ONE shared exact scan leg (a single Aho-Corasick pass answering
+    * every pattern at once) over the doc-clustered table; a sweep
+    * with no scan-routed pattern probes the index. The outcome lands
+    * in `spark.graft.grep.lastRoute` ("index" | "scan"), the
+    * per-pattern routing verdict in `spark.graft.grep.lastSplit`
+    * ("index=N scan=M"), the postings
     * file-prune ratio (index leg) in `spark.graft.grep.lastPruned`,
     * and the candidate-fetch docs file-prune ratio in
     * `spark.graft.grep.lastDocsPruned` ("all" when the sweep matched
@@ -506,7 +472,6 @@ object GrepIndex {
     val massOf = selected.groupBy(_._1).view
       .mapValues(_.map(_._2).distinct.map(dfOf(_)).sum).toMap
     val scanPids = massOf.filter(_._2 > scanFraction * nDocs).keySet
-    val idxSel0 = selected.filterNot(t => scanPids(t._1))
     // fold-all (r19): once ANY pattern's posting mass demands the
     // corpus scan, that pass is being paid — the Aho-Corasick leg
     // answers every ADDITIONAL literal for ~free (a few automaton
@@ -520,9 +485,7 @@ object GrepIndex {
     // the corpus, so the automaton provably finds nothing. `lastSplit`
     // keeps the per-pattern ROUTING verdict; `lastScanFolded` records
     // how many index-routed patterns the fold pulled onto the scan.
-    val foldAll = scanPids.nonEmpty && idxSel0.nonEmpty &&
-      spark.conf.get("spark.graft.grep.scanFoldAll", "true") == "true"
-    val idxSel = if (foldAll) Seq.empty[(Long, Long)] else idxSel0
+    val foldAll = scanPids.nonEmpty && selected.exists(t => !scanPids(t._1))
     val scanPatterns =
       if (foldAll) patterns else patterns.filter(p => scanPids(p._1))
     spark.conf.set("spark.graft.grep.lastSplit",
@@ -530,8 +493,7 @@ object GrepIndex {
     spark.conf.set("spark.graft.grep.lastScanFolded",
       if (foldAll) (patterns.size - scanPids.size).toString else "0")
     spark.conf.set("spark.graft.grep.lastRoute",
-      if (scanPids.isEmpty) "index"
-      else if (idxSel.isEmpty) "scan" else "split")
+      if (scanPids.isEmpty) "index" else "scan")
     // one Aho-Corasick pass answers EVERY scan-routed pattern per doc
     // (r19: the previous form crossJoined docs × patterns — P-way row
     // duplication and P contains() rescans per doc; a decontamination
@@ -543,11 +505,8 @@ object GrepIndex {
     // the crossJoin form only past the automaton's dense-table bound.
     def scanLeg = {
       val lex = scanPatterns.map(_._2).distinct
-      if (scanPatterns.isEmpty) emptyResult
-      else if (lex.map(_.getBytes("UTF-8").length.toLong).sum <=
-                 graft.functions.expressions.MultiPatternHits.MaxPatternBytes &&
-               spark.conf.get("spark.graft.grep.scanAhoCorasick",
-                 "true") == "true")
+      if (lex.map(_.getBytes("UTF-8").length.toLong).sum <=
+            graft.functions.expressions.MultiPatternHits.MaxPatternBytes)
         docsAll
           .select(col("doc_id"),
             GraftFunctions.multiMatch(col("text"), lex).as("h"))
@@ -561,15 +520,15 @@ object GrepIndex {
         .where(col("text").contains(col("pattern")))
         .select(col("pattern_id"), col("doc_id"))
     }
-    if (idxSel.isEmpty) {
-      if (scanPids.isEmpty)
-        spark.conf.set("spark.graft.grep.lastPruned", "0/0")
-      return scanLeg
+    if (scanPids.nonEmpty) return scanLeg
+    if (selected.isEmpty) {
+      spark.conf.set("spark.graft.grep.lastPruned", "0/0")
+      return emptyResult
     }
-    val hs = idxSel.map(_._2).distinct
-    val need = idxSel.groupBy(_._1).map { case (pid, rs) =>
+    val hs = selected.map(_._2).distinct
+    val need = selected.groupBy(_._1).map { case (pid, rs) =>
       (pid, rs.length.toLong) }.toSeq.toDF("pattern_id", "need")
-    val pgDf = idxSel.toDF("pattern_id", "h")
+    val pgDf = selected.toDF("pattern_id", "h")
     // one metadata scan for ALL segments (r20) — the per-segment form
     // cost one driver-serial job per segment per probe
     val pruned = StatsIndex.prunedFilesInMany(
@@ -577,7 +536,7 @@ object GrepIndex {
     val kept = pruned.flatMap(_._1)
     val total = pruned.map(_._2.size).sum
     spark.conf.set("spark.graft.grep.lastPruned", s"${kept.size}/$total")
-    if (kept.isEmpty) return scanLeg
+    if (kept.isEmpty) return emptyResult
     val candPlan = spark.read.schema(PostingsSchema).parquet(kept: _*)
       .where(col("h").isin(hs: _*)) // row-group skipping inside survivors
       .join(broadcast(pgDf), "h")
@@ -586,9 +545,8 @@ object GrepIndex {
       .join(broadcast(need), "pattern_id")
       .where(col("got") === col("need"))
       .select(col("doc_id"), col("pattern_id"))
-    val idxLeg = verifyFetch(spark, segs, candPlan, pat,
+    verifyFetch(spark, segs, candPlan, pat,
       col("text").contains(col("pattern")))
-    if (scanPatterns.isEmpty) idxLeg else idxLeg.union(scanLeg)
   }
 
   /** Reset the per-probe observability confs so every exit path of a
@@ -645,31 +603,10 @@ object GrepIndex {
         spark.conf.set("spark.graft.grep.lastDocsPruned",
           s"${keptD.size}/$totalD")
         if (keptD.isEmpty) return emptyResult
-        // locality router (r18 verdict item 7): candidates that touch
-        // most of the docs files in bulk are scatter-shaped — the
-        // point read would open ~every file and decompress row groups
-        // around every hit (the r17 scattered-needle wall loss); a
-        // sequential scan + broadcast join reads the same files
-        // streaming-fashion. Few candidates stay on the point path no
-        // matter how scattered (opening k files beats any scan).
-        val locFrac = spark.conf
-          .get("spark.graft.grep.fetchLocalityFraction",
-            FetchLocalityFraction.toString).toDouble
-        val minScatter = spark.conf
-          .get("spark.graft.grep.fetchScatterMinDocs",
-            FetchScatterMinDocs.toString).toInt
-        val scattered = totalD > 0 &&
-          keptD.size >= locFrac * totalD && ids.size >= minScatter
-        if (scattered) {
-          spark.conf.set("spark.graft.grep.lastFetchRoute", "scan")
-          spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*)
-            .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
-        } else {
-          spark.conf.set("spark.graft.grep.lastFetchRoute", "point")
-          spark.read.schema(DocsSchema).parquet(keptD: _*)
-            .where(col("doc_id").isInCollection(ids))
-            .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
-        }
+        spark.conf.set("spark.graft.grep.lastFetchRoute", "point")
+        spark.read.schema(DocsSchema).parquet(keptD: _*)
+          .where(col("doc_id").isInCollection(ids))
+          .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
       } else {
         // over the bound: recompute the candidate plan distributed
         spark.conf.set("spark.graft.grep.lastDocsPruned", "all")

@@ -74,28 +74,10 @@ object InvertedIndex {
 
   /** Tokenize `docs` (the bm25Search normalize+split, so index scores
     * replay the in-query retriever exactly), write one bucket-clustered
-    * posting segment + its dictionary, both stats-indexed on bucket.
-    *
-    * Layout (r18 verdict item 4 — inv-append was the flagship batch
-    * loop's dominant stage at 22-23 s/batch, and `repartitionByRange`
-    * is the suspect: its RangePartitioner samples the child in a
-    * SEPARATE job, so the whole tokenize chain runs TWICE per
-    * segment): `hashLayout = true` hash-partitions on bucket instead
-    * — one tokenize pass, no sampling job. The trade: a hash file
-    * holds the buckets of one pmod class, so its bucket [min, max]
-    * spans wide and file-level StatsIndex pruning degrades for that
-    * segment; ROW-GROUP skipping survives (rows stay sorted by
-    * (bucket, term) within each file), and compaction re-sorts
-    * globally anyway — appends are exactly the segments compaction
-    * folds. Probes are unchanged either way (pruning only skips;
-    * predicates re-apply). `spark.graft.inv.segmentCkpt = true` is
-    * the attribution lever for the range path: localCheckpoint the
-    * tokenized frame before the range partition, paying
-    * materialization to avoid the double tokenize. */
+    * posting segment + its dictionary, both stats-indexed on bucket. */
   private def writeSegment(spark: SparkSession, root: String,
                            docs: DataFrame, idCol: String, textCol: String,
-                           nBuckets: Int, nFiles: Int,
-                           hashLayout: Boolean = false): Segment = {
+                           nBuckets: Int, nFiles: Int): Segment = {
     val token = java.util.UUID.randomUUID().toString.take(8)
     val post = s"$root/$SegmentsDir/post-$token"
     val dict = s"$root/$SegmentsDir/dict-$token"
@@ -111,33 +93,22 @@ object InvertedIndex {
     // layout requires. `d0` marks one designated row per doc (the
     // first term entry) so corpus stats re-derive from the written
     // postings by a flat filtered scan, never a 500M-row distinct.
-    val posting0 = toks.select(col("doc_id"), size(col("toks")).as("dl"),
+    val posting = toks.select(col("doc_id"), size(col("toks")).as("dl"),
         posexplode(graft.functions.GraftFunctions.termCounts(col("toks"))))
       .select(col("doc_id"), col("dl"),
         col("col.term").as("term"), col("col.tf").as("tf"),
         (col("pos") === 0).as("d0"))
       .withColumn("bucket", bucketOf(col("term"), nBuckets))
-    val posting =
-      if (hashLayout || !spark.conf
-            .get("spark.graft.inv.segmentCkpt", "false").toBoolean) posting0
-      else posting0.localCheckpoint()
-    val laid =
-      if (hashLayout)
-        posting.repartition(math.max(nFiles, 1), col("bucket"))
-          .sortWithinPartitions("bucket", "term")
-      else
-        // bucket-range clustering WITHOUT the RangePartitioner
-        // sampling pass (r19, guide §2.4 — the r18-verdict-item-4
-        // residual closed structurally): buckets are an enumerable
-        // [0, nBuckets) domain, so boundaries need no sampling —
-        // repartitionByRange ran the whole tokenize+term-count chain
-        // TWICE per segment (once for the sampler, once for the
-        // write). Files hold contiguous whole buckets, so StatsIndex
-        // file pruning is as tight as the range layout's (tighter: a
-        // bucket never straddles files) and probes are unchanged.
-        Layout.repartitionByKeyRange(posting, col("bucket"), nBuckets,
-            math.max(nFiles, 1))
-          .sortWithinPartitions("bucket", "term")
+    // bucket-range clustering WITHOUT the RangePartitioner sampling
+    // pass: buckets are an enumerable [0, nBuckets) domain, so
+    // boundaries need no sampling — repartitionByRange ran the whole
+    // tokenize+term-count chain TWICE per segment (once for the
+    // sampler, once for the write). Files hold contiguous whole
+    // buckets, so StatsIndex file pruning is as tight as the range
+    // layout's (tighter: a bucket never straddles files).
+    val laid = Layout.repartitionByKeyRange(posting, col("bucket"),
+        nBuckets, math.max(nFiles, 1))
+      .sortWithinPartitions("bucket", "term")
     // segment stats ride the write's own execution via observe (the
     // Curate.writeSegment r14 discipline, applied here in r19): n_docs
     // and sum_dl are exact INTEGER sums — order-independent, so the
@@ -280,14 +251,8 @@ object InvertedIndex {
              maxRetries: Int = 0): Long = {
     val prior = catalogOf(spark, root)
     require(prior.nonEmpty, s"no inverted index at $root")
-    // `spark.graft.inv.appendHashLayout=true` lays the APPEND segment
-    // out by bucket hash (one tokenize pass, no range-sampling job —
-    // see writeSegment; builds and compactions keep the range layout,
-    // and compaction restores it for appended segments)
-    val hashLayout = spark.conf
-      .get("spark.graft.inv.appendHashLayout", "false").toBoolean
     val seg = writeSegment(spark, root, batch, idCol, textCol,
-      prior.head.nBuckets, nFiles, hashLayout)
+      prior.head.nBuckets, nFiles)
     // catalog re-read per CAS attempt: a retry after a lost race
     // merges the concurrent winner's segments instead of dropping them
     commitStaged(spark, root, segDirs(seg),

@@ -157,43 +157,34 @@ class CurateSpec extends SparkSpec {
     assert(vC >= 0L) // compaction committed a real version
   }
 
-  test("two-phase budget cumsum is bit-equal to the single window") {
-    // r18 verdict item 2: the banded decomposition regroups long
-    // addition only; both forms must cut the same docs at the same
-    // cumulative counts, including the carried state across batches
-    def feed(roots: Curate.Roots): Unit = {
-      // two sources interleaved over a wide doc_id range (so bands
-      // split them), budget cutting mid-stream in both batches
-      Curate.runBatch(spark, roots,
-        docs((1L, "s", "aa bb"), (5L, "t", "cc"), (90L, "s", "dd ee"),
-             (95L, "t", "ff gg"), (180L, "s", "hh")),
-        embs(1L, 5L, 90L, 95L, 180L),
-        qualityFloor = 0.5, budgetPerSource = 4L)
-      Curate.runBatch(spark, roots,
-        docs((200L, "s", "ii"), (260L, "t", "jj"), (320L, "t", "kk ll")),
-        embs(200L, 260L, 320L),
-        qualityFloor = 0.5, budgetPerSource = 4L)
-    }
-    spark.conf.set("spark.graft.curate.budgetTwoPhase", "true")
-    val rootsA = Curate.tempRoots("curate-spec-2ph")
-    try feed(rootsA)
-    finally spark.conf.unset("spark.graft.curate.budgetTwoPhase")
-    val rootsB = Curate.tempRoots("curate-spec-1ph")
-    feed(rootsB) // default: single window
-    val a = Curate.readCorpus(spark, rootsA)
-      .as[(Long, String, Double)].collect().toSet
-    val b = Curate.readCorpus(spark, rootsB)
-      .as[(Long, String, Double)].collect().toSet
-    assert(a === b)
-    assert(a.nonEmpty)
-    // the carried counters agree too (the append==rebuild anchor)
-    def state(r: Curate.Roots) = {
-      val v = Manifest.versions(spark, r.curation).last
-      spark.read.parquet(
-        s"${Manifest.resolvedDataDir(spark, r.curation, v)}/state")
-        .as[(String, Long)].collect().toSet
-    }
-    assert(state(rootsA) === state(rootsB))
+  test("budget cuts interleaved sources mid-stream and carries both counters") {
+    // two sources interleaved over a wide doc_id range, budget 4,
+    // cutting mid-stream in both batches. Tokens (BpePattern letter
+    // runs): "aa bb"/"dd ee"/"ff gg"/"kk ll" 2, the rest 1; every
+    // text clears the 0.5 floor (0.6 or 0.7).
+    val roots = Curate.tempRoots("curate-spec-budget2")
+    // batch 1 — s: 1 (cum 2) ok, 90 (4) ok, 180 (5) cut;
+    //           t: 5 (cum 1) ok, 95 (3) ok
+    Curate.runBatch(spark, roots,
+      docs((1L, "s", "aa bb"), (5L, "t", "cc"), (90L, "s", "dd ee"),
+           (95L, "t", "ff gg"), (180L, "s", "hh")),
+      embs(1L, 5L, 90L, 95L, 180L),
+      qualityFloor = 0.5, budgetPerSource = 4L)
+    // batch 2 resumes at s=5, t=3 — s: 200 (6) cut;
+    //           t: 260 (4) ok, 320 (6) cut
+    Curate.runBatch(spark, roots,
+      docs((200L, "s", "ii"), (260L, "t", "jj"), (320L, "t", "kk ll")),
+      embs(200L, 260L, 320L),
+      qualityFloor = 0.5, budgetPerSource = 4L)
+    assert(Curate.readCorpus(spark, roots).select("doc_id")
+      .as[Long].collect().sorted.toSeq === Seq(1L, 5L, 90L, 95L, 260L))
+    // the carried counters hold the FULL quality-passed mass per source
+    def state(v: Long) = spark.read.parquet(
+        s"${Manifest.resolvedDataDir(spark, roots.curation, v)}/state")
+      .as[(String, Long)].collect().toSet
+    assert(Manifest.versions(spark, roots.curation) === Seq(0L, 1L))
+    assert(state(0L) === Set(("s", 5L), ("t", 3L)))
+    assert(state(1L) === Set(("s", 6L), ("t", 6L)))
   }
 
   test("inline index maintenance bounds segment counts, probes unchanged") {

@@ -91,27 +91,6 @@ class InvertedIndexSpec extends SparkSpec {
     assert(asRows(InvertedIndex.probe(spark, rootC, terms, k = 10)) === pre)
   }
 
-  test("hash-layout append probes identically to the range layout") {
-    // the r18 inv-append lever: appends skip the range-sampling job
-    // (which re-runs the whole tokenize chain) by hash-partitioning
-    // on bucket; probes must be bit-identical — layout is an access
-    // path, never semantics
-    val docs = Tables.documents(spark, sfDir)
-    val root = freshRoot("invidx-hashlayout")
-    InvertedIndex.build(spark, docs.where(col("doc_id") % 2 === 0), root,
-      nBuckets = 8, nFiles = 8)
-    spark.conf.set("spark.graft.inv.appendHashLayout", "true")
-    try InvertedIndex.append(spark, root, docs.where(col("doc_id") % 2 === 1))
-    finally spark.conf.unset("spark.graft.inv.appendHashLayout")
-    val got = asRows(InvertedIndex.probe(spark, root, terms, k = 10))
-    val want = asRows(Queries.bm25Search(spark, sfDir))
-    assert(got === want)
-    // compaction folds the hash segment back into one range-clustered
-    // segment; probes still identical
-    InvertedIndex.compactSegments(spark, root, nFiles = 8)
-    assert(asRows(InvertedIndex.probe(spark, root, terms, k = 10)) === want)
-  }
-
   test("vacuum GCs segments no retained version references") {
     val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 100)
     val root = freshRoot("invidx-vacuum")

@@ -544,23 +544,34 @@ class SourcesSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
     assert(gotScan === want)
-    // r19: the scan leg's default is ONE Aho-Corasick pass; the
-    // crossJoin+contains fallback (conf-off, and the over-byte-bound
-    // path) must produce the identical set — including the duplicate
-    // pattern-STRING case the automaton dedupes and the join fans
-    // back out to every pattern_id
+    // r19: the scan leg's default is ONE Aho-Corasick pass over the
+    // DISTINCT pattern strings — the duplicate pattern-STRING case is
+    // deduped by the automaton and fanned back out by the join to
+    // every pattern_id
+    def multiMatchRan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("multipatternhits")
     val dupPats = pats :+ (5L, "abc")
     val wantDup = want ++ want.filter(_._1 == 4L).map(t => (5L, t._2))
-    val gotScanAc = graft.sources.GrepIndex.probe(spark, root, dupPats,
+    val scanAc = graft.sources.GrepIndex.probe(spark, root, dupPats,
         scanFraction = -1.0)
-      .as[(Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.grep.scanAhoCorasick", "false")
-    val gotScanCj = try graft.sources.GrepIndex.probe(spark, root, dupPats,
-          scanFraction = -1.0)
-        .as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.grep.scanAhoCorasick")
-    assert(gotScanAc === wantDup)
-    assert(gotScanCj === wantDup)
+    assert(scanAc.as[(Long, Long)].collect().toSet === wantDup)
+    assert(multiMatchRan(scanAc))
+    // past MultiPatternHits.MaxPatternBytes of distinct pattern strings
+    // the scan leg falls back to crossJoin+contains. Padding = every
+    // doc's full text: each trigram is in the corpus, so no padding
+    // pattern settles df-0 before it reaches the scan leg's budget
+    val docRows = docs.as[(Long, String)].collect()
+    val pad = docRows.map(_._2).distinct.toSeq.zipWithIndex
+      .map { case (t, i) => (100L + i, t) }
+    assert(pad.map(_._2.getBytes("UTF-8").length.toLong).sum >
+      graft.functions.expressions.MultiPatternHits.MaxPatternBytes)
+    val wantBig = wantDup ++ pad.flatMap { case (pid, p) =>
+      docRows.collect { case (d, t) if t.contains(p) => (pid, d) } }
+    val scanCj = graft.sources.GrepIndex.probe(spark, root, dupPats ++ pad,
+        scanFraction = -1.0)
+    assert(scanCj.as[(Long, Long)].collect().toSet === wantBig)
+    assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
+    assert(!multiMatchRan(scanCj))
     // default auto-route picks one of the two and stays exact
     val gotAuto = graft.sources.GrepIndex.probe(spark, root, pats)
       .as[(Long, Long)].collect().toSet
@@ -632,20 +643,6 @@ class SourcesSpec extends SparkSpec {
     assert(spark.conf.get("spark.graft.grep.lastSplit") ===
       "index=2 scan=1")
     assert(spark.conf.get("spark.graft.grep.lastScanFolded") === "2")
-    // conf-off restores the true split: needles keep the index leg,
-    // and that leg really runs pruned (not the old all-scan route)
-    spark.conf.set("spark.graft.grep.scanFoldAll", "false")
-    val gotSplit = try graft.sources.GrepIndex.probe(spark, root, pats,
-          scanFraction = 0.5)
-        .as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.grep.scanFoldAll")
-    assert(gotSplit === want)
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "split")
-    assert(spark.conf.get("spark.graft.grep.lastSplit") ===
-      "index=2 scan=1")
-    assert(spark.conf.get("spark.graft.grep.lastScanFolded") === "0")
-    // the index leg really ran pruned (not the old all-scan route)
-    assert(spark.conf.get("spark.graft.grep.lastPruned").matches("\\d+/\\d+"))
     // conf hygiene: an early-exit probe (df-0 settle) reports n/a for
     // stages it never ran instead of leaking the previous probe's
     // values (r17 staleness finding)
@@ -658,14 +655,14 @@ class SourcesSpec extends SparkSpec {
     graft.Blocks.freeAll(spark)
   }
 
-  test("GrepIndex: scatter-shaped candidate fetch routes to the scan leg") {
+  test("GrepIndex: candidate fetch stays on point reads, scattered or clustered") {
     import spark.implicits._
     val root = Files.createTempDirectory("grep-local").toString + "/idx"
     // 12000 docs; a SCATTERED marker sits in 300 docs spread uniformly
-    // over the id range (>= FetchScatterMinDocs, touches every
-    // clustered docs file — yet rare enough that its posting MASS
-    // stays under the pattern-level scanFraction, so it reaches the
-    // candidate fetch at all), a CLUSTERED marker in 40 contiguous docs
+    // over the id range (touches every clustered docs file — yet rare
+    // enough that its posting MASS stays under the pattern-level
+    // scanFraction, so it reaches the candidate fetch at all), a
+    // CLUSTERED marker in 40 contiguous docs
     val docs = (0L until 12000L).map { i =>
       val scat = if (i % 40 == 0) " scatmark_xq" else ""
       val clus = if (i >= 100 && i < 140) " clusmark_zv" else ""
@@ -676,27 +673,16 @@ class SourcesSpec extends SparkSpec {
     def wanted(p: String): Set[(Long, Long)] =
       docs.where(col("text").contains(p)).select(col("doc_id"))
         .as[Long].collect().map(d => (0L, d)).toSet
-    // scattered, DEFAULT config: the point fetch stays (the r19 tier
-    // A/B measured it beating the scan leg even at 32/32 files kept —
-    // the router defaults off, GrepIndex.FetchLocalityFraction doc)
+    // scattered: the point fetch stays (the r19 tier A/B measured it
+    // beating a sequential scan leg even at 32/32 docs files kept,
+    // SCALE1000_r19_grep.json)
     val gotScat = graft.sources.GrepIndex.probe(spark, root,
       Seq((0L, "scatmark_xq"))).as[(Long, Long)].collect().toSet
     assert(gotScat === wanted("scatmark_xq"))
     assert(spark.conf.get("spark.graft.grep.lastFetchRoute") === "point")
-    // opted in: 300 candidates across all 8 docs files -> scan leg,
-    // results identical (exactness is never routing-dependent)
-    spark.conf.set("spark.graft.grep.fetchLocalityFraction", "0.5")
-    val gotRouted = try graft.sources.GrepIndex.probe(spark, root,
-        Seq((0L, "scatmark_xq"))).as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.grep.fetchLocalityFraction")
-    assert(spark.conf.get("spark.graft.grep.lastFetchRoute") === "scan")
-    assert(gotRouted === gotScat)
-    // clustered: 40 candidates in one id range -> point fetch, pruned,
-    // router or not
-    spark.conf.set("spark.graft.grep.fetchLocalityFraction", "0.5")
-    val gotClus = try graft.sources.GrepIndex.probe(spark, root,
-        Seq((0L, "clusmark_zv"))).as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.grep.fetchLocalityFraction")
+    // clustered: 40 candidates in one id range -> point fetch, pruned
+    val gotClus = graft.sources.GrepIndex.probe(spark, root,
+      Seq((0L, "clusmark_zv"))).as[(Long, Long)].collect().toSet
     assert(gotClus === wanted("clusmark_zv"))
     assert(spark.conf.get("spark.graft.grep.lastFetchRoute") === "point")
     val Array(k, t) = spark.conf.get("spark.graft.grep.lastDocsPruned")

@@ -162,21 +162,6 @@ object CurateProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.graft.curate.profile", "true")
-    // CURATEPROBE_ANNBLOOM=1 flips the runBatch ann-side bloom-pruned
-    // semi join on for the A/B leg
-    if (sys.env.get("CURATEPROBE_ANNBLOOM").contains("1"))
-      spark.conf.set("spark.graft.curate.annBloomPrune", "true")
-    // r19 A/B levers: CURATEPROBE_BUDGET1PHASE=1 restores the r18
-    // single-window budget cumsum (baseline leg for verdict item 2);
-    // CURATEPROBE_INVHASH=1 flips the append hash layout on,
-    // CURATEPROBE_INVCKPT=1 the tokenize-checkpoint attribution lever
-    // (the inv-append decomposition, verdict item 4)
-    if (sys.env.get("CURATEPROBE_BUDGET1PHASE").contains("1"))
-      spark.conf.set("spark.graft.curate.budgetTwoPhase", "false")
-    if (sys.env.get("CURATEPROBE_INVHASH").contains("1"))
-      spark.conf.set("spark.graft.inv.appendHashLayout", "true")
-    if (sys.env.get("CURATEPROBE_INVCKPT").contains("1"))
-      spark.conf.set("spark.graft.inv.segmentCkpt", "true")
     val metrics = new Scale100.StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     spark.range(1000000).selectExpr("sum(id)").collect()

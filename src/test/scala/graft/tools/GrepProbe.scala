@@ -84,9 +84,7 @@ object GrepProbe {
               lit(" zq9xv7_kwq3jp")).otherwise(lit("")),
             // r19 (verdict item 7): a SECOND needle planted UNIFORMLY
             // over the id space (~1 in 5k) — the r17 honest-negative
-            // shape, now a routed case: its candidates touch ~every
-            // clustered docs file, so the fetch locality router must
-            // send it down the scan leg instead of the point fetch
+            // shape: its candidates touch ~every clustered docs file
             when(pmod(xxhash64(col("doc_id"), lit(99)), lit(5000L)) === 0L,
               lit(" qv8wzxq7k")).otherwise(lit(""))).as("text"))
         .write.mode("overwrite").parquet(saltedPath)
@@ -144,42 +142,23 @@ object GrepProbe {
 
     // r19 (verdict item 7): the uniformly-scattered needle — the r17
     // honest negative (point fetch won CPU 2.4x but LOST wall then).
-    // The locality router sees candidate-files-kept/total before
-    // fetching; the A/B re-measured BOTH legs on the current fetch
-    // path and the POINT fetch now wins even fully scattered (8 MB
-    // row-group skipping: ~candidates x one group read vs the full
-    // sequential scan), so the router defaults OFF — the default leg
-    // asserts point, the conf-opted leg exercises the scan route.
-    // Results identical either way.
-    var gotScat: Set[(Long, Long)] = null
+    // The r19 A/B (SCALE1000_r19_grep.json) re-measured it on the
+    // current fetch path and the POINT fetch now wins even fully
+    // scattered (8 MB row-group skipping: ~candidates x one group read
+    // vs the full sequential scan).
     run("grep_scatter_probe_auto") {
       import spark.implicits._
       val g = graft.sources.GrepIndex.probe(spark, root,
           Seq((0L, "qv8wzxq7k")))
         .as[(Long, Long)].collect().toSet
-      gotScat = g
       assert(spark.conf.get("spark.graft.grep.lastRoute") == "index",
         "scattered needle is still posting-rare - index route")
       assert(spark.conf.get("spark.graft.grep.lastFetchRoute") == "point",
-        "default keeps the point fetch (the measured winner)")
+        "scattered candidates keep the point fetch (the measured winner)")
       println("GREPPROBE_NOTE scatter docsPrune " +
         spark.conf.get("spark.graft.grep.lastDocsPruned", "n/a") +
         " fetchRoute " +
         spark.conf.get("spark.graft.grep.lastFetchRoute", "n/a"))
-      g.size.toLong
-    }
-    run("grep_scatter_scan_routed") {
-      import spark.implicits._
-      spark.conf.set("spark.graft.grep.fetchLocalityFraction", "0.5")
-      val g = try graft.sources.GrepIndex.probe(spark, root,
-            Seq((0L, "qv8wzxq7k")))
-          .as[(Long, Long)].collect().toSet
-        finally spark.conf.unset("spark.graft.grep.fetchLocalityFraction")
-      assert(spark.conf.get("spark.graft.grep.lastFetchRoute") == "scan",
-        "opted-in router must take the scan leg on 32/32 candidates")
-      val same = gotScat != null && g == gotScat
-      println(s"GREPPROBE_NOTE scatter route equality: $same")
-      assert(same, "scan-routed fetch must equal the point fetch")
       g.size.toLong
     }
     run("grep_salted_probe_scan_forced") {
@@ -235,23 +214,6 @@ object GrepProbe {
       assert(folded == "3", s"three needles folded, got $folded")
       g.size.toLong
     }
-    run("grep_mixed_split_routed") {
-      import spark.implicits._
-      spark.conf.set("spark.graft.grep.scanFoldAll", "false")
-      val g = try graft.sources.GrepIndex.probe(spark, root, mixed)
-          .as[(Long, Long)].collect().toSet
-        finally spark.conf.unset("spark.graft.grep.scanFoldAll")
-      val route = spark.conf.get("spark.graft.grep.lastRoute")
-      val split = spark.conf.get("spark.graft.grep.lastSplit")
-      println(s"GREPPROBE_NOTE mixed split-routed route $route split $split")
-      assert(route == "split", s"conf-off mixed sweep must split, got $route")
-      assert(split == "index=3 scan=1",
-        s"only the common literal scans, got $split")
-      val same = gotMixed != null && g == gotMixed
-      println(s"GREPPROBE_NOTE mixed fold equality: $same")
-      assert(same, "folded result must equal the split route")
-      g.size.toLong
-    }
     run("grep_mixed_scan_forced") {
       import spark.implicits._
       val g = graft.sources.GrepIndex.probe(spark, root, mixed,
@@ -273,12 +235,12 @@ object GrepProbe {
       g.size.toLong
     }
 
-    // r19: the many-needle scan leg A/B — ONE Aho-Corasick pass vs
-    // the P-way crossJoin+contains it replaced. The lexicon is the
+    // r19: the many-needle scan leg — ONE Aho-Corasick pass where the
+    // P-way crossJoin+contains used to run. The lexicon is the
     // corpus's own common vocabulary (every pattern posting-heavy, so
     // the router would scan them all anyway; scanFraction = -1 makes
     // it deterministic) — the decontamination shape where HUNDREDS of
-    // needles ride the shared scan. Equality is digest-based (count +
+    // needles ride the shared scan. The result is a digest (count +
     // order-independent xxhash64 sum): the match set here is
     // ~P_common × corpus and must never be collect()ed.
     val lex64 = salted.limit(2000)
@@ -295,25 +257,12 @@ object GrepProbe {
       (r.getLong(0),
         Option(r.getDecimal(1)).map(_.toString).getOrElse("0"))
     }
-    var acDigest: (Long, String) = null
     run("grep_scan64_aho_corasick") {
       val d = scanDigest(graft.sources.GrepIndex.probe(spark, root,
         spats, scanFraction = -1.0))
-      acDigest = d
+      println(s"GREPPROBE_NOTE scan64 digest: $d")
       d._1
     }
-    run("grep_scan64_crossjoin") {
-      spark.conf.set("spark.graft.grep.scanAhoCorasick", "false")
-      val d = try scanDigest(graft.sources.GrepIndex.probe(spark, root,
-          spats, scanFraction = -1.0))
-        finally spark.conf.unset("spark.graft.grep.scanAhoCorasick")
-      val same = acDigest != null && d == acDigest
-      println(s"GREPPROBE_NOTE scan64 equality: $same " +
-        s"(rows ${d._1} vs ${if (acDigest == null) -1 else acDigest._1})")
-      assert(same, "AC scan leg must match the crossJoin leg exactly")
-      d._1
-    }
-
     // regex sweep over the same index (#39e): the needle templated as
     // a pattern — branch literal runs "zq9xv7_k" / "3jp" constrain
     // candidates, regexp_like verifies; vs the forced regex scan

@@ -907,7 +907,7 @@ object OptProbe {
         spark.stop()
 
       case other =>
-        println(s"unknown mode $other; modes: plans time substr tri jac jacplan substrplan ab3 ab4 ab5 storm")
+        println(s"unknown mode $other; modes: plans time substr tri jac jacplan substrplan ab3 ab4 ab5 lines jobs segjobs storm")
     }
   }
 }
