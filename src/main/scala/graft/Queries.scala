@@ -5263,7 +5263,10 @@ object Queries {
       .select(col("doc_id"),
         concat_ws(" ", col("toks")).as("token_str"),
         size(col("toks")).cast("long").as("n_tokens"),
-        size(filter(col("toks"), t => t === "[UNK]")).cast("long").as("n_unk"))
+        // array_remove, not an interpreted filter lambda: the tokens
+        // are never null, so the size difference counts the [UNK]s
+        (size(col("toks")) - size(array_remove(col("toks"), "[UNK]")))
+          .cast("long").as("n_unk"))
   }
 
   private val wordpieceTokenizeSql: String = {

@@ -33,6 +33,7 @@ object GraftFunctions {
   val CharGramHashesName = "graft_char_gram_hashes"
   val CharGramMd5Name = "graft_char_gram_md5"
   val WordGramHashesName = "graft_word_gram_hashes"
+  val WordShingleHashesName = "graft_word_shingle_hashes"
   val TokenSegmentsName = "graft_token_segments"
   val MultiMatchName = "graft_multi_match"
   val SortedIntersectCountName = "graft_sorted_intersect_count"
@@ -143,6 +144,12 @@ object GraftFunctions {
           "text, n", 2, c0)
         graft.functions.expressions.WordGramHashes(
           c(0), evalIntConst(WordGramHashesName, "n", c(1))) }),
+    (WordShingleHashesName, classOf[graft.functions.expressions.WordShingleHashes],
+      (c0: Seq[Expression]) => { val c = arity(WordShingleHashesName,
+          "text, n, family", 3, c0)
+        graft.functions.expressions.WordShingleHashes(
+          c(0), evalIntConst(WordShingleHashesName, "n", c(1)),
+          evalIntConst(WordShingleHashesName, "family", c(2))) }),
     (TokenSegmentsName, classOf[graft.functions.expressions.TokenSegments],
       (c0: Seq[Expression]) => { val c = arity(TokenSegmentsName,
           "text, segTokens", 2, c0)
@@ -328,6 +335,14 @@ object GraftFunctions {
   def wordGramHashes(text: Column, n: Int): Column = {
     SparkSession.getActiveSession.foreach(register)
     call_function(WordGramHashesName, text, lit(n))
+  }
+
+  /** MinHash word-shingle hashes (family 0: token xxhash64; family 1:
+    * its `xxhash64(1, token)` twin), one native pass per row — see
+    * [[graft.functions.expressions.WordShingleHashes]]. */
+  def wordShingleHashes(text: Column, n: Int, family: Int): Column = {
+    SparkSession.getActiveSession.foreach(register)
+    call_function(WordShingleHashesName, text, lit(n), lit(family))
   }
 
   /** Non-overlapping segTokens-token segment grid, one boundary pass —

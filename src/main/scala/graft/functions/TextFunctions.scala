@@ -86,5 +86,8 @@ object TextFunctions {
       (lit(1.0) - punctRatioRegex(text)) * 0.2
 
   /** Whole-document fingerprint: md5 of the normalized text. */
-  def fingerprint(text: Column): Column = md5(normalize(text).cast("binary"))
+  def fingerprint(text: Column): Column = normalizedFingerprint(normalize(text))
+
+  /** [[fingerprint]] of text that is already [[normalize]]d. */
+  def normalizedFingerprint(norm: Column): Column = md5(norm.cast("binary"))
 }

@@ -23,6 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    production key for `Corpus.decontaminate`'s overlap join
   *    (replaces exploded `Dedup.shingles` STRINGS built by interpreted
   *    slice+concat_ws lambdas).
+  *  - [[WordShingleHashes]] — the two MinHash word-shingle hash
+  *    families of `Dedup.minhashPairs`' member table and
+  *    `DocsStream.nearDupPairs` (replaces `transform(toks, xxhash64)`
+  *    followed by an interpreted rotl/XOR window HOF): each token
+  *    hashed once in place, each window mixed in one loop.
   *  - [[TokenSegments]] — the non-overlapping `segTokens`-token
   *    segment grid of `Corpus.dedupLines`/`stripBoilerplate`,
   *    VALUE-IDENTICAL to the HOF form (segments stay strings — they
@@ -42,7 +47,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * xxhash64 digests use seed 42 — Spark's own `xxhash64(...)` constant
   * — so every hash here is reproducible in-engine as
-  * `xxhash64(gram_string)`: that is what lets ExpressionSpec gate
+  * `xxhash64(gram_string)` (a WordShingleHashes family-1 token hash as
+  * `xxhash64(1, token)`): that is what lets ExpressionSpec gate
   * these value-identical against composed built-ins, and what keeps
   * the md5 oracle twins meaningful (same grams, different digest).
   */
@@ -304,6 +310,88 @@ case class WordGramHashes(child: Expression, n: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("wgh", this, classOf[WordGramHashes].getName)
+    val childGen = child.genCode(ctx)
+    val code =
+      code"""
+         |${childGen.code}
+         |boolean ${ev.isNull} = ${childGen.isNull};
+         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
+         |if (!${ev.isNull}) {
+         |  ${ev.value} = $self.doHash(${childGen.value});
+         |}
+       """
+    ev.copy(code = code)
+  }
+}
+
+/** MinHash word-shingle hashes of a single-space-tokenized string, as
+  * `array<bigint>` — VALUE-IDENTICAL to ExpressionSpec's reference
+  * HOF `shingleHashes(transform(split(s, " "), t -> xxhash64(t)), n)`
+  * (family 0) and its `xxhash64(1, t)` twin (family 1). Each token is hashed once, in place (seed 42, or
+  * `xxhash64(1)`'s running seed for family 1 — Spark's multi-argument
+  * xxhash64 chains each argument's digest into the next one's seed);
+  * window i then XOR-mixes rotl(tokenHash(i + j), (n - j)·17 % 63 + 1)
+  * over j < n, so "a b c" ≠ "c b a", with tail windows clamped to the
+  * last token. No shingle strings and no distinct: MinHash's min is
+  * duplicate-insensitive and the jaccard set-ops dedupe. Documents
+  * shorter than n tokens give one window. Null text ⇒ null. */
+case class WordShingleHashes(child: Expression, n: Int, family: Int)
+    extends UnaryExpression {
+
+  require(n >= 1, s"bad shingle width n=$n")
+  require(family == 0 || family == 1, s"shingle-hash family is 0 or 1, got $family")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"graft_word_shingle_hashes expects a string column, got ${child.dataType.simpleString}")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): WordShingleHashes =
+    copy(child = newChild)
+
+  private val seed: Long = if (family == 0) 42L else XXH64.hashInt(1, 42L)
+  private val rotations: Array[Int] = Array.tabulate(n)(j => (n - j) * 17 % 63 + 1)
+
+  /** Public so generated code can call it. */
+  def doHash(u: UTF8String): ArrayData = {
+    val base = u.getBaseObject
+    val start = u.getBaseOffset
+    val starts = Grams.tokenStartOffsets(u)
+    val m = starts.length - 1 // token count, >= 1
+    val th = new Array[Long](m)
+    var t = 0
+    while (t < m) {
+      th(t) = XXH64.hashUnsafeBytes(
+        base, start + starts(t), starts(t + 1) - 1 - starts(t), seed)
+      t += 1
+    }
+    val windows = math.max(m - n + 1, 1)
+    val hs = new Array[Long](windows)
+    var i = 0
+    while (i < windows) {
+      var h = 0L
+      var j = 0
+      while (j < n) {
+        h ^= java.lang.Long.rotateLeft(th(math.min(i + j, m - 1)), rotations(j))
+        j += 1
+      }
+      hs(i) = h
+      i += 1
+    }
+    new GenericArrayData(hs)
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    doHash(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("wsh", this, classOf[WordShingleHashes].getName)
     val childGen = child.genCode(ctx)
     val code =
       code"""

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.{GraftFunctions, TextFunctions}
 
 /** Deduplication family for training-data pipelines: exact, MinHash-LSH
   * (+ exact n-gram-Jaccard verification), SimHash, and embedding-cosine
@@ -11,9 +11,9 @@ import graft.functions.TextFunctions
   * Scale design: every candidate-generation step is LSH-bucketed so the
   * self-join is on (band/chunk/bucket) keys — never an O(n²) cross
   * join. Exact verification (jaccard / hamming / cosine) runs only
-  * inside buckets. All signatures are built from higher-order-function
-  * expressions over built-in hashes (`xxhash64`) — codegen'd, no UDFs,
-  * deterministic across runs and engines.
+  * inside buckets. All signatures are built from `xxhash64` digests —
+  * by native codegen'd expressions (graft.functions.expressions) or
+  * built-in ones, no UDFs — deterministic across runs and engines.
   */
 object Dedup {
 
@@ -51,7 +51,8 @@ object Dedup {
 
   /** Distinct word n-gram shingles of the normalized text. Documents
     * shorter than n shingle to their whole text. (Debug/reference
-    * form — the hot path uses [[shingleHashes]], which never
+    * form — the hot path uses the native
+    * [[graft.functions.expressions.WordShingleHashes]], which never
     * materializes shingle strings.) */
   def shingles(text: Column, n: Int): Column = {
     val toks = split(TextFunctions.normalize(text), " ")
@@ -59,30 +60,6 @@ object Dedup {
       transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
         i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
   }
-
-  private def rotl(h: Column, r: Int): Column =
-    shiftleft(h, r).bitwiseOR(shiftrightunsigned(h, 64 - r))
-
-  /** 64-bit hash per word n-gram, straight from per-token hashes —
-    * no shingle strings, no array_distinct (min is duplicate-
-    * insensitive and the jaccard set-ops dedupe): position j of the
-    * window contributes rotl(tokenHash, f(j)) into an XOR mix, so
-    * "a b c" ≠ "c b a". Tail windows clamp to the last token. */
-  def shingleHashes(tokHashes: Column, n: Int): Column =
-    // tokHashes is LET-BOUND (GraftFunctions.once): this HOF is
-    // interpreted, and interpreted eval re-evaluates a subtree per
-    // REFERENCE — the loop below references it ~2n+1 times per
-    // shingle, which turned the caller's split+normalize into an
-    // O(shingles × len) regex storm per row (the r13 StreamBench
-    // finding: a 62.5k-doc micro-batch ran 20+ min). Bound, the
-    // child evaluates once per row; values are identical.
-    graft.functions.GraftFunctions.once(tokHashes) { th =>
-      transform(sequence(lit(0), greatest(size(th) - n, lit(0))), i =>
-        (0 until n).map { j =>
-          val h = element_at(th, least(i + lit(j + 1), size(th)))
-          rotl(h, (n - j) * 17 % 63 + 1)
-        }.reduce(_ bitwiseXOR _))
-    }
 
   /** k-permutation MinHash signature via double hashing: only TWO
     * string hashes per shingle; permutation j is h1 ^ rotl(h2, j) —
@@ -178,27 +155,27 @@ object Dedup {
   /** Exact-dup-collapsed member table, the shared prep of the minhash
     * family: (id, gid) for every doc (two longs — feeds the expansion
     * joins) plus the two independent shingle-hash families (double
-    * hashing) for keepers only — guarded by `when` so non-keepers
-    * never pay the shingle pass. ONE window shuffle, checkpointed:
+    * hashing) for keepers only — guarded by `when`, so the native
+    * [[graft.functions.expressions.WordShingleHashes]] kernel runs on
+    * keepers only and non-keepers carry null. The text is normalized
+    * ONCE, in the parallel scan stage: the fingerprint hashes it there
+    * and the normalized text (not the raw one) crosses the window
+    * shuffle to feed the kernel. ONE window shuffle, checkpointed:
     * materializes once AND truncates lineage, so every AQE stage
     * re-optimizes a leaf scan instead of the full window+shingle plan
     * (plain .cache() left concurrent readers serialized on the
     * cache-population lock, ~0.5 s of zero-CPU wait per stage). */
   private def memberTable(docs: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame = {
-    val fpc = TextFunctions.fingerprint(col(textCol))
     val wnd = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val toks = split(TextFunctions.normalize(col("text")), " ")
-    docs.select(col(idCol).as("id"), col(textCol).as("text"), fpc.as("fp"))
+    val keeper = col("id") === col("gid")
+    docs.select(col(idCol).as("id"),
+        TextFunctions.normalize(col(textCol)).as("norm"))
+      .withColumn("fp", TextFunctions.normalizedFingerprint(col("norm")))
       .withColumn("gid", min("id").over(wnd))
       .select(col("id"), col("gid"),
-        when(col("id") === col("gid"),
-          transform(toks, t => xxhash64(t))).as("t1"),
-        when(col("id") === col("gid"),
-          transform(toks, t => xxhash64(lit(1), t))).as("t2"))
-      .select(col("id"), col("gid"),
-        shingleHashes(col("t1"), n).as("sh1"),
-        shingleHashes(col("t2"), n).as("sh2"))
+        when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 0)).as("sh1"),
+        when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 1)).as("sh2"))
       .localCheckpoint()
   }
 

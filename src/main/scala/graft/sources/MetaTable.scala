@@ -34,8 +34,9 @@ object MetaTable {
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Data files of `dir` in name order, by Spark's listing rule:
-    * names starting with `_` or `.` are not data. */
-  private def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
+    * names starting with `_` or `.` are not data. A `dir` that is
+    * itself a parquet file lists as just that file. */
+  private[graft] def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(p).toSeq.map(_.getPath)

@@ -4,7 +4,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.TextFunctions
+import graft.functions.{GraftFunctions, TextFunctions}
 import graft.operators.Dedup
 
 /** Streaming near-duplicate detection: the continuous twin of
@@ -14,13 +14,13 @@ import graft.operators.Dedup
   * a nightly batch.
   *
   * Shape: signature + band hashes are computed with the SAME native
-  * expressions as the batch operator (MinHashSignature, shingle
-  * hashes), then the stream is keyed by (band_idx, band_hash) and a
-  * `flatMapGroupsWithState` holds, per bucket, the signatures seen
-  * within the watermark horizon. State is O(docs-per-bucket × k longs)
-  * and self-expires via event-time timeout — bounded memory on an
-  * unbounded stream, sharded across executors by bucket like any
-  * keyed state.
+  * expressions as the batch operator (WordShingleHashes,
+  * MinHashSignature), then the stream is keyed by (band_idx,
+  * band_hash) and a `flatMapGroupsWithState` holds, per bucket, the
+  * signatures seen within the watermark horizon. State is
+  * O(docs-per-bucket × k longs) and self-expires via event-time
+  * timeout — bounded memory on an unbounded stream, sharded across
+  * executors by bucket like any keyed state.
   *
   * Differences from batch, by nature of streaming:
   *  - pairs are ordered by ARRIVAL (earlier doc first), not min id;
@@ -89,24 +89,21 @@ object DocsStream extends Serializable {
     import spark.implicits._
     val rows = numHashes / bands
     val horizonUs = horizonMinutes * 60000000L
-    val toks = split(TextFunctions.normalize(col("text")), " ")
+    val norm = TextFunctions.normalize(col("text"))
     val sig = Dedup.minhashSignatureFromHashes(
-      Dedup.shingleHashes(transform(toks, t => xxhash64(t)), n),
-      Dedup.shingleHashes(transform(toks, t => xxhash64(lit(1), t)), n),
-      numHashes)
-    // sig is let-bound (GraftFunctions.once): CollapseProject inlines
-    // a column alias into every reference, and this projection
-    // references the signature 1 + bands times (the sig column + each
-    // band slice) — unbound, the whole interpreted signature pipeline
-    // evaluated 5× per document (part of the r13 StreamBench finding)
+      GraftFunctions.wordShingleHashes(norm, n, 0),
+      GraftFunctions.wordShingleHashes(norm, n, 1), numHashes)
+    // the signature is its own projection: CollapseProject keeps a
+    // non-cheap alias referenced 1 + bands times (the sig column + each
+    // band slice) un-inlined, so it is computed once per document, and
+    // codegen'd — a GraftFunctions.once let-binding would force it
+    // interpreted (2× the task CPU over 20k documents)
     val banded = docs
       .withWatermark("ts", s"$horizonMinutes minutes")
-      .select(col("doc_id"), col("ts"),
-        graft.functions.GraftFunctions.once(sig)(s =>
-          struct(s.as("sig"),
-                 Dedup.bandHashes(s, bands, rows).as("bh"))).as("x"))
-      .select(col("doc_id"), col("ts"), col("x.sig").as("sig"),
-        posexplode(col("x.bh")).as(Seq("band_idx", "band_hash")))
+      .select(col("doc_id"), col("ts"), sig.as("sig"))
+      .select(col("doc_id"), col("ts"), col("sig"),
+        posexplode(Dedup.bandHashes(col("sig"), bands, rows))
+          .as(Seq("band_idx", "band_hash")))
       .as[BandedDoc]
 
     def fn(key: (Int, Long), it: Iterator[BandedDoc],

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
+import graft.functions.expressions.WordShingleHashes
 import graft.operators.{Dedup, Similarity}
 
 class DedupSpec extends SparkSpec {
@@ -51,6 +57,32 @@ class DedupSpec extends SparkSpec {
       .where(col("doc_a") === 1 && col("doc_b") === 4)
       .select("jaccard").as[Double].head()
     assert(j14 === 1.0)
+  }
+
+  test("minhash member checkpoint hashes shingles natively: no lambda in its plan") {
+    // the member table is the one checkpoint minhashPairs takes; its
+    // projection must stay one native kernel per hash family, not the
+    // interpreted transform/rotl HOF chain it replaced
+    val checkpoints = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") checkpoints.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.minhashPairs(docs(), "doc_id", "text")
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+    } finally spark.listenerManager.unregister(listener)
+    assert(checkpoints.size === 1)
+    val exprs = checkpoints.asScala.head.optimizedPlan
+      .flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.count(_.isInstanceOf[WordShingleHashes]) === 2)
+    assert(!exprs.exists(e =>
+      e.isInstanceOf[HigherOrderFunction] || e.isInstanceOf[LambdaFunction]))
   }
 
   test("simhash hamming distance: 0 for dups, small for near-dups, large across topics") {

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, TextFunctions}
 
 /** Native codegen expressions must be value-identical to their
   * reference HOF formulations. */
@@ -505,5 +506,60 @@ class ExpressionSpec extends SparkSpec {
     assert(Seq("").toDF("text")
       .select(GraftFunctions.tokenSegments(col("text"), st))
       .as[Seq[String]].head() === Seq(""))
+  }
+
+  // Reference twin of graft_word_shingle_hashes, composed of Spark
+  // built-ins: per-token hashes in, one rotl/XOR mix per n-token
+  // window out, tail windows clamped to the last token. tokHashes is
+  // let-bound (once): the loop
+  // references it 2n+1 times per window, and interpreted eval would
+  // re-evaluate the split per reference.
+  private def rotl(h: Column, r: Int): Column =
+    shiftleft(h, r).bitwiseOR(shiftrightunsigned(h, 64 - r))
+
+  private def shingleHashes(tokHashes: Column, n: Int): Column =
+    GraftFunctions.once(tokHashes) { th =>
+      transform(sequence(lit(0), greatest(size(th) - n, lit(0))), i =>
+        (0 until n).map { j =>
+          val h = element_at(th, least(i + lit(j + 1), size(th)))
+          rotl(h, (n - j) * 17 % 63 + 1)
+        }.reduce(_ bitwiseXOR _))
+    }
+
+  test("graft_word_shingle_hashes equals the xxhash64 + rotl/XOR window HOF") {
+    val docs = Tables.documents(spark, sfDir10x).select(col("text"))
+      .unionAll(Seq(
+        "", "onetoken", "a b", "\tleading tab makes an empty token",
+        "repeated   spaces  between    tokens", "päivää maailma ÅÄÖ åäö 日本語 テキスト",
+        "ÅÄÖ").toDF("text"))
+    // raw text exercises empty tokens; normalized text is what the
+    // minhash member table and DocsStream feed the kernel
+    val texts = docs.select(col("text")).unionAll(
+      docs.select(TextFunctions.normalize(col("text")).as("text")))
+    assert(texts.where(array_contains(split(col("text"), " "), "")).count() >= 3)
+    val toks = split(col("text"), " ")
+    for (n <- Seq(1, 2, 3, 5)) {
+      val out = texts.select(col("text"),
+        GraftFunctions.wordShingleHashes(col("text"), n, 0).as("nat0"),
+        shingleHashes(transform(toks, t => xxhash64(t)), n).as("ref0"),
+        GraftFunctions.wordShingleHashes(col("text"), n, 1).as("nat1"),
+        shingleHashes(transform(toks, t => xxhash64(lit(1), t)), n).as("ref1"))
+      val bad = out.where(not(col("nat0") <=> col("ref0")) ||
+        not(col("nat1") <=> col("ref1")))
+      assert(bad.isEmpty, s"n=$n: ${bad.limit(3).collect().mkString("; ")}")
+    }
+    // fewer than n tokens: one window; null text: null
+    assert(Seq("a b").toDF("text")
+      .select(size(GraftFunctions.wordShingleHashes(col("text"), 5, 0)))
+      .as[Int].head() === 1)
+    assert(Seq(Option.empty[String]).toDF("text")
+      .select(GraftFunctions.wordShingleHashes(col("text"), 3, 1).isNull)
+      .as[Boolean].head())
+    // the SQL path resolves to the same expression
+    val viaSql = Seq("a b c d").toDF("text")
+      .selectExpr("graft_word_shingle_hashes(text, 3, 1)").as[Seq[Long]].head()
+    val viaCol = Seq("a b c d").toDF("text")
+      .select(GraftFunctions.wordShingleHashes(col("text"), 3, 1)).as[Seq[Long]].head()
+    assert(viaSql === viaCol && viaCol.size === 2)
   }
 }

@@ -8,8 +8,10 @@ import graft.operators.Curate
 import graft.sources.{AnnIndex, GrepIndex, InvertedIndex, StatsIndex}
 
 /** Index and curation metadata is read and written on the driver
-  * ([[graft.sources.MetaTable]]): these calls start a pinned number of
-  * Spark jobs, so a return to Spark-side metadata I/O fails here. Jobs
+  * ([[graft.sources.MetaTable]]), and base tables take their schema
+  * from one footer read there ([[graft.Tables]]): these calls start a
+  * pinned number of Spark jobs, so a return to Spark-side metadata
+  * I/O or schema inference fails here. Jobs
   * are counted by a listener, restricted to a job group set on the
   * calling thread. */
 class MetadataJobsSpec extends SparkSpec {
@@ -90,5 +92,27 @@ class MetadataJobsSpec extends SparkSpec {
     assert(jobsOf(Curate.readCorpus(spark, roots)) === 0)
     assert(jobsOf(Curate.readLedger(spark, roots)) === 0)
     assert(Curate.readCorpus(spark, roots).count() === 40L)
+  }
+
+  test("base tables read their schema from a footer: same schema, no job") {
+    val dir = sfDir10x
+    val names = new java.io.File(dir).list().toSeq
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assert(names.contains("documents") && names.contains("events"))
+    Tables.events(spark, dir) // sets the session's nanosAsLong, as queries do
+    for (name <- names)
+      assert(Tables.table(spark, dir, name).schema ===
+        spark.read.parquet(s"$dir/$name.parquet").schema, name)
+    // a Spark-written directory of 4 files, with _SUCCESS and .crc
+    // files that the listing rule skips
+    Tables.documents(spark, dir).repartition(4)
+      .write.parquet(s"$base/multi.parquet")
+    assert(new java.io.File(s"$base/multi.parquet").list()
+      .count(f => f.endsWith(".parquet") && !f.startsWith(".")) === 4)
+    val multi = Tables.table(spark, base, "multi")
+    assert(multi.schema === spark.read.parquet(s"$base/multi.parquet").schema)
+    assert(multi.count() === 500L)
+    assert(jobsOf(Tables.documents(spark, dir)) === 0)
+    assert(jobsOf(Tables.events(spark, dir)) === 0)
   }
 }

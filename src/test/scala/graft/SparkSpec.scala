@@ -7,6 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for specs. sf0.001 keeps specs fast. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
+  /** The same tables at ten times the scale (sf0.01). */
+  val sfDir10x = s"${new java.io.File(sfDir).getParent}/sf0.01"
   lazy val spark: SparkSession = SparkSpec.session
 }
 
