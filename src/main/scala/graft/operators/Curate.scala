@@ -203,39 +203,18 @@ object Curate {
                annMaxSegments: Int = 0, invMaxSegments: Int = 0): Long = {
     val priorVs = Manifest.versions(spark, roots.curation)
 
-    // opt-in stage attribution (r16 verdict item 8: three rounds of
-    // bench notes attributed this query's wobble to "commit/AQE
-    // constants" without a decomposition): every stage below ends at
-    // a real barrier (localCheckpoint / write / commit), so wall
-    // between barriers attributes honestly. Zero plan change; prints
-    // only under spark.graft.curate.profile=true.
-    val profile = spark.conf.get("spark.graft.curate.profile", "false") == "true"
-    def prof[T](label: String)(body: => T): T =
-      if (!profile) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"CURATE_PROF $label $sec%.3f")
-        // probes read the last batch's stage walls from here (r18:
-        // the tier probe records them into its artifact rows)
-        spark.conf.set(s"spark.graft.curate.prof.$label", f"$sec%.3f")
-        r
-      }
-
     // ---- idempotence note: caller's, or derived from the batch's
     // doc_id range (a replayed batch derives the same note — this is
     // what makes CRASH-REPLAYED batch ingestion safe: without it, a
     // re-run after a crash between an index append and the outer
     // commit would double-append postings/vectors)
-    val note0 = prof("note-derive") {
+    val note0 =
       if (note.nonEmpty) note
       else {
         val r = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
         if (r.isNullAt(0)) "" // empty batch — no-op below
         else s"batch-${r.getLong(0)}-${r.getLong(1)}"
       }
-    }
     if (note0.isEmpty) // empty input batch: nothing to ingest or pin
       return priorVs.lastOption.getOrElse(-1L)
     val replayedAs = priorVs.find(v => noteOf(spark, roots, v) == note0)
@@ -258,12 +237,12 @@ object Curate {
     // Generate form from the plain one under this box's ±35% noise —
     // BENCHNOTES_r16.md — so the zero-new-structure form wins by
     // construction, not by a contested measurement)
-    val fresh = prof("dedup-quality-ckpt") { (
+    val fresh = (
       if (priorVs.isEmpty) keepOne
       else keepOne.join(readLedger(spark, roots).hint("shuffle_hash"),
         Seq("fp"), "left_anti")
     ).withColumn("quality", TextFunctions.qualityScore(col("text")))
-      .localCheckpoint() }
+      .localCheckpoint()
     // every first-seen fp enters the ledger NOW — before quality and
     // budget — so later duplicates of rejected docs stay rejected
     val ledgerDelta = fresh.select(col("fp"))
@@ -287,17 +266,15 @@ object Curate {
     // the window alone at 0.86 s of ~10 s), so the single-task-per-
     // source window is not worth splitting into doc_id bands
     val wCum = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    val budgeted = prof("budget-ckpt") {
-      scoredTok
-        .join(broadcast(priorState), Seq("source"), "left")
-        .withColumn("cum",
-          sum(col("n_tokens")).over(wCum) +
-            coalesce(col("used_tokens"), lit(0L)))
-        .localCheckpoint()
-    }
-    val accepted = prof("accept-ckpt") { budgeted.where(col("cum") <= budgetPerSource)
+    val budgeted = scoredTok
+      .join(broadcast(priorState), Seq("source"), "left")
+      .withColumn("cum",
+        sum(col("n_tokens")).over(wCum) +
+          coalesce(col("used_tokens"), lit(0L)))
+      .localCheckpoint()
+    val accepted = budgeted.where(col("cum") <= budgetPerSource)
       .select(col("doc_id"), col("source"), col("quality"), col("fp"))
-      .localCheckpoint() }
+      .localCheckpoint()
 
     // new state: prior counters carried forward, batch's FULL
     // quality-passed token mass added (see object doc — rejected rows
@@ -315,13 +292,13 @@ object Curate {
     val priorCatalog =
       if (priorVs.isEmpty) Seq.empty[(String, String, Long)]
       else catalogOf(spark, roots.curation)
-    val newEntries = prof("segments") { Seq(
+    val newEntries = Seq(
       (CorpusKind, accepted.select(col("doc_id"), col("source"),
         col("quality")), accepted.isEmpty),
       (LedgerKind, ledgerDelta, fresh.isEmpty)
     ).collect { case (kind, df, empty) if !empty =>
       writeSegment(spark, roots.curation, kind, df)
-    } }
+    }
 
     // ---- stage 5: index appends (zero-copy catalog re-publishes on
     // their own roots; versions pinned in meta/ below). All four paths
@@ -348,7 +325,7 @@ object Curate {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val annF = Future { prof("ann-append") { notedVersion(roots.ann,
+    val annF = Future { notedVersion(roots.ann,
         v => AnnIndex.noteOf(spark, roots.ann, Some(v))).getOrElse {
       val exists = Manifest.currentVersion(spark, roots.ann).isDefined
       if (annBatch.isEmpty)
@@ -361,7 +338,7 @@ object Curate {
         AnnIndex.append(spark, roots.ann,
           annBatch.select(col("vec_id"), col("embedding")),
           nFiles = nFiles, note = note0).version
-    } } }
+    } }
     // accepted texts come off a CHECKPOINT, never a re-join of the raw
     // batch: the old batch⋈accepted form shuffled the batch's full
     // text column every time (r18 tier probe: ~1 GB shuffle per
@@ -369,7 +346,7 @@ object Curate {
     // re-filter the budgeted checkpoint (join-free)
     val invBatch = budgeted.where(col("cum") <= budgetPerSource)
       .select(col("doc_id"), col("text"))
-    val invF = Future { prof("inv-append") { notedVersion(roots.inv,
+    val invF = Future { notedVersion(roots.inv,
         v => InvertedIndex.noteOf(spark, roots.inv, Some(v))).getOrElse {
       val exists = Manifest.currentVersion(spark, roots.inv).isDefined
       if (invBatch.isEmpty)
@@ -380,18 +357,16 @@ object Curate {
       else
         InvertedIndex.append(spark, roots.inv, invBatch, nFiles = nFiles,
           note = note0)
-    } } }
+    } }
     val annV = Await.result(annF, Duration.Inf)
     val invV = Await.result(invF, Duration.Inf)
 
     // ---- stage 6: ONE atomic publish for the batch (catalog + state +
     // meta are all metadata-sized; the data went to _segments/ above)
-    val committed = prof("commit") {
-      Manifest.commitWith(spark, roots.curation, retain) { dir =>
-        MetaTable.writeNote(spark, dir, note0)
-        writeMeta(spark, dir, priorCatalog ++ newEntries, newState,
-          Row(annV, invV, note0))
-      }
+    val committed = Manifest.commitWith(spark, roots.curation, retain) { dir =>
+      MetaTable.writeNote(spark, dir, note0)
+      writeMeta(spark, dir, priorCatalog ++ newEntries, newState,
+        Row(annV, invV, note0))
     }
     Manifest.clearStaging(spark, newEntries.map(_._2))
 
@@ -401,14 +376,12 @@ object Curate {
     // crash-recovery semantics are untouched)
     if (annMaxSegments > 0 &&
         Manifest.currentVersion(spark, roots.ann).isDefined)
-      prof("ann-compact") {
-        AnnIndex.compactIfNeeded(spark, roots.ann, annMaxSegments,
-          nFiles = nFiles) }
+      AnnIndex.compactIfNeeded(spark, roots.ann, annMaxSegments,
+        nFiles = nFiles)
     if (invMaxSegments > 0 &&
         Manifest.currentVersion(spark, roots.inv).isDefined)
-      prof("inv-compact") {
-        InvertedIndex.compactIfNeeded(spark, roots.inv, invMaxSegments,
-          nFiles = nFiles) }
+      InvertedIndex.compactIfNeeded(spark, roots.inv, invMaxSegments,
+        nFiles = nFiles)
     committed
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, TextFunctions}
+import graft.Decision
 
 /** Deduplication family for training-data pipelines: exact, MinHash-LSH
   * (+ exact n-gram-Jaccard verification), SimHash, and embedding-cosine
@@ -644,11 +645,10 @@ object Dedup {
     * both CC impls eagerly materialize their own round state, so the
     * shared checkpoint is released before returning.
     *
-    * The choice made is recorded in session conf
-    * `spark.graft.cc.lastChoice` ("jump" | "star") for observability
-    * (ScaleSpec pins the routing on a planted hub graph). */
+    * The choice made is recorded as a `cc.route` [[graft.Decision]]
+    * ("jump" | "star"; ScaleSpec pins the routing on a planted hub
+    * graph). */
   def clustersAuto(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val sess = pairs.sparkSession
     val canon = pairs
       .select(least(col(aCol), col(bCol)).as("lo"),
               greatest(col(aCol), col(bCol)).as("hi"))
@@ -662,8 +662,7 @@ object Dedup {
              coalesce(avg("count"), lit(0.0)).as("mean")).head
       val (maxDeg, meanDeg) = (deg.getLong(0), deg.getDouble(1))
       val useStar = maxDeg >= AutoStarMaxDegree || meanDeg >= AutoStarMeanDegree
-      sess.conf.set("spark.graft.cc.lastChoice",
-                    if (useStar) "star" else "jump")
+      Decision.record(Decision("cc.route", if (useStar) "star" else "jump", 0, 0))
       if (useStar) clustersStar(canon, "lo", "hi")
       else clusters(canon, "lo", "hi")
     } finally freeCheckpoint(canon)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Decision
 
 /** Triangle counting over an undirected edge list — the local
   * clustering signal corpus-graph curation uses alongside PageRank
@@ -264,7 +265,6 @@ object Graph {
                     maxIters: Int = 3,
                     maxBroadcastNodes: Long = 4000000L): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val sess = edges.sparkSession
     val e = edges.select(col(srcCol).cast("long").as("src"),
                          col(dstCol).cast("long").as("dst"),
                          col(wCol).cast("long").as("w"))
@@ -276,7 +276,7 @@ object Graph {
     require(negatives == 0, "ssspDistances requires non-negative weights")
     // reach family routes as "frontier" always — no degree cap (see
     // the scaladoc above and GraphRoute's per-family note)
-    sess.conf.set("spark.graft.graph.lastRoute", "frontier")
+    Decision.record(Decision("graph.route", "frontier", 0, 0))
     var current = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"), lit(true).as("imp"))
       .localCheckpoint(true)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Decision
 
 /** Dense-graph routing for the RANK family ([[Rank]] pageRank/PPR/
   * HITS) — the r15 partition sweep's lesson made ENGINE BEHAVIOR
@@ -54,10 +55,9 @@ import org.apache.spark.sql.functions._
   * with `spark.graft.graph.denseRoute = direct` — run uncapped (the
   * loud opt-out; the default is `cap`).
   *
-  * Every call records its decision in session conf
-  * `spark.graft.graph.lastRoute` ("direct" | "direct-forced" |
-  * "capped(k)") — the clustersAuto observability convention, pinned
-  * by RankSpec's routing test.
+  * Every call records a `graph.route` [[graft.Decision]] ("off" |
+  * "direct" | "direct-forced" | "capped(k)") — pinned by RankSpec's
+  * routing test.
   */
 object GraphRoute {
 
@@ -78,7 +78,7 @@ object GraphRoute {
     // dominant cost (~0.3 s of job overhead on a planted 512-edge
     // gate; amortized to noise at any real edge count)
     if (sess.conf.get("spark.graft.graph.denseRoute", "cap") == "off") {
-      sess.conf.set("spark.graft.graph.lastRoute", "off")
+      Decision.record(Decision("graph.route", "off", 0, 0))
       return e0
     }
     val prof = e0.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -88,10 +88,10 @@ object GraphRoute {
     val dense = maxDeg >= HubMaxDegree || meanDeg >= DenseMeanDegree
     val optOut = sess.conf.get("spark.graft.graph.denseRoute", "cap") == "direct"
     if (!dense) {
-      sess.conf.set("spark.graft.graph.lastRoute", "direct")
+      Decision.record(Decision("graph.route", "direct", 0, 0))
       e0
     } else if (optOut) {
-      sess.conf.set("spark.graft.graph.lastRoute", "direct-forced")
+      Decision.record(Decision("graph.route", "direct-forced", 0, 0))
       e0
     } else {
       // deterministic kept set: the cap smallest (dst, rest) tuples
@@ -122,7 +122,7 @@ object GraphRoute {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       capped.count() // materialize from the old cache before dropping it
       e0.unpersist(false)
-      sess.conf.set("spark.graft.graph.lastRoute", s"capped($DefaultCap)")
+      Decision.record(Decision("graph.route", s"capped($DefaultCap)", 0, 0))
       capped
     }
   }

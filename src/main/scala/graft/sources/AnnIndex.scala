@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Similarity}
+import graft.Decision
 
 /** Persisted ANN index: build-once / probe-many IVF over the lake.
   *
@@ -332,8 +333,8 @@ object AnnIndex {
   /** Top-k cosine search against the persisted index. Reads the
     * centroid table (tiny), ranks it per query broadcast-side, then
     * scans ONLY the segment files whose cell range intersects the
-    * probed cells — recording "kept/total" in
-    * `spark.graft.ann.lastPruned`. Output shape matches
+    * probed cells — recording files kept/total as an `ann.cells`
+    * [[graft.Decision]]. Output shape matches
     * [[graft.operators.Similarity.ivfTopK]]; with nprobe = cells it is
     * exactly brute force over everything ever built+appended. */
   /** Centroid-ranked probe frame (broadcast) + the probed cell set.
@@ -368,7 +369,7 @@ object AnnIndex {
     * whose [min, max] cell range intersects the probed cells are
     * scanned; the cell predicate is re-applied (and pushed to the
     * parquet scan) so pruning can only skip work, never change
-    * results. Records "kept/total" in `spark.graft.ann.lastPruned`. */
+    * results. Records files kept/total as an `ann.cells` decision. */
   private def prunedCellRead(spark: SparkSession, segPaths: Seq[String],
                              probeCells: Seq[Long]): DataFrame = {
     // one metadata scan for ALL segments (r20) — the per-segment form
@@ -376,8 +377,8 @@ object AnnIndex {
     val pruned = StatsIndex.prunedFilesInMany(spark, segPaths, "cell",
       probeCells)
     val kept = pruned.flatMap(_._1)
-    val total = pruned.map(_._2.size).sum
-    spark.conf.set("spark.graft.ann.lastPruned", s"${kept.size}/$total")
+    Decision.record(Decision("ann.cells", "pruned", kept.size,
+      pruned.map(_._2.size).sum))
     (if (kept.isEmpty)
        spark.read.parquet(segPaths.head).limit(0) // schema, no rows
      else spark.read.parquet(kept: _*))

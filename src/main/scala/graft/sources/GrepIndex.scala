@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Decision
 import graft.functions.GraftFunctions
 
 /** Persisted character-trigram index for corpus-scale LITERAL search —
@@ -78,10 +79,11 @@ import graft.functions.GraftFunctions
   * honest boundary is in the same artifact: a UNIFORMLY-scattered
   * 1-in-50k needle loses the wall race on a page-cached 6 GB corpus
   * (5.17 vs 2.86 s) even though task-time still favors the index
-  * 2.4× — point-fetch needs locality or small match counts, and
-  * `lastDocsPruned` records which regime a sweep saw. Patterns are a
-  * bounded probe set by contract (a sweep carries tens to thousands of
-  * literals, not a corpus) — they ride the plan as literals/broadcast.
+  * 2.4× — point-fetch needs locality or small match counts, and the
+  * `grep.fetch` decision records which regime a sweep saw. Patterns
+  * are a bounded probe set by contract (a sweep carries tens to
+  * thousands of literals, not a corpus) — they ride the plan as
+  * literals/broadcast.
   * Patterns shorter than 3 code points carry no trigram and are
   * rejected loudly: route those through a plain filtered scan, where
   * no index can help. */
@@ -411,17 +413,13 @@ object GrepIndex {
     * the plain scan — is scan-routed, and then the WHOLE sweep rides
     * ONE shared exact scan leg (a single Aho-Corasick pass answering
     * every pattern at once) over the doc-clustered table; a sweep
-    * with no scan-routed pattern probes the index. The outcome lands
-    * in `spark.graft.grep.lastRoute` ("index" | "scan"), the
-    * per-pattern routing verdict in `spark.graft.grep.lastSplit`
-    * ("index=N scan=M"), the postings
-    * file-prune ratio (index leg) in `spark.graft.grep.lastPruned`,
-    * and the candidate-fetch docs file-prune ratio in
-    * `spark.graft.grep.lastDocsPruned` ("all" when the sweep matched
-    * more than [[FetchPruneMax]] docs and the fetch fell back to the
-    * plain join; "n/a" on any exit that never fetched — every conf
-    * resets on entry so early exits can't leak a previous probe's
-    * value, the r17 staleness finding). */
+    * with no scan-routed pattern probes the index. Recorded as
+    * [[graft.Decision]]s: `grep.route` ("index" | "scan", kept/total
+    * = index-routed / all patterns — on "scan" the fold pulls the kept
+    * patterns onto the scan leg unless all of them settled df-0),
+    * `grep.postings` (postings files kept/total, index leg) and
+    * `grep.fetch` (see [[verifyFetch]]). An early exit records
+    * nothing for the steps it skipped. */
   def probe(spark: SparkSession, root: String,
             patterns: Seq[(Long, String)],
             maxProbeGrams: Int = 8,
@@ -436,7 +434,6 @@ object GrepIndex {
         "run those through a plain filtered scan")
     require(maxProbeGrams >= 1, s"bad maxProbeGrams $maxProbeGrams")
     import spark.implicits._
-    resetProbeConfs(spark)
     val segs = catalogOf(spark, root)
     require(segs.nonEmpty, s"no grep index at $root")
     val pat = patterns.toDF("pattern_id", "pattern")
@@ -482,18 +479,13 @@ object GrepIndex {
     // wall −20% at CPU parity, and the fold is asymptotically strict
     // (the dropped index legs cost jobs; the automaton costs bytes).
     // df-0-settled patterns fold too: their trigram is absent from
-    // the corpus, so the automaton provably finds nothing. `lastSplit`
-    // keeps the per-pattern ROUTING verdict; `lastScanFolded` records
-    // how many index-routed patterns the fold pulled onto the scan.
+    // the corpus, so the automaton provably finds nothing.
     val foldAll = scanPids.nonEmpty && selected.exists(t => !scanPids(t._1))
     val scanPatterns =
       if (foldAll) patterns else patterns.filter(p => scanPids(p._1))
-    spark.conf.set("spark.graft.grep.lastSplit",
-      s"index=${patterns.size - scanPids.size} scan=${scanPids.size}")
-    spark.conf.set("spark.graft.grep.lastScanFolded",
-      if (foldAll) (patterns.size - scanPids.size).toString else "0")
-    spark.conf.set("spark.graft.grep.lastRoute",
-      if (scanPids.isEmpty) "index" else "scan")
+    Decision.record(Decision("grep.route",
+      if (scanPids.isEmpty) "index" else "scan",
+      patterns.size - scanPids.size, patterns.size))
     // one Aho-Corasick pass answers EVERY scan-routed pattern per doc
     // (r19: the previous form crossJoined docs × patterns — P-way row
     // duplication and P contains() rescans per doc; a decontamination
@@ -521,10 +513,7 @@ object GrepIndex {
         .select(col("pattern_id"), col("doc_id"))
     }
     if (scanPids.nonEmpty) return scanLeg
-    if (selected.isEmpty) {
-      spark.conf.set("spark.graft.grep.lastPruned", "0/0")
-      return emptyResult
-    }
+    if (selected.isEmpty) return emptyResult
     val hs = selected.map(_._2).distinct
     val need = selected.groupBy(_._1).map { case (pid, rs) =>
       (pid, rs.length.toLong) }.toSeq.toDF("pattern_id", "need")
@@ -534,8 +523,8 @@ object GrepIndex {
     val pruned = StatsIndex.prunedFilesInMany(
       spark, segs.map(_.postings), "h", hs)
     val kept = pruned.flatMap(_._1)
-    val total = pruned.map(_._2.size).sum
-    spark.conf.set("spark.graft.grep.lastPruned", s"${kept.size}/$total")
+    Decision.record(Decision("grep.postings", "pruned", kept.size,
+      pruned.map(_._2.size).sum))
     if (kept.isEmpty) return emptyResult
     val candPlan = spark.read.schema(PostingsSchema).parquet(kept: _*)
       .where(col("h").isin(hs: _*)) // row-group skipping inside survivors
@@ -547,23 +536,6 @@ object GrepIndex {
       .select(col("doc_id"), col("pattern_id"))
     verifyFetch(spark, segs, candPlan, pat,
       col("text").contains(col("pattern")))
-  }
-
-  /** Reset the per-probe observability confs so every exit path of a
-    * probe reports THAT probe (r17 judge finding #2: the df-0 settle
-    * and the scan route left `lastDocsPruned` carrying the previous
-    * probe's value, attributing the wrong regime to the wrong
-    * sweep). */
-  private def resetProbeConfs(spark: SparkSession): Unit = {
-    spark.conf.set("spark.graft.grep.lastPruned", "n/a")
-    spark.conf.set("spark.graft.grep.lastDocsPruned", "n/a")
-    spark.conf.set("spark.graft.grep.lastSplit", "n/a")
-    spark.conf.set("spark.graft.grep.lastScanFolded", "n/a")
-    // a plain probe() must not leave a previous probeRegex's split
-    // hanging (r18 advice — the same cross-probe staleness class this
-    // helper exists to fix); probeRegex overwrites it immediately
-    spark.conf.set("spark.graft.grep.lastRegexSplit", "n/a")
-    spark.conf.set("spark.graft.grep.lastFetchRoute", "n/a")
   }
 
   /** Exact verify with a PRUNED candidate fetch (r17: a plain
@@ -582,8 +554,9 @@ object GrepIndex {
     * the plain join (AQE picks the strategy; nothing collected).
     * Collisions and under-constrained candidates die under `pred`
     * (contains / regexp_like against the pattern column), so the
-    * output stays exact either way. Fetch ratio recorded in
-    * `spark.graft.grep.lastDocsPruned`. */
+    * output stays exact either way. Records a `grep.fetch`
+    * [[graft.Decision]]: "point" with docs files kept/total, or
+    * "scan" (every docs file read, 0/0). */
   private def verifyFetch(spark: SparkSession, segs: Seq[Segment],
                           candPlan: DataFrame, pat: DataFrame,
                           pred: org.apache.spark.sql.Column): DataFrame = {
@@ -599,18 +572,15 @@ object GrepIndex {
         val prunedD = StatsIndex.prunedFilesInMany(
           spark, segs.map(_.docs), "doc_id", ids)
         val keptD = prunedD.flatMap(_._1)
-        val totalD = prunedD.map(_._2.size).sum
-        spark.conf.set("spark.graft.grep.lastDocsPruned",
-          s"${keptD.size}/$totalD")
+        Decision.record(Decision("grep.fetch", "point", keptD.size,
+          prunedD.map(_._2.size).sum))
         if (keptD.isEmpty) return emptyResult
-        spark.conf.set("spark.graft.grep.lastFetchRoute", "point")
         spark.read.schema(DocsSchema).parquet(keptD: _*)
           .where(col("doc_id").isInCollection(ids))
           .join(broadcast(candSeq.toDF("doc_id", "pattern_id")), "doc_id")
       } else {
         // over the bound: recompute the candidate plan distributed
-        spark.conf.set("spark.graft.grep.lastDocsPruned", "all")
-        spark.conf.set("spark.graft.grep.lastFetchRoute", "scan")
+        Decision.record(Decision("grep.fetch", "scan", 0, 0))
         spark.read.schema(DocsSchema).parquet(segs.map(_.docs): _*).join(candPlan, "doc_id")
       }
     docsSide
@@ -634,8 +604,10 @@ object GrepIndex {
     * literal run in some branch, exotic syntax, branch blow-up) run
     * through the exact `regexp_like` scan instead — per PATTERN, so
     * one opaque regex does not force the whole sweep to scan. The
-    * split lands in `spark.graft.grep.lastRegexSplit`
-    * ("index=N scan=M"); route/prune confs behave as in [[probe]].
+    * analysis split is a `grep.regex.analysis` [[graft.Decision]]
+    * (kept/total = analyzable / all patterns); `grep.route` ("index" |
+    * "scan" | "split"), `grep.postings` and `grep.fetch` are recorded
+    * as in [[probe]].
     * Pattern ids must be non-negative (branch keys pack id×128+ix).
     * Every pattern must compile as a Java regex — rejected loudly
     * otherwise, and callers should mind engine dialects when the
@@ -653,7 +625,6 @@ object GrepIndex {
       "pattern ids must be non-negative (branch keys pack id*128+branch)")
     patterns.foreach(p => java.util.regex.Pattern.compile(p._2)) // loud
     import spark.implicits._
-    resetProbeConfs(spark)
     val segs = catalogOf(spark, root)
     require(segs.nonEmpty, s"no grep index at $root")
     val pat = patterns.toDF("pattern_id", "pattern")
@@ -687,10 +658,11 @@ object GrepIndex {
       (pid, re, RegexGrams.requiredLiterals(re, 3, maxBranches)) }
     val scanPats = analyzed.collect { case (pid, re, None) => (pid, re) }
     val idxPats = analyzed.collect { case (pid, re, Some(bs)) => (pid, re, bs) }
-    spark.conf.set("spark.graft.grep.lastRegexSplit",
-      s"index=${idxPats.size} scan=${scanPats.size}")
+    Decision.record(Decision("grep.regex.analysis",
+      if (scanPats.isEmpty) "index" else if (idxPats.isEmpty) "scan"
+      else "split", idxPats.size, patterns.size))
     if (idxPats.isEmpty) {
-      spark.conf.set("spark.graft.grep.lastRoute", "scan")
+      Decision.record(Decision("grep.route", "scan", 0, patterns.size))
       return scanLeg(scanPats)
     }
     // branch-literal grams, evaluated by the BUILD's own expression
@@ -727,16 +699,11 @@ object GrepIndex {
     val liveIdx = live.filterNot(t => heavyPids(t._1 >> 7))
     val scanAll = scanPats ++
       idxPats.collect { case (pid, re, _) if heavyPids(pid) => (pid, re) }
-    spark.conf.set("spark.graft.grep.lastSplit",
-      s"index=${patterns.size - scanAll.size} scan=${scanAll.size}")
-    spark.conf.set("spark.graft.grep.lastRoute",
+    Decision.record(Decision("grep.route",
       if (heavyPids.isEmpty) "index"
-      else if (liveIdx.isEmpty) "scan" else "split")
-    if (liveIdx.isEmpty) {
-      if (heavyPids.isEmpty)
-        spark.conf.set("spark.graft.grep.lastPruned", "0/0")
-      return scanLeg(scanAll)
-    }
+      else if (liveIdx.isEmpty) "scan" else "split",
+      patterns.size - scanAll.size, patterns.size))
+    if (liveIdx.isEmpty) return scanLeg(scanAll)
     val hs = liveIdx.map(_._2).distinct
     val need = liveIdx.groupBy(_._1).map { case (bk, rs) =>
       (bk, rs.length.toLong) }.toSeq.toDF("bkey", "need")
@@ -746,8 +713,8 @@ object GrepIndex {
     val pruned = StatsIndex.prunedFilesInMany(
       spark, segs.map(_.postings), "h", hs)
     val kept = pruned.flatMap(_._1)
-    spark.conf.set("spark.graft.grep.lastPruned",
-      s"${kept.size}/${pruned.map(_._2.size).sum}")
+    Decision.record(Decision("grep.postings", "pruned", kept.size,
+      pruned.map(_._2.size).sum))
     if (kept.isEmpty) return scanLeg(scanAll)
     val candPlan = spark.read.schema(PostingsSchema).parquet(kept: _*)
       .where(col("h").isin(hs: _*))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
+import graft.Decision
 
 /** Persisted inverted index: build-once / probe-many BM25 over the
   * lake — the lexical sibling of [[AnnIndex]].
@@ -263,7 +264,7 @@ object InvertedIndex {
     * files whose [min, max] bucket range intersects the query's
     * buckets are scanned; the predicate is re-applied (and pushed to
     * parquet) so pruning can only skip work, never change results.
-    * Records "kept/total" in `spark.graft.inv.lastPruned`. */
+    * Records files kept/total as an `inv.buckets` [[graft.Decision]]. */
   private def prunedBucketRead(spark: SparkSession, segPaths: Seq[String],
                                buckets: Seq[Long]): DataFrame = {
     // one metadata scan for ALL segments (r20) — the per-segment form
@@ -271,8 +272,8 @@ object InvertedIndex {
     val pruned = StatsIndex.prunedFilesInMany(spark, segPaths, "bucket",
       buckets)
     val kept = pruned.flatMap(_._1)
-    val total = pruned.map(_._2.size).sum
-    spark.conf.set("spark.graft.inv.lastPruned", s"${kept.size}/$total")
+    Decision.record(Decision("inv.buckets", "pruned", kept.size,
+      pruned.map(_._2.size).sum))
     (if (kept.isEmpty)
        spark.read.parquet(segPaths.head).limit(0)
      else spark.read.parquet(kept: _*))

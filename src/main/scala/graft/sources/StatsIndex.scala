@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import graft.Decision
 
 /** File-level min/max stats index + stats-pruned reads — the
   * Delta/Iceberg data-skipping manifest built from public first
@@ -264,8 +265,8 @@ object StatsIndex {
     * scanning ONLY files whose indexed [min, max] intersects the
     * range. Files absent from the index or without stats for `c` are
     * scanned (conservative); the predicate is re-applied, so the
-    * result equals the unpruned read filtered. Records the skip
-    * ratio in `spark.graft.lake.lastPruned` as "kept/total". */
+    * result equals the unpruned read filtered. Records files
+    * kept/total as a `lake.range` [[graft.Decision]]. */
   def readPruned(spark: SparkSession, table: String, c: String,
                  lo: Double, hi: Double, maxKeptFiles: Int = 1000000): DataFrame = {
     val all = listDataFiles(spark, table)
@@ -281,7 +282,7 @@ object StatsIndex {
         s"(> maxKeptFiles=$maxKeptFiles) - the prune is not selective " +
         "enough to hold the path list on the driver; narrow the range, " +
         "re-cluster the table, or raise the cap")
-    spark.conf.set("spark.graft.lake.lastPruned", s"${kept.size}/${all.size}")
+    Decision.record(Decision("lake.range", "pruned", kept.size, all.size))
     val base =
       if (kept.isEmpty)
         spark.read.parquet(table).limit(0) // keep the schema, read nothing

@@ -32,10 +32,10 @@ class AnnIndexSpec extends SparkSpec {
     // nFiles = cells: the cell-clustered layout puts ~1 cell per file
     AnnIndex.build(spark, emb, root, cells = 8, nFiles = 8)
     val q = emb.where(col("vec_id") === 0)
-    val res = AnnIndex.probe(spark, root, q, k = 3, nprobe = 2)
+    val (res, ds) = Decision.capture(
+      AnnIndex.probe(spark, root, q, k = 3, nprobe = 2))
     assert(res.count() === 3)
-    val Array(kept, total) =
-      spark.conf.get("spark.graft.ann.lastPruned").split("/").map(_.toInt)
+    val Decision(_, _, kept, total) = decision(ds, "ann.cells")
     // 2 probed cells of 8; range-partition boundaries are sampled, so a
     // cell can straddle a file boundary — but the probe must scan well
     // under half the files, not all of them

@@ -91,23 +91,21 @@ class GrepRegexSpec extends SparkSpec {
     // forced INDEX route (the tiny-vocabulary SF corpus is the
     // degenerate regime the auto-route correctly scans — the literal
     // probe's spec discipline)
-    val got = GrepIndex.probeRegex(spark, root, pats,
-        scanFraction = Double.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    assert(got === want)
-    assert(spark.conf.get("spark.graft.grep.lastRegexSplit") ===
-      "index=4 scan=1")
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "index")
+    val (gotDf, ds) = Decision.capture(GrepIndex.probeRegex(spark, root,
+      pats, scanFraction = Double.MaxValue))
+    assert(gotDf.as[(Long, Long)].collect().toSet === want)
+    assert(decision(ds, "grep.regex.analysis") ===
+      Decision("grep.regex.analysis", "split", 4, 5))
+    assert(decision(ds, "grep.route").route === "index")
     // auto route (scan here) and forced scan agree too
     val gotAuto = GrepIndex.probeRegex(spark, root, pats)
       .as[(Long, Long)].collect().toSet
     assert(gotAuto === want)
     // all-unanalyzable sweep: pure scan, still exact
-    val gotScan = GrepIndex.probeRegex(spark, root,
-        Seq((2L, "w[io]n?d[oe]w")))
-      .as[(Long, Long)].collect().toSet
-    assert(gotScan === want.filter(_._1 == 2L))
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
+    val (scanDf, scanDs) = Decision.capture(GrepIndex.probeRegex(spark,
+      root, Seq((2L, "w[io]n?d[oe]w"))))
+    assert(scanDf.as[(Long, Long)].collect().toSet === want.filter(_._1 == 2L))
+    assert(decision(scanDs, "grep.route").route === "scan")
     // a lone-high-surrogate pattern compiles as a Java regex but is
     // rejected by the literal analysis (over-constrain risk, r17
     // advice) — it must route to the exact scan and match what the
@@ -118,11 +116,11 @@ class GrepRegexSpec extends SparkSpec {
       .select(col("pattern_id"), col("doc_id"))
       .as[(Long, Long)].collect().toSet
     assert(wantSurr.nonEmpty) // "the window is wide open" matches
-    val gotSurr = GrepIndex.probeRegex(spark, root, surr,
-        scanFraction = Double.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.grep.lastRegexSplit") ===
-      "index=0 scan=1")
+    val (surrDf, surrDs) = Decision.capture(GrepIndex.probeRegex(spark,
+      root, surr, scanFraction = Double.MaxValue))
+    val gotSurr = surrDf.as[(Long, Long)].collect().toSet
+    assert(decision(surrDs, "grep.regex.analysis") ===
+      Decision("grep.regex.analysis", "scan", 0, 1))
     assert(gotSurr === wantSurr)
     // invalid regex rejected loudly, not silently empty
     intercept[java.util.regex.PatternSyntaxException] {

@@ -128,4 +128,36 @@ class IndexConcurrencySpec extends SparkSpec {
       Seq((0L, "the"))).count()
     assert(hits >= 0L) // probes the merged catalog without error
   }
+
+  test("concurrent grep probes each capture only their own route decision") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val root = freshRoot("conc-route")
+    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 200)
+    GrepIndex.build(spark, docs, "doc_id", "text", root, nFiles = 2)
+    val pats = Seq((0L, "merge part window"), (1L, "customer data"),
+                   (2L, "zebra-absent"))
+    val want = pats.flatMap { case (pid, p) =>
+      docs.where(col("text").contains(p)).select(col("doc_id"))
+        .as[Long].collect().map(d => (pid, d))
+    }.toSet
+    assert(want.exists(_._1 == 0L) && want.exists(_._1 == 1L))
+    // scanFraction -1 forces the scan route, MaxValue the index route
+    val routes = Seq(-1.0 -> "scan", Double.MaxValue -> "index")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try for (round <- 1 to 20) {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = routes.map { case (sf, _) => Future {
+        start.await()
+        Decision.capture(GrepIndex.probe(spark, root, pats, scanFraction = sf)
+          .as[(Long, Long)].collect().toSet)
+      } }
+      start.countDown()
+      for (((got, ds), (_, route)) <- runs.map(Await.result(_, 5.minutes)).zip(routes)) {
+        assert(decision(ds, "grep.route").route === route, s"round $round: $ds")
+        assert(got === want, s"round $round, route $route")
+      }
+    } finally pool.shutdown()
+  }
 }

@@ -41,16 +41,19 @@ class InvertedIndexSpec extends SparkSpec {
     // nFiles = nBuckets: the bucket-clustered layout puts ~1 bucket/file
     InvertedIndex.build(spark, Tables.documents(spark, sfDir), root,
       nBuckets = 8, nFiles = 8)
-    val res = InvertedIndex.probe(spark, root, Seq("spark"), k = 5)
+    val (res, ds) = Decision.capture(
+      InvertedIndex.probe(spark, root, Seq("spark"), k = 5))
     assert(res.count() === 5)
-    val Array(kept, total) =
-      spark.conf.get("spark.graft.inv.lastPruned").split("/").map(_.toInt)
     // 1 bucket of 8 probed, postings + dict tables both pruned;
     // range-partition boundaries are sampled, so a bucket can straddle
     // a file boundary — but one term must scan well under half
-    assert(total >= 8, s"expected >= 8 segment files, got $total")
-    assert(kept <= total / 2,
-      s"probe read $kept/$total files - pruning is not happening")
+    val reads = ds.filter(_.op == "inv.buckets")
+    assert(reads.size === 2, s"expected postings + dict reads in $ds")
+    for (Decision(_, _, kept, total) <- reads) {
+      assert(total >= 8, s"expected >= 8 segment files, got $total")
+      assert(kept <= total / 2,
+        s"probe read $kept/$total files - pruning is not happening")
+    }
   }
 
   test("append equals a from-scratch build over the full corpus") {

@@ -141,8 +141,14 @@ class RankSpec extends SparkSpec {
     val dir2 = bip.select(col("a").as("s"), col("b").as("d"))
       .union(bip.select(col("b").as("s"), col("a").as("d")))
     val cap = GraphRoute.DefaultCap
-    val routed = ranksOf(Rank.pageRank(dir2, "s", "d", iters = 2, damping = 0.5))
-    assert(spark.conf.get("spark.graft.graph.lastRoute") === s"capped($cap)")
+    // each call's result with the one graph.route it recorded
+    def route[T](body: => T): (T, String) = {
+      val (r, ds) = Decision.capture(body)
+      (r, decision(ds, "graph.route").route)
+    }
+    val (routed, r0) = route(ranksOf(Rank.pageRank(dir2, "s", "d",
+                                                   iters = 2, damping = 0.5)))
+    assert(r0 === s"capped($cap)")
     // routed scores = EXACT scores of the capped subgraph (the
     // deterministic cap: each node's `cap` smallest neighbors)
     val w = org.apache.spark.sql.expressions.Window
@@ -151,26 +157,27 @@ class RankSpec extends SparkSpec {
       .where(col("rk") <= cap).drop("rk")
     spark.conf.set("spark.graft.graph.denseRoute", "direct")
     try {
-      val expected = ranksOf(Rank.pageRank(cappedEdges, "s", "d",
-                                           iters = 2, damping = 0.5))
+      val (expected, r1) = route(ranksOf(Rank.pageRank(cappedEdges, "s", "d",
+                                                       iters = 2, damping = 0.5)))
       // the capped subgraph is itself sparse (mean degree = cap < 64)
-      assert(spark.conf.get("spark.graft.graph.lastRoute") === "direct")
+      assert(r1 === "direct")
       assert(routed === expected)
       // the loud opt-out really runs uncapped — hub mass spreads over
       // all 200 in-neighbors, so scores differ from the capped run
-      val direct = ranksOf(Rank.pageRank(dir2, "s", "d",
-                                         iters = 2, damping = 0.5))
-      assert(spark.conf.get("spark.graft.graph.lastRoute") === "direct-forced")
+      val (direct, r2) = route(ranksOf(Rank.pageRank(dir2, "s", "d",
+                                                     iters = 2, damping = 0.5)))
+      assert(r2 === "direct-forced")
       assert(direct !== routed)
     } finally spark.conf.set("spark.graft.graph.denseRoute", "cap")
     // sparse graphs (every kNN/planted gate) route through untouched
-    ranksOf(Rank.pageRank(tri, "s", "d", iters = 1, damping = 0.5))
-    assert(spark.conf.get("spark.graft.graph.lastRoute") === "direct")
+    assert(route(ranksOf(Rank.pageRank(tri, "s", "d", iters = 1,
+                                       damping = 0.5)))._2 === "direct")
     // `off` skips the profile job entirely and still computes exactly
     spark.conf.set("spark.graft.graph.denseRoute", "off")
     try {
-      val r = ranksOf(Rank.pageRank(tri, "s", "d", iters = 1, damping = 0.5))
-      assert(spark.conf.get("spark.graft.graph.lastRoute") === "off")
+      val (r, r3) = route(ranksOf(Rank.pageRank(tri, "s", "d", iters = 1,
+                                                damping = 0.5)))
+      assert(r3 === "off")
       assert(r === Map(1L -> 0.5, 2L -> 0.75, 3L -> 1.25))
     } finally spark.conf.set("spark.graft.graph.denseRoute", "cap")
     // r17 (verdict item 2): routing is PER-FAMILY — the reach family
@@ -178,9 +185,10 @@ class RankSpec extends SparkSpec {
     // of 15.0M truly reachable at 1000×); dense graphs now run exact
     // frontier-delta relaxation and the route records "frontier".
     val seeds = Seq(0L).toDF("seed")
-    val dDense = Graph.bfsDistances(dir2, "s", "d", seeds, "seed", maxIters = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(spark.conf.get("spark.graft.graph.lastRoute") === "frontier")
+    val (dDense, r4) = route(Graph.bfsDistances(dir2, "s", "d", seeds, "seed",
+                                                maxIters = 3)
+      .as[(Long, Long)].collect().toMap)
+    assert(r4 === "frontier")
     // exact reach on the dense bipartite graph: the seed reaches all
     // 70 right nodes in 1 hop and the other 199 left nodes in 2
     assert(dDense.size === 270)
@@ -204,11 +212,11 @@ class RankSpec extends SparkSpec {
       .union(Seq((8L, 1L, 5L), (8L, 1L, 5L), (8L, 2L, 0L))
         .toDF("src", "dst", "w"))
     val cap = GraphRoute.DefaultCap
-    val got = GraphRoute.routeDense(
+    val (gotDf, ds) = Decision.capture(GraphRoute.routeDense(
         e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-        "spec")
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(spark.conf.get("spark.graft.graph.lastRoute") === s"capped($cap)")
+        "spec"))
+    val got = gotDf.as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(decision(ds, "graph.route").route === s"capped($cap)")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"), col("w"))
     val expected = e.withColumn("rk", row_number().over(w))

@@ -33,24 +33,25 @@ class ScaleSpec extends SparkSpec {
     val star = (1 to 10000).map(i => (0L, i.toLong))
     val chain = (20000L until 20200L).map(i => (i, i + 1L))
     val hubG = (star ++ chain).toDF("a", "b")
-    val out = Dedup.clustersAuto(hubG, "a", "b").as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.cc.lastChoice") === "star")
+    val (outDf, ds) = Decision.capture(Dedup.clustersAuto(hubG, "a", "b"))
+    val out = outDf.as[(Long, Long)].collect().toSet
+    assert(decision(ds, "cc.route").route === "star")
     assert(out.count(_._2 == 0L) === 10001)
     assert(out.filter(_._2 == 20000L).map(_._1) === (20000L to 20200L).toSet)
     // disjoint dominoes: max degree 1 → the cheaper jump loop
     val shallow = (0L until 100L by 2).map(i => (i, i + 1L)).toDF("a", "b")
-    val out2 = Dedup.clustersAuto(shallow, "a", "b")
-      .as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.cc.lastChoice") === "jump")
+    val (out2Df, ds2) = Decision.capture(Dedup.clustersAuto(shallow, "a", "b"))
+    val out2 = out2Df.as[(Long, Long)].collect().toSet
+    assert(decision(ds2, "cc.route").route === "jump")
     assert(out2 === (0L until 100L).map(i => (i, i - i % 2)).toSet)
     // dense dup-cliques: max degree 39 (far below the hub cutoff) but
     // mean degree 39 ≥ 16 → star, the SCALE100 regime where jump
     // spills on edge mass alone (5 cliques of 40 nodes each)
     val dense = (for { c <- 0 until 5; i <- 0 until 40; j <- i + 1 until 40 }
       yield (c * 100L + i, c * 100L + j)).toDF("a", "b")
-    val out3 = Dedup.clustersAuto(dense, "a", "b")
-      .as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.cc.lastChoice") === "star")
+    val (out3Df, ds3) = Decision.capture(Dedup.clustersAuto(dense, "a", "b"))
+    val out3 = out3Df.as[(Long, Long)].collect().toSet
+    assert(decision(ds3, "cc.route").route === "star")
     assert(out3 === (for (c <- 0 until 5; i <- 0 until 40)
       yield (c * 100L + i, c * 100L)).toSet)
   }

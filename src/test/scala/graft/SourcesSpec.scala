@@ -331,13 +331,13 @@ class SourcesSpec extends SparkSpec {
       org.apache.spark.sql.Encoders.scalaLong).collect().sorted
     val (lo, hi) = (keys(keys.length / 4).toDouble,
                     keys(keys.length / 3).toDouble)
-    val pruned = StatsIndex.readPruned(spark, s"$tmp/t", "o_orderkey", lo, hi)
+    val (pruned, ds) = Decision.capture(
+      StatsIndex.readPruned(spark, s"$tmp/t", "o_orderkey", lo, hi))
     val full = spark.read.parquet(s"$tmp/t")
       .where(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
     assert(pruned.count() === full.count())
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
-    val Array(kept, total) = spark.conf
-      .get("spark.graft.lake.lastPruned").split("/").map(_.toInt)
+    val Decision(_, _, kept, total) = decision(ds, "lake.range")
     assert(total === 8 && kept < total, s"expected pruning, got $kept/$total")
     // staleness: a file written AFTER the index must still be scanned
     orders.where(col("o_orderkey") === lo.toLong).limit(1)
@@ -354,10 +354,9 @@ class SourcesSpec extends SparkSpec {
     StatsIndex.update(spark, s"$tmp/t")
     assert(StatsIndex.read(spark, s"$tmp/t")
       .select("file").distinct().count() === 9)
-    StatsIndex.readPruned(spark, s"$tmp/t", "o_orderkey",
-                          keys.last.toDouble, keys.last.toDouble)
-    val Array(kept2, total2) = spark.conf
-      .get("spark.graft.lake.lastPruned").split("/").map(_.toInt)
+    val (_, ds2) = Decision.capture(StatsIndex.readPruned(spark,
+      s"$tmp/t", "o_orderkey", keys.last.toDouble, keys.last.toDouble))
+    val Decision(_, _, kept2, total2) = decision(ds2, "lake.range")
     assert(total2 === 9 && kept2 < total2)
     // and the stale row is STILL found when its range is queried
     val again = StatsIndex.readPruned(spark, s"$tmp/t", "o_orderkey", lo, hi)
@@ -531,18 +530,18 @@ class SourcesSpec extends SparkSpec {
     assert(want.exists(_._1 == 1L) && want.exists(_._1 == 2L) &&
            !want.exists(_._1 == 3L) && want.contains((4L, 900003L)))
     // forced INDEX route: posting-list candidates + exact verify
-    val gotIdx = graft.sources.GrepIndex.probe(spark, root, pats,
-        scanFraction = Double.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "index")
+    val (idxDf, idxDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, pats, scanFraction = Double.MaxValue))
+    val gotIdx = idxDf.as[(Long, Long)].collect().toSet
+    assert(decision(idxDs, "grep.route").route === "index")
     assert(gotIdx === want)
-    assert(spark.conf.get("spark.graft.grep.lastPruned").matches("\\d+/\\d+"))
+    assert(idxDs.exists(_.op == "grep.postings")) // the index leg ran
     // forced SCAN route (the degenerate-selectivity fallback): same
     // exact result by construction
-    val gotScan = graft.sources.GrepIndex.probe(spark, root, pats,
-        scanFraction = -1.0)
-      .as[(Long, Long)].collect().toSet
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
+    val (scanDf, scanDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, pats, scanFraction = -1.0))
+    val gotScan = scanDf.as[(Long, Long)].collect().toSet
+    assert(decision(scanDs, "grep.route").route === "scan")
     assert(gotScan === want)
     // r19: the scan leg's default is ONE Aho-Corasick pass over the
     // DISTINCT pattern strings — the duplicate pattern-STRING case is
@@ -567,10 +566,10 @@ class SourcesSpec extends SparkSpec {
       graft.functions.expressions.MultiPatternHits.MaxPatternBytes)
     val wantBig = wantDup ++ pad.flatMap { case (pid, p) =>
       docRows.collect { case (d, t) if t.contains(p) => (pid, d) } }
-    val scanCj = graft.sources.GrepIndex.probe(spark, root, dupPats ++ pad,
-        scanFraction = -1.0)
+    val (scanCj, cjDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, dupPats ++ pad, scanFraction = -1.0))
     assert(scanCj.as[(Long, Long)].collect().toSet === wantBig)
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
+    assert(decision(cjDs, "grep.route").route === "scan")
     assert(!multiMatchRan(scanCj))
     // default auto-route picks one of the two and stays exact
     val gotAuto = graft.sources.GrepIndex.probe(spark, root, pats)
@@ -578,17 +577,18 @@ class SourcesSpec extends SparkSpec {
     assert(gotAuto === want)
     // a pattern with an absent trigram settles matchless WITHOUT
     // touching a posting list (df-0 short circuit)
-    val none = graft.sources.GrepIndex.probe(spark, root, Seq((9L, "zzz")))
+    val (none, noneDs) = Decision.capture(
+      graft.sources.GrepIndex.probe(spark, root, Seq((9L, "zzz"))))
     assert(none.count() === 0L)
-    assert(spark.conf.get("spark.graft.grep.lastPruned") === "0/0")
+    assert(noneDs === Seq(Decision("grep.route", "index", 1, 1)))
     // rarest-gram selectivity: a present single-trigram probe forced
     // through the index keeps strictly fewer postings files than the
     // fleet (one hash = the one range-clustered file covering it)
-    val one = graft.sources.GrepIndex.probe(spark, root, Seq((4L, "abc")),
-      maxProbeGrams = 1, scanFraction = Double.MaxValue)
+    val (one, oneDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, Seq((4L, "abc")),
+      maxProbeGrams = 1, scanFraction = Double.MaxValue))
     assert(one.as[(Long, Long)].collect().toSet === Set((4L, 900003L)))
-    val Array(k, t) = spark.conf.get("spark.graft.grep.lastPruned")
-      .split("/").map(_.toInt)
+    val Decision(_, _, k, t) = decision(oneDs, "grep.postings")
     assert(k < t, s"no file pruning: $k/$t")
     // sub-trigram patterns are loudly rejected, not silently empty
     intercept[IllegalArgumentException] {
@@ -635,23 +635,18 @@ class SourcesSpec extends SparkSpec {
     // r19 is fold-all: the routing verdict still says index=2 scan=1,
     // but because one pattern pays the corpus scan, the automaton
     // answers the needles too and the index legs are dropped
-    val got = graft.sources.GrepIndex.probe(spark, root, pats,
-        scanFraction = 0.5)
-      .as[(Long, Long)].collect().toSet
-    assert(got === want)
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "scan")
-    assert(spark.conf.get("spark.graft.grep.lastSplit") ===
-      "index=2 scan=1")
-    assert(spark.conf.get("spark.graft.grep.lastScanFolded") === "2")
-    // conf hygiene: an early-exit probe (df-0 settle) reports n/a for
-    // stages it never ran instead of leaking the previous probe's
-    // values (r17 staleness finding)
-    val none = graft.sources.GrepIndex.probe(spark, root,
-      Seq((9L, "zzzqqq-absent")))
+    val (gotDf, ds) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, pats, scanFraction = 0.5))
+    assert(gotDf.as[(Long, Long)].collect().toSet === want)
+    // route scan; 2 of 3 patterns index-routed, both folded onto the scan
+    assert(decision(ds, "grep.route") === Decision("grep.route", "scan", 2, 3))
+    // an early-exit probe (df-0 settle) records nothing for the
+    // postings and fetch steps it never ran
+    val (none, noneDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, Seq((9L, "zzzqqq-absent"))))
     assert(none.count() === 0L)
-    assert(spark.conf.get("spark.graft.grep.lastRoute") === "index")
-    assert(spark.conf.get("spark.graft.grep.lastPruned") === "0/0")
-    assert(spark.conf.get("spark.graft.grep.lastDocsPruned") === "n/a")
+    assert(decision(noneDs, "grep.route").route === "index")
+    assert(!noneDs.exists(d => d.op == "grep.postings" || d.op == "grep.fetch"))
     graft.Blocks.freeAll(spark)
   }
 
@@ -676,17 +671,16 @@ class SourcesSpec extends SparkSpec {
     // scattered: the point fetch stays (the r19 tier A/B measured it
     // beating a sequential scan leg even at 32/32 docs files kept,
     // SCALE1000_r19_grep.json)
-    val gotScat = graft.sources.GrepIndex.probe(spark, root,
-      Seq((0L, "scatmark_xq"))).as[(Long, Long)].collect().toSet
-    assert(gotScat === wanted("scatmark_xq"))
-    assert(spark.conf.get("spark.graft.grep.lastFetchRoute") === "point")
+    val (scatDf, scatDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, Seq((0L, "scatmark_xq"))))
+    assert(scatDf.as[(Long, Long)].collect().toSet === wanted("scatmark_xq"))
+    assert(decision(scatDs, "grep.fetch").route === "point")
     // clustered: 40 candidates in one id range -> point fetch, pruned
-    val gotClus = graft.sources.GrepIndex.probe(spark, root,
-      Seq((0L, "clusmark_zv"))).as[(Long, Long)].collect().toSet
-    assert(gotClus === wanted("clusmark_zv"))
-    assert(spark.conf.get("spark.graft.grep.lastFetchRoute") === "point")
-    val Array(k, t) = spark.conf.get("spark.graft.grep.lastDocsPruned")
-      .split("/").map(_.toInt)
+    val (clusDf, clusDs) = Decision.capture(graft.sources.GrepIndex.probe(
+      spark, root, Seq((0L, "clusmark_zv"))))
+    assert(clusDf.as[(Long, Long)].collect().toSet === wanted("clusmark_zv"))
+    val Decision(_, fetch, k, t) = decision(clusDs, "grep.fetch")
+    assert(fetch === "point")
     assert(k < t, s"clustered fetch must prune docs files ($k/$t)")
     graft.Blocks.freeAll(spark)
   }

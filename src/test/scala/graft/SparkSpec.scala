@@ -10,6 +10,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The same tables at ten times the scale (sf0.01). */
   val sfDir10x = s"${new java.io.File(sfDir).getParent}/sf0.01"
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The one decision `op` recorded in `ds` (fails on none or many). */
+  def decision(ds: Seq[Decision], op: String): Decision = {
+    val hits = ds.filter(_.op == op)
+    assert(hits.size == 1, s"expected one $op decision in $ds")
+    hits.head
+  }
 }
 
 object SparkSpec {

@@ -9,12 +9,11 @@ import graft.operators.{Curate, Similarity}
   * term. The bench's most expensive row (13.8 s quiet) has had its
   * wobble attributed to "per-batch commit/AQE/checkpoint constants"
   * for three rounds without a measurement; this probe replays the
-  * registered query's exact composition at the bench SF with (a) a
-  * wall timer around each top-level step and (b)
-  * `spark.graft.curate.profile=true`, which makes [[Curate.runBatch]]
-  * print per-stage seconds between its own materialization barriers.
-  * Output: TOTAL per step + CURATE_PROF stage lines → the
-  * BENCHNOTES_r17 attribution table.
+  * registered query's exact composition at the bench SF with a
+  * wall timer around each top-level step. Output: TOTAL per step →
+  * the BENCHNOTES_r17 attribution table (its per-stage walls came
+  * from a runBatch stage profiler since removed; the r18/r19 tier
+  * artifacts keep the measured values).
   *
   * r18 adds the TIER mode (r17 verdict item 1): the flagship
   * composition was the one family with no 1000× row. Three batches of
@@ -25,8 +24,7 @@ import graft.operators.{Curate, Similarity}
   * pipeline instead of the production first-seen-heavy flow. The
   * budget (6M tokens/source) is sized to cut mid-stream in batch 3 so
   * the carried state is load-bearing, like the sf-gate. Per-batch
-  * rows carry wall + task_ms + shuffle/spill (StageMetrics) + the
-  * per-stage walls runBatch records in `spark.graft.curate.prof.*`.
+  * rows carry wall + task_ms + shuffle/spill (StageMetrics).
   *
   * r19 adds the LONGRUN mode (r18 verdict item 3): ≥32 batches
   * through the REAL [[Curate.runBatch]] twice — leg A without index
@@ -61,7 +59,6 @@ object CurateProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.graft.curate.profile", "true")
     // bench-identical warmup surface: one small query
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, dir).limit(1000)
@@ -145,11 +142,6 @@ object CurateProbe {
     spark.stop()
   }
 
-  /** Stage labels [[Curate.runBatch]] profiles, in pipeline order. */
-  private val StageLabels = Seq("note-derive", "dedup-quality-ckpt",
-    "budget-ckpt", "accept-ckpt", "segments", "ann-append", "inv-append",
-    "commit", "ann-compact", "inv-compact")
-
   private def tierMain(dir: String, outPath: Option[String]): Unit = {
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -161,7 +153,6 @@ object CurateProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.graft.curate.profile", "true")
     val metrics = new Scale100.StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -186,10 +177,6 @@ object CurateProbe {
       println("CURATEPROBE " + line)
       out.append(line).append('\n')
     }
-    def stageJson: String = StageLabels.flatMap { l =>
-      val v = spark.conf.get(s"spark.graft.curate.prof.$l", "")
-      if (v.isEmpty) None else Some(s""""stage_${l.replace('-', '_')}_sec":$v""")
-    }.mkString(",")
 
     // salt texts unique (see scaladoc), materialized once so every
     // batch read is real IO, not a recompute of the salt expression
@@ -216,7 +203,7 @@ object CurateProbe {
 
     val roots = Curate.tempRoots("graft-curate-tier")
     (0 until 3).foreach { i =>
-      run(s"curate_tier_batch$i", stageJson) {
+      run(s"curate_tier_batch$i") {
         Curate.runBatch(spark, roots,
           salted.where(col("doc_id") > cuts(i) &&
                        col("doc_id") <= cuts(i + 1)),

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Decision, Tables}
 
 /** r17 graph-family 1000× probe (verdict items 1 + 2): A/B the
   * GraphRoute cap stage — the shipped row_number window vs the
@@ -131,17 +131,16 @@ object GraphProbe {
       out.append(line).append('\n')
     }
 
-    // ---- item 1 end-to-end: routed pagerank (cap stage now TopKAgg)
+    // ---- item 1 end-to-end: routed pagerank (cap stage: row_number window)
     run("pagerank_bipartite")(graft.operators.Rank.pageRank(
       bipDirected, "src", "dst", iters = 3, damping = 0.85).count())
 
     // ---- item 2: reach family, frontier-delta, EXACT reach
     run("bfs_bipartite_frontier") {
-      val d = graft.operators.Graph.bfsDistances(
-        bipDirected, "src", "dst", bipSeeds, "seed", maxIters = 3)
-      val n = d.count()
-      assert(spark.conf.get("spark.graft.graph.lastRoute") == "frontier")
-      n
+      val (d, ds) = Decision.capture(graft.operators.Graph.bfsDistances(
+        bipDirected, "src", "dst", bipSeeds, "seed", maxIters = 3))
+      assert(Decisions.route(ds, "graph.route") == "frontier")
+      d.count()
     }
     run("sssp_bipartite_frontier") {
       graft.operators.Graph.ssspDistances(

@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Decision, Tables}
+import Decisions.{ratio, route}
 
 /** r17 grep-index 1000× probe (verdict item 3): measure the index
   * route WINNING. Every r16 grep number showed the scan route,
@@ -114,29 +115,24 @@ object GrepProbe {
     var gotScan: Set[(Long, Long)] = null
     run("grep_salted_probe_auto") {
       import spark.implicits._
-      val g = graft.sources.GrepIndex.probe(spark, root, pats)
-        .as[(Long, Long)].collect().toSet
+      val (g, ds) = Decision.capture(graft.sources.GrepIndex.probe(spark,
+        root, pats).as[(Long, Long)].collect().toSet)
       gotIdx = g
-      // r18: the observability confs must describe THE ROUTE TAKEN
-      // (r17 verdict #5 — early exits used to leak the previous
-      // probe's values)
-      assert(spark.conf.get("spark.graft.grep.lastRoute") == "index",
+      // the captured decisions describe THE ROUTE TAKEN
+      assert(route(ds, "grep.route") == "index",
         "rare-needle sweep must route index")
-      assert(spark.conf.get("spark.graft.grep.lastPruned")
-        .matches("\\d+/\\d+"), "index route must record postings prune")
-      assert(spark.conf.get("spark.graft.grep.lastDocsPruned") != "n/a",
+      assert(ratio(ds, "grep.postings") != "n/a",
+        "index route must record postings prune")
+      assert(ratio(ds, "grep.fetch") != "n/a",
         "index route fetch must record docs prune")
       // r19 (verdict item 7): the batch-local needle's candidates are
       // CLUSTERED - the locality router must keep the point fetch
-      assert(spark.conf.get("spark.graft.grep.lastFetchRoute") == "point",
+      assert(route(ds, "grep.fetch") == "point",
         "clustered-needle fetch must stay on the point path")
-      println("GREPPROBE_NOTE auto route " +
-        spark.conf.get("spark.graft.grep.lastRoute", "n/a") +
-        " prune " + spark.conf.get("spark.graft.grep.lastPruned", "n/a") +
-        " docsPrune " +
-        spark.conf.get("spark.graft.grep.lastDocsPruned", "n/a") +
-        " fetchRoute " +
-        spark.conf.get("spark.graft.grep.lastFetchRoute", "n/a"))
+      println("GREPPROBE_NOTE auto route " + route(ds, "grep.route") +
+        " prune " + ratio(ds, "grep.postings") +
+        " docsPrune " + ratio(ds, "grep.fetch") +
+        " fetchRoute " + route(ds, "grep.fetch"))
       g.size.toLong
     }
 
@@ -148,30 +144,26 @@ object GrepProbe {
     // vs the full sequential scan).
     run("grep_scatter_probe_auto") {
       import spark.implicits._
-      val g = graft.sources.GrepIndex.probe(spark, root,
-          Seq((0L, "qv8wzxq7k")))
-        .as[(Long, Long)].collect().toSet
-      assert(spark.conf.get("spark.graft.grep.lastRoute") == "index",
+      val (g, ds) = Decision.capture(graft.sources.GrepIndex.probe(spark,
+        root, Seq((0L, "qv8wzxq7k"))).as[(Long, Long)].collect().toSet)
+      assert(route(ds, "grep.route") == "index",
         "scattered needle is still posting-rare - index route")
-      assert(spark.conf.get("spark.graft.grep.lastFetchRoute") == "point",
+      assert(route(ds, "grep.fetch") == "point",
         "scattered candidates keep the point fetch (the measured winner)")
-      println("GREPPROBE_NOTE scatter docsPrune " +
-        spark.conf.get("spark.graft.grep.lastDocsPruned", "n/a") +
-        " fetchRoute " +
-        spark.conf.get("spark.graft.grep.lastFetchRoute", "n/a"))
+      println("GREPPROBE_NOTE scatter docsPrune " + ratio(ds, "grep.fetch") +
+        " fetchRoute " + route(ds, "grep.fetch"))
       g.size.toLong
     }
     run("grep_salted_probe_scan_forced") {
       import spark.implicits._
-      val g = graft.sources.GrepIndex.probe(spark, root, pats,
-          scanFraction = -1.0)
-        .as[(Long, Long)].collect().toSet
+      val (g, ds) = Decision.capture(graft.sources.GrepIndex.probe(spark,
+        root, pats, scanFraction = -1.0).as[(Long, Long)].collect().toSet)
       gotScan = g
-      assert(spark.conf.get("spark.graft.grep.lastRoute") == "scan")
-      assert(spark.conf.get("spark.graft.grep.lastPruned") == "n/a",
-        "scan route runs no postings prune - conf must say so")
-      assert(spark.conf.get("spark.graft.grep.lastDocsPruned") == "n/a",
-        "scan route runs no candidate fetch - conf must say so")
+      assert(route(ds, "grep.route") == "scan")
+      assert(ratio(ds, "grep.postings") == "n/a",
+        "scan route runs no postings prune - nothing may be recorded")
+      assert(ratio(ds, "grep.fetch") == "n/a",
+        "scan route runs no candidate fetch - nothing may be recorded")
       g.size.toLong
     }
     if (gotIdx != null && gotScan != null) {
@@ -201,17 +193,19 @@ object GrepProbe {
     // execution is one pass
     run("grep_mixed_probe_folded") {
       import spark.implicits._
-      val g = graft.sources.GrepIndex.probe(spark, root, mixed)
-        .as[(Long, Long)].collect().toSet
+      val (g, ds) = Decision.capture(graft.sources.GrepIndex.probe(spark,
+        root, mixed).as[(Long, Long)].collect().toSet)
       gotMixed = g
-      val route = spark.conf.get("spark.graft.grep.lastRoute")
-      val split = spark.conf.get("spark.graft.grep.lastSplit")
-      val folded = spark.conf.get("spark.graft.grep.lastScanFolded")
-      println(s"GREPPROBE_NOTE mixed route $route split $split folded $folded")
-      assert(route == "scan", s"folded sweep executes as scan, got $route")
+      // on the scan route, the index-routed (kept) patterns are folded
+      val Decision(_, r, kept, total) =
+        ds.find(_.op == "grep.route").getOrElse(Decision("", "n/a", 0, 0))
+      val split = s"index=$kept scan=${total - kept}"
+      val folded = if (r == "scan") kept else 0L
+      println(s"GREPPROBE_NOTE mixed route $r split $split folded $folded")
+      assert(r == "scan", s"folded sweep executes as scan, got $r")
       assert(split == "index=3 scan=1",
         s"routing verdict stays per-pattern, got $split")
-      assert(folded == "3", s"three needles folded, got $folded")
+      assert(folded == 3, s"three needles folded, got $folded")
       g.size.toLong
     }
     run("grep_mixed_scan_forced") {
@@ -270,15 +264,14 @@ object GrepProbe {
     var gotRx: Set[(Long, Long)] = null
     run("grep_salted_regex_auto") {
       import spark.implicits._
-      val g = graft.sources.GrepIndex.probeRegex(spark, root, rpats)
-        .as[(Long, Long)].collect().toSet
+      val (g, ds) = Decision.capture(graft.sources.GrepIndex.probeRegex(
+        spark, root, rpats).as[(Long, Long)].collect().toSet)
       gotRx = g
-      println("GREPPROBE_NOTE regex route " +
-        spark.conf.get("spark.graft.grep.lastRoute", "n/a") +
-        " split " + spark.conf.get("spark.graft.grep.lastRegexSplit", "n/a") +
-        " prune " + spark.conf.get("spark.graft.grep.lastPruned", "n/a") +
-        " docsPrune " +
-        spark.conf.get("spark.graft.grep.lastDocsPruned", "n/a"))
+      val split = ds.find(_.op == "grep.regex.analysis")
+        .fold("n/a")(d => s"index=${d.kept} scan=${d.total - d.kept}")
+      println("GREPPROBE_NOTE regex route " + route(ds, "grep.route") +
+        " split " + split + " prune " + ratio(ds, "grep.postings") +
+        " docsPrune " + ratio(ds, "grep.fetch"))
       g.size.toLong
     }
     run("grep_salted_regex_scan_forced") {

@@ -75,17 +75,22 @@ object Scale100 {
     // iteration (same convention as Verify's SPARK_GRAFT_ONLY);
     // artifact runs leave it unset.
     val only = sys.env.get("SCALE100_ONLY").map(_.split(",").toSet)
-    def run(label: String)(df: => DataFrame): Unit =
+    // the decisions the last run recorded (none when it was skipped)
+    var decided = Seq.empty[Decision]
+    def run(label: String)(df: => DataFrame): Unit = {
+      decided = Nil
       if (only.forall(_.contains(label))) runAlways(label)(df)
+    }
     def runAlways(label: String)(df: => DataFrame): Unit = {
       // settle the async listener bus so the previous query's last
       // stages don't bleed into this window (diagnostic tool: a 1 s
       // sleep is simpler than reaching into the private listener bus)
       Thread.sleep(1000); metrics.reset()
       val t0 = System.nanoTime()
-      val n = try df.count()
+      val (n, ds) = Decision.capture(try df.count()
               catch { case t: Throwable =>
-                System.err.println(s"SCALE FAIL $label: $t"); -1L }
+                System.err.println(s"SCALE FAIL $label: $t"); -1L })
+      decided = ds
       val sec = (System.nanoTime() - t0) / 1e9
       Blocks.freeAll(spark)
       Thread.sleep(1000)
@@ -194,6 +199,7 @@ object Scale100 {
     run("dedup_clusters_jump")(Dedup.clusters(pairs, "doc_a", "doc_b"))
     run("dedup_clusters_star")(Dedup.clustersStar(pairs, "doc_a", "doc_b"))
     run("dedup_clusters_auto")(Dedup.clustersAuto(pairs, "doc_a", "doc_b"))
+    println("SCALE100 cc_choice=" + Decisions.route(decided, "cc.route"))
     // r9: synchronous LPA communities over the SAME 27M-pair graph —
     // per round one edge⋈labels join + two same-key aggs
     run("lpa_pair_graph")(
@@ -205,8 +211,6 @@ object Scale100 {
     run("lpa_pair_graph_nobroadcast")(
       graft.operators.Rank.labelPropagation(pairs, "doc_a", "doc_b", 3,
         maxBroadcastNodes = 0L))
-    println("SCALE100 cc_choice=" +
-      spark.conf.get("spark.graft.cc.lastChoice", "?"))
 
     // ---- iterative rank/cluster operators on the REAL 100× inputs
     // (their registered gates run planted/small-k shapes; these are
@@ -361,8 +365,7 @@ object Scale100 {
       val q = Tables.embeddings(spark, dir).where(col("vec_id") < 100)
       graft.sources.AnnIndex.probe(spark, annRoot, q, k = 10, nprobe = 4)
     }
-    println("SCALE100 ann_prune_100q=" +
-      spark.conf.get("spark.graft.ann.lastPruned", "?"))
+    println("SCALE100 ann_prune_100q=" + Decisions.ratio(decided, "ann.cells"))
     // selective row: 5 queries probe ≤20 of 64 cells — the kept/total
     // line is the file-pruning evidence (cell-clustered layout +
     // per-segment stats index doing their job)
@@ -370,8 +373,7 @@ object Scale100 {
       val q = Tables.embeddings(spark, dir).where(col("vec_id") < 5)
       graft.sources.AnnIndex.probe(spark, annRoot, q, k = 10, nprobe = 4)
     }
-    println("SCALE100 ann_prune_5q=" +
-      spark.conf.get("spark.graft.ann.lastPruned", "?"))
+    println("SCALE100 ann_prune_5q=" + Decisions.ratio(decided, "ann.cells"))
     run("multimodal_png")(
       SparkEntry.queries("multimodal_png")(spark, dir)
         .groupBy("width").agg(sum(col("mean_pixel"))))
@@ -396,8 +398,7 @@ object Scale100 {
       graft.sources.InvertedIndex.probe(spark, invRoot,
         Seq("spark", "window", "merge"), k = 10)
     }
-    println("SCALE100 inv_prune_3t=" +
-      spark.conf.get("spark.graft.inv.lastPruned", "?"))
+    println("SCALE100 inv_prune_3t=" + Decisions.ratio(decided, "inv.buckets"))
     run("kcore_pair_graph")(
       graft.operators.Graph.kcore(
         graft.operators.Graph.canonicalEdges(pairs, "doc_a", "doc_b"),

@@ -54,13 +54,17 @@ object Scale1000 {
 
     val out = new StringBuilder
     val only = sys.env.get("SCALE1000_ONLY").map(_.split(",").toSet)
+    // the decisions the last run recorded (none when it was skipped)
+    var decided = Seq.empty[Decision]
     def run(label: String)(body: => Long): Unit = {
+      decided = Nil
       if (!only.forall(_.contains(label))) return
       Thread.sleep(1000); metrics.reset()
       val t0 = System.nanoTime()
-      val n = try body
+      val (n, ds) = Decision.capture(try body
               catch { case t: Throwable =>
-                System.err.println(s"SCALE FAIL $label: $t"); -1L }
+                System.err.println(s"SCALE FAIL $label: $t"); -1L })
+      decided = ds
       val sec = (System.nanoTime() - t0) / 1e9
       Blocks.freeAll(spark)
       Thread.sleep(1000)
@@ -490,9 +494,8 @@ object Scale1000 {
         (2L, "customer line"), (3L, "zzzz never present"))))
     if (!only.exists(o => !o.contains("grep_index_probe_5m")))
       println("SCALE1000_NOTE grep route " +
-        spark.conf.get("spark.graft.grep.lastRoute", "n/a") +
-        " postings file prune " +
-        spark.conf.get("spark.graft.grep.lastPruned", "n/a"))
+        Decisions.route(decided, "grep.route") + " postings file prune " +
+        Decisions.ratio(decided, "grep.postings"))
 
     args.lift(1).foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Decision, Tables}
 
 /** r18 (r17 verdict item 3): segment-count economics at the 1000×
   * tier for the three persisted indexes. After N streaming
@@ -54,18 +54,19 @@ object SegmentsProbe {
 
     val out = new StringBuilder
     val only = sys.env.get("SEGPROBE_ONLY").map(_.split(",").toSet)
-    def run(label: String, extra: => String = "")(body: => Long): Unit = {
+    def run(label: String, extra: Seq[Decision] => String = _ => "")(
+        body: => Long): Unit = {
       if (!only.forall(_.contains(label))) return
       Thread.sleep(1000); metrics.reset()
       val t0 = System.nanoTime()
-      val n = try body
+      val (n, ds) = Decision.capture(try body
               catch { case t: Throwable =>
-                System.err.println(s"SEGPROBE FAIL $label: $t"); -1L }
+                System.err.println(s"SEGPROBE FAIL $label: $t"); -1L })
       val sec = (System.nanoTime() - t0) / 1e9
       graft.Blocks.freeAll(spark)
       Thread.sleep(1000)
       val m = metrics.snapshot
-      val ex = extra
+      val ex = extra(ds)
       val line = f"""{"query":"$label","rows":$n,"sec":$sec%.2f,""" +
         m.map { case (k, v) => s""""$k":$v""" }.mkString("", ",", "") +
         (if (ex.isEmpty) "}" else s",$ex}")
@@ -100,7 +101,7 @@ object SegmentsProbe {
 
     var grepRef: Set[(Long, Long)] = null
     def grepProbe(root: String, label: String): Unit = run(label,
-        s""""pruned":"${spark.conf.get("spark.graft.grep.lastPruned", "n/a")}"""") {
+        ds => s""""pruned":"${Decisions.ratio(ds, "grep.postings")}"""") {
       import spark.implicits._
       val g = graft.sources.GrepIndex.probe(spark, root, grepPats,
           scanFraction = Double.MaxValue)
@@ -174,7 +175,7 @@ object SegmentsProbe {
       .orderBy(col("vec_id")).limit(5)
     var annRef: Set[String] = null
     def annProbe(root: String, label: String): Unit = run(label,
-        s""""pruned":"${spark.conf.get("spark.graft.ann.lastPruned", "n/a")}"""") {
+        ds => s""""pruned":"${Decisions.ratio(ds, "ann.cells")}"""") {
       val rows = graft.sources.AnnIndex
         .probe(spark, root, queries, k = 5, nprobe = cells)
         .collect().map(_.toString).toSet
