@@ -50,7 +50,10 @@ object GraftFunctions {
     c
   }
 
-  private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+  /** Every function as (name, expression class, arity-checked
+    * builder): [[register]] and [[graft.plans.GraftExtensions]] both
+    * install this one table. */
+  private[graft] val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     (DotName, classOf[DotProduct],
       (c0: Seq[Expression]) => { val c = arity(DotName, "vecA, vecB", 2, c0)
         DotProduct(c(0), c(1)) }),

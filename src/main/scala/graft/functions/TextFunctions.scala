@@ -59,31 +59,15 @@ object TextFunctions {
     * compiled byte scan instead of 3-4 regex passes (the regex CPU was
     * 4 of the 6 slowest 100× entries, 17-19 s each). Projecting
     * several components stays one scan: subexpression elimination
-    * unifies the sibling struct evaluations. The `*Regex` twins keep
-    * the original formulation alive as the oracle-semantics statement;
-    * QualityStatsSpec asserts native == regex bit-for-bit. */
+    * unifies the sibling struct evaluations. QualityStatsSpec keeps
+    * the original regex formulation as the oracle-semantics statement
+    * and asserts native == regex bit-for-bit. */
   def qualityStats(text: Column): Column = GraftFunctions.qualityStats(text)
 
   def alphaRatio(text: Column): Column = qualityStats(text).getField("alpha_ratio")
   def punctRatio(text: Column): Column = qualityStats(text).getField("punct_ratio")
   def stopwordRatio(text: Column): Column = qualityStats(text).getField("stopword_ratio")
   def qualityScore(text: Column): Column = qualityStats(text).getField("quality")
-
-  def alphaRatioRegex(text: Column): Column =
-    regexp_count(text, lit("[A-Za-z]")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def punctRatioRegex(text: Column): Column =
-    regexp_count(text, lit("[^A-Za-z0-9\\s]")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def stopwordRatioRegex(text: Column): Column =
-    regexp_count(lower(text), lit(LangPatterns.head._2)).cast("double") /
-      greatest(wsTokenCount(text), lit(1)).cast("double")
-
-  def qualityScoreRegex(text: Column): Column =
-    alphaRatioRegex(text) * 0.5 + stopwordRatioRegex(text) * 0.3 +
-      (lit(1.0) - punctRatioRegex(text)) * 0.2
 
   /** Whole-document fingerprint: md5 of the normalized text. */
   def fingerprint(text: Column): Column = normalizedFingerprint(normalize(text))

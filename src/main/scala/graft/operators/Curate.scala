@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -236,13 +236,17 @@ object Curate {
     // attempt used (same-machine sampling could not separate the
     // Generate form from the plain one under this box's ±35% noise —
     // BENCHNOTES_r16.md — so the zero-new-structure form wins by
-    // construction, not by a contested measurement)
+    // construction, not by a contested measurement). Its row count
+    // is observed on the checkpoint's own job, not probed again.
+    val freshObs = Observation()
     val fresh = (
       if (priorVs.isEmpty) keepOne
       else keepOne.join(readLedger(spark, roots).hint("shuffle_hash"),
         Seq("fp"), "left_anti")
     ).withColumn("quality", TextFunctions.qualityScore(col("text")))
+      .observe(freshObs, count(lit(1)).as("n"))
       .localCheckpoint()
+    val nFresh = freshObs.get("n").asInstanceOf[Long]
     // every first-seen fp enters the ledger NOW — before quality and
     // budget — so later duplicates of rejected docs stay rejected
     val ledgerDelta = fresh.select(col("fp"))
@@ -266,15 +270,18 @@ object Curate {
     // the window alone at 0.86 s of ~10 s), so the single-task-per-
     // source window is not worth splitting into doc_id bands
     val wCum = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+    val inBudget = col("cum") <= budgetPerSource
+    val budgetedObs = Observation()
     val budgeted = scoredTok
       .join(broadcast(priorState), Seq("source"), "left")
       .withColumn("cum",
         sum(col("n_tokens")).over(wCum) +
           coalesce(col("used_tokens"), lit(0L)))
+      .observe(budgetedObs, count_if(inBudget).as("n"))
       .localCheckpoint()
-    val accepted = budgeted.where(col("cum") <= budgetPerSource)
-      .select(col("doc_id"), col("source"), col("quality"), col("fp"))
-      .localCheckpoint()
+    val nAccepted = budgetedObs.get("n").asInstanceOf[Long]
+    // a filter over the materialized `budgeted`: no checkpoint of its own
+    val accepted = budgeted.where(inBudget)
 
     // new state: prior counters carried forward, batch's FULL
     // quality-passed token mass added (see object doc — rejected rows
@@ -294,8 +301,8 @@ object Curate {
       else catalogOf(spark, roots.curation)
     val newEntries = Seq(
       (CorpusKind, accepted.select(col("doc_id"), col("source"),
-        col("quality")), accepted.isEmpty),
-      (LedgerKind, ledgerDelta, fresh.isEmpty)
+        col("quality")), nAccepted == 0),
+      (LedgerKind, ledgerDelta, nFresh == 0)
     ).collect { case (kind, df, empty) if !empty =>
       writeSegment(spark, roots.curation, kind, df)
     }
@@ -315,7 +322,7 @@ object Curate {
       embeddings.join(accepted.select(col("doc_id").as("vec_id")), "vec_id")
     // the two index appends are INDEPENDENT (separate Manifest roots,
     // separate replay notes, inputs derived from the already-
-    // checkpointed `accepted`) and each is a sequence of small
+    // checkpointed `budgeted`) and each is a sequence of small
     // driver-serial jobs — the r17 CurateProbe decomposition measured
     // them at ~5.6 s/batch together, ~40% of the whole gate query,
     // dwarfing the curation commit itself (0.76 s/batch). Submitting
@@ -328,7 +335,8 @@ object Curate {
     val annF = Future { notedVersion(roots.ann,
         v => AnnIndex.noteOf(spark, roots.ann, Some(v))).getOrElse {
       val exists = Manifest.currentVersion(spark, roots.ann).isDefined
-      if (annBatch.isEmpty)
+      // accepted docs may lack embeddings: only the join can tell
+      if (nAccepted == 0 || annBatch.isEmpty)
         Manifest.currentVersion(spark, roots.ann).getOrElse(-1L)
       else if (!exists)
         AnnIndex.build(spark,
@@ -343,13 +351,12 @@ object Curate {
     // batch: the old batch⋈accepted form shuffled the batch's full
     // text column every time (r18 tier probe: ~1 GB shuffle per
     // 1.67M-doc batch inside the dominant inv-append stage), so
-    // re-filter the budgeted checkpoint (join-free)
-    val invBatch = budgeted.where(col("cum") <= budgetPerSource)
-      .select(col("doc_id"), col("text"))
+    // `accepted` re-filters the budgeted checkpoint (join-free)
+    val invBatch = accepted.select(col("doc_id"), col("text"))
     val invF = Future { notedVersion(roots.inv,
         v => InvertedIndex.noteOf(spark, roots.inv, Some(v))).getOrElse {
       val exists = Manifest.currentVersion(spark, roots.inv).isDefined
-      if (invBatch.isEmpty)
+      if (nAccepted == 0)
         Manifest.currentVersion(spark, roots.inv).getOrElse(-1L)
       else if (!exists)
         InvertedIndex.build(spark, invBatch, roots.inv, nBuckets = nFiles,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
-import graft.functions.expressions.{DotProduct, MinHashSignature, SimHash64}
 
 /** SparkSessionExtensions hook so cluster deploys get graft's native
   * expressions without code changes:
@@ -14,80 +13,13 @@ import graft.functions.expressions.{DotProduct, MinHashSignature, SimHash64}
   * }}}
   *
   * (Local/driver code paths call GraftFunctions.register directly;
-  * this is the spark-submit-owned-session integration point.)
+  * this is the spark-submit-owned-session integration point. Both
+  * install the same [[GraftFunctions.builders]] table.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.DotName),
-      new ExpressionInfo(classOf[DotProduct].getName, GraftFunctions.DotName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SimHashName),
-      new ExpressionInfo(classOf[SimHash64].getName, GraftFunctions.SimHashName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.MinHashName),
-      new ExpressionInfo(classOf[MinHashSignature].getName, GraftFunctions.MinHashName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSignature(children(0), children(1),
-          GraftFunctions.evalK(children(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.BloomAggName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        GraftFunctions.BloomAggName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.MightContainName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        GraftFunctions.MightContainName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SignBucketName),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.SignBucket].getName,
-        GraftFunctions.SignBucketName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.expressions.SignBucket(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.NearestCentroidName),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.NearestCentroid].getName,
-        GraftFunctions.NearestCentroidName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.expressions.NearestCentroid(
-          children(0), children(1), children(2), children(3), children(4))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.WordpieceName),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.WordpieceTokens].getName,
-        GraftFunctions.WordpieceName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.expressions.WordpieceTokens(
-          children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.BpeEncodeName),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.BpeEncodeTokens].getName,
-        GraftFunctions.BpeEncodeName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.expressions.BpeEncodeTokens(
-          children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.UnicodeNormalizeName),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.UnicodeNormalize].getName,
-        GraftFunctions.UnicodeNormalizeName),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.expressions.UnicodeNormalize(
-          children(0), children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

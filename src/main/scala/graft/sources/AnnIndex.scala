@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -119,17 +119,16 @@ object AnnIndex {
     val laid = Layout.repartitionByKeyRange(assigned, col("cell"),
         centroids.size, math.max(nFiles, 1))
       .sortWithinPartitions("cell")
-    laid.write.mode("errorifexists").parquet(seg)
+    // the segment's row count and mean assignment cosine are observed
+    // on the write's own execution: no re-scan of the written files
+    val stats = Observation()
+    laid.observe(stats, count(lit(1)).as("n"), avg(col("ccos")).as("mc"))
+      .write.mode("errorifexists").parquet(seg)
     StatsIndex.write(spark, seg, Seq("cell"))
-    // stats come from the WRITTEN segment (one cheap agg over what was
-    // persisted, not a recompute of the assignment expression), read
-    // with the written frame's schema (no inference job)
-    def written = spark.read.schema(laid.schema).parquet(seg)
-    val row = written
-      .agg(count(lit(1)).as("n"), avg(col("ccos")).as("mc")).head()
     val codesSeg = codebooks match {
       case Some(cbs) =>
-        // encode from the WRITTEN segment (assignment not recomputed);
+        // encode from the WRITTEN segment (assignment not recomputed),
+        // read with the written frame's schema (no inference job);
         // the codes ride their own cell-clustered table + stats index,
         // so probePq prunes code FILES exactly like probe prunes
         // vector files — and reads ~dim·32/(m·log2 ksub) times fewer
@@ -138,8 +137,8 @@ object AnnIndex {
         // enumerated cell layout — the range sampler re-ran pqEncode
         Layout.repartitionByKeyRange(
             Similarity.pqEncode(
-              written.select(col("cell"), col("vec_id"),
-                col("embedding")),
+              spark.read.schema(laid.schema).parquet(seg)
+                .select(col("cell"), col("vec_id"), col("embedding")),
               "embedding", cbs)
               .select(col("cell"), col("vec_id"), col("codes")),
             col("cell"), centroids.size, math.max(nFiles, 1))
@@ -149,8 +148,9 @@ object AnnIndex {
         cs
       case None => ""
     }
-    val out = Segment(seg, row.getLong(0),
-      if (row.isNullAt(1)) 0.0 else row.getDouble(1), codesSeg)
+    val observed = stats.get // mc is null for a zero-row segment
+    val out = Segment(seg, observed("n").asInstanceOf[Long],
+      Option(observed("mc")).fold(0.0)(_.asInstanceOf[Double]), codesSeg)
     // staging sentinel: complete but unreferenced until the catalog
     // CAS — exempt from vacuum's minAge for stagings of any duration
     Manifest.markStaging(spark, segDirs(out))

@@ -699,8 +699,9 @@ object GrepIndex {
     val liveIdx = live.filterNot(t => heavyPids(t._1 >> 7))
     val scanAll = scanPats ++
       idxPats.collect { case (pid, re, _) if heavyPids(pid) => (pid, re) }
+    // unanalyzable patterns ride the scan leg as well as heavy ones
     Decision.record(Decision("grep.route",
-      if (heavyPids.isEmpty) "index"
+      if (scanAll.isEmpty) "index"
       else if (liveIdx.isEmpty) "scan" else "split",
       patterns.size - scanAll.size, patterns.size))
     if (liveIdx.isEmpty) return scanLeg(scanAll)

@@ -21,9 +21,12 @@ import graft.Decision
   * planning step against a small index and minutes of S3 HEADs
   * against a million files.
   *
-  * Build cost is file-COUNT-bound, not byte-bound: [[write]] ships
-  * the file list to executors and each task reads only footers (no
-  * data pages). Pruning is CONSERVATIVE by construction: a file
+  * Build cost is file-COUNT-bound, not byte-bound: [[write]] reads
+  * only footers (no data pages), on the driver. Every caller indexes
+  * one index segment (GrepIndex, AnnIndex and InvertedIndex
+  * segments, 16 files or fewer by default), where a footer job's
+  * scheduling and per-task setup cost more than the footer reads
+  * themselves. Pruning is CONSERVATIVE by construction: a file
   * missing from the index (written after the index — staleness), a
   * column without stats, or a non-indexed type keeps the file; the
   * predicate is always re-applied after the scan, so the index can
@@ -60,15 +63,13 @@ object StatsIndex {
       .map(_.getPath.toString)
   }
 
-  /** One task per file batch: open the footer, fold row-group stats
-    * into per-file (min, max) per requested column. Runs on
-    * executors — `new Configuration()` picks up the cluster's
-    * core-site from the executor classpath, matching how Spark's own
-    * readers resolve the filesystem. */
-  private def footerStats(path: String, cols: Set[String])
+  /** Open one file's footer and fold its row-group stats into
+    * per-file (min, max) per requested column. */
+  private def footerStats(path: String, cols: Set[String],
+                          conf: Configuration)
       : Seq[(String, Long, String, Option[Double], Option[Double],
              Option[String], Option[String])] = {
-    val in = HadoopInputFile.fromPath(new Path(path), new Configuration())
+    val in = HadoopInputFile.fromPath(new Path(path), conf)
     val reader = ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
@@ -129,22 +130,21 @@ object StatsIndex {
     StructField("min_num", DoubleType), StructField("max_num", DoubleType),
     StructField("min_str", StringType), StructField("max_str", StringType)))
 
-  /** Footer stats of `files` as index rows: ONE job whose tasks read
-    * only footers; the rows come back to the driver (file-count-bounded
-    * metadata). */
+  /** Footer stats of `files` as index rows, read on the driver with
+    * the session's Hadoop conf (as [[MetaTable]] and [[graft.Tables]]
+    * read theirs): no Spark job. Sized for index segments, a handful
+    * of files per call; the cost is one footer round-trip per file. */
   private def footerRows(spark: SparkSession, files: Seq[String],
-                         cols: Set[String]): Seq[Row] =
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size,
-        spark.sparkContext.defaultParallelism)))
-      .flatMap(p => footerStats(p, cols))
-      .collect().toSeq
+                         cols: Set[String]): Seq[Row] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.flatMap(footerStats(_, cols, conf))
       .map { case (f, n, c, mn, mx, smn, smx) =>
         Row(f, n, c, mn.orNull, mx.orNull, smn.orNull, smx.orNull) }
+  }
 
   /** Build (or rebuild) the index for `cols` of the parquet table at
-    * `table`, stored under `table/_graft_stats`: one footer job, the
-    * rows written from the driver. */
+    * `table`, stored under `table/_graft_stats`: footers read and rows
+    * written on the driver, no Spark job. */
   def write(spark: SparkSession, table: String, cols: Seq[String]): Unit =
     MetaTable.write(spark, s"$table/$IndexDir", IndexSchema,
       footerRows(spark, listDataFiles(spark, table), cols.toSet),

@@ -81,6 +81,31 @@ class AnnIndexSpec extends SparkSpec {
     assert(v0.where(col("neighbor_id") % 2 === 1).count() === 0)
   }
 
+  test("catalog segment stats equal a count and mean over the written files") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val root = freshRoot("annidx-stats")
+    AnnIndex.build(spark, emb.where(col("vec_id") % 2 === 0), root,
+      cells = 4, nFiles = 4)
+    val r = AnnIndex.append(spark, root, emb.where(col("vec_id") % 2 === 1),
+      nFiles = 4)
+    // a zero-row append: no rows, and mean_cos defaults to 0.0
+    val none = AnnIndex.append(spark, root, emb.limit(0), nFiles = 4)
+    val segs = AnnIndex.catalogOf(spark, root)
+    assert(segs.size === 3)
+    for (g <- segs) {
+      val w = spark.read.parquet(g.path)
+        .agg(count(lit(1)), coalesce(avg(col("ccos")), lit(0.0))).head()
+      assert(g.nRows === w.getLong(0), g.path)
+      // equal up to the summation order of the two aggregations
+      assert(math.abs(g.meanCos - w.getDouble(1)) <= 1e-12, g.path)
+    }
+    val byPath = segs.map(g => g.path -> g).toMap
+    assert(byPath(r.segment).nRows === emb.where(col("vec_id") % 2 === 1).count())
+    assert(r.batchMeanCos === byPath(r.segment).meanCos && r.batchMeanCos > 0.0)
+    assert(byPath(none.segment).nRows === 0L)
+    assert(byPath(none.segment).meanCos === 0.0 && none.batchMeanCos === 0.0)
+  }
+
   test("in-distribution append does not recommend refit; shifted batch does") {
     val emb = Tables.embeddings(spark, sfDir)
     val root = freshRoot("annidx-drift")

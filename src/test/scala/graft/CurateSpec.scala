@@ -241,6 +241,47 @@ class CurateSpec extends SparkSpec {
     assert(Manifest.versions(spark, maint.curation).size === before)
   }
 
+  test("degenerate batches: all ledger duplicates, or all below the quality floor") {
+    val roots = Curate.tempRoots("curate-spec-degen")
+    def catalog(v: Long) = spark.read.parquet(
+        s"${Manifest.resolvedDataDir(spark, roots.curation, v)}/catalog")
+      .select("kind", "segment", "n_rows").as[(String, String, Long)]
+      .collect().toSet
+    def indexVersions =
+      (Manifest.currentVersion(spark, roots.ann),
+       Manifest.currentVersion(spark, roots.inv))
+    val v0 = Curate.runBatch(spark, roots,
+      docs((1L, "s", "aaaa"), (2L, "t", "bbbb")), embs(1L, 2L),
+      qualityFloor = 0.5, budgetPerSource = 100L)
+    val idx0 = indexVersions
+    assert(idx0 === (Some(0L), Some(0L)))
+    // every doc repeats a ledger fp: no fresh row, so neither a corpus
+    // nor a ledger segment, and both indexes stay where they were
+    val dups = docs((11L, "s", "aaaa"), (12L, "t", "bbbb"))
+    val v1 = Curate.runBatch(spark, roots, dups, embs(11L, 12L),
+      qualityFloor = 0.5, budgetPerSource = 100L)
+    assert(v1 === v0 + 1)
+    assert(catalog(v1) === catalog(v0))
+    assert(indexVersions === idx0)
+    // every doc is fresh but fails the floor: the ledger delta is
+    // written, the corpus and both indexes are not
+    val low = docs((21L, "s", "...."), (22L, "u", ",,,,"))
+    val v2 = Curate.runBatch(spark, roots, low, embs(21L, 22L),
+      qualityFloor = 0.5, budgetPerSource = 100L)
+    val added = catalog(v2) -- catalog(v1)
+    assert(added.map(t => (t._1, t._3)) === Set(("ledger", 2L)))
+    assert(catalog(v1).subsetOf(catalog(v2)))
+    assert(indexVersions === idx0)
+    // replays of either batch find their version and touch nothing
+    assert(Curate.runBatch(spark, roots, dups, embs(11L, 12L),
+      qualityFloor = 0.5, budgetPerSource = 100L) === v1)
+    assert(Curate.runBatch(spark, roots, low, embs(21L, 22L),
+      qualityFloor = 0.5, budgetPerSource = 100L) === v2)
+    assert(Manifest.versions(spark, roots.curation) === Seq(v0, v1, v2))
+    assert(indexVersions === idx0)
+    assert(Curate.readCorpus(spark, roots).count() === 2L)
+  }
+
   test("each batch is one commit; meta pins index versions; empty batches commit") {
     val roots = Curate.tempRoots("curate-spec-ver")
     Curate.runBatch(spark, roots,

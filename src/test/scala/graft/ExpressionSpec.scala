@@ -195,6 +195,24 @@ class ExpressionSpec extends SparkSpec {
     assert(viaSql.toSeq === viaCol.toSeq)
   }
 
+  test("GraftExtensions injects the whole function table with its arity checks") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.plans.GraftExtensions().apply(ext)
+    val reg = FunctionRegistry.builtin.clone()
+    // what a session built with spark.sql.extensions runs (package-
+    // private in Spark SQL, public in bytecode)
+    ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, reg)
+    for ((name, _, _) <- GraftFunctions.builders)
+      assert(reg.functionExists(FunctionIdentifier(name)), name)
+    val e = intercept[IllegalArgumentException](reg.lookupFunction(
+      FunctionIdentifier(GraftFunctions.DotName), Seq(Literal(1))))
+    assert(e.getMessage.contains("expects 2 arguments"))
+  }
+
   test("graft_wordpiece SQL registration agrees with the Column API") {
     GraftFunctions.register(spark)
     val vocab = Seq("the", "##re", "t", "h", "e", "##h", "##e", "##r")

@@ -11,18 +11,23 @@ import graft.sources.{AnnIndex, GrepIndex, InvertedIndex, StatsIndex}
   * ([[graft.sources.MetaTable]]), and base tables take their schema
   * from one footer read there ([[graft.Tables]]): these calls start a
   * pinned number of Spark jobs, so a return to Spark-side metadata
-  * I/O or schema inference fails here. Jobs
-  * are counted by a listener, restricted to a job group set on the
-  * calling thread. */
+  * I/O or schema inference fails here. Jobs are counted by a
+  * listener, restricted to a job group set on the calling thread —
+  * except for calls that start jobs on other threads
+  * (`Curate.runBatch`'s index appends), where every job started
+  * during the call counts. */
 class MetadataJobsSpec extends SparkSpec {
   import spark.implicits._
 
   private val group = "metadata-jobs-spec"
   private val started = new AtomicInteger(0)
+  private val startedAll = new AtomicInteger(0)
   private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      startedAll.incrementAndGet()
       if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
         started.incrementAndGet()
+    }
   }
 
   override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
@@ -43,6 +48,15 @@ class MetadataJobsSpec extends SparkSpec {
     try body finally spark.sparkContext.clearJobGroup()
     drain()
     started.get() - n0
+  }
+
+  /** Every job started while `body` runs, on any thread. */
+  private def allJobsOf(body: => Any): Int = {
+    drain()
+    val n0 = startedAll.get()
+    body
+    drain()
+    startedAll.get() - n0
   }
 
   private lazy val base = Files.createTempDirectory("metajobs").toString
@@ -79,12 +93,34 @@ class MetadataJobsSpec extends SparkSpec {
     assert(AnnIndex.centroidsOf(spark, roots.ann).nonEmpty)
   }
 
-  test("StatsIndex prunes on the driver and writes with one footer job") {
+  test("StatsIndex prunes on the driver and reads footers there: no job") {
     val posts = GrepIndex.catalogOf(spark, grepRoot).map(_.postings)
     var pruned = Seq.empty[(Seq[String], Seq[String])]
     assert(jobsOf { pruned = StatsIndex.prunedFilesInMany(spark, posts, "h", Seq(1L, 2L)) } === 0)
     assert(pruned.size === 2 && pruned.forall(_._2.nonEmpty))
-    assert(jobsOf(StatsIndex.write(spark, posts.head, Seq("h"))) === 1)
+    assert(jobsOf(StatsIndex.write(spark, posts.head, Seq("h"))) === 0)
+  }
+
+  test("one grep append starts a pinned number of jobs") {
+    val root = s"$base/grep-append"
+    GrepIndex.build(spark, texts, "doc_id", "text", root, nFiles = 2)
+    assert(jobsOf(GrepIndex.append(spark, root,
+      texts.select((col("doc_id") + 100).as("doc_id"), col("text")),
+      "doc_id", "text", nFiles = 2)) === 8)
+  }
+
+  test("a warm curate batch starts a pinned number of jobs, index appends included") {
+    val roots = Curate.tempRoots("metajobs-warm")
+    def batch(off: Long) = texts.select((col("doc_id") + off).as("doc_id"),
+      lit("s").as("source"), concat(col("text"), lit(s" batch$off")).as("text"))
+    def embs(off: Long) = (1L to 40L).map(i => (i + off, Array(i.toFloat, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    Curate.runBatch(spark, roots, batch(0L), embs(0L), qualityFloor = 0.0,
+      budgetPerSource = 1000000L)
+    // the second batch appends to both indexes built by the first
+    assert(allJobsOf(Curate.runBatch(spark, roots, batch(100L), embs(100L),
+      qualityFloor = 0.0, budgetPerSource = 1000000L)) === 22)
+    assert(Curate.readCorpus(spark, roots).count() === 80L)
   }
 
   test("building the curated corpus frame starts no job") {
