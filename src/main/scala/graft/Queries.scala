@@ -1217,8 +1217,8 @@ object Queries {
     * 20 queries, emitted as one row per probe width with a ≥-target
     * flag (sketch_sound pattern — seeded k-means + deterministic data
     * make the flags deterministic, so a centroid or probe regression
-    * fails the hash gate). Measured (RecallProbe, near-uniform
-    * synthetic vectors — the hard case for IVF): nprobe=2 recalls
+    * fails the hash gate). Measured (near-uniform synthetic vectors
+    * — the hard case for IVF): nprobe=2 recalls
     * 0.42/0.44 at sf0.01/sf0.1, nprobe=8 recalls 0.80/0.77. Gates sit
     * between measurement and the ~nprobe/cells ≈ 0.125/0.5 a BROKEN
     * centroid ranking would score: 0.25 and 0.60. */
@@ -1270,8 +1270,8 @@ object Queries {
     * smaller code table. recall@10 vs in-query brute force over 20
     * queries at nprobe=4, one row per re-rank width (ann_ivf_recall
     * pattern — seeded training + deterministic data make the flags
-    * deterministic). Measured (tools/PqProbe, near-uniform synthetic
-    * vectors — the WORST case for PQ, no cluster structure to absorb
+    * deterministic). Measured (near-uniform synthetic vectors — the
+    * WORST case for PQ, no cluster structure to absorb
     * quantization error): rerank=10 (pure ADC ranking) recalls
     * 0.33/0.24 at sf0.01/sf0.1, rerank=100 (exact re-rank repairing
     * the approximate cut) 0.59/0.46. Gates sit between measurement

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * at k=64 the projection method blows past HotSpot's huge-method
   * limit, the whole stage runs as interpreted bytecode, and a 200k×64
   * assignment that should cost ~1 CPU-second measured ~40 s wall on
-  * 32 cores (r7 ClusterProbe). Here the matrix rides as a codegen
+  * 32 cores (r7, SURVEY.md lessons). Here the matrix rides as a codegen
   * reference object, the generated code is one fixed-size loop
   * regardless of k, and per-row allocation is the single result row.
   *

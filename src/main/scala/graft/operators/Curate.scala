@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.sources.{Manifest, MetaTable, AnnIndex, InvertedIndex}
+import graft.sources.{Manifest, MetaTable, AnnIndex, InvertedIndex,
+  SegmentCatalog}
 import graft.functions.TextFunctions
 
 /** Incremental curation: the production form of the one-shot
@@ -90,24 +91,36 @@ object Curate {
     StructField("doc_id", LongType), StructField("source", StringType),
     StructField("quality", DoubleType)))
   private val ledgerSchema = StructType(Seq(StructField("fp", StringType)))
-  private val catalogSchema = StructType(Seq(
-    StructField("kind", StringType), StructField("segment", StringType),
-    StructField("n_rows", LongType)))
   private val stateSchema = StructType(Seq(
     StructField("source", StringType), StructField("used_tokens", LongType)))
   private val metaSchema = StructType(Seq(
     StructField("ann_version", LongType), StructField("inv_version", LongType),
     StructField("batch_note", StringType)))
 
+  /** One immutable corpus or ledger segment and its row count. */
+  private[graft] final case class Segment(kind: String, path: String,
+                                          nRows: Long)
+
+  /** The catalog lifecycle: `catalog/` rows (kind, segment, n_rows)
+    * sorted by segment path, segments under `_segments/`. */
+  private[graft] val segments = new SegmentCatalog[Segment](
+    "curation commits", SegmentsDir,
+    StructType(Seq(
+      StructField("kind", StringType), StructField("segment", StringType),
+      StructField("n_rows", LongType))),
+    g => Row(g.kind, g.path, g.nRows),
+    r => Segment(r.getString(0), r.getString(1), r.getLong(2)),
+    _.path, g => Seq(g.path), _.nRows)
+
   private def subDir(spark: SparkSession, root: String, v: Long,
                      sub: String): String =
     s"${Manifest.resolvedDataDir(spark, root, v)}/$sub"
 
   /** One immutable segment under `<root>/_segments/` (uniquely named,
-    * so concurrent/crashed writers can never collide); returns the
-    * catalog entry. */
+    * so concurrent/crashed writers can never collide), staged until
+    * the commit that names it. */
   private def writeSegment(spark: SparkSession, root: String, kind: String,
-                           df: DataFrame): (String, String, Long) = {
+                           df: DataFrame): Segment = {
     val token = java.util.UUID.randomUUID().toString.take(8)
     val path = s"$root/$SegmentsDir/${kind.take(1)}-$token"
     // count via observe on the WRITE's own execution — the r14 form
@@ -116,24 +129,9 @@ object Curate {
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, count(lit(1)).as("n"))
       .write.mode("errorifexists").parquet(path)
-    val n = obs.get("n").asInstanceOf[Long]
-    // staging sentinel: the segment is unreferenced until the batch's
-    // outer commit publishes the catalog naming it — and the index
-    // appends run in between, so the window is open-ended. The
-    // sentinel exempts it from vacuum's minAge cutoff for stagings of
-    // any duration (Manifest.StagingSentinel); cleared after commit.
-    Manifest.markStaging(spark, Seq(path))
-    (kind, path, n)
-  }
-
-  /** The catalog of `v` (default current): (kind, segment, n_rows). */
-  private def catalogOf(spark: SparkSession, root: String,
-                        v: Option[Long] = None): Seq[(String, String, Long)] = {
-    val ver = v.orElse(Manifest.currentVersion(spark, root))
-      .getOrElse(throw new IllegalStateException(s"no curation commits at $root"))
-    MetaTable.read(spark, subDir(spark, root, ver, "catalog"), catalogSchema)
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._2)
+    // the index appends run between this write and the batch's
+    // commit, so the staging window is open-ended
+    segments.stage(spark, Segment(kind, path, obs.get("n").asInstanceOf[Long]))
   }
 
   /** One multi-path scan of a kind's segments at version `v` (default
@@ -143,7 +141,8 @@ object Curate {
   private def readKind(spark: SparkSession, root: String, kind: String,
                        schema: StructType, v: Option[Long] = None)
       : DataFrame = {
-    val paths = catalogOf(spark, root, v).filter(_._1 == kind).map(_._2)
+    val paths = segments.catalogOf(spark, root, v)
+      .filter(_.kind == kind).map(_.path)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).parquet(paths: _*)
@@ -159,18 +158,6 @@ object Curate {
   def readLedger(spark: SparkSession, roots: Roots,
                  version: Option[Long] = None): DataFrame =
     readKind(spark, roots.curation, LedgerKind, ledgerSchema, version)
-
-  /** Batch note of a committed curation version, or "" for pre-note
-    * versions. Replay detection keys on it. Current commits write the
-    * note as a FILE in the version dir (one FS read, no Spark job —
-    * the check runs once per retained version per batch); the `meta`
-    * table fallback covers versions written before r13. */
-  def noteOf(spark: SparkSession, roots: Roots, v: Long): String = {
-    val dir = Manifest.resolvedDataDir(spark, roots.curation, v)
-    MetaTable.readNote(spark, dir).getOrElse(
-      MetaTable.read(spark, s"$dir/meta", metaSchema).headOption
-        .flatMap(r => Option(r.getString(2))).getOrElse(""))
-  }
 
   /** Ingest one batch. `batch` must carry (doc_id, source, text) with
     * doc_ids strictly above every previously ingested batch (arrival
@@ -217,7 +204,7 @@ object Curate {
       }
     if (note0.isEmpty) // empty input batch: nothing to ingest or pin
       return priorVs.lastOption.getOrElse(-1L)
-    val replayedAs = priorVs.find(v => noteOf(spark, roots, v) == note0)
+    val replayedAs = segments.notedVersion(spark, roots.curation, note0)
     if (replayedAs.isDefined) return replayedAs.get
 
     // ---- stage 1: ledger dedup (keep-one within batch, drop any fp
@@ -296,9 +283,8 @@ object Curate {
     // ---- stage 4: corpus/ledger segments (immutable, outside the
     // version dirs — orphaned by a crash before the commit below,
     // collected by vacuumSegments, never half-visible)
-    val priorCatalog =
-      if (priorVs.isEmpty) Seq.empty[(String, String, Long)]
-      else catalogOf(spark, roots.curation)
+    val priorCatalog = priorVs.lastOption.toSeq
+      .flatMap(v => segments.catalogOf(spark, roots.curation, Some(v)))
     val newEntries = Seq(
       (CorpusKind, accepted.select(col("doc_id"), col("source"),
         col("quality")), nAccepted == 0),
@@ -314,8 +300,6 @@ object Curate {
     // exist yet (every prior batch rejected everything) is created by
     // the first batch that accepts anything, and meta records −1 until
     // then.
-    def notedVersion(root: String, noteAt: Long => String): Option[Long] =
-      Manifest.versions(spark, root).find(v => noteAt(v) == note0)
     // embeddings are corpus-aligned, not batch-carried, so this join
     // is unavoidable
     val annBatch =
@@ -332,50 +316,49 @@ object Curate {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val annF = Future { notedVersion(roots.ann,
-        v => AnnIndex.noteOf(spark, roots.ann, Some(v))).getOrElse {
-      val exists = Manifest.currentVersion(spark, roots.ann).isDefined
-      // accepted docs may lack embeddings: only the join can tell
-      if (nAccepted == 0 || annBatch.isEmpty)
-        Manifest.currentVersion(spark, roots.ann).getOrElse(-1L)
-      else if (!exists)
-        AnnIndex.build(spark,
-          annBatch.select(col("vec_id"), col("embedding")),
-          roots.ann, cells = annCells, nFiles = nFiles, note = note0)
-      else
-        AnnIndex.append(spark, roots.ann,
-          annBatch.select(col("vec_id"), col("embedding")),
-          nFiles = nFiles, note = note0).version
-    } }
+    val annF = Future {
+      AnnIndex.segments.notedVersion(spark, roots.ann, note0).getOrElse {
+        val exists = Manifest.currentVersion(spark, roots.ann).isDefined
+        // accepted docs may lack embeddings: only the join can tell
+        if (nAccepted == 0 || annBatch.isEmpty)
+          Manifest.currentVersion(spark, roots.ann).getOrElse(-1L)
+        else if (!exists)
+          AnnIndex.build(spark,
+            annBatch.select(col("vec_id"), col("embedding")),
+            roots.ann, cells = annCells, nFiles = nFiles, note = note0)
+        else
+          AnnIndex.append(spark, roots.ann,
+            annBatch.select(col("vec_id"), col("embedding")),
+            nFiles = nFiles, note = note0).version
+      }
+    }
     // accepted texts come off a CHECKPOINT, never a re-join of the raw
     // batch: the old batch⋈accepted form shuffled the batch's full
     // text column every time (r18 tier probe: ~1 GB shuffle per
     // 1.67M-doc batch inside the dominant inv-append stage), so
     // `accepted` re-filters the budgeted checkpoint (join-free)
     val invBatch = accepted.select(col("doc_id"), col("text"))
-    val invF = Future { notedVersion(roots.inv,
-        v => InvertedIndex.noteOf(spark, roots.inv, Some(v))).getOrElse {
-      val exists = Manifest.currentVersion(spark, roots.inv).isDefined
-      if (nAccepted == 0)
-        Manifest.currentVersion(spark, roots.inv).getOrElse(-1L)
-      else if (!exists)
-        InvertedIndex.build(spark, invBatch, roots.inv, nBuckets = nFiles,
-          nFiles = nFiles, note = note0)
-      else
-        InvertedIndex.append(spark, roots.inv, invBatch, nFiles = nFiles,
-          note = note0)
-    } }
+    val invF = Future {
+      InvertedIndex.segments.notedVersion(spark, roots.inv, note0).getOrElse {
+        val exists = Manifest.currentVersion(spark, roots.inv).isDefined
+        if (nAccepted == 0)
+          Manifest.currentVersion(spark, roots.inv).getOrElse(-1L)
+        else if (!exists)
+          InvertedIndex.build(spark, invBatch, roots.inv, nBuckets = nFiles,
+            nFiles = nFiles, note = note0)
+        else
+          InvertedIndex.append(spark, roots.inv, invBatch, nFiles = nFiles,
+            note = note0)
+      }
+    }
     val annV = Await.result(annF, Duration.Inf)
     val invV = Await.result(invF, Duration.Inf)
 
     // ---- stage 6: ONE atomic publish for the batch (catalog + state +
     // meta are all metadata-sized; the data went to _segments/ above)
-    val committed = Manifest.commitWith(spark, roots.curation, retain) { dir =>
-      MetaTable.writeNote(spark, dir, note0)
-      writeMeta(spark, dir, priorCatalog ++ newEntries, newState,
-        Row(annV, invV, note0))
-    }
-    Manifest.clearStaging(spark, newEntries.map(_._2))
+    val committed = segments.publish(spark, roots.curation, newEntries,
+      () => priorCatalog ++ newEntries, retain, note0, 0,
+      writeMeta(spark, newState, Row(annV, invV, note0)))
 
     // ---- stage 7 (opt-in): index maintenance — compact when the
     // batch loop's appends have grown the catalogs past the caller's
@@ -392,14 +375,11 @@ object Curate {
     committed
   }
 
-  /** A version's metadata tables, written from the driver into the
-    * staged dir: the segment catalog, the per-source state and the
-    * one-row index-pin meta. */
-  private def writeMeta(spark: SparkSession, dir: String,
-                        catalog: Seq[(String, String, Long)],
-                        state: Seq[Row], meta: Row): Unit = {
-    MetaTable.write(spark, s"$dir/catalog", catalogSchema,
-      catalog.map { case (k, seg, n) => Row(k, seg, n) })
+  /** A version's tables beside the catalog, written from the driver
+    * into the staged dir: the per-source state and the one-row
+    * index-pin meta. */
+  private def writeMeta(spark: SparkSession, state: Seq[Row], meta: Row)
+                       (dir: String): Unit = {
     MetaTable.write(spark, s"$dir/state", stateSchema, state)
     MetaTable.write(spark, s"$dir/meta", metaSchema, Seq(meta))
   }
@@ -415,10 +395,8 @@ object Curate {
     * [[vacuumSegments]] collects them. */
   def compact(spark: SparkSession, roots: Roots, nFiles: Int = 4,
               retain: Int = 16): Long = {
-    val vs = Manifest.versions(spark, roots.curation)
-    require(vs.nonEmpty, s"no curation commits at ${roots.curation}")
-    val cur = vs.last
-    val nSegs = catalogOf(spark, roots.curation).size
+    val cur = segments.resolve(spark, roots.curation, None)
+    val nSegs = segments.catalogOf(spark, roots.curation, None).size
     val corpusSeg = {
       val c = readCorpus(spark, roots)
       if (c.isEmpty) None
@@ -438,14 +416,8 @@ object Curate {
     val pins = MetaTable.read(spark,
       subDir(spark, roots.curation, cur, "meta"), metaSchema).head
     val note = s"compaction-of-$nSegs"
-    val v = Manifest.commitWith(spark, roots.curation, retain) { dir =>
-      MetaTable.writeNote(spark, dir, note)
-      writeMeta(spark, dir, corpusSeg.toSeq ++ ledgerSeg.toSeq, state,
-        Row(pins.get(0), pins.get(1), note))
-    }
-    Manifest.clearStaging(spark,
-      (corpusSeg.toSeq ++ ledgerSeg.toSeq).map(_._2))
-    v
+    segments.replace(spark, roots.curation, corpusSeg.toSeq ++ ledgerSeg.toSeq,
+      retain, note, writeMeta(spark, state, Row(pins.get(0), pins.get(1), note)))
   }
 
   /** Delete segments referenced by NO retained version — the payload
@@ -458,11 +430,6 @@ object Curate {
   def vacuumSegments(spark: SparkSession, roots: Roots,
                      minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
                      staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] = {
-    val referenced = Manifest.versions(spark, roots.curation)
-      .flatMap(v => catalogOf(spark, roots.curation, Some(v)).map(_._2))
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    Manifest.vacuumUnreferenced(spark, s"${roots.curation}/$SegmentsDir",
-      referenced, minAgeMs, staleStagingMs)
-  }
+      : Seq[String] =
+    segments.vacuum(spark, roots.curation, minAgeMs, staleStagingMs)
 }

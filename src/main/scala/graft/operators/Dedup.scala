@@ -336,8 +336,9 @@ object Dedup {
     * bucketing: 4 16-bit chunks — any pair within hamming 3 shares at
     * least one chunk, so candidates come from a chunk-equality join.
     *
-    * Sensitivity on real text, measured (tools/SimhashProbe, sf0.1
-    * corpus, docs >= 32 tokens, j tokens replaced at even spacing):
+    * Sensitivity on real text, measured (SCALE100.md, "SimHash
+    * sensitivity on real text"; sf0.1 corpus, docs >= 32 tokens, j
+    * tokens replaced at even spacing):
     * recall at maxHamming=3 is ~0.86 / 0.65 / 0.40 / 0.18 / 0.04 for
     * j = 1 / 2 / 4 / 8 / 16. The 64-bit signature with a hamming-3
     * cut is a NEAR-EXACT duplicate detector (boilerplate, trivial

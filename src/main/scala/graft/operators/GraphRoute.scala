@@ -103,8 +103,8 @@ object GraphRoute {
       // built, proven kept-set-IDENTICAL by 295.3M-row checksum, and
       // measured WORSE on the 1.17B-edge bipartite graph: 366 s /
       // 188 GB spill vs this window's 319 s / 60 GB
-      // (SCALE1000_r17_bip.json, cap_stage_* rows; the refuted form
-      // lives on in graft.tools.GraphProbe for reproducibility). The
+      // (SCALE1000_r17_bip.json, cap_stage_* rows; BENCHNOTES_r17.md
+      // records the refuted form). The
       // algebra: partial aggregation cannot emit fewer than one row
       // per (src, partition), and at mean degree 78 over 32
       // partitions each partition sees ~2.4 edges per src — so the

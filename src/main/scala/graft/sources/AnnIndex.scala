@@ -73,16 +73,26 @@ object AnnIndex {
                            codesPath: String)
 
   private def centroidsPath(dataDir: String) = s"$dataDir/centroids"
-  private def catalogPath(dataDir: String) = s"$dataDir/catalog"
   private def codebooksPath(dataDir: String) = s"$dataDir/codebooks"
 
   private val CentroidsSchema = StructType(Seq(
     StructField("cell", IntegerType),
     StructField("centroid", ArrayType(FloatType, containsNull = false))))
-  // `codes_segment` is absent from catalogs written before PQ codes
-  private val CatalogSchema = StructType(Seq(
-    StructField("segment", StringType), StructField("n_rows", LongType),
-    StructField("mean_cos", DoubleType), StructField("codes_segment", StringType)))
+
+  /** The catalog lifecycle: `catalog/` rows (segment, n_rows,
+    * mean_cos, codes_segment) sorted by segment path, segments under
+    * `segments/`. `codes_segment` is absent from catalogs written
+    * before PQ codes. */
+  private[graft] val segments = new SegmentCatalog[Segment]("ANN index",
+    SegmentsDir,
+    StructType(Seq(
+      StructField("segment", StringType), StructField("n_rows", LongType),
+      StructField("mean_cos", DoubleType),
+      StructField("codes_segment", StringType))),
+    g => Row(g.path, g.nRows, g.meanCos, g.codesPath),
+    r => Segment(r.getString(0), r.getLong(1), r.getDouble(2),
+      Option(r.getString(3)).getOrElse("")),
+    _.path, g => Seq(g.path, g.codesPath).filter(_.nonEmpty), _.nRows)
   private val CodebooksSchema = StructType(Seq(
     StructField("subspace", IntegerType), StructField("code", IntegerType),
     StructField("codeword", ArrayType(FloatType, containsNull = false))))
@@ -149,80 +159,23 @@ object AnnIndex {
       case None => ""
     }
     val observed = stats.get // mc is null for a zero-row segment
-    val out = Segment(seg, observed("n").asInstanceOf[Long],
-      Option(observed("mc")).fold(0.0)(_.asInstanceOf[Double]), codesSeg)
-    // staging sentinel: complete but unreferenced until the catalog
-    // CAS — exempt from vacuum's minAge for stagings of any duration
-    Manifest.markStaging(spark, segDirs(out))
-    out
+    segments.stage(spark, Segment(seg, observed("n").asInstanceOf[Long],
+      Option(observed("mc")).fold(0.0)(_.asInstanceOf[Double]), codesSeg))
   }
 
-  private def segDirs(g: Segment): Seq[String] =
-    Seq(g.path, g.codesPath).filter(_.nonEmpty)
-
-  /** CAS-publish a catalog version; `catalog` is a THUNK re-evaluated
-    * per attempt so retries merge with concurrent commits instead of
-    * re-staging a stale pre-read catalog (see
-    * [[GrepIndex.commitMeta]] — the r18 lost-update guard). */
-  private[graft] def commitMeta(spark: SparkSession, root: String,
-                                centroids: Seq[(Int, Array[Float])],
-                                catalog: () => Seq[Segment],
-                                codebooks: Option[Seq[Seq[(Int, Array[Float])]]],
-                                retain: Int, note: String = "",
-                                maxRetries: Int = 0): Long =
-    Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      // the note is the anchor streaming ingestion dedupes
-      // micro-batch retries against
-      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
-      MetaTable.write(spark, centroidsPath(dir), CentroidsSchema,
-        centroids.map { case (cell, c) => Row(cell, c) })
-      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
-        catalog().map(g => Row(g.path, g.nRows, g.meanCos, g.codesPath)))
-      codebooks.foreach { cbs =>
-        MetaTable.write(spark, codebooksPath(dir), CodebooksSchema,
-          for ((cb, sub) <- cbs.zipWithIndex; (code, word) <- cb)
-            yield Row(sub, code, word))
-      }
+  /** The version dir's tables beside the catalog: centroids and, for
+    * a PQ index, codebooks. */
+  private def writeModel(spark: SparkSession,
+                         centroids: Seq[(Int, Array[Float])],
+                         codebooks: Option[Seq[Seq[(Int, Array[Float])]]])
+                        (dir: String): Unit = {
+    MetaTable.write(spark, centroidsPath(dir), CentroidsSchema,
+      centroids.map { case (cell, c) => Row(cell, c) })
+    codebooks.foreach { cbs =>
+      MetaTable.write(spark, codebooksPath(dir), CodebooksSchema,
+        for ((cb, sub) <- cbs.zipWithIndex; (code, word) <- cb)
+          yield Row(sub, code, word))
     }
-
-  /** Commit with staged-segment lifecycle: sentinels cleared on
-    * success, this writer's staged dirs discarded on failure. */
-  private def commitStaged(spark: SparkSession, root: String,
-                           staged: Seq[String],
-                           centroids: Seq[(Int, Array[Float])],
-                           catalog: () => Seq[Segment],
-                           codebooks: Option[Seq[Seq[(Int, Array[Float])]]],
-                           retain: Int, note: String,
-                           maxRetries: Int): Long = {
-    val v =
-      try commitMeta(spark, root, centroids, catalog, codebooks, retain,
-        note, maxRetries)
-      catch { case e: Throwable =>
-        Manifest.discardStaged(spark, staged); throw e }
-    Manifest.clearStaging(spark, staged)
-    v
-  }
-
-  /** See [[GrepIndex.mergedCatalog]] — compaction's per-attempt
-    * catalog: concurrent appends survive, a concurrent compaction of
-    * the same segments throws (merging would duplicate rows). */
-  private[graft] def mergedCatalog(current: Seq[Segment],
-                                   foldedKeys: Set[String],
-                                   compacted: Segment): Seq[Segment] = {
-    val present = current.map(_.path).toSet
-    if (!foldedKeys.subsetOf(present))
-      throw new java.util.ConcurrentModificationException(
-        "a concurrent compaction removed folded segments from the " +
-          "catalog - publishing would duplicate their rows; re-run " +
-          "compaction from the current catalog")
-    current.filterNot(s => foldedKeys.contains(s.path)) :+ compacted
-  }
-
-  private def dataDirOf(spark: SparkSession, root: String,
-                        version: Option[Long]): String = {
-    val v = version.orElse(Manifest.currentVersion(spark, root))
-      .getOrElse(throw new IllegalStateException(s"no ANN index at $root"))
-    Manifest.resolvedDataDir(spark, root, v)
   }
 
   /** The persisted centroids of `version` (default: current), as the
@@ -230,33 +183,22 @@ object AnnIndex {
     * cells × dim floats. */
   def centroidsOf(spark: SparkSession, root: String,
                   version: Option[Long] = None): Seq[(Int, Array[Float])] =
-    MetaTable.read(spark, centroidsPath(dataDirOf(spark, root, version)),
-        CentroidsSchema)
+    MetaTable.read(spark,
+        centroidsPath(segments.dataDir(spark, root, version)), CentroidsSchema)
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
   /** The segment catalog of `version`, read on the driver. */
   def catalogOf(spark: SparkSession, root: String,
                 version: Option[Long] = None): Seq[Segment] =
-    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
-        CatalogSchema)
-      .map(r => Segment(r.getString(0), r.getLong(1), r.getDouble(2),
-        Option(r.getString(3)).getOrElse("")))
-      .sortBy(_.path)
-
-  /** The commit note of `version` ("" when none) — set by writers
-    * that need replay dedup (streaming appends tag versions with
-    * their micro-batch id). */
-  def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String =
-    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
+    segments.catalogOf(spark, root, version)
 
   /** The persisted PQ codebooks of `version`, if the index carries
     * them (always tiny: m × ksub × dim/m floats). */
   def codebooksOf(spark: SparkSession, root: String,
                   version: Option[Long] = None)
       : Option[Seq[Seq[(Int, Array[Float])]]] = {
-    val p = codebooksPath(dataDirOf(spark, root, version))
+    val p = codebooksPath(segments.dataDir(spark, root, version))
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
@@ -293,16 +235,16 @@ object AnnIndex {
       else None
     val seg = writeSegment(spark, root, corpus, idCol, vecCol, centroids,
       nFiles, codebooks)
-    // a build DEFINES the catalog — no merge with concurrent appends,
-    // maxRetries stays 0 (lost CAS throws)
-    commitStaged(spark, root, segDirs(seg), centroids, () => Seq(seg),
-      codebooks, retain, note, maxRetries = 0)
+    segments.replace(spark, root, Seq(seg), retain, note,
+      writeModel(spark, centroids, codebooks))
   }
 
   /** Assign `batch` to the EXISTING centroids (no retrain), publish a
     * new metadata version referencing every prior segment plus the new
     * one, and report drift. Old versions stay readable per Manifest
-    * retention; the data copied is exactly the batch. */
+    * retention; the data copied is exactly the batch. An empty batch
+    * publishes nothing: the result carries the current version, no
+    * segment (""), batch mean 0.0 and no refit recommendation. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              idCol: String = "vec_id", vecCol: String = "embedding",
              nFiles: Int = 16, driftTolerance: Double = 0.05,
@@ -315,18 +257,16 @@ object AnnIndex {
     val codebooks = codebooksOf(spark, root)
     val seg = writeSegment(spark, root, batch, idCol, vecCol, centroids,
       nFiles, codebooks)
-    // catalog re-read per CAS attempt: a retry after a lost race
-    // merges the concurrent winner's segments instead of dropping them
-    val version = commitStaged(spark, root, segDirs(seg), centroids,
-      () => catalogOf(spark, root) :+ seg, codebooks, retain, note,
-      maxRetries)
+    val version = segments.append(spark, root, seg, retain, note,
+      maxRetries, writeModel(spark, centroids, codebooks))
     // index mean weighted over PRIOR segments: the baseline the batch
     // is compared against (including the batch would mask its own drift)
     val priorRows = prior.map(_.nRows).sum
     val indexMean =
       if (priorRows == 0) seg.meanCos
       else prior.map(g => g.meanCos * g.nRows).sum / priorRows
-    AppendResult(version, seg.path, seg.meanCos, indexMean,
+    if (seg.nRows == 0) AppendResult(version, "", 0.0, indexMean, false)
+    else AppendResult(version, seg.path, seg.meanCos, indexMean,
       refitRecommended = seg.meanCos < indexMean - driftTolerance)
   }
 
@@ -390,11 +330,11 @@ object AnnIndex {
             idCol: String = "vec_id", vecCol: String = "embedding",
             version: Option[Long] = None): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val dataDir = dataDirOf(spark, root, version)
+    val dataDir = segments.dataDir(spark, root, version)
     val (probes, probeCells) =
       rankProbes(spark, dataDir, queries, idCol, vecCol, nprobe)
-    val segments = catalogOf(spark, root, version).map(_.path)
-    val corpus = prunedCellRead(spark, segments, probeCells)
+    val segPaths = catalogOf(spark, root, version).map(_.path)
+    val corpus = prunedCellRead(spark, segPaths, probeCells)
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("embedding").as("cvec"))
     val w = Window.partitionBy(col("query_id"))
@@ -423,7 +363,7 @@ object AnnIndex {
               idCol: String = "vec_id", vecCol: String = "embedding",
               version: Option[Long] = None): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val dataDir = dataDirOf(spark, root, version)
+    val dataDir = segments.dataDir(spark, root, version)
     val codebooks = codebooksOf(spark, root, version).getOrElse(
       throw new IllegalStateException(
         s"index at $root carries no PQ codes - build with pqSubspaces > 0"))
@@ -483,10 +423,9 @@ object AnnIndex {
       .select(col("vec_id"), col("embedding"))
     val seg = writeSegment(spark, root, union, "vec_id", "embedding",
       centroids, nFiles, codebooks)
-    val foldedKeys = catalog.map(_.path).toSet
-    commitStaged(spark, root, segDirs(seg), centroids,
-      () => mergedCatalog(catalogOf(spark, root), foldedKeys, seg),
-      codebooks, retain, s"compaction-of-${catalog.size}", maxRetries)
+    segments.fold(spark, root, catalog, seg, retain,
+      s"compaction-of-${catalog.size}", maxRetries,
+      writeModel(spark, centroids, codebooks))
   }
 
   /** Compact only when the live catalog exceeds `maxSegments` (r18
@@ -503,19 +442,12 @@ object AnnIndex {
     else Some(compactSegments(spark, root, nFiles, retain))
   }
 
-  /** Delete segments referenced by NO retained version — the payload
-    * half of [[Manifest.vacuum]] (which only GCs metadata dirs).
-    * `minAgeMs` guards the live race documented at
-    * [[Manifest.vacuumUnreferenced]]. Returns the removed paths. */
+  /** Delete segments referenced by NO retained version
+    * ([[SegmentCatalog.vacuum]]; [[Manifest.vacuum]] only GCs metadata
+    * dirs). Returns the removed paths. */
   def vacuumSegments(spark: SparkSession, root: String,
                      minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
                      staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] = {
-    val referenced = Manifest.versions(spark, root)
-      .flatMap(v => catalogOf(spark, root, Some(v))
-        .flatMap(g => Seq(g.path, g.codesPath).filter(_.nonEmpty)))
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    Manifest.vacuumUnreferenced(spark, s"$root/$SegmentsDir",
-      referenced, minAgeMs, staleStagingMs)
-  }
+      : Seq[String] =
+    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 }

@@ -101,11 +101,16 @@ object GrepIndex {
   final case class Segment(postings: String, stats: String,
                            docs: String, nDocs: Long)
 
-  private def catalogPath(dataDir: String) = s"$dataDir/catalog"
-
-  private val CatalogSchema = StructType(Seq(
-    StructField("postings", StringType), StructField("stats", StringType),
-    StructField("docs", StringType), StructField("n_docs", LongType)))
+  /** The catalog lifecycle: `catalog/` rows (postings, stats, docs,
+    * n_docs) sorted by postings path, segments under `segments/`. */
+  private[graft] val segments = new SegmentCatalog[Segment]("grep index",
+    SegmentsDir,
+    StructType(Seq(
+      StructField("postings", StringType), StructField("stats", StringType),
+      StructField("docs", StringType), StructField("n_docs", LongType))),
+    g => Row(g.postings, g.stats, g.docs, g.nDocs),
+    r => Segment(r.getString(0), r.getString(1), r.getString(2), r.getLong(3)),
+    _.postings, g => Seq(g.postings, g.stats, g.docs), _.nDocs)
 
   // the segment tables' schemas, fixed by writeSegment: reads pass
   // them, so no scan starts a schema-inference job
@@ -116,29 +121,11 @@ object GrepIndex {
   private val DocsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  private def dataDirOf(spark: SparkSession, root: String,
-                        version: Option[Long]): String = {
-    val v = version.orElse(Manifest.currentVersion(spark, root))
-      .getOrElse(throw new IllegalStateException(s"no grep index at $root"))
-    Manifest.resolvedDataDir(spark, root, v)
-  }
-
-  /** The commit note of `version` ("" when none) — set by writers that
-    * need replay dedup (the streaming leg, [[
-    * graft.streaming.GrepIndexStream]]). */
-  def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String =
-    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
-
   /** The segment catalog of `version` (default: current), read on the
     * driver. */
   def catalogOf(spark: SparkSession, root: String,
                 version: Option[Long] = None): Seq[Segment] =
-    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
-        CatalogSchema)
-      .map(r => Segment(r.getString(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
-      .sortBy(_.postings)
+    segments.catalogOf(spark, root, version)
 
   /** Trigram only `docs`, write one immutable segment triple. Only the
     * BATCH is read — nothing touches prior segments (the lifecycle
@@ -203,47 +190,8 @@ object GrepIndex {
       .write.option("parquet.block.size", 8 * 1024 * 1024)
       .mode("overwrite").parquet(dcs)
     StatsIndex.write(spark, dcs, Seq("doc_id"))
-    val seg = Segment(post, stat, dcs, obs.get("n").asInstanceOf[Long])
-    // staging sentinel: the dirs are complete but unreferenced until
-    // the catalog CAS lands — the sentinel exempts them from vacuum's
-    // minAge cutoff for stagings of ANY duration (Manifest.StagingSentinel)
-    Manifest.markStaging(spark, segDirs(seg))
-    seg
-  }
-
-  private def segDirs(g: Segment): Seq[String] =
-    Seq(g.postings, g.stats, g.docs)
-
-  /** CAS-publish a catalog version. `catalog` is a THUNK re-evaluated
-    * on every CAS attempt (r18 verdict item 4/judge "what's wrong" #4:
-    * a captured pre-read catalog re-staged STALE state when a lost
-    * CAS retried, silently dropping the concurrent append's segment —
-    * with the thunk, winning the CAS at currentVersion+1 certifies
-    * the catalog the thunk read inside that attempt was current, so
-    * retries merge instead of clobbering). Package-visible so the
-    * concurrency spec can interleave committers deterministically. */
-  private[graft] def commitMeta(spark: SparkSession, root: String,
-                                catalog: () => Seq[Segment], retain: Int,
-                                note: String, maxRetries: Int = 0): Long =
-    Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
-      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
-        catalog().map(g => Row(g.postings, g.stats, g.docs, g.nDocs)))
-    }
-
-  /** Commit with staged-segment lifecycle: clear the staging
-    * sentinels on success, discard this writer's staged dirs on a
-    * failed publish (nothing references them). */
-  private def commitStaged(spark: SparkSession, root: String,
-                           staged: Seq[String],
-                           catalog: () => Seq[Segment], retain: Int,
-                           note: String, maxRetries: Int): Long = {
-    val v =
-      try commitMeta(spark, root, catalog, retain, note, maxRetries)
-      catch { case e: Throwable =>
-        Manifest.discardStaged(spark, staged); throw e }
-    Manifest.clearStaging(spark, staged)
-    v
+    segments.stage(spark,
+      Segment(post, stat, dcs, obs.get("n").asInstanceOf[Long]))
   }
 
   /** Build the index at `root` from (idCol, textCol) documents,
@@ -255,8 +203,7 @@ object GrepIndex {
             textCol: String, root: String, nFiles: Int = 16,
             retain: Int = 4, note: String = ""): Long = {
     val seg = writeSegment(spark, docs, idCol, textCol, root, nFiles)
-    commitStaged(spark, root, segDirs(seg), () => Seq(seg), retain, note,
-      maxRetries = 0)
+    segments.replace(spark, root, Seq(seg), retain, note, _ => ())
   }
 
   /** Append a document batch: trigram ONLY the batch into a new
@@ -272,7 +219,8 @@ object GrepIndex {
     * Batches must be doc-disjoint from prior segments (re-appending a
     * doc would double its postings); the streaming writer's batch-id
     * notes enforce this against replays. Returns the committed
-    * version.
+    * version; an empty batch publishes nothing and returns the
+    * current one.
     *
     * `maxRetries > 0` opts into CAS-retry: the catalog is re-read
     * inside every attempt, so a retry after losing the version race
@@ -284,8 +232,7 @@ object GrepIndex {
              maxRetries: Int = 0): Long = {
     require(catalogOf(spark, root).nonEmpty, s"no grep index at $root")
     val seg = writeSegment(spark, docs, idCol, textCol, root, nFiles)
-    commitStaged(spark, root, segDirs(seg),
-      () => catalogOf(spark, root) :+ seg, retain, note, maxRetries)
+    segments.append(spark, root, seg, retain, note, maxRetries, _ => ())
   }
 
   /** Fold every live segment into ONE freshly clustered segment and
@@ -298,8 +245,9 @@ object GrepIndex {
     * probes are unchanged (spec-gated). Old segments stay until
     * [[vacuumSegments]]. `maxRetries > 0` opts into CAS-retry:
     * segments appended since the fold began survive the merge
-    * ([[mergedCatalog]]); a conflicting concurrent COMPACTION throws
-    * regardless (folding the same rows twice would duplicate them). */
+    * ([[SegmentCatalog.mergedCatalog]]); a conflicting concurrent
+    * COMPACTION throws regardless (folding the same rows twice would
+    * duplicate them). */
   def compactSegments(spark: SparkSession, root: String,
                       nFiles: Int = 16, retain: Int = 4,
                       maxRetries: Int = 0): Long = {
@@ -328,32 +276,9 @@ object GrepIndex {
       .write.option("parquet.block.size", 8 * 1024 * 1024)
       .mode("overwrite").parquet(dcs)
     StatsIndex.write(spark, dcs, Seq("doc_id"))
-    val seg = Segment(post, stat, dcs, catalog.map(_.nDocs).sum)
-    Manifest.markStaging(spark, segDirs(seg))
-    val foldedKeys = catalog.map(_.postings).toSet
-    commitStaged(spark, root, segDirs(seg),
-      () => mergedCatalog(catalogOf(spark, root), foldedKeys, seg),
-      retain, "", maxRetries)
-  }
-
-  /** The catalog a compaction publishes at a CAS attempt: segments
-    * appended SINCE the fold began survive alongside the compacted
-    * segment (they hold data the fold never saw); a current catalog
-    * missing some folded segment means a concurrent compaction
-    * already re-homed that data — merging would DOUBLE it, so the
-    * attempt throws instead (retry from fresh state). Shared shape
-    * across the three persisted indexes; unit-tested directly because
-    * the interleaving inside compactSegments is not injectable. */
-  private[graft] def mergedCatalog(current: Seq[Segment],
-                                   foldedKeys: Set[String],
-                                   compacted: Segment): Seq[Segment] = {
-    val present = current.map(_.postings).toSet
-    if (!foldedKeys.subsetOf(present))
-      throw new java.util.ConcurrentModificationException(
-        "a concurrent compaction removed folded segments from the " +
-          "catalog - publishing would duplicate their rows; re-run " +
-          "compaction from the current catalog")
-    current.filterNot(s => foldedKeys.contains(s.postings)) :+ compacted
+    val seg = segments.stage(spark,
+      Segment(post, stat, dcs, catalog.map(_.nDocs).sum))
+    segments.fold(spark, root, catalog, seg, retain, "", maxRetries, _ => ())
   }
 
   /** Compact only when the live catalog exceeds `maxSegments` — the
@@ -373,23 +298,13 @@ object GrepIndex {
     else Some(compactSegments(spark, root, nFiles, retain))
   }
 
-  /** Delete segments referenced by NO retained version — the payload
-    * half of [[Manifest.vacuum]] (also reclaims segments orphaned by
-    * a crashed build/append). `minAgeMs` guards the live race
-    * documented at [[Manifest.vacuumUnreferenced]]: an in-flight
-    * writer's staged segments are unreferenced until its CAS lands.
-    * Returns removed segment paths. */
+  /** Delete segments referenced by NO retained version
+    * ([[SegmentCatalog.vacuum]]). Returns removed segment paths. */
   def vacuumSegments(spark: SparkSession, root: String,
                      minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
                      staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] = {
-    val referenced = Manifest.versions(spark, root)
-      .flatMap(v => catalogOf(spark, root, Some(v))
-        .flatMap(g => Seq(g.postings, g.stats, g.docs)))
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    Manifest.vacuumUnreferenced(spark, s"$root/$SegmentsDir",
-      referenced, minAgeMs, staleStagingMs)
-  }
+      : Seq[String] =
+    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 
   /** Verified matches (pattern_id, doc_id) for a bounded literal
     * pattern set, against the CURRENT committed catalog version.

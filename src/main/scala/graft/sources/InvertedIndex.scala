@@ -61,12 +61,19 @@ object InvertedIndex {
   final case class Segment(postings: String, dictionary: String,
                            nDocs: Long, sumDl: Long, nBuckets: Int)
 
-  private def catalogPath(dataDir: String) = s"$dataDir/catalog"
-
-  private val CatalogSchema = StructType(Seq(
-    StructField("postings", StringType), StructField("dictionary", StringType),
-    StructField("n_docs", LongType), StructField("sum_dl", LongType),
-    StructField("n_buckets", IntegerType)))
+  /** The catalog lifecycle: `catalog/` rows (postings, dictionary,
+    * n_docs, sum_dl, n_buckets) sorted by postings path, segments
+    * under `segments/`. */
+  private[graft] val segments = new SegmentCatalog[Segment](
+    "inverted index", SegmentsDir,
+    StructType(Seq(
+      StructField("postings", StringType), StructField("dictionary", StringType),
+      StructField("n_docs", LongType), StructField("sum_dl", LongType),
+      StructField("n_buckets", IntegerType))),
+    g => Row(g.postings, g.dictionary, g.nDocs, g.sumDl, g.nBuckets),
+    r => Segment(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+      r.getInt(4)),
+    _.postings, g => Seq(g.postings, g.dictionary), _.nDocs)
 
   /** The term→bucket map — xxhash64 so engine-side bucket derivation
     * at probe time is the same expression that clustered the write. */
@@ -142,84 +149,14 @@ object InvertedIndex {
     // observed flat sums over exactly the written rows
     val n = obs.get("n").asInstanceOf[Long]
     val s = obs.get("s") match { case null => 0L; case v => v.asInstanceOf[Long] }
-    val seg = Segment(post, dict, n, s, nBuckets)
-    // staging sentinel: complete but unreferenced until the catalog
-    // CAS — exempt from vacuum's minAge for stagings of any duration
-    Manifest.markStaging(spark, segDirs(seg))
-    seg
-  }
-
-  private def segDirs(g: Segment): Seq[String] =
-    Seq(g.postings, g.dictionary)
-
-  /** CAS-publish a catalog version; `catalog` is a THUNK re-evaluated
-    * per attempt so retries merge with concurrent commits instead of
-    * re-staging a stale pre-read catalog (see
-    * [[GrepIndex.commitMeta]] — the r18 lost-update guard). */
-  private[graft] def commitMeta(spark: SparkSession, root: String,
-                                catalog: () => Seq[Segment], retain: Int,
-                                note: String = "",
-                                maxRetries: Int = 0): Long =
-    Manifest.commitWith(spark, root, retain, maxRetries) { dir =>
-      // streaming appends dedupe micro-batch replays against the note
-      if (note.nonEmpty) MetaTable.writeNote(spark, dir, note)
-      MetaTable.write(spark, catalogPath(dir), CatalogSchema,
-        catalog().map(g =>
-          Row(g.postings, g.dictionary, g.nDocs, g.sumDl, g.nBuckets)))
-    }
-
-  /** Commit with staged-segment lifecycle: sentinels cleared on
-    * success, this writer's staged dirs discarded on failure. */
-  private def commitStaged(spark: SparkSession, root: String,
-                           staged: Seq[String],
-                           catalog: () => Seq[Segment], retain: Int,
-                           note: String, maxRetries: Int): Long = {
-    val v =
-      try commitMeta(spark, root, catalog, retain, note, maxRetries)
-      catch { case e: Throwable =>
-        Manifest.discardStaged(spark, staged); throw e }
-    Manifest.clearStaging(spark, staged)
-    v
-  }
-
-  /** See [[GrepIndex.mergedCatalog]] — compaction's per-attempt
-    * catalog: concurrent appends survive, a concurrent compaction of
-    * the same segments throws (merging would duplicate rows). */
-  private[graft] def mergedCatalog(current: Seq[Segment],
-                                   foldedKeys: Set[String],
-                                   compacted: Segment): Seq[Segment] = {
-    val present = current.map(_.postings).toSet
-    if (!foldedKeys.subsetOf(present))
-      throw new java.util.ConcurrentModificationException(
-        "a concurrent compaction removed folded segments from the " +
-          "catalog - publishing would duplicate their rows; re-run " +
-          "compaction from the current catalog")
-    current.filterNot(s => foldedKeys.contains(s.postings)) :+ compacted
-  }
-
-  /** The commit note of `version` ("" when none) — set by writers that
-    * need replay dedup. */
-  def noteOf(spark: SparkSession, root: String,
-             version: Option[Long] = None): String =
-    MetaTable.readNote(spark, dataDirOf(spark, root, version)).getOrElse("")
-
-  private def dataDirOf(spark: SparkSession, root: String,
-                        version: Option[Long]): String = {
-    val v = version.orElse(Manifest.currentVersion(spark, root))
-      .getOrElse(throw new IllegalStateException(
-        s"no inverted index at $root"))
-    Manifest.resolvedDataDir(spark, root, v)
+    segments.stage(spark, Segment(post, dict, n, s, nBuckets))
   }
 
   /** The segment catalog of `version` (default: current), read on the
     * driver. */
   def catalogOf(spark: SparkSession, root: String,
                 version: Option[Long] = None): Seq[Segment] =
-    MetaTable.read(spark, catalogPath(dataDirOf(spark, root, version)),
-        CatalogSchema)
-      .map(r => Segment(r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getInt(4)))
-      .sortBy(_.postings)
+    segments.catalogOf(spark, root, version)
 
   /** Tokenize the corpus once, publish version 0-or-next. `nFiles`
     * sizes the posting segment (nFiles ≈ nBuckets gives ~1 bucket per
@@ -231,10 +168,7 @@ object InvertedIndex {
             note: String = ""): Long = {
     val seg = writeSegment(spark, root, corpus, idCol, textCol, nBuckets,
       nFiles)
-    // a build DEFINES the catalog — no merge with concurrent appends,
-    // maxRetries stays 0 (lost CAS throws)
-    commitStaged(spark, root, segDirs(seg), () => Seq(seg), retain, note,
-      maxRetries = 0)
+    segments.replace(spark, root, Seq(seg), retain, note, _ => ())
   }
 
   /** Tokenize only `batch`, publish a new catalog referencing every
@@ -245,7 +179,8 @@ object InvertedIndex {
     * doc would double its postings and corpus stats) — the streaming
     * writer's batch-id notes enforce this against replays; batch
     * ingestion owns it the same way `dedup_incremental`'s ledger
-    * owns arrival uniqueness. */
+    * owns arrival uniqueness. An empty batch publishes nothing and
+    * returns the current version. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              idCol: String = "doc_id", textCol: String = "text",
              nFiles: Int = 16, retain: Int = 2, note: String = "",
@@ -254,10 +189,7 @@ object InvertedIndex {
     require(prior.nonEmpty, s"no inverted index at $root")
     val seg = writeSegment(spark, root, batch, idCol, textCol,
       prior.head.nBuckets, nFiles)
-    // catalog re-read per CAS attempt: a retry after a lost race
-    // merges the concurrent winner's segments instead of dropping them
-    commitStaged(spark, root, segDirs(seg),
-      () => catalogOf(spark, root) :+ seg, retain, note, maxRetries)
+    segments.append(spark, root, seg, retain, note, maxRetries, _ => ())
   }
 
   /** Stats-pruned bucket-filtered read across segment tables — only
@@ -381,13 +313,9 @@ object InvertedIndex {
       .write.mode("errorifexists").parquet(dict)
     StatsIndex.write(spark, dict, Seq("bucket"))
     // exact stats recompose by integer addition — no rescan needed
-    val seg = Segment(post, dict, catalog.map(_.nDocs).sum,
-      catalog.map(_.sumDl).sum, nBuckets)
-    Manifest.markStaging(spark, segDirs(seg))
-    val foldedKeys = catalog.map(_.postings).toSet
-    commitStaged(spark, root, segDirs(seg),
-      () => mergedCatalog(catalogOf(spark, root), foldedKeys, seg),
-      retain, "", maxRetries)
+    val seg = segments.stage(spark, Segment(post, dict,
+      catalog.map(_.nDocs).sum, catalog.map(_.sumDl).sum, nBuckets))
+    segments.fold(spark, root, catalog, seg, retain, "", maxRetries, _ => ())
   }
 
   /** Compact only when the live catalog exceeds `maxSegments` (r18
@@ -404,19 +332,11 @@ object InvertedIndex {
     else Some(compactSegments(spark, root, nFiles, retain))
   }
 
-  /** Delete segments referenced by NO retained version — the payload
-    * half of [[Manifest.vacuum]]. `minAgeMs` guards the live race
-    * documented at [[Manifest.vacuumUnreferenced]]. Returns removed
-    * segment paths. */
+  /** Delete segments referenced by NO retained version
+    * ([[SegmentCatalog.vacuum]]). Returns removed segment paths. */
   def vacuumSegments(spark: SparkSession, root: String,
                      minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
                      staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] = {
-    val referenced = Manifest.versions(spark, root)
-      .flatMap(v => catalogOf(spark, root, Some(v))
-        .flatMap(g => Seq(g.postings, g.dictionary)))
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    Manifest.vacuumUnreferenced(spark, s"$root/$SegmentsDir",
-      referenced, minAgeMs, staleStagingMs)
-  }
+      : Seq[String] =
+    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 }

@@ -332,8 +332,8 @@ object Manifest {
 
   /** Delete subdirectories of `segRoot` that are in NO retained
     * catalog (`referenced` = live dir names) AND at least `minAgeMs`
-    * old — the payload half of segment-catalog vacuum, shared by the
-    * persisted indexes (grep/inverted/ANN/curation).
+    * old — the payload half of segment-catalog vacuum, called through
+    * [[SegmentCatalog.vacuum]] for every segment root.
     *
     * The age guard closes a LIVE race, not just crashed writers (r17
     * advice): a concurrent build/append/compactSegments stages its

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.sources.{AnnIndex, Manifest}
+import graft.sources.AnnIndex
 
 /** Streaming vector ingestion into the persisted ANN index — the
   * third leg of the index lifecycle (batch [[graft.sources.AnnIndex
@@ -41,8 +41,7 @@ object AnnIndexStream {
     // immediate replay, the durable marker covers replays that arrive
     // after retention GC'd the noted version.
     val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      Manifest.versions(spark, root)
-        .exists(v => AnnIndex.noteOf(spark, root, Some(v)) == note)
+      AnnIndex.segments.notedVersion(spark, root, note).isDefined
     if (replayed || batch.isEmpty) None
     else {
       val r = AnnIndex.append(spark, root, batch, idCol, vecCol,

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.operators.Curate
-import graft.sources.Manifest
 
 /** Streaming incremental curation: the crawl arrives as a stream and
   * each micro-batch runs the FULL [[graft.operators.Curate]] pipeline
@@ -45,8 +44,7 @@ object CurateStream {
     val spark = batch.sparkSession
     val note = s"stream-batch-$batchId"
     val replayed = StreamMarkers.seen(spark, roots.curation, batchId) ||
-      Manifest.versions(spark, roots.curation)
-        .exists(v => Curate.noteOf(spark, roots, v) == note)
+      Curate.segments.notedVersion(spark, roots.curation, note).isDefined
     if (replayed || batch.isEmpty) None
     else {
       val v = Curate.runBatch(spark, roots, batch, embeddings,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.sources.{GrepIndex, Manifest}
+import graft.sources.GrepIndex
 
 /** Streaming document ingestion into the persisted trigram grep index
   * — the substring twin of [[InvertedIndexStream]], completing the
@@ -46,8 +46,7 @@ object GrepIndexStream {
     val spark = batch.sparkSession
     val note = s"stream-batch-$batchId"
     val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      Manifest.versions(spark, root)
-        .exists(v => GrepIndex.noteOf(spark, root, Some(v)) == note)
+      GrepIndex.segments.notedVersion(spark, root, note).isDefined
     if (replayed || batch.isEmpty) None
     else {
       val v = GrepIndex.append(spark, root, batch, idCol, textCol,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.sources.{InvertedIndex, Manifest}
+import graft.sources.InvertedIndex
 
 /** Streaming document ingestion into the persisted inverted index —
   * the lexical twin of [[AnnIndexStream]], completing the same
@@ -40,8 +40,7 @@ object InvertedIndexStream {
     // recovery gap) — without it such a batch double-appends and
     // corrupts the recomposed df/BM25 stats.
     val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      Manifest.versions(spark, root)
-        .exists(v => InvertedIndex.noteOf(spark, root, Some(v)) == note)
+      InvertedIndex.segments.notedVersion(spark, root, note).isDefined
     if (replayed || batch.isEmpty) None
     else {
       val v = InvertedIndex.append(spark, root, batch, idCol, textCol,

@@ -88,10 +88,11 @@ class AnnIndexSpec extends SparkSpec {
       cells = 4, nFiles = 4)
     val r = AnnIndex.append(spark, root, emb.where(col("vec_id") % 2 === 1),
       nFiles = 4)
-    // a zero-row append: no rows, and mean_cos defaults to 0.0
+    // a zero-row append publishes nothing: same version, no segment
     val none = AnnIndex.append(spark, root, emb.limit(0), nFiles = 4)
+    assert(none.version === r.version)
     val segs = AnnIndex.catalogOf(spark, root)
-    assert(segs.size === 3)
+    assert(segs.size === 2)
     for (g <- segs) {
       val w = spark.read.parquet(g.path)
         .agg(count(lit(1)), coalesce(avg(col("ccos")), lit(0.0))).head()
@@ -102,8 +103,8 @@ class AnnIndexSpec extends SparkSpec {
     val byPath = segs.map(g => g.path -> g).toMap
     assert(byPath(r.segment).nRows === emb.where(col("vec_id") % 2 === 1).count())
     assert(r.batchMeanCos === byPath(r.segment).meanCos && r.batchMeanCos > 0.0)
-    assert(byPath(none.segment).nRows === 0L)
-    assert(byPath(none.segment).meanCos === 0.0 && none.batchMeanCos === 0.0)
+    assert(none.segment === "" && none.batchMeanCos === 0.0 &&
+      !none.refitRecommended)
   }
 
   test("in-distribution append does not recommend refit; shifted batch does") {
@@ -161,7 +162,7 @@ class AnnIndexSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     assert(got === bf)
     // appended batches inherit the code layout and stay ADC-searchable
-    AnnIndex.append(spark, root, emb.limit(0)
+    AnnIndex.append(spark, root, emb.where(col("vec_id") < 3)
       .select(col("vec_id") + 500000, col("embedding"))
       .toDF("vec_id", "embedding"))
     val cat2 = AnnIndex.catalogOf(spark, root)

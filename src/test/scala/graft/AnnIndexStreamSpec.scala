@@ -58,7 +58,7 @@ class AnnIndexStreamSpec extends SparkSpec {
     val first = AnnIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(first.nonEmpty)
     val vAfter = Manifest.currentVersion(spark, root).get
-    assert(AnnIndex.noteOf(spark, root, Some(vAfter)) === "stream-batch-7")
+    assert(AnnIndex.segments.noteOf(spark, root, Some(vAfter)) === "stream-batch-7")
     // the replay: same batchId → no new version, no duplicate vectors
     val replay = AnnIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(replay.isEmpty)

@@ -106,7 +106,7 @@ class GrepIndexStreamSpec extends SparkSpec {
     val first = GrepIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(first.nonEmpty)
     val vAfter = Manifest.currentVersion(spark, root).get
-    assert(GrepIndex.noteOf(spark, root, Some(vAfter)) === "stream-batch-7")
+    assert(GrepIndex.segments.noteOf(spark, root, Some(vAfter)) === "stream-batch-7")
     val replay = GrepIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(replay.isEmpty)
     assert(Manifest.currentVersion(spark, root).get === vAfter)
@@ -138,7 +138,7 @@ class GrepIndexStreamSpec extends SparkSpec {
     }
     val vs = Manifest.versions(spark, root)
     assert(!vs.exists(v =>
-      GrepIndex.noteOf(spark, root, Some(v)) == "stream-batch-7"),
+      GrepIndex.segments.noteOf(spark, root, Some(v)) == "stream-batch-7"),
       s"retention should have GC'd the batch-7 note; versions: $vs")
     val nDocsBefore = GrepIndex.catalogOf(spark, root).map(_.nDocs).sum
     val vBefore = Manifest.currentVersion(spark, root).get

@@ -64,6 +64,9 @@ class InvertedIndexSpec extends SparkSpec {
     val v = InvertedIndex.append(spark, root,
       docs.where(col("doc_id") % 2 === 1))
     assert(v === 1L)
+    // an empty batch publishes nothing and leaves no segment dirs
+    assert(InvertedIndex.append(spark, root, docs.limit(0)) === v)
+    assert(new java.io.File(s"$root/segments").list().length === 4)
     // two segment pairs in the catalog, exact stats recompose
     val cat = InvertedIndex.catalogOf(spark, root)
     assert(cat.size === 2)

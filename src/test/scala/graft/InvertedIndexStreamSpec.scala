@@ -58,7 +58,7 @@ class InvertedIndexStreamSpec extends SparkSpec {
     val first = InvertedIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(first.nonEmpty)
     val vAfter = Manifest.currentVersion(spark, root).get
-    assert(InvertedIndex.noteOf(spark, root, Some(vAfter)) ===
+    assert(InvertedIndex.segments.noteOf(spark, root, Some(vAfter)) ===
       "stream-batch-7")
     val replay = InvertedIndexStream.appendBatch(root, batch, batchId = 7L)
     assert(replay.isEmpty)
@@ -91,7 +91,7 @@ class InvertedIndexStreamSpec extends SparkSpec {
     }
     val vs = Manifest.versions(spark, root)
     assert(!vs.exists(v =>
-      InvertedIndex.noteOf(spark, root, Some(v)) == "stream-batch-7"),
+      InvertedIndex.segments.noteOf(spark, root, Some(v)) == "stream-batch-7"),
       s"retention should have GC'd the batch-7 note; versions: $vs")
     val nDocsBefore = InvertedIndex.catalogOf(spark, root).map(_.nDocs).sum
     val vBefore = Manifest.currentVersion(spark, root).get

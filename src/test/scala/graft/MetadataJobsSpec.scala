@@ -84,11 +84,11 @@ class MetadataJobsSpec extends SparkSpec {
   test("catalogs, centroids and notes are read without a Spark job") {
     val (grep, roots) = (grepRoot, curated) // built outside the counts
     assert(jobsOf(GrepIndex.catalogOf(spark, grep)) === 0)
-    assert(jobsOf(GrepIndex.noteOf(spark, grep)) === 0)
+    assert(jobsOf(GrepIndex.segments.noteOf(spark, grep, None)) === 0)
     assert(jobsOf(InvertedIndex.catalogOf(spark, roots.inv)) === 0)
     assert(jobsOf(AnnIndex.catalogOf(spark, roots.ann)) === 0)
     assert(jobsOf(AnnIndex.centroidsOf(spark, roots.ann)) === 0)
-    assert(jobsOf(Curate.noteOf(spark, roots, 0L)) === 0)
+    assert(jobsOf(Curate.segments.noteOf(spark, roots.curation, Some(0L))) === 0)
     assert(GrepIndex.catalogOf(spark, grep).size === 2)
     assert(AnnIndex.centroidsOf(spark, roots.ann).nonEmpty)
   }

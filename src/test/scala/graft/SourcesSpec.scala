@@ -603,6 +603,10 @@ class SourcesSpec extends SparkSpec {
       nFiles = 8)
     graft.sources.GrepIndex.append(spark, root2,
       docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
+    // an empty batch publishes nothing and leaves no segment dirs
+    assert(graft.sources.GrepIndex.append(spark, root2, docs.limit(0),
+      "doc_id", "text") === 1L)
+    assert(new java.io.File(s"$root2/segments").list().length === 6)
     for (sf <- Seq(Double.MaxValue, -1.0)) {
       val g = graft.sources.GrepIndex.probe(spark, root2, pats,
           scanFraction = sf)

@@ -109,15 +109,14 @@ class StagingVacuumSpec extends SparkSpec {
     segs.foreach(p =>
       ageFiles(p, System.currentTimeMillis() - 3 * 60 * 60 * 1000L))
     val seg = GrepIndex.Segment(segs(0), segs(1), segs(2), 1L)
-    val v = GrepIndex.commitMeta(spark, root, () => {
+    val v = GrepIndex.segments.publish(spark, root, Seq(seg), () => {
       // the racing vacuum, mid-commit, with the aggressive age the
       // tests use - without the sentinel this deletes the staged dirs
       // and the commit below publishes dangling paths
       assert(GrepIndex.vacuumSegments(spark, root, minAgeMs = 0L)
         === Seq.empty)
       GrepIndex.catalogOf(spark, root) :+ seg
-    }, 4, "", 0)
-    Manifest.clearStaging(spark, segs)
+    }, 4, "", 0, _ => ())
     // no dangling paths: everything the committed catalog names exists
     val cat = GrepIndex.catalogOf(spark, root, Some(v))
     val named = cat.flatMap(g => Seq(g.postings, g.stats, g.docs))

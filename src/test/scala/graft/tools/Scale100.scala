@@ -287,7 +287,7 @@ object Scale100 {
     // grams at 100×) equi-joined against the full 26.6M-row
     // doc-bigram stream. count() alone lets Catalyst ELIMINATE the
     // unique-key spine join and prune the whole scoring subtree, and
-    // count()-of-global-agg is constant-folded (ClusterProbe lesson)
+    // count()-of-global-agg is constant-folded (SURVEY.md r7 lesson)
     // — so group ON a computed column: the output row count is then
     // data-dependent and the full pipeline must run.
     run("lm_novelty")(SparkEntry.queries("lm_novelty")(spark, dir)
