@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.queries.RelationalQueries
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
@@ -15,7 +16,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.pipelineMaterialDemand(spark, "/root/testdata/sf0.001")
+    RelationalQueries.pipelineMaterialDemand(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Aggregators
 import graft.functions.Aggregators.Scored
+import graft.queries.TextQueries
 
 /** Typed TopK aggregator: equals the window top-k on real data while
   * shuffling only k rows per group per map task. */
@@ -82,7 +83,7 @@ class AggregatorSpec extends SparkSpec {
   }
 
   test("heavy_hitters_sound query equals the exact per-lang top-5") {
-    val sound = Queries.heavyHittersSound(spark, sfDir)
+    val sound = TextQueries.heavyHittersSound(spark, sfDir)
       .as[(String, String, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("n_est").desc, col("token"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Cdc
+import graft.queries.RelationalQueries
 
 class CdcSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
@@ -32,10 +33,10 @@ class CdcSpec extends SparkSpec {
     // its partial sorted the whole feed at 1000×), never the rows —
     // asserted on the real sf change feed, which exercises every
     // encode (timestamp µs, int, IEEE double bits, op rank)
-    val feed = Queries.changes(spark, sfDir)
+    val feed = RelationalQueries.changes(spark, sfDir)
     val generic = Cdc.latestPerKey(feed, "order_key",
       Seq("last_updated", "line_no", "new_price", "op"))
-    val packed = Queries.cdcLatestPerKey(spark, sfDir)
+    val packed = RelationalQueries.cdcLatestPerKey(spark, sfDir)
     assert(packed.columns.toSeq === generic.columns.toSeq)
     // names + types must match (nullability may tighten: the decoded
     // op is provably non-null where max_by's struct field is not)
@@ -94,7 +95,7 @@ class CdcSpec extends SparkSpec {
 
   test("shuffle_hash joinHint: identical merge/upsert results, hashed join planned") {
     // the bounded-delta fast path must change the plan, never the rows
-    val latest = Queries.cdcLatestPerKey(spark, sfDir).select(
+    val latest = RelationalQueries.cdcLatestPerKey(spark, sfDir).select(
       col("order_key"), col("op"),
       col("new_price").as("total_price"), lit("NEW").as("status"))
     val tgt = Tables.orders(spark, sfDir).select(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Corpus
+import graft.queries.TextQueries
 
 class CorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -88,7 +89,7 @@ class CorpusSpec extends SparkSpec {
   test("strip_boilerplate driver query recovers the original text exactly") {
     // the registered query plants a one-segment banner per source;
     // stripping it must reproduce the normalized original corpus
-    val out = Queries.stripBoilerplate(spark, sfDir)
+    val out = TextQueries.stripBoilerplate(spark, sfDir)
       .select(col("doc_id"), col("clean_text"))
     val orig = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"),

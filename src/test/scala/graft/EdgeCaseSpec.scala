@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.operators.{Cdc, Dedup, MaterialDemand}
+import graft.queries.GraphQueries
 
 /** Operators must behave on degenerate inputs — empty frames, empty
   * strings — not just the happy path. */
@@ -139,7 +140,7 @@ class EdgeCaseSpec extends SparkSpec {
     rows.toDF("o_orderkey", "o_custkey", "o_orderstatus",
               "o_totalprice", "o_orderdate", "o_orderpriority")
       .write.parquet(s"$tmp/orders.parquet")
-    val out = Queries.anomalyMad(spark, tmp)
+    val out = GraphQueries.anomalyMad(spark, tmp)
       .select("day", "demand").collect()
       .map(r => (r.getDate(0).toString, r.getDouble(1))).toMap
     assert(out.keySet === spikes.map(i => f"1995-01-$i%02d"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Fuzzy
+import graft.queries.DedupQueries
 
 /** FastSS blocked fuzzy matching (#49a): losslessness vs the all-pairs
   * form, deletion-variant correctness, k=2 depth, and the no-product
@@ -63,7 +64,7 @@ class FuzzySpec extends SparkSpec {
   }
 
   test("blocked plan forms no cartesian/nested-loop product") {
-    val p = Queries.fuzzyMatchBlocked(spark, sfDir)
+    val p = DedupQueries.fuzzyMatchBlocked(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{InvertedIndex, Manifest}
+import graft.queries.IndexQueries
 
 class InvertedIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +23,7 @@ class InvertedIndexSpec extends SparkSpec {
       nBuckets = 8, nFiles = 8)
     assert(v === 0L)
     val got = asRows(InvertedIndex.probe(spark, root, terms, k = 10))
-    val want = asRows(Queries.bm25Search(spark, sfDir))
+    val want = asRows(IndexQueries.bm25Search(spark, sfDir))
     assert(got === want) // doubles compared exactly: same arithmetic
     // duplicated query terms dedup up front instead of failing on
     // duplicate pivot columns; BM25 over a term SET is unchanged
@@ -72,7 +73,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(cat.size === 2)
     assert(cat.map(_.nDocs).sum === docs.count())
     val got = asRows(InvertedIndex.probe(spark, root, terms, k = 10))
-    val want = asRows(Queries.bm25Search(spark, sfDir))
+    val want = asRows(IndexQueries.bm25Search(spark, sfDir))
     assert(got === want)
     // prior version (before the append) still probes — only even docs
     val v0 = asRows(InvertedIndex.probe(spark, root, terms, k = 10,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.{InvertedIndex, Manifest}
 import graft.streaming.InvertedIndexStream
+import graft.queries.IndexQueries
 
 class InvertedIndexStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +39,7 @@ class InvertedIndexStreamSpec extends SparkSpec {
     q.awaitTermination(120000)
 
     assert(versions.size >= 1)
-    val want = asRows(Queries.bm25Search(spark, sfDir))
+    val want = asRows(IndexQueries.bm25Search(spark, sfDir))
     assert(asRows(InvertedIndex.probe(spark, root, terms, k = 10)) === want)
     // compaction folds the streamed segment pairs into one and probes
     // unchanged — the OPTIMIZE step after many micro-batches

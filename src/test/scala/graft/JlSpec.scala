@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.DedupQueries
 
 /** The Johnson-Lindenstrauss projection's statistical contract: with
   * ±1 signs, E[p_k²] = ‖v‖² per component, so ‖p‖²/(K·‖v‖²) should
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
 class JlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def projected = Queries.jlProject(spark, sfDir)
+  private def projected = DedupQueries.jlProject(spark, sfDir)
 
   test("projection preserves squared norms in expectation (mean ratio near 1)") {
     val pcols = (0 until 8).map(k => col(s"p$k") * col(s"p$k"))
@@ -36,7 +37,7 @@ class JlSpec extends SparkSpec {
 
   test("projection is deterministic across partitionings") {
     val a = projected.collect().map(_.toSeq).toSet
-    val b = Queries.jlProject(spark, sfDir).repartition(13)
+    val b = DedupQueries.jlProject(spark, sfDir).repartition(13)
       .collect().map(_.toSeq).toSet
     assert(a === b)
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators.MaterialDemand
+import graft.queries.RelationalQueries
 
 class MaterialDemandSpec extends SparkSpec {
 
@@ -36,7 +37,7 @@ class MaterialDemandSpec extends SparkSpec {
   }
 
   test("flagship runs on testdata and keeps one shuffle") {
-    val df = Queries.pipelineMaterialDemand(spark, sfDir)
+    val df = RelationalQueries.pipelineMaterialDemand(spark, sfDir)
     assert(df.count() > 0)
     // exactly one Exchange from the groupBy (the orderBy adds a range
     // repartition for the final sort — that one is presentation-only)

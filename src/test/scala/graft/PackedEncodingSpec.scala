@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions.{doubleBits, bitsDouble}
 import graft.operators.Cdc
+import graft.queries.TextQueries
 
 /** Adversarial OUT-OF-DOMAIN coverage for every packed / quantized
   * encoding (the r14 packed-CDC lesson: a 50-bit timestamp budget was
@@ -65,7 +66,7 @@ class PackedEncodingSpec extends SparkSpec {
 
   test("tfidf argmax DECIMAL(38,0) key: adversarial in-domain scores " +
        "pick the exact struct-argmax winner; out-of-domain raises") {
-    // the exact key construction from Queries.tfidfTopTerm
+    // the exact key construction from TextQueries.tfidfTopTerm
     val M = 1L << 40
     def okey = (lit(Long.MaxValue) - doubleBits(col("score")))
       .cast(DecimalType(38, 0)) * lit(M) + col("term_id")
@@ -108,7 +109,7 @@ class PackedEncodingSpec extends SparkSpec {
     }
     // and the REGISTERED query's domain is closed: every emitted score
     // is positive and finite (tf ≥ 1 ∧ df ≥ 1 ⇒ tf/df ∈ (0, finite])
-    val scores = Queries.tfidfTopTerm(spark, sfDir)
+    val scores = TextQueries.tfidfTopTerm(spark, sfDir)
       .agg(min(col("score")).as("lo"), max(col("score")).as("hi")).head()
     assert(scores.getDouble(0) > 0.0 &&
            !scores.getDouble(1).isInfinite && !scores.getDouble(1).isNaN)
@@ -165,7 +166,7 @@ class PackedEncodingSpec extends SparkSpec {
 
   test("JL sign-matrix derivation: driver md5 == engine md5 over the " +
        "whole matrix domain, unbiased, and the fold flips signs exactly") {
-    // independent re-derivation of Queries.jlSign (md5("k|j") first hex
+    // independent re-derivation of DedupQueries.jlSign (md5("k|j") first hex
     // char <= '7' -> +1): the driver-side MessageDigest+format path
     // must agree with the ENGINE's md5 for every (k, j) the matrix
     // reads — a divergence would ship a different matrix to the two

@@ -1,4 +1,5 @@
 package graft
+import graft.queries.{DedupQueries, TextQueries}
 
 /** Physical-plan guards: the properties that make these queries work at
   * 100 TB are asserted, not assumed — filters reach the parquet scan,
@@ -140,7 +141,7 @@ class PlanSpec extends SparkSpec {
     // partitioning from the nested-loop join: without an explicit
     // repartition, one parquet file = one partition = one task doing
     // ALL the pairwise jaccard work, no matter the cluster size
-    val p = Queries.dedupClusterPairs(spark, sfDir)
+    val p = DedupQueries.dedupClusterPairs(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(p.contains("Exchange RoundRobinPartitioning"),
            s"pair verify not repartitioned\n$p")
@@ -235,7 +236,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("heavy hitters aggregate map-side partially (MG summaries merge)") {
-    val p = Queries.heavyHittersSound(spark, sfDir)
+    val p = TextQueries.heavyHittersSound(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(p.contains("partial"), p)  // ObjectHashAggregate/SortAggregate partial
     assert(!p.contains("CartesianProduct"), p)

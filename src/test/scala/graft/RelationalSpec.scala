@@ -1,4 +1,5 @@
 package graft
+import graft.queries.RelationalQueries
 
 class RelationalSpec extends SparkSpec {
 
@@ -35,10 +36,10 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("analytics queries return plausible shapes") {
-    assert(Queries.q1PricingSummary(spark, sfDir).count() === 6)
-    val q5n = Queries.q5LocalVolume(spark, sfDir).count()
+    assert(RelationalQueries.q1PricingSummary(spark, sfDir).count() === 6)
+    val q5n = RelationalQueries.q5LocalVolume(spark, sfDir).count()
     assert(q5n >= 1 && q5n <= 5) // ≤5 ASIA nations; sparse at sf0.001
-    val topk = Queries.topkOrdersPerCust(spark, sfDir)
+    val topk = RelationalQueries.topkOrdersPerCust(spark, sfDir)
     import org.apache.spark.sql.functions._
     val maxPer = topk.groupBy("o_custkey").count().agg(max("count")).first().getLong(0)
     assert(maxPer <= 3)
@@ -66,7 +67,7 @@ class RelationalSpec extends SparkSpec {
 
   test("q8 market share is consistent: 0 <= share <= 1 and volumes add up") {
     import org.apache.spark.sql.functions._
-    val rows = Queries.q8MarketShare(spark, sfDir)
+    val rows = RelationalQueries.q8MarketShare(spark, sfDir)
       .where(col("mkt_share") < 0 || col("mkt_share") > 1 ||
              col("share_volume") > col("total_volume"))
     assert(rows.count() === 0)
@@ -74,7 +75,7 @@ class RelationalSpec extends SparkSpec {
 
   test("q15 returns every supplier tied at the maximum, and only those") {
     import org.apache.spark.sql.functions._
-    val top = Queries.q15TopSupplier(spark, sfDir)
+    val top = RelationalQueries.q15TopSupplier(spark, sfDir)
     val revs = top.select("total_revenue").distinct().count()
     assert(revs === 1) // all returned rows share the max revenue
     // recompute independently: the max must match
@@ -100,7 +101,7 @@ class RelationalSpec extends SparkSpec {
         .where(col("p_brand") =!= "Brand#1" &&
                col("l_suppkey").isin(bad.toSeq: _*))
       assert(withBad.count() > 0) // the deny list actually bites…
-      val gated = Queries.q16SupplierVariety(spark, sfDir)
+      val gated = RelationalQueries.q16SupplierVariety(spark, sfDir)
         .agg(org.apache.spark.sql.functions.sum("supplier_cnt")).first().getLong(0)
       val full = Tables.lineitem(spark, sfDir)
         .join(Tables.part(spark, sfDir), col("l_partkey") === col("p_partkey"))
@@ -122,7 +123,7 @@ class RelationalSpec extends SparkSpec {
 
   test("q12 counters partition the late lines: high + low = total") {
     import org.apache.spark.sql.functions._
-    val out = Queries.q12LateByClass(spark, sfDir)
+    val out = RelationalQueries.q12LateByClass(spark, sfDir)
     assert(out.count() > 0)
     val total = out.agg(sum(col("high_line_count") + col("low_line_count")))
       .first().getLong(0)
@@ -137,7 +138,7 @@ class RelationalSpec extends SparkSpec {
 
   test("q17 threshold really gates: revenue below the unfiltered brand total") {
     import org.apache.spark.sql.functions._
-    val out = Queries.q17SmallQtyRevenue(spark, sfDir).first().getDouble(0)
+    val out = RelationalQueries.q17SmallQtyRevenue(spark, sfDir).first().getDouble(0)
     val all = Tables.lineitem(spark, sfDir)
       .join(Tables.part(spark, sfDir).where(col("p_brand") === "Brand#1"),
             col("l_partkey") === col("p_partkey"))
@@ -149,7 +150,7 @@ class RelationalSpec extends SparkSpec {
 
   test("q20 winners ship more than half a part's volume; nation semi join gates") {
     import org.apache.spark.sql.functions._
-    val out = Queries.q20DominantSuppliers(spark, sfDir)
+    val out = RelationalQueries.q20DominantSuppliers(spark, sfDir)
     val suppkeys = out.select("s_suppkey").collect().map(_.getLong(0)).toSet
     // every returned supplier sits in the requested nation
     val nation3 = Tables.supplier(spark, sfDir)
@@ -198,7 +199,7 @@ class RelationalSpec extends SparkSpec {
       .groupBy(col("p.pa"), col("p.pb")).agg(count(lit(1)).as("n"))
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L, 3L), (1L, 3L, 1L)))
-    val out = Queries.basketAffinity(spark, sfDir)
+    val out = RelationalQueries.basketAffinity(spark, sfDir)
     val r = out.select("n_ab", "n_a", "n_b", "n_orders", "lift")
       .as[(Long, Long, Long, Long, Double)].collect()
     r.foreach { case (nab, na, nb, n, lift) =>
@@ -210,7 +211,7 @@ class RelationalSpec extends SparkSpec {
   test("revenue gini: bucketed global rank matches the one-task window form") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val out = Queries.revenueGini(spark, sfDir).collect().head
+    val out = RelationalQueries.revenueGini(spark, sfDir).collect().head
     val gini = out.getAs[Double]("gini")
     val n = out.getAs[Long]("n_customers")
     // reference: the naive global window the operator exists to avoid

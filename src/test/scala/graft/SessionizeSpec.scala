@@ -3,6 +3,7 @@ package graft
 import java.sql.Date
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
+import graft.queries.GraphQueries
 
 /** Gaps-and-islands streaks (#50b): hand-checked island splitting,
   * tie-break determinism, and the one-exchange plan shape (the island
@@ -39,7 +40,7 @@ class SessionizeSpec extends SparkSpec {
   }
 
   test("streaks shuffle only the dedup + window; downstream aggs reuse the partitioning") {
-    val p = Queries.activityStreaks(spark, sfDir)
+    val p = GraphQueries.activityStreaks(spark, sfDir)
       .queryExecution.executedPlan.toString
     // exchange 1: (user, day) distinct — with a map-side partial dedup
     // BEFORE it (raw events collapse grain pre-shuffle); exchange 2:
@@ -65,7 +66,7 @@ class SessionizeSpec extends SparkSpec {
               col("l_linenumber"), col("l_orderkey"))
     val tmp = java.nio.file.Files.createTempDirectory("iv").toString
     li.write.parquet(s"$tmp/lineitem.parquet")
-    val out = Queries.intervalCoverage(spark, tmp)
+    val out = GraphQueries.intervalCoverage(spark, tmp)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     // covered: [Jan1,Jan6]=6 days + [Jan10,Jan11]=2 days = 8

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.SetJoin
+import graft.queries.DedupQueries
 
 /** Exact prefix-filtered Jaccard join (#26b): losslessness vs the
   * all-pairs form, threshold arithmetic, and the no-product plan. */
@@ -44,7 +45,7 @@ class SetJoinSpec extends SparkSpec {
   }
 
   test("candidate join is keyed, never a product") {
-    val p = Queries.jaccardJoinExact(spark, sfDir)
+    val p = DedupQueries.jaccardJoinExact(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.{DedupQueries, RelationalQueries}
 
 class SketchSpec extends SparkSpec {
 
   test("approx_count_distinct within 10% of exact; approx median within 5% of exact") {
-    val approx = Queries.sketchStats(spark, sfDir).collect()
+    val approx = RelationalQueries.sketchStats(spark, sfDir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val exact = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderpriority"))
@@ -96,7 +97,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("source_overlap_approx flags are all green at gate scale") {
-    val rows = Queries.sourceOverlapApprox(spark, sfDir).collect()
+    val rows = DedupQueries.sourceOverlapApprox(spark, sfDir).collect()
     assert(rows.length === 190) // C(20,2) source pairs
     assert(rows.forall(_.getAs[Boolean]("approx_ok")))
   }

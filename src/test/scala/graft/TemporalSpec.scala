@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.operators.{Sampling, Temporal}
+import graft.queries.GraphQueries
 
 /** As-of and range joins verified against brute-force recomputation,
   * plus determinism/fraction properties of the md5 sampling ops. */
@@ -340,7 +341,7 @@ class TemporalSpec extends SparkSpec {
     }.toDF("o_orderpriority", "o_orderdate", "o_totalprice")
     val tmp = java.nio.file.Files.createTempDirectory("ols").toString
     df.write.parquet(s"$tmp/orders.parquet")
-    val out = Queries.demandTrendOls(spark, tmp)
+    val out = GraphQueries.demandTrendOls(spark, tmp)
       .select("n", "slope", "intercept")
       .as[(Long, Double, Double)].head()
     assert(out === ((xs.size.toLong, 7.0, 300.0)))
@@ -359,7 +360,7 @@ class TemporalSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("corr").toString
     rows.toDF("o_orderpriority", "o_orderdate", "o_totalprice")
       .write.parquet(s"$tmp/orders.parquet")
-    val out = Queries.seriesCorrelation(spark, tmp)
+    val out = GraphQueries.seriesCorrelation(spark, tmp)
       .select("prio_a", "prio_b", "n_days", "r")
       .as[(String, String, Long, Double)].collect()
       .map(t => (t._1, t._2) -> ((t._3, t._4))).toMap

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft._
 import graft.operators.{Curate, Similarity}
+import graft.queries.IndexQueries
 
 /** r17 (verdict item 8): decompose `curate_incremental`'s constant
   * term. The bench's most expensive row (13.8 s quiet) has had its
@@ -118,7 +119,7 @@ object CurateProbe {
     val terms = Seq("spark", "window", "merge")
     val bm25Ok = t("bm25-direct-verify") {
       val pA = graft.sources.InvertedIndex.probe(spark, roots.inv, terms, 10)
-      val pD = graft.Queries.bm25DirectTopK(finalDocs, terms, 10)
+      val pD = IndexQueries.bm25DirectTopK(finalDocs, terms, 10)
       pA.except(pD).isEmpty && pD.except(pA).isEmpty
     }
     val bm25OkOld = t("bm25-rebuild-verify-OLD") {

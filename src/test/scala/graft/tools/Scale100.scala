@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft._
 import graft.operators.{Cdc, Dedup}
+import graft.queries.RelationalQueries
 
 /** Scale-validation harness (test scope — never ships): runs the
   * dedup + CDC families and the headline analytics against an N×
@@ -116,10 +117,10 @@ object Scale100 {
     run("cdc_latest_per_key")(SparkEntry.queries("cdc_latest_per_key")(spark, dir))
     run("cdc_merge_apply")(SparkEntry.queries("cdc_merge_apply")(spark, dir))
     run("cdc_merge_apply_shj") {
-      val latest = Queries.cdcLatestPerKey(spark, dir).select(
+      val latest = RelationalQueries.cdcLatestPerKey(spark, dir).select(
         col("order_key"), col("op"),
         col("new_price").as("total_price"), lit("NEW").as("status"))
-      val target = Tables.orders(spark, dir).select( // = Queries.cdcTarget
+      val target = Tables.orders(spark, dir).select( // = RelationalQueries.cdcTarget
         col("o_orderkey").as("order_key"),
         col("o_totalprice").as("total_price"),
         col("o_orderstatus").as("status"))

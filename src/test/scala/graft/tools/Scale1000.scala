@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft._
 import graft.operators.Dedup
 import graft.functions.TextFunctions
+import graft.queries.RelationalQueries
 
 /** 1000× probe tier (test scope — never ships): the five
   * scale-critical families run against a 1000× derived set
@@ -238,7 +239,7 @@ object Scale1000 {
     runHash("cdc_latest_per_key")(
       SparkEntry.queries("cdc_latest_per_key")(spark, dir))
     runHash("cdc_merge_apply")(SparkEntry.queries("cdc_merge_apply")(spark, dir))
-    def cdcTarget1000 = Tables.orders(spark, dir).select( // = Queries.cdcTarget
+    def cdcTarget1000 = Tables.orders(spark, dir).select( // = RelationalQueries.cdcTarget
       col("o_orderkey").as("order_key"),
       col("o_totalprice").as("total_price"),
       col("o_orderstatus").as("status"))
@@ -248,7 +249,7 @@ object Scale1000 {
     // build hash map", measured r13) — so the row probes the shape
     // the hint is FOR: a 1% delta against the 150M-row target.
     runHash("cdc_merge_apply_shj_1pct") {
-      val latest = Queries.cdcLatestPerKey(spark, dir)
+      val latest = RelationalQueries.cdcLatestPerKey(spark, dir)
         .where(col("order_key") % 100 === 0)
         .select(col("order_key"), col("op"),
           col("new_price").as("total_price"), lit("NEW").as("status"))
@@ -258,7 +259,7 @@ object Scale1000 {
     // same 1% delta through the default sort-merge plan — the A/B
     // that shows what the hash build buys when it fits
     runHash("cdc_merge_apply_smj_1pct") {
-      val latest = Queries.cdcLatestPerKey(spark, dir)
+      val latest = RelationalQueries.cdcLatestPerKey(spark, dir)
         .where(col("order_key") % 100 === 0)
         .select(col("order_key"), col("op"),
           col("new_price").as("total_price"), lit("NEW").as("status"))
