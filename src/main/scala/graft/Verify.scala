@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.{GatedBy, Query, Registry}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the driver's DuckDB compare and gated_by.json
+  * (each query without an oracle → its oracle twins). */
 object Verify {
   import org.apache.spark.sql.types._
   /** Types the driver's pandas-based compare can sort and hash. */
@@ -88,17 +90,23 @@ object Verify {
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // name -> twins of every query without an oracle: tools/check.py
+    // passes one when its output has rows and every twin passed
+    val gated = Registry.all
+      .collect { case Query(k, _, GatedBy(twins @ _*)) if only.forall(_.contains(k)) =>
+        s"${q(k)}: ${twins.map(q).mkString("[", ",", "]")}" }
+      .mkString("{", ",", "}")
     // a SPARK_GRAFT_ONLY subset run must not overwrite oracle_sql.json:
     // stale per-query parquet dirs from a prior full run survive in
     // outDir, and a later compare against a subset oracle would
     // silently check fewer queries than the artifacts suggest (r6
     // advice). Subset oracles go to a distinct file.
-    val oracleFile =
-      if (only.isEmpty) "oracle_sql.json" else "oracle_sql_partial.json"
+    val suffix = if (only.isEmpty) "" else "_partial"
     if (only.nonEmpty)
       System.err.println(s"[verify] SPARK_GRAFT_ONLY set - oracle subset " +
-        s"written to $oracleFile; outDir may mix runs")
-    Files.writeString(Paths.get(s"$outDir/$oracleFile"), json)
+        s"written to oracle_sql$suffix.json; outDir may mix runs")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql$suffix.json"), json)
+    Files.writeString(Paths.get(s"$outDir/gated_by$suffix.json"), gated)
     spark.stop()
   }
 }

@@ -393,10 +393,10 @@ object GraftFunctions {
     * per element. Measured r13: the streaming minhash signature's
     * shingle loop re-evaluated split+normalize(text) at every
     * element_at/size reference — ~7 references × ~50 shingles × a
-    * regex normalize per document; StreamBench's 62.5k-doc micro-batch
-    * ran 20+ minutes. A HOF's INPUT child, by contrast, is evaluated
-    * exactly once per row — so wrapping the shared tree in a 1-element
-    * array transform is a zero-cost let.
+    * regex normalize per document; the 62.5k-doc streaming micro-batch
+    * of STREAMBENCH.md ran 20+ minutes. A HOF's INPUT child, by
+    * contrast, is evaluated exactly once per row — so wrapping the
+    * shared tree in a 1-element array transform is a zero-cost let.
     *
     * Use only on trees that are already interpretation-bound (inside
     * HOF pipelines): ArrayTransform is CodegenFallback, so wrapping a

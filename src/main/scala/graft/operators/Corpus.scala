@@ -7,7 +7,7 @@ import graft.functions.TextFunctions
 /** Corpus-level text hygiene for training-data pipelines: segment-level
   * (line-level) dedup and benchmark decontamination — the two cleanup
   * passes that operate ACROSS documents rather than within one (the
-  * within-doc family lives in Queries' text_* ops; the whole-doc dedup
+  * within-doc family lives in TextQueries' text_* ops; the whole-doc dedup
   * family in [[Dedup]]).
   *
   * Scale design: both ops are explode → one key-partitioned aggregation

@@ -55,9 +55,9 @@ import graft.Decision
   * with `spark.graft.graph.denseRoute = direct` — run uncapped (the
   * loud opt-out; the default is `cap`).
   *
-  * Every call records a `graph.route` [[graft.Decision]] ("off" |
-  * "direct" | "direct-forced" | "capped(k)") — pinned by RankSpec's
-  * routing test.
+  * Every call records a `graph.route` [[graft.Decision]] ("direct" |
+  * "direct-forced" | "capped(k)") — pinned by RankSpec's routing
+  * test.
   */
 object GraphRoute {
 
@@ -73,14 +73,6 @@ object GraphRoute {
     * cached table its iteration should consume. */
   def routeDense(e0: DataFrame, what: String): DataFrame = {
     val sess = e0.sparkSession
-    // `off` skips even the profile job — for callers iterating many
-    // SMALL graphs where the one partial-agg pass per call is the
-    // dominant cost (~0.3 s of job overhead on a planted 512-edge
-    // gate; amortized to noise at any real edge count)
-    if (sess.conf.get("spark.graft.graph.denseRoute", "cap") == "off") {
-      Decision.record(Decision("graph.route", "off", 0, 0))
-      return e0
-    }
     val prof = e0.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .agg(coalesce(max(col("d")), lit(0L)).as("mx"),
            coalesce(avg(col("d")), lit(0.0)).as("mean")).head

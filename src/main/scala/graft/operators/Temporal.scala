@@ -226,9 +226,9 @@ object Temporal {
     * mean, seasonal index by position-in-period mean of the detrended
     * series, residual as what's left). The demand-series consumer this
     * feeds: separate the weekly rhythm from the drift before anomaly
-    * gates ([[graft.Queries]] anomaly_mad) or forecasters ([[ewma]],
-    * [[holtBrown]]) look at the series — a Monday spike is seasonality,
-    * not an anomaly.
+    * gates ([[graft.queries.GraphQueries]] anomaly_mad) or forecasters
+    * ([[ewma]], [[holtBrown]]) look at the series — a Monday spike is
+    * seasonality, not an anomaly.
     *
     * Exactness discipline: `valueCol` must be DECIMAL (the backtest
     * contract). The centered moving SUM and the per-position detrended

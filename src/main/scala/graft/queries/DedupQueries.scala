@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.TextFunctions
@@ -14,7 +14,7 @@ object DedupQueries {
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     Dedup.exact(Tables.documents(spark, dir), "doc_id", "text")
 
-  private[graft] val dedupExactSql =
+  private val dedupExactSql =
     """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
       |  min(doc_id) AS keeper_id, count(*) AS n_docs
       |FROM documents GROUP BY 1""".stripMargin
@@ -42,7 +42,7 @@ object DedupQueries {
         col("q").as("keeper_quality"), col("n_docs"))
   }
 
-  private[graft] val dedupKeepBestSql =
+  private val dedupKeepBestSql =
     """WITH d AS (SELECT doc_id,
       |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
       |    CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
@@ -104,7 +104,7 @@ object DedupQueries {
     Dedup.simhashPairsFromSigs(planted, maxHamming = 3)
   }
 
-  private[graft] val dedupSimhashSoundSql =
+  private val dedupSimhashSoundSql =
     """WITH s AS (
       |  SELECT doc_id,
       |    xor(xor(xor(
@@ -164,7 +164,7 @@ object DedupQueries {
                              "label", k = 8)
   }
 
-  private[graft] val annHardNegativesSql =
+  private val annHardNegativesSql =
     """SELECT query_id, qlabel, neighbor_id, nlabel, rk FROM (
       |  SELECT q.vec_id AS query_id, q.label AS qlabel,
       |    c.vec_id AS neighbor_id, c.label AS nlabel,
@@ -201,7 +201,7 @@ object DedupQueries {
     Dedup.minhashPairs(Tables.documents(spark, dir).where(col("doc_id") < 600),
       "doc_id", "text", n = 3, numHashes = 32, bands = 16, tau = 0.5)
 
-  private[graft] val dedupMinhashSoundSql =
+  private val dedupMinhashSoundSql =
     """WITH t AS (
       |  SELECT doc_id,
       |    regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -236,7 +236,7 @@ object DedupQueries {
       "doc_id", "text", n = 3, numHashes = 32, bands = 16, tau = 0.5)
   }
 
-  private[graft] val dedupCrossCorpusSql =
+  private val dedupCrossCorpusSql =
     """WITH t AS (
       |  SELECT doc_id,
       |    regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -272,7 +272,7 @@ object DedupQueries {
       "vec_id", "embedding", tau = 0.4, bands = 32, rows = 2)
       .select(col("id_a"), col("id_b"))
 
-  private[graft] val dedupEmbeddingSoundSql =
+  private val dedupEmbeddingSoundSql =
     """SELECT a.vec_id AS id_a, b.vec_id AS id_b
       |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       |WHERE a.vec_id < 600 AND b.vec_id < 600
@@ -291,7 +291,7 @@ object DedupQueries {
       .select(col("id_a"), col("id_b"))
   }
 
-  private[graft] val dedupEmbeddingCrossSql =
+  private val dedupEmbeddingCrossSql =
     """SELECT a.vec_id AS id_a, b.vec_id AS id_b
       |FROM embeddings a JOIN embeddings b
       |ON a.vec_id % 2 = 0 AND b.vec_id % 2 = 1
@@ -347,7 +347,7 @@ object DedupQueries {
     gate(2, 0.25).union(gate(8, 0.60))
   }
 
-  private[graft] val annIvfRecallSql =
+  private val annIvfRecallSql =
     """SELECT 2 AS nprobe, TRUE AS recall_ok
       |UNION ALL
       |SELECT 8 AS nprobe, TRUE AS recall_ok""".stripMargin
@@ -396,7 +396,7 @@ object DedupQueries {
     gate(10, 0.15).union(gate(100, 0.30))
   }
 
-  private[graft] val annPqRecallSql =
+  private val annPqRecallSql =
     """SELECT 10 AS rerank, TRUE AS recall_ok
       |UNION ALL
       |SELECT 100 AS rerank, TRUE AS recall_ok""".stripMargin
@@ -427,7 +427,7 @@ object DedupQueries {
           .as("jaccard"))
   }
 
-  private[graft] val ngramJaccardSql =
+  private val ngramJaccardSql =
     """WITH t AS (
       |  SELECT doc_id,
       |    list_distinct(regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS toks
@@ -451,6 +451,14 @@ object DedupQueries {
     meta.join(feats, "doc_id")
   }
 
+  /** Frame sampling over the same media blobs (#34), 2 frames of
+    * 4 KiB per doc: blobs are real containers (KBs to 100 KB), so tiny
+    * frames would explode to tens of thousands of rows per doc.
+    * Rows-only check, like `multimodal_meta`. */
+  def multimodalFrames(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.frameSample(
+      Multimodal.attachBlob(Tables.documents(spark, dir)), 4096, 2)
+
   /** Multimodal driver gate (#34): every decoded field is real codec
     * output — container dimensions and channel layout parsed back out
     * of genuine BMP/PPM/WAV headers, total container size, and the
@@ -468,7 +476,7 @@ object DedupQueries {
               col("channels"), col("n_bytes"), col("mean_pixel"))
   }
 
-  private[graft] val multimodalSoundSql =
+  private val multimodalSoundSql =
     """WITH src AS (SELECT doc_id, md5(text) AS x, md5(source) AS sx FROM documents),
       |d AS (SELECT doc_id, x,
       |  ['image','audio','video'][
@@ -514,7 +522,7 @@ object DedupQueries {
               col("channels"), col("mean_pixel"))
   }
 
-  private[graft] val multimodalPngSql =
+  private val multimodalPngSql =
     """WITH d AS (SELECT doc_id, md5(text) AS x FROM documents),
       |s AS (SELECT doc_id,
       |  ((strpos('0123456789abcdef', substr(x, 1, 1)) - 1) * 16
@@ -564,7 +572,7 @@ object DedupQueries {
               expr("CAST(bit_count(dh_a ^ dh_b) AS INT)").as("ham_dhash"))
   }
 
-  private[graft] val multimodalDedupSql =
+  private val multimodalDedupSql =
     """WITH d AS (
       |  SELECT doc_id, doc_id // 6 AS g, CAST(doc_id % 6 AS INTEGER) AS j
       |  FROM documents WHERE doc_id < 600),
@@ -650,7 +658,7 @@ object DedupQueries {
               element_at(col("qv"), 1).as("q0"),
               expr("aggregate(qv, 0L, (acc, y) -> acc + y)").as("qsum"))
 
-  private[graft] val embeddingNormQuantSql =
+  private val embeddingNormQuantSql =
     """WITH n AS (SELECT vec_id, embedding,
       |  sqrt(CAST(list_sum(list_transform(embedding,
       |         x -> CAST(CAST(x AS DOUBLE)*CAST(x AS DOUBLE) AS DECIMAL(20,12))))
@@ -712,7 +720,7 @@ object DedupQueries {
     if (hex.charAt(0) <= '7') 1.0 else -1.0
   }
 
-  private[graft] val jlProjectSql = {
+  private val jlProjectSql = {
     val comps = (0 until JlDims).map { k =>
       (1 to JlSrcDims).map { j =>
         val term = s"CAST(embedding[$j] AS DOUBLE)"
@@ -734,7 +742,7 @@ object DedupQueries {
     Corpus.dedupLines(Tables.documents(spark, dir), "doc_id", "text",
       segTokens = 8, maxDocs = 2)
 
-  private[graft] val dedupLinesSql =
+  private val dedupLinesSql =
     """WITH t AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -776,7 +784,7 @@ object DedupQueries {
       "doc_id", "text", n = 8)
   }
 
-  private[graft] val decontaminateSql =
+  private val decontaminateSql =
     """WITH t AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -852,7 +860,7 @@ object DedupQueries {
   def dedupClustersAuto(spark: SparkSession, dir: String): DataFrame =
     Dedup.clustersAuto(dedupClusterPairs(spark, dir), "doc_a", "doc_b")
 
-  private[graft] val dedupClustersSql =
+  private val dedupClustersSql =
     """WITH RECURSIVE t AS (
       |  SELECT doc_id,
       |    list_distinct(regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS toks
@@ -885,7 +893,7 @@ object DedupQueries {
       .where(col("dist") <= 1) // dist computed ONCE per pair
   }
 
-  private[graft] val fuzzyNameMatchSql =
+  private val fuzzyNameMatchSql =
     """SELECT a.s_suppkey AS key_a, b.s_suppkey AS key_b,
       |  CAST(levenshtein(a.s_name, b.s_name) AS INT) AS dist
       |FROM (SELECT s_suppkey, s_name FROM supplier WHERE s_suppkey < 100) a
@@ -905,7 +913,7 @@ object DedupQueries {
       Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_name")),
       "s_suppkey", "s_name", maxDist = 1)
 
-  private[graft] val fuzzyMatchBlockedSql =
+  private val fuzzyMatchBlockedSql =
     """SELECT a.s_suppkey AS key_a, b.s_suppkey AS key_b,
       |  CAST(levenshtein(a.s_name, b.s_name) AS INT) AS dist
       |FROM supplier a JOIN supplier b ON a.s_suppkey < b.s_suppkey
@@ -936,7 +944,7 @@ object DedupQueries {
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"), sum(col("vec_id")).as("id_sum"))
 
-  private[graft] val kmeansAssignSql =
+  private val kmeansAssignSql =
     """WITH c AS (SELECT vec_id AS cell, embedding AS cvec
       |           FROM embeddings WHERE vec_id < 8),
       |a AS (SELECT v.vec_id, c.cell,
@@ -958,7 +966,7 @@ object DedupQueries {
                               "embedding", fixedCentroids(spark, dir), 0.5)
       .select(col("vec_id"), col("cluster_id"))
 
-  private[graft] val kmeansPruneSql =
+  private val kmeansPruneSql =
     """WITH c AS (SELECT vec_id AS cell, embedding AS cvec
       |           FROM embeddings WHERE vec_id < 8),
       |a AS (SELECT v.vec_id, c.cell,
@@ -1005,7 +1013,7 @@ object DedupQueries {
       "key_a", "key_b")
       .select(col("doc_id").as("s_suppkey"), col("cluster_rep").as("entity_rep"))
 
-  private[graft] val entityResolutionSql =
+  private val entityResolutionSql =
     """WITH RECURSIVE s AS (
       |  SELECT s_suppkey, s_name FROM supplier),
       |e0 AS (
@@ -1046,7 +1054,7 @@ object DedupQueries {
       .select(col("vec_id"), posexplode(col("proj")).as(Seq("idx", "val")))
   }
 
-  private[graft] val pcaSoundSql =
+  private val pcaSoundSql =
     """WITH v AS (SELECT vec_id,
       |    CAST(vec_id % 16 AS INTEGER) AS c,
       |    CAST((vec_id % 7 + 1)
@@ -1095,7 +1103,7 @@ object DedupQueries {
         (col("n_docs").cast("double") / col("n_distinct").cast("double"))
           .as("dup_ratio"))
 
-  private[graft] val dedupProfileSql =
+  private val dedupProfileSql =
     """WITH f AS (SELECT source,
       |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
       |    COUNT(*) AS n
@@ -1146,7 +1154,7 @@ object DedupQueries {
           .as("approx_ok"))
   }
 
-  private[graft] val sourceOverlapApproxSql =
+  private val sourceOverlapApproxSql =
     """WITH d AS (
       |  SELECT DISTINCT source, word
       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS word
@@ -1182,7 +1190,7 @@ object DedupQueries {
       Tables.documents(spark, dir).where(col("doc_id") < 2000),
       "doc_id", "text", tauNum = 9, tauDen = 10)
 
-  private[graft] val jaccardJoinExactSql =
+  private val jaccardJoinExactSql =
     """WITH d AS (
       |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
       |  FROM documents WHERE doc_id < 2000),
@@ -1226,7 +1234,7 @@ object DedupQueries {
         (expr("aggregate(vs, 0.0D, (acc, p) -> acc + p.v)") /
           col("n_vecs").cast("double")).as("centroid"))
 
-  private[graft] val embeddingCentroidsSql =
+  private val embeddingCentroidsSql =
     """WITH x AS (
       |  SELECT label, CAST(i - 1 AS INT) AS dim, vec_id,
       |    CAST(embedding[i] AS DOUBLE) AS v
@@ -1250,7 +1258,7 @@ object DedupQueries {
                    fixedCentroids(spark, dir), tau = 0.4)
       .select(col("id").as("vec_id"), col("semgroup"), col("keep"))
 
-  private[graft] val semdedupSql =
+  private val semdedupSql =
     """WITH RECURSIVE m AS (SELECT vec_id AS id, embedding AS vec,
       |    MIN(vec_id) OVER (PARTITION BY embedding::VARCHAR) AS gid
       |  FROM embeddings),
@@ -1295,7 +1303,7 @@ object DedupQueries {
     Corpus.exciseDupSubstringsXx(Tables.documents(spark, dir),
                                  "doc_id", "text", k = 20)
 
-  private[graft] val dedupSubstringSql =
+  private val dedupSubstringSql =
     """WITH d AS (SELECT doc_id,
       |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
       |  FROM documents),
@@ -1327,7 +1335,7 @@ object DedupQueries {
   def winnowFingerprint(spark: SparkSession, dir: String): DataFrame =
     Corpus.winnow(Tables.documents(spark, dir), "doc_id", "text", k = 8, w = 4)
 
-  private[graft] val winnowFingerprintSql =
+  private val winnowFingerprintSql =
     """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 11),
       |g0 AS (SELECT doc_id, text, length(text) - 7 AS ng,
       |       unnest(range(1, length(text) - 6)) AS i FROM d),
@@ -1371,7 +1379,7 @@ object DedupQueries {
       .select(col("doc_id"), explode(col("fps")).as("fp"))
   }
 
-  private[graft] val winnowXxSoundSql =
+  private val winnowXxSoundSql =
     """WITH d AS (SELECT doc_id, 16 + doc_id % 9 AS n
       |           FROM documents WHERE doc_id < 500),
       |g AS (SELECT doc_id, n, unnest(range(1, n + 1)) AS i FROM d),
@@ -1402,7 +1410,7 @@ object DedupQueries {
       dfNum = 1, dfDen = 5, minNum = 1, minDen = 2,
       maxJoinTokens = 16)
 
-  private[graft] val dedupContainmentSql =
+  private val dedupContainmentSql =
     """WITH bd AS (SELECT doc_id, text FROM documents WHERE doc_id < 20000),
       |tok AS (
       |  SELECT DISTINCT doc_id AS doc,
@@ -1447,7 +1455,7 @@ object DedupQueries {
       maxJoinTokens = 16)
   }
 
-  private[graft] val dedupContainmentCrossSql =
+  private val dedupContainmentCrossSql =
     """WITH bd AS (SELECT doc_id, text FROM documents WHERE doc_id < 20000),
       |tok AS (
       |  SELECT DISTINCT doc_id AS doc,
@@ -1496,7 +1504,7 @@ object DedupQueries {
       "doc_id", "text", ledger)
   }
 
-  private[graft] val dedupIncrementalSql =
+  private val dedupIncrementalSql =
     """WITH led AS (SELECT DISTINCT
       |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
       |  FROM documents WHERE doc_id < 250),
@@ -1505,4 +1513,63 @@ object DedupQueries {
       |  FROM documents WHERE doc_id >= 250 GROUP BY 1)
       |SELECT b.fp, b.keeper_id, b.n_batch_dups
       |FROM batch b ANTI JOIN led ON b.fp = led.fp""".stripMargin
+
+  // ------------------------------------------------------------ registry
+
+  val queries: Seq[Query] = Seq(
+    Query("dedup_exact", dedupExact, Oracle(dedupExactSql)),
+    Query("dedup_keep_best", dedupKeepBest, Oracle(dedupKeepBestSql)),
+    Query("dedup_minhash_pairs", dedupMinhashPairs, GatedBy("dedup_minhash_sound")),
+    Query("dedup_simhash", dedupSimhash, GatedBy("dedup_simhash_sound")),
+    Query("dedup_simhash_sound", dedupSimhashSound, Oracle(dedupSimhashSoundSql)),
+    Query("dedup_clusters_star", dedupClustersStar, Oracle(dedupClustersSql)),
+    Query("dedup_clusters_auto", dedupClustersAuto, Oracle(dedupClustersSql)),
+    Query("ann_ivf_recall", annIvfRecall, Oracle(annIvfRecallSql)),
+    Query("ann_pq_full", annPqFull, Oracle(annBruteforceTopkSql)),
+    Query("ann_pq_recall", annPqRecall, Oracle(annPqRecallSql)),
+    Query("dedup_embedding_cosine", dedupEmbeddingCosine, GatedBy("dedup_embedding_sound")),
+    Query("ann_bruteforce_topk", annBruteforceTopk, Oracle(annBruteforceTopkSql)),
+    Query("ann_hard_negatives", annHardNegatives, Oracle(annHardNegativesSql)),
+    Query("ann_lsh_topk", annLshTopk, GatedBy("ann_lsh_sound")),
+    Query("multimodal_meta", multimodalMeta, GatedBy("multimodal_sound")),
+    Query("dedup_ngram_jaccard", ngramJaccard, Oracle(ngramJaccardSql)),
+    Query("ann_ivf_topk", annIvfTopk, GatedBy("ann_ivf_full", "ann_ivf_recall")),
+    Query("dedup_minhash_sound", dedupMinhashSound, Oracle(dedupMinhashSoundSql)),
+    Query("dedup_cross_corpus", dedupCrossCorpus, Oracle(dedupCrossCorpusSql)),
+    Query("dedup_embedding_cross", dedupEmbeddingCross, Oracle(dedupEmbeddingCrossSql)),
+    Query("dedup_embedding_sound", dedupEmbeddingSound, Oracle(dedupEmbeddingSoundSql)),
+    Query("ann_ivf_full", annIvfFull, Oracle(annBruteforceTopkSql)),
+    Query("ann_lsh_sound", annLshSound, Oracle(annBruteforceTopkSql)),
+    Query("multimodal_sound", multimodalSound, Oracle(multimodalSoundSql)),
+    Query("multimodal_png", multimodalPng, Oracle(multimodalPngSql)),
+    Query("multimodal_dedup", multimodalDedup, Oracle(multimodalDedupSql)),
+    Query("multimodal_frames", multimodalFrames, GatedBy("multimodal_sound")),
+    Query("embedding_norm_quant", embeddingNormQuant, Oracle(embeddingNormQuantSql)),
+    Query("semdedup", semdedup, Oracle(semdedupSql)),
+    Query("dedup_profile", dedupProfile, Oracle(dedupProfileSql)),
+    Query("dedup_incremental", dedupIncremental, Oracle(dedupIncrementalSql)),
+    Query("dedup_lines", dedupLines, Oracle(dedupLinesSql)),
+    Query("decontaminate", decontaminate, Oracle(decontaminateSql)),
+    Query("decontaminate_xx", decontaminateXx, Oracle(decontaminateSql)),
+    Query("dedup_clusters", dedupClusters, Oracle(dedupClustersSql)),
+    Query("fuzzy_name_match", fuzzyNameMatch, Oracle(fuzzyNameMatchSql)),
+    Query("kmeans_assign", kmeansAssign, Oracle(kmeansAssignSql)),
+    Query("kmeans_prune", kmeansPrune, Oracle(kmeansPruneSql)),
+    Query("kmeans_fit_sizes", kmeansFitSizes, GatedBy("kmeans_assign")),
+    Query("fuzzy_match_blocked", fuzzyMatchBlocked, Oracle(fuzzyMatchBlockedSql)),
+    Query("source_overlap_approx", sourceOverlapApprox, Oracle(sourceOverlapApproxSql)),
+    Query("jaccard_join_exact", jaccardJoinExact, Oracle(jaccardJoinExactSql)),
+    Query("entity_resolution", entityResolution, Oracle(entityResolutionSql)),
+    Query("embedding_centroids", embeddingCentroids, Oracle(embeddingCentroidsSql)),
+    Query("jl_project", jlProject, Oracle(jlProjectSql)),
+    Query("dedup_substring", dedupSubstring, Oracle(dedupSubstringSql)),
+    Query("dedup_substring_xx", dedupSubstringXx, Oracle(dedupSubstringSql)),
+    Query("pca_sound", pcaSound, Oracle(pcaSoundSql)),
+    Query("pca_project", pcaProject, GatedBy("pca_sound")),
+    Query("winnow_fingerprint", winnowFingerprint, Oracle(winnowFingerprintSql)),
+    Query("winnow_xx", winnowXxFingerprint, GatedBy("winnow_fingerprint", "winnow_xx_sound")),
+    Query("winnow_xx_sound", winnowXxSound, Oracle(winnowXxSoundSql)),
+    Query("dedup_containment", dedupContainment, Oracle(dedupContainmentSql)),
+    Query("dedup_containment_cross", dedupContainmentCross, Oracle(dedupContainmentCrossSql))
+  )
 }

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -24,7 +24,7 @@ object GraphQueries {
     Temporal.asofJoin(purchases, clicks, "user_id", "purchase_ts", "click_ts")
   }
 
-  private[graft] val asofClicksSql =
+  private val asofClicksSql =
     """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts
       |           FROM events WHERE event_type = 'purchase'),
       |c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS click_ts,
@@ -48,7 +48,7 @@ object GraphQueries {
       "user_id", "purchase_ts", "click_ts")
   }
 
-  private[graft] val asofNextClickSql =
+  private val asofNextClickSql =
     """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts
       |           FROM events WHERE event_type = 'purchase'),
       |c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS click_ts,
@@ -73,7 +73,7 @@ object GraphQueries {
            Relational.dsum(col("o_totalprice")).as("sum_price"))
   }
 
-  private[graft] val rangeJoinBandsSql =
+  private val rangeJoinBandsSql =
     """SELECT band_id, COUNT(*) AS n_orders,
       |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_price
       |FROM orders
@@ -112,7 +112,7 @@ object GraphQueries {
               col("demand").isNull.as("was_gap"))
   }
 
-  private[graft] val gapfillDailyDemandSql =
+  private val gapfillDailyDemandSql =
     """WITH demand AS (
       |  SELECT l_suppkey AS shop_id, CAST(l_shipdate AS DATE) AS day,
       |    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS demand
@@ -180,7 +180,7 @@ object GraphQueries {
              .as("longest_span_days"))
   }
 
-  private[graft] val intervalCoverageSql =
+  private val intervalCoverageSql =
     """WITH iv AS (
       |  SELECT l_suppkey AS supp, CAST(l_shipdate AS DATE) AS s,
       |         CAST(l_shipdate AS DATE) + CAST(l_linenumber AS INT) AS e,
@@ -244,7 +244,7 @@ object GraphQueries {
       .select(col("prio"), col("n"), col("slope"), col("intercept"))
   }
 
-  private[graft] val demandTrendOlsSql =
+  private val demandTrendOlsSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS y
@@ -279,7 +279,7 @@ object GraphQueries {
   def activityStreaks(spark: SparkSession, dir: String): DataFrame =
     Sessionize.dailyStreaks(Tables.events(spark, dir), "user_id", "ts")
 
-  private[graft] val activityStreaksSql =
+  private val activityStreaksSql =
     """WITH active AS (
       |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
       |n AS (SELECT user_id, day,
@@ -329,7 +329,7 @@ object GraphQueries {
       .select(col("node"), col("pr"))
   }
 
-  private[graft] val pagerankSoundSql =
+  private val pagerankSoundSql =
     """WITH nn AS (SELECT doc_id AS i FROM documents WHERE doc_id < 256),
       |e AS (SELECT i AS src, (2*i+1) % 256 AS dst FROM nn
       |      UNION ALL SELECT i, (4*i+2) % 256 FROM nn),
@@ -387,7 +387,7 @@ object GraphQueries {
       .select(col("node"), col("pr"))
   }
 
-  private[graft] val pprSoundSql =
+  private val pprSoundSql =
     """WITH nn AS (SELECT doc_id AS i FROM documents WHERE doc_id < 256),
       |e AS (SELECT i AS src, (2*i+1) % 256 AS dst FROM nn
       |      UNION ALL SELECT i, (4*i+2) % 256 FROM nn),
@@ -441,7 +441,7 @@ object GraphQueries {
     Rank.hits(edges, "src", "dst", iters = 3)
   }
 
-  private[graft] val hitsSoundSql = {
+  private val hitsSoundSql = {
     def authRound(prev: String, out: String) =
       s"""$out AS (SELECT v.node,
          |  COALESCE(CAST(SUM($prev.hub) AS BIGINT), 0) AS auth
@@ -490,7 +490,7 @@ object GraphQueries {
     Graph.bfsDistances(edges, "src", "dst", seeds, "doc_id", maxIters = 3)
   }
 
-  private[graft] val bfsSoundSql = {
+  private val bfsSoundSql = {
     def round(prev: String, out: String) =
       s"""$out AS (SELECT node, MIN(dist) AS dist FROM (
          |  SELECT node, dist FROM $prev
@@ -531,7 +531,7 @@ object GraphQueries {
                         maxIters = 3)
   }
 
-  private[graft] val ssspSoundSql = {
+  private val ssspSoundSql = {
     def round(prev: String, out: String) =
       s"""$out AS (SELECT node, MIN(dist) AS dist FROM (
          |  SELECT node, dist FROM $prev
@@ -581,7 +581,7 @@ object GraphQueries {
       k = 4, maxIters = 4)
   }
 
-  private[graft] val kcoreSoundSql =
+  private val kcoreSoundSql =
     """WITH nn AS (SELECT doc_id AS i, doc_id % 11 AS r,
       |      doc_id - (doc_id % 11) AS base
       |    FROM documents WHERE doc_id < 176),
@@ -648,7 +648,7 @@ object GraphQueries {
       k = 4, maxIters = 3)
   }
 
-  private[graft] val ktrussSoundSql =
+  private val ktrussSoundSql =
     """WITH nn AS (SELECT doc_id AS i, doc_id % 10 AS r,
       |      doc_id - (doc_id % 10) AS base
       |    FROM documents WHERE doc_id < 160),
@@ -705,7 +705,7 @@ object GraphQueries {
     Rank.labelPropagation(pairs, "a", "b", iters = 3)
   }
 
-  private[graft] val lpaSoundSql = {
+  private val lpaSoundSql = {
     def round(prev: String, cur: String) =
       s"""c$cur AS (SELECT e.dst, l$prev.label, COUNT(*) AS c
          |  FROM e JOIN l$prev ON l$prev.node = e.src GROUP BY 1, 2),
@@ -753,7 +753,7 @@ object GraphQueries {
     Temporal.cusum(daily, Seq("prio"), "day", "x", hMultiple = 30)
   }
 
-  private[graft] val cusumAlertsSql =
+  private val cusumAlertsSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS x
@@ -817,7 +817,7 @@ object GraphQueries {
         .as("r"))
   }
 
-  private[graft] val seriesCorrelationSql =
+  private val seriesCorrelationSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
@@ -851,7 +851,7 @@ object GraphQueries {
     Temporal.backtest(daily, Seq("prio"), "day", "demand")
   }
 
-  private[graft] val forecastBacktestSql =
+  private val forecastBacktestSql =
     """WITH daily AS (SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS demand
       |  FROM orders GROUP BY 1, 2),
@@ -911,7 +911,7 @@ object GraphQueries {
       .select(col("prio"), col("day"), col("demand"), col("med"), col("mad"))
   }
 
-  private[graft] val anomalyMadSql =
+  private val anomalyMadSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS demand
@@ -960,7 +960,7 @@ object GraphQueries {
     Graph.triangleCounts(Graph.topKEdges(weighted, 20))
   }
 
-  private[graft] val triangleCountsSql =
+  private val triangleCountsSql =
     """WITH p AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
       |           WHERE l_orderkey < 1000000),
       |cw AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v, COUNT(*) AS w
@@ -993,7 +993,7 @@ object GraphQueries {
     Temporal.ewma(daily, Seq("prio"), "day", "demand", terms = 10)
   }
 
-  private[graft] val ewmaDailyDemandSql =
+  private val ewmaDailyDemandSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS demand
@@ -1065,7 +1065,7 @@ object GraphQueries {
        |WHERE rn >= $terms""".stripMargin
   }
 
-  private[graft] val ewmaDailyDemandTunedSql = ewmaSql(3, 3, 10)
+  private val ewmaDailyDemandTunedSql = ewmaSql(3, 3, 10)
 
   /** Holt/Brown trend forecast (#54b): double exponential smoothing of
     * the same daily demand series at α = 3/8 — [[Temporal.holtBrown]]:
@@ -1132,7 +1132,7 @@ object GraphQueries {
        |FROM g""".stripMargin
   }
 
-  private[graft] val holtForecastSql = holtSql(3, 3, 8, 7)
+  private val holtForecastSql = holtSql(3, 3, 8, 7)
 
   /** Classical seasonal decomposition (#54c): weekly additive
     * decomposition of the daily demand series — see
@@ -1148,7 +1148,7 @@ object GraphQueries {
                                period = 7)
   }
 
-  private[graft] val seasonalDecomposeSql =
+  private val seasonalDecomposeSql =
     """WITH daily AS (
       |  SELECT o_orderpriority AS prio, o_orderdate AS day,
       |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS demand_dec
@@ -1176,4 +1176,33 @@ object GraphQueries {
       |    - CAST(CAST(f.movsum AS VARCHAR) AS DOUBLE) / 7.0e0
       |    - s.seasonal AS resid
       |FROM f JOIN s ON s.prio = f.prio AND s.pos = f.pos""".stripMargin
+
+  // ------------------------------------------------------------ registry
+
+  val queries: Seq[Query] = Seq(
+    Query("asof_clicks", asofClicks, Oracle(asofClicksSql)),
+    Query("asof_next_click", asofNextClick, Oracle(asofNextClickSql)),
+    Query("range_join_bands", rangeJoinBands, Oracle(rangeJoinBandsSql)),
+    Query("forecast_backtest", forecastBacktest, Oracle(forecastBacktestSql)),
+    Query("lpa_sound", lpaSound, Oracle(lpaSoundSql)),
+    Query("gapfill_daily_demand", gapfillDailyDemand, Oracle(gapfillDailyDemandSql)),
+    Query("pagerank_sound", pagerankSound, Oracle(pagerankSoundSql)),
+    Query("ppr_sound", pprSound, Oracle(pprSoundSql)),
+    Query("hits_sound", hitsSound, Oracle(hitsSoundSql)),
+    Query("bfs_sound", bfsSound, Oracle(bfsSoundSql)),
+    Query("activity_streaks", activityStreaks, Oracle(activityStreaksSql)),
+    Query("kcore_sound", kcoreSound, Oracle(kcoreSoundSql)),
+    Query("ktruss_sound", ktrussSound, Oracle(ktrussSoundSql)),
+    Query("holt_forecast", holtForecast, Oracle(holtForecastSql)),
+    Query("seasonal_decompose", seasonalDecomposeQ, Oracle(seasonalDecomposeSql)),
+    Query("sssp_sound", ssspSound, Oracle(ssspSoundSql)),
+    Query("cusum_alerts", cusumAlerts, Oracle(cusumAlertsSql)),
+    Query("interval_coverage", intervalCoverage, Oracle(intervalCoverageSql)),
+    Query("demand_trend_ols", demandTrendOls, Oracle(demandTrendOlsSql)),
+    Query("series_correlation", seriesCorrelation, Oracle(seriesCorrelationSql)),
+    Query("anomaly_mad", anomalyMad, Oracle(anomalyMadSql)),
+    Query("triangle_counts", triangleCounts, Oracle(triangleCountsSql)),
+    Query("ewma_daily_demand", ewmaDailyDemand, Oracle(ewmaDailyDemandSql)),
+    Query("ewma_daily_demand_tuned", ewmaDailyDemandTuned, Oracle(ewmaDailyDemandTunedSql))
+  )
 }

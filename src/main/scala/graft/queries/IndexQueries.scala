@@ -1,11 +1,11 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.TextFunctions
-import graft.queries.DedupQueries.annQueries
+import graft.queries.DedupQueries.{annBruteforceTopkSql, annQueries}
 
 /** Persisted-index (grep, BM25, ANN) and curation-pipeline queries. */
 object IndexQueries {
@@ -73,7 +73,7 @@ object IndexQueries {
       .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
   }
 
-  private[graft] val bm25SearchSql =
+  private val bm25SearchSql =
     """WITH d AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -122,7 +122,7 @@ object IndexQueries {
       kRrf = 60, topK = 10)
   }
 
-  private[graft] val hybridSearchRrfSql =
+  private val hybridSearchRrfSql =
     s"""WITH bm AS ($bm25SearchSql),
        |dense AS (
        |  SELECT neighbor_id AS doc_id, rk FROM (
@@ -227,7 +227,7 @@ object IndexQueries {
       (2L, "customer line"), (3L, "zzzz never present")))
   }
 
-  private[graft] val grepIndexProbeSql =
+  private val grepIndexProbeSql =
     """WITH p(pattern_id, pattern) AS (VALUES
       |  (CAST(0 AS BIGINT), 'merge part window'),
       |  (CAST(1 AS BIGINT), 'batch batch batch'),
@@ -277,7 +277,7 @@ object IndexQueries {
       (2L, "w[io]n?d[oe]w"), (3L, "zz(qq|xx) never present")))
   }
 
-  private[graft] val grepRegexProbeSql =
+  private val grepRegexProbeSql =
     """WITH p(pattern_id, pattern) AS (VALUES
       |  (CAST(0 AS BIGINT), 'merge (part|batch) window'),
       |  (CAST(1 AS BIGINT), 'custom[a-z]+ line'),
@@ -347,7 +347,7 @@ object IndexQueries {
       .select(col("doc_id"), col("source"), col("quality"))
   }
 
-  private[graft] val curatePipelineSql =
+  private val curatePipelineSql =
     """WITH d AS (SELECT doc_id, source, text,
       |    MIN(doc_id) OVER (PARTITION BY
       |      md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))) AS keeper
@@ -459,7 +459,7 @@ object IndexQueries {
       .withColumn("bm25_probe_ok", lit(bm25Ok))
   }
 
-  private[graft] val curateIncrementalSql =
+  private val curateIncrementalSql =
     """WITH ids AS (SELECT doc_id, source FROM documents WHERE doc_id < 600),
       |map AS (SELECT doc_id, source,
       |    CASE WHEN doc_id >= 300 THEN doc_id % 300
@@ -487,4 +487,21 @@ object IndexQueries {
       |SELECT doc_id, source, quality,
       |  TRUE AS ann_probe_ok, TRUE AS bm25_probe_ok
       |FROM c WHERE cum <= 550""".stripMargin
+
+  // ------------------------------------------------------------ registry
+
+  val queries: Seq[Query] = Seq(
+    Query("ann_index_probe", annIndexProbe, Oracle(annBruteforceTopkSql)),
+    Query("ann_index_append", annIndexAppend, Oracle(annBruteforceTopkSql)),
+    Query("ann_index_pq", annIndexPq, Oracle(annBruteforceTopkSql)),
+    Query("bm25_index_probe", bm25IndexProbe, Oracle(bm25SearchSql)),
+    Query("grep_index_probe", grepIndexProbe, Oracle(grepIndexProbeSql)),
+    Query("grep_index_append", grepIndexAppend, Oracle(grepIndexProbeSql)),
+    Query("grep_regex_probe", grepRegexProbe, Oracle(grepRegexProbeSql)),
+    Query("bm25_index_incremental", bm25IndexIncremental, Oracle(bm25SearchSql)),
+    Query("bm25_search", bm25Search, Oracle(bm25SearchSql)),
+    Query("hybrid_search_rrf", hybridSearchRrf, Oracle(hybridSearchRrfSql)),
+    Query("curate_pipeline", curatePipeline, Oracle(curatePipelineSql)),
+    Query("curate_incremental", curateIncremental, Oracle(curateIncrementalSql))
+  )
 }

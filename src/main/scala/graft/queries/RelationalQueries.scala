@@ -35,7 +35,7 @@ object RelationalQueries {
     mat.withColumn("demand_kg", col("demand_kg").cast("double"))
   }
 
-  private[graft] val pipelineMaterialDemandSql =
+  private val pipelineMaterialDemandSql =
     s"""WITH product_demand AS ($productDemandSql),
        |mat AS (
        |  SELECT date, shop_id,
@@ -62,7 +62,7 @@ object RelationalQueries {
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
 
-  private[graft] val scanProjectSql =
+  private val scanProjectSql =
     "SELECT o_orderkey, o_custkey, o_totalprice FROM orders"
 
   // ---------------------------------------------------------------- #2
@@ -72,7 +72,7 @@ object RelationalQueries {
       .select(col("l_orderkey"), col("l_linenumber"),
               to_date(col("l_shipdate")).as("ship_date"), col("l_quantity"))
 
-  private[graft] val scanIncrementalSql =
+  private val scanIncrementalSql =
     """SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS ship_date, l_quantity
       |FROM lineitem
       |WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-02-01'""".stripMargin
@@ -89,7 +89,7 @@ object RelationalQueries {
       when(col("product_name") === "expensive", col("demand") * 10)
         .otherwise(lit(0.0)).as("robusta"))
 
-  private[graft] val deriveRecipeSql =
+  private val deriveRecipeSql =
     s"""WITH product_demand AS ($productDemandSql)
        |SELECT date, shop_id, product_name,
        |  CASE product_name WHEN 'cheap' THEN 20*demand
@@ -105,7 +105,7 @@ object RelationalQueries {
       .agg(sum(col("demand").cast("decimal(20,4)")).cast("double").as("demand_sum"),
            count(lit(1)).as("n_rows"))
 
-  private[graft] val aggGroupbySumSql =
+  private val aggGroupbySumSql =
     s"""WITH product_demand AS ($productDemandSql)
        |SELECT date, shop_id,
        |  CAST(CAST(SUM(CAST(demand AS DECIMAL(20,4))) AS VARCHAR) AS DOUBLE) AS demand_sum,
@@ -121,7 +121,7 @@ object RelationalQueries {
                Array(col("s_acctbal"), col("nation_key_d")),
                "measure", "value")
 
-  private[graft] val unpivotMeltSql =
+  private val unpivotMeltSql =
     """SELECT s_suppkey, 's_acctbal' AS measure, s_acctbal AS value FROM supplier
       |UNION ALL
       |SELECT s_suppkey, 'nation_key_d', CAST(s_nationkey AS DOUBLE) FROM supplier""".stripMargin
@@ -195,7 +195,7 @@ object RelationalQueries {
                         (v + 1).cast("int")))))
   }
 
-  private[graft] val cdcLatestPerKeySql =
+  private val cdcLatestPerKeySql =
     s"WITH $latestSql SELECT * FROM latest"
 
   def cdcMergeApply(spark: SparkSession, dir: String): DataFrame = {
@@ -205,7 +205,7 @@ object RelationalQueries {
     Cdc.mergeApply(cdcTarget(spark, dir), latest, "order_key")
   }
 
-  private[graft] val cdcMergeApplySql =
+  private val cdcMergeApplySql =
     s"""WITH $latestSql,
        |cdc AS (SELECT order_key, op, new_price AS total_price, 'NEW' AS status FROM latest),
        |$cdcTargetSql
@@ -230,7 +230,7 @@ object RelationalQueries {
     Cdc.upsert(cdcTarget(spark, dir), updates, "order_key")
   }
 
-  private[graft] val upsertOnConflictSql =
+  private val upsertOnConflictSql =
     s"""WITH $latestSql,
        |updates AS (SELECT order_key, new_price AS total_price, 'UPD' AS status
        |  FROM latest WHERE op = 'U'),
@@ -254,7 +254,7 @@ object RelationalQueries {
     Cdc.scd2Apply(target, updates, "order_key")
   }
 
-  private[graft] val scd2DimensionSql =
+  private val scd2DimensionSql =
     s"""WITH $latestSql,
        |updates AS (SELECT order_key, new_price AS total_price,
        |  last_updated AS changed_at FROM latest WHERE op = 'U'),
@@ -280,7 +280,7 @@ object RelationalQueries {
            sum(col("o_totalprice").cast("decimal(20,4)"))
              .cast("double").as("total_price"))
 
-  private[graft] val partitionLayoutSql =
+  private val partitionLayoutSql =
     """SELECT year(o_orderdate) AS year, month(o_orderdate) AS month,
       |  COUNT(*) AS n_orders,
       |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS VARCHAR) AS DOUBLE) AS total_price
@@ -291,7 +291,7 @@ object RelationalQueries {
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame =
     Relational.pricingSummary(Tables.lineitem(spark, dir), "2001-09-01")
 
-  private[graft] val q1PricingSummarySql =
+  private val q1PricingSummarySql =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
       |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
@@ -306,7 +306,7 @@ object RelationalQueries {
       Tables.customer(spark, dir), Tables.orders(spark, dir),
       Tables.lineitem(spark, dir), "BUILDING", "1998-01-01", "1997-01-01")
 
-  private[graft] val q3ShippingPrioritySql =
+  private val q3ShippingPrioritySql =
     """SELECT l_orderkey, o_orderdate, o_orderpriority,
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue
       |FROM customer
@@ -323,7 +323,7 @@ object RelationalQueries {
       Tables.orders(spark, dir), Tables.lineitem(spark, dir),
       "ASIA", "1996-01-01", "1997-01-01")
 
-  private[graft] val q5LocalVolumeSql =
+  private val q5LocalVolumeSql =
     """SELECT n_name,
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue
       |FROM customer, orders, lineitem, supplier, nation, region
@@ -341,7 +341,7 @@ object RelationalQueries {
       Seq("o_custkey"),
       Seq(col("o_totalprice").desc, col("o_orderkey").desc), 3)
 
-  private[graft] val topkOrdersPerCustSql =
+  private val topkOrdersPerCustSql =
     """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
       |  SELECT o_custkey, o_orderkey, o_totalprice,
       |    row_number() OVER (PARTITION BY o_custkey
@@ -354,7 +354,7 @@ object RelationalQueries {
             col("o_orderkey") === col("l_orderkey"), "left_anti")
       .select(col("o_orderkey"), col("o_totalprice"))
 
-  private[graft] val ordersWoLineitemsSql =
+  private val ordersWoLineitemsSql =
     """SELECT o_orderkey, o_totalprice FROM orders o
       |WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)""".stripMargin
 
@@ -371,7 +371,7 @@ object RelationalQueries {
         when(col("gp") === 1, lit("ALL")).otherwise(col("prio")).as("priority"),
         col("n_orders"), col("total_price"))
 
-  private[graft] val rollupVolumeSql =
+  private val rollupVolumeSql =
     """SELECT
       |  CASE WHEN GROUPING(y) = 1 THEN -1 ELSE y END AS year,
       |  CASE WHEN GROUPING(prio) = 1 THEN 'ALL' ELSE prio END AS priority,
@@ -384,7 +384,7 @@ object RelationalQueries {
   def eventsHourly(spark: SparkSession, dir: String): DataFrame =
     Sessionize.timeBucketed(Tables.events(spark, dir), "hour")
 
-  private[graft] val eventsHourlySql =
+  private val eventsHourlySql =
     """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket, event_type,
       |  COUNT(*) AS n_events,
       |  CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS value_sum
@@ -393,7 +393,7 @@ object RelationalQueries {
   def eventsSessionize(spark: SparkSession, dir: String): DataFrame =
     Sessionize.gapSessions(Tables.events(spark, dir), 30)
 
-  private[graft] val eventsSessionizeSql =
+  private val eventsSessionizeSql =
     """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
       |g AS (SELECT user_id, event_id, ts,
       |  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -423,7 +423,7 @@ object RelationalQueries {
       .select(col("event_id"), col("user_id"), col("event_type"))
   }
 
-  private[graft] val eventsCompactChangesSql =
+  private val eventsCompactChangesSql =
     """WITH x AS (SELECT event_id, user_id, event_type,
       |  lag(event_type) OVER (PARTITION BY user_id
       |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_type
@@ -445,7 +445,7 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n"))
   }
 
-  private[graft] val eventTransitionsSql =
+  private val eventTransitionsSql =
     """WITH x AS (SELECT event_type,
       |  lag(event_type) OVER (PARTITION BY user_id
       |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_type
@@ -475,7 +475,7 @@ object RelationalQueries {
       .agg(pick(0.5).as("p50"), pick(0.9).as("p90"), pick(0.99).as("p99"))
   }
 
-  private[graft] val valuePercentilesByTypeSql =
+  private val valuePercentilesByTypeSql =
     """WITH x AS (SELECT event_type, value,
       |  row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
       |  COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -508,7 +508,7 @@ object RelationalQueries {
       .groupBy(col("cohort_week"), col("week_offset"))
       .agg(count(lit(1)).as("n_users"))
 
-  private[graft] val retentionCohortsSql =
+  private val retentionCohortsSql =
     """WITH f AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
       |  min(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id) AS first_ts
       |  FROM events),
@@ -536,7 +536,7 @@ object RelationalQueries {
         (col("value") > col("p99")).as("clipped"))
   }
 
-  private[graft] val clipOutliersSql =
+  private val clipOutliersSql =
     """WITH x AS (SELECT event_type, value,
       |  row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
       |  COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -569,7 +569,7 @@ object RelationalQueries {
           col("n_exact") <= 0.10).as("ndv_ok"),
         (col("amed") >= col("p40") && col("amed") <= col("p60")).as("median_ok"))
 
-  private[graft] val sketchSoundSql =
+  private val sketchSoundSql =
     """SELECT o_orderpriority,
       |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_exact,
       |  TRUE AS ndv_ok, TRUE AS median_ok
@@ -588,7 +588,7 @@ object RelationalQueries {
            sum(col("k")).as("k_sum"),
            max(col("k")).as("k_max"))
 
-  private[graft] val eventsJsonExtractSql =
+  private val eventsJsonExtractSql =
     """SELECT event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
       |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_max
@@ -604,7 +604,7 @@ object RelationalQueries {
       .agg(Relational.dsum(Relational.discPriceDec).as("revenue"),
            count(lit(1)).as("n_items"))
 
-  private[graft] val promoRevenueSql =
+  private val promoRevenueSql =
     """SELECT p_type,
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue,
       |  COUNT(*) AS n_items
@@ -645,7 +645,7 @@ object RelationalQueries {
         |ORDER BY date, shop_id, material_name""".stripMargin)
   }
 
-  private[graft] val sqlMaterialDemandSql =
+  private val sqlMaterialDemandSql =
     s"""WITH product_demand AS ($productDemandSql),
        |raw_material AS (
        |  SELECT shop_id, date,
@@ -676,7 +676,7 @@ object RelationalQueries {
       .agg(countDistinct(col("o_custkey")).as("n_customers"),
            count(lit(1)).as("n_orders"))
 
-  private[graft] val distinctAggSql =
+  private val distinctAggSql =
     """SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_customers,
       |  COUNT(*) AS n_orders
       |FROM orders GROUP BY o_orderpriority""".stripMargin
@@ -689,7 +689,7 @@ object RelationalQueries {
            count(lit(1)).as("n_orders"))
       .where(col("total_spend") > 1000000.0)
 
-  private[graft] val havingBigSpendersSql =
+  private val havingBigSpendersSql =
     """SELECT o_custkey,
       |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS total_spend,
       |  COUNT(*) AS n_orders
@@ -709,7 +709,7 @@ object RelationalQueries {
                 .cast("double").as("running_spend"))
   }
 
-  private[graft] val runningTotalSql =
+  private val runningTotalSql =
     """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
       |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER (
       |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -730,7 +730,7 @@ object RelationalQueries {
         Seq("local_arabica", "foreign_arabica", "robusta"))
       .agg(first(col("demand_kg")))
 
-  private[graft] val pivotMaterialSql =
+  private val pivotMaterialSql =
     s"""WITH long AS ($pipelineMaterialDemandSql)
        |SELECT date, shop_id,
        |  MAX(CASE WHEN raw_material = 'local_arabica' THEN demand_kg END) AS local_arabica,
@@ -752,7 +752,7 @@ object RelationalQueries {
     asian.exceptAll(asian.intersect(withOpen))
   }
 
-  private[graft] val setOpsSuppliersSql =
+  private val setOpsSuppliersSql =
     """WITH asian AS (
       |  SELECT s_suppkey FROM supplier
       |  JOIN nation ON s_nationkey = n_nationkey
@@ -781,7 +781,7 @@ object RelationalQueries {
              .cast("double").as("revenue"))
   }
 
-  private[graft] val bloomSemiJoinUrgentSql =
+  private val bloomSemiJoinUrgentSql =
     """SELECT l_returnflag, COUNT(*) AS n_items,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS DOUBLE) AS revenue
       |FROM lineitem
@@ -809,7 +809,7 @@ object RelationalQueries {
       .agg(Relational.dsum(Relational.discPriceDec).as("volume"))
   }
 
-  private[graft] val q7NationTradeSql =
+  private val q7NationTradeSql =
     """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
       |  year(l_shipdate) AS ship_year,
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS volume
@@ -848,7 +848,7 @@ object RelationalQueries {
       .select(col("o_custkey"), col("o_orderpriority"), col("spend"))
   }
 
-  private[graft] val aboveGroupAvgSql =
+  private val aboveGroupAvgSql =
     """WITH spend AS (
       |  SELECT o_custkey, o_orderpriority,
       |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS sdec
@@ -874,7 +874,7 @@ object RelationalQueries {
                 .cast("double").as("trailing_7d_spend"))
   }
 
-  private[graft] val rolling7dRevenueSql =
+  private val rolling7dRevenueSql =
     """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
       |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER (
       |    PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
@@ -894,7 +894,7 @@ object RelationalQueries {
       .where(col("k") > 50)
   }
 
-  private[graft] val eventsJsonStructSql =
+  private val eventsJsonStructSql =
     """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
       |FROM events WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50""".stripMargin
 
@@ -925,7 +925,7 @@ object RelationalQueries {
       cume_dist().over(w).as("cume"))
   }
 
-  private[graft] val windowRankStatsSql =
+  private val windowRankStatsSql =
     """WITH spend AS (
       |  SELECT o_custkey, o_orderpriority,
       |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS spend
@@ -951,7 +951,7 @@ object RelationalQueries {
       .withColumn("next_orderkey", lead(col("o_orderkey"), 1).over(w))
   }
 
-  private[graft] val orderGapDaysSql =
+  private val orderGapDaysSql =
     """WITH o AS (SELECT o_custkey, o_orderkey,
       |             CAST(o_orderdate AS DATE) AS order_date FROM orders)
       |SELECT o_custkey, o_orderkey, order_date,
@@ -975,7 +975,7 @@ object RelationalQueries {
         when(col("gp") === 1, "ALL").otherwise(col("prio")).as("priority"),
         col("n_orders"), col("total_price"))
 
-  private[graft] val cubeVolumeSql =
+  private val cubeVolumeSql =
     """SELECT
       |  CAST(CASE WHEN GROUPING(y) = 1 THEN -1 ELSE y END AS INT) AS order_year,
       |  CASE WHEN GROUPING(prio) = 1 THEN 'ALL' ELSE prio END AS priority,
@@ -1009,7 +1009,7 @@ object RelationalQueries {
               / count(lit(1))).as("median_price"))
   }
 
-  private[graft] val medianPriceSql =
+  private val medianPriceSql =
     """WITH r AS (
       |  SELECT o_orderpriority, o_totalprice,
       |    row_number() OVER (PARTITION BY o_orderpriority
@@ -1042,7 +1042,7 @@ object RelationalQueries {
       .select(col("source"), col("m.lang").as("modal_lang"),
               col("m.cnt").as("modal_count"), col("n_docs"))
 
-  private[graft] val modePerGroupSql =
+  private val modePerGroupSql =
     """WITH c AS (SELECT source, lang, COUNT(*) AS cnt
       |           FROM documents GROUP BY 1, 2),
       |r AS (SELECT source, lang, cnt,
@@ -1071,7 +1071,7 @@ object RelationalQueries {
       s"stack(${cols.size}, $stackArgs) AS (col_name, n_nulls, n_distinct)")
   }
 
-  private[graft] val profileColumnsSql =
+  private val profileColumnsSql =
     """WITH s AS (SELECT COUNT(*) AS n,
       |  COUNT(l_orderkey) AS nn1, COUNT(DISTINCT l_orderkey) AS nd1,
       |  COUNT(l_suppkey) AS nn2, COUNT(DISTINCT l_suppkey) AS nd2,
@@ -1121,7 +1121,7 @@ object RelationalQueries {
       s"stack(${cols.size}, $stackArgs) AS (col_name, n_distinct, approx_ok)")
   }
 
-  private[graft] val profileColumnsApproxSql =
+  private val profileColumnsApproxSql =
     """WITH s AS (SELECT
       |  COUNT(DISTINCT l_orderkey) AS nd1, COUNT(DISTINCT l_suppkey) AS nd2,
       |  COUNT(DISTINCT l_returnflag) AS nd3, COUNT(DISTINCT l_shipdate) AS nd4,
@@ -1159,7 +1159,7 @@ object RelationalQueries {
     rowLevel.unionByName(orphans).unionByName(dupPk)
   }
 
-  private[graft] val dqChecksSql =
+  private val dqChecksSql =
     """WITH r AS (SELECT
       |    CAST(SUM(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS neg_qty,
       |    CAST(SUM(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_key,
@@ -1207,7 +1207,7 @@ object RelationalQueries {
         .select(lit("3_purchase").as("step"), col("n_users")))
   }
 
-  private[graft] val funnelStepsSql =
+  private val funnelStepsSql =
     """WITH t1 AS (
       |  SELECT user_id, MIN(ts) AS t1 FROM events
       |  WHERE event_type = 'view' GROUP BY 1),
@@ -1248,7 +1248,7 @@ object RelationalQueries {
            sum(when(col("converted"), 1L).otherwise(0L)).as("n_converted"))
   }
 
-  private[graft] val funnelConversionSql =
+  private val funnelConversionSql =
     """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts
       |           FROM events WHERE event_type = 'purchase'),
       |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS view_ts,
@@ -1291,7 +1291,7 @@ object RelationalQueries {
               col("s_name"), col("min_price"))
   }
 
-  private[graft] val minCostSupplierSql =
+  private val minCostSupplierSql =
     """WITH m AS (SELECT l_partkey, MIN(l_extendedprice) AS min_price
       |           FROM lineitem GROUP BY 1),
       |w AS (SELECT l.l_partkey, m.min_price, MIN(l.l_suppkey) AS s_suppkey
@@ -1325,7 +1325,7 @@ object RelationalQueries {
       .select(col("l_partkey"), col("part_qty"), col("part_value"))
   }
 
-  private[graft] val importantPartsSql =
+  private val importantPartsSql =
     """WITH v AS (SELECT l_partkey,
       |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS part_qty,
       |    CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6))
@@ -1354,7 +1354,7 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n_customers"))
   }
 
-  private[graft] val orderCountDistributionSql =
+  private val orderCountDistributionSql =
     """WITH pc AS (SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY 1)
       |SELECT COALESCE(pc.n, 0) AS n_orders, COUNT(*) AS n_customers
       |FROM customer c LEFT JOIN pc ON c.c_custkey = pc.o_custkey
@@ -1393,7 +1393,7 @@ object RelationalQueries {
               col("total_acctbal"))
   }
 
-  private[graft] val idleRichCustomersSql =
+  private val idleRichCustomersSql =
     """WITH c AS (SELECT c_custkey, c_nationkey,
       |    CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
       |  FROM customer),
@@ -1430,7 +1430,7 @@ object RelationalQueries {
         when(col("gp") === 1, lit("ALL")).otherwise(col("prio")).as("priority"),
         col("n_orders"), col("total_price"))
 
-  private[graft] val groupingSetsVolumeSql =
+  private val groupingSetsVolumeSql =
     """SELECT
       |  CASE WHEN GROUPING(y) = 1 THEN -1 ELSE y END AS year,
       |  CASE WHEN GROUPING(prio) = 1 THEN 'ALL' ELSE prio END AS priority,
@@ -1479,7 +1479,7 @@ object RelationalQueries {
       .select(col("s_suppkey"), col("s_name"), col("n_blamed"))
   }
 
-  private[graft] val lateShippersSql =
+  private val lateShippersSql =
     """WITH os AS (SELECT l_orderkey, l_suppkey, MAX(l_shipdate) AS supp_last
       |            FROM lineitem GROUP BY 1, 2),
       |o AS (SELECT l_orderkey, MAX(supp_last) AS order_last,
@@ -1520,7 +1520,7 @@ object RelationalQueries {
            count(lit(1)).as("n_items"))
   }
 
-  private[graft] val q19BandRevenueSql =
+  private val q19BandRevenueSql =
     """SELECT
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue,
       |  COUNT(*) AS n_items
@@ -1540,7 +1540,7 @@ object RelationalQueries {
       Tables.orders(spark, dir), Tables.lineitem(spark, dir),
       "1998-07-01", "1998-10-01", 60)
 
-  private[graft] val q4PriorityExistsSql =
+  private val q4PriorityExistsSql =
     """SELECT o_orderpriority, COUNT(*) AS order_count
       |FROM orders o
       |WHERE o_orderdate >= '1998-07-01' AND o_orderdate < '1998-10-01'
@@ -1555,7 +1555,7 @@ object RelationalQueries {
     Relational.forecastRevenue(Tables.lineitem(spark, dir),
       "1996-01-01", "1997-01-01", 0.04, 0.06, 24.0)
 
-  private[graft] val q6ForecastRevenueSql =
+  private val q6ForecastRevenueSql =
     """SELECT
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * CAST(l_discount AS DECIMAL(7,6)) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue,
       |  COUNT(*) AS n_items
@@ -1572,7 +1572,7 @@ object RelationalQueries {
       Tables.part(spark, dir),
       "EUROPE", "ECONOMY", "NATION_13", "1996-01-01", "1998-01-01")
 
-  private[graft] val q8MarketShareSql =
+  private val q8MarketShareSql =
     """WITH vol AS (
       |  SELECT year(o_orderdate) AS o_year,
       |    CAST(CAST(SUM(CAST(CASE WHEN sn.n_name = 'NATION_13'
@@ -1601,7 +1601,7 @@ object RelationalQueries {
       Tables.orders(spark, dir), Tables.lineitem(spark, dir),
       Tables.part(spark, dir), "PROMO", new java.math.BigDecimal("0.10"))
 
-  private[graft] val q9ProfitByNationSql =
+  private val q9ProfitByNationSql =
     """SELECT n_name AS nation, year(o_orderdate) AS o_year,
       |  CAST(CAST(SUM(CAST(
       |    CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6)))
@@ -1622,7 +1622,7 @@ object RelationalQueries {
       Tables.orders(spark, dir), Tables.lineitem(spark, dir),
       "1997-10-01", "1998-01-01", 20)
 
-  private[graft] val q10ReturnedItemsSql =
+  private val q10ReturnedItemsSql =
     """SELECT c_custkey, c_name, n_name,
       |  CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS revenue
       |FROM lineitem
@@ -1642,7 +1642,7 @@ object RelationalQueries {
       Tables.supplier(spark, dir), Tables.lineitem(spark, dir),
       "1996-01-01", "1996-04-01")
 
-  private[graft] val q15TopSupplierSql =
+  private val q15TopSupplierSql =
     """WITH rev AS (
       |  SELECT l_suppkey,
       |    CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(13,6)) * (1 - CAST(l_discount AS DECIMAL(7,6))) AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS total_revenue
@@ -1660,7 +1660,7 @@ object RelationalQueries {
       Tables.supplier(spark, dir), Tables.lineitem(spark, dir),
       Tables.part(spark, dir), "Brand#1")
 
-  private[graft] val q16SupplierVarietySql =
+  private val q16SupplierVarietySql =
     """SELECT p_brand, p_type, p_size,
       |  COUNT(DISTINCT l_suppkey) AS supplier_cnt
       |FROM lineitem
@@ -1674,7 +1674,7 @@ object RelationalQueries {
   def skewReport(spark: SparkSession, dir: String): DataFrame =
     Skew.report(Tables.lineitem(spark, dir), "l_suppkey", k = 10)
 
-  private[graft] val skewReportSql =
+  private val skewReportSql =
     """WITH c AS (SELECT l_suppkey, COUNT(*) AS n FROM lineitem GROUP BY 1),
       |s AS (SELECT COUNT(*) AS n_keys, CAST(SUM(n) AS BIGINT) AS n_rows FROM c),
       |r AS (SELECT l_suppkey, n,
@@ -1711,7 +1711,7 @@ object RelationalQueries {
           col("n_exact") * lit(0.05)).as("est_ok"))
   }
 
-  private[graft] val ndvCubeSql =
+  private val ndvCubeSql =
     """SELECT strftime(o_orderdate, '%Y-%m') AS month,
       |  COUNT(DISTINCT o_custkey) AS n_exact, true AS est_ok
       |FROM orders GROUP BY 1""".stripMargin
@@ -1755,7 +1755,7 @@ object RelationalQueries {
           .as("bottom50_share"))
   }
 
-  private[graft] val revenueGiniSql =
+  private val revenueGiniSql =
     """WITH per AS (
       |  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS rev
       |  FROM orders GROUP BY 1),
@@ -1800,7 +1800,7 @@ object RelationalQueries {
            min(col("v")).as("lo"), max(col("v")).as("hi"))
   }
 
-  private[graft] val equiDepthBinsSql =
+  private val equiDepthBinsSql =
     """WITH r AS (
       |  SELECT o_totalprice AS v,
       |    row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn,
@@ -1851,7 +1851,7 @@ object RelationalQueries {
                 (col("n_a") * col("n_b")).cast("double")).as("lift"))
   }
 
-  private[graft] val basketAffinitySql =
+  private val basketAffinitySql =
     """WITH b AS (
       |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
       |  FROM lineitem GROUP BY 1),
@@ -1945,7 +1945,7 @@ object RelationalQueries {
         col("range_ok"))
   }
 
-  private[graft] val quantileCubeSql =
+  private val quantileCubeSql =
     """WITH b AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_totalprice,
       |    CAST(least(greatest(floor(o_totalprice / 9375.0), 0.0), 63.0) AS INTEGER) AS bin
       |  FROM orders),
@@ -1982,7 +1982,7 @@ object RelationalQueries {
       Tables.orders(spark, dir), Tables.lineitem(spark, dir),
       "1998-01-01", "1999-01-01", 60)
 
-  private[graft] val q12LateByClassSql =
+  private val q12LateByClassSql =
     """SELECT l_returnflag AS line_class,
       |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
       |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -1999,7 +1999,7 @@ object RelationalQueries {
     Relational.smallQuantityRevenue(
       Tables.part(spark, dir), Tables.lineitem(spark, dir), "Brand#1")
 
-  private[graft] val q17SmallQtyRevenueSql =
+  private val q17SmallQtyRevenueSql =
     """WITH branded AS (
       |  SELECT l_partkey, l_quantity, l_extendedprice
       |  FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2023,7 +2023,7 @@ object RelationalQueries {
       Tables.part(spark, dir), Tables.lineitem(spark, dir),
       "small", "NATION_3", "1998-01-01", "1999-01-01", 1, 2)
 
-  private[graft] val q20DominantSuppliersSql =
+  private val q20DominantSuppliersSql =
     """WITH pf AS (SELECT p_partkey FROM part WHERE p_name LIKE 'small%'),
       |sh AS (SELECT l_partkey, l_suppkey,
       |         SUM(CAST(l_quantity AS DECIMAL(25,6))) AS supp_qty
@@ -2064,7 +2064,7 @@ object RelationalQueries {
         (col("cm_estimate") >= col("n_exact")).as("never_underestimates"))
   }
 
-  private[graft] val cmSketchCountsSql =
+  private val cmSketchCountsSql =
     """WITH toks AS (SELECT t.w AS word
       |  FROM documents, UNNEST(string_split(text, ' ')) AS t(w)
       |  WHERE length(t.w) > 0),
@@ -2091,4 +2091,82 @@ object RelationalQueries {
       |SELECT t.rank, t.word, t.n_exact, e.cm_estimate,
       |  e.cm_estimate >= t.n_exact AS never_underestimates
       |FROM est e JOIN top t ON e.word = t.word""".stripMargin
+
+  // ------------------------------------------------------------ registry
+
+  val queries: Seq[Query] = Seq(
+    Query("pipeline_material_demand", pipelineMaterialDemand, Oracle(pipelineMaterialDemandSql)),
+    Query("scan_project", scanProject, Oracle(scanProjectSql)),
+    Query("scan_incremental", scanIncremental, Oracle(scanIncrementalSql)),
+    Query("derive_recipe", deriveRecipe, Oracle(deriveRecipeSql)),
+    Query("agg_groupby_sum", aggGroupbySum, Oracle(aggGroupbySumSql)),
+    Query("unpivot_melt", unpivotMelt, Oracle(unpivotMeltSql)),
+    Query("cdc_latest_per_key", cdcLatestPerKey, Oracle(cdcLatestPerKeySql)),
+    Query("cdc_merge_apply", cdcMergeApply, Oracle(cdcMergeApplySql)),
+    Query("upsert_on_conflict", upsertOnConflict, Oracle(upsertOnConflictSql)),
+    Query("partition_layout", partitionLayout, Oracle(partitionLayoutSql)),
+    Query("q1_pricing_summary", q1PricingSummary, Oracle(q1PricingSummarySql)),
+    Query("q3_shipping_priority", q3ShippingPriority, Oracle(q3ShippingPrioritySql)),
+    Query("q5_local_volume", q5LocalVolume, Oracle(q5LocalVolumeSql)),
+    Query("topk_orders_per_cust", topkOrdersPerCust, Oracle(topkOrdersPerCustSql)),
+    Query("orders_wo_lineitems", ordersWoLineitems, Oracle(ordersWoLineitemsSql)),
+    Query("rollup_volume", rollupVolume, Oracle(rollupVolumeSql)),
+    Query("events_hourly", eventsHourly, Oracle(eventsHourlySql)),
+    Query("events_sessionize", eventsSessionize, Oracle(eventsSessionizeSql)),
+    Query("events_json_extract", eventsJsonExtract, Oracle(eventsJsonExtractSql)),
+    Query("promo_revenue", promoRevenue, Oracle(promoRevenueSql)),
+    Query("sql_material_demand", sqlMaterialDemand, Oracle(sqlMaterialDemandSql)),
+    Query("distinct_agg", distinctAgg, Oracle(distinctAggSql)),
+    Query("having_big_spenders", havingBigSpenders, Oracle(havingBigSpendersSql)),
+    Query("running_total", runningTotal, Oracle(runningTotalSql)),
+    Query("sketch_stats", sketchStats, GatedBy("sketch_sound")),
+    Query("sketch_sound", sketchSound, Oracle(sketchSoundSql)),
+    Query("pivot_material", pivotMaterial, Oracle(pivotMaterialSql)),
+    Query("setops_suppliers", setOpsSuppliers, Oracle(setOpsSuppliersSql)),
+    Query("bloom_semi_join", bloomSemiJoinUrgent, Oracle(bloomSemiJoinUrgentSql)),
+    Query("scd2_dimension", scd2Dimension, Oracle(scd2DimensionSql)),
+    Query("rolling_7d_revenue", rolling7dRevenue, Oracle(rolling7dRevenueSql)),
+    Query("events_json_struct", eventsJsonStruct, Oracle(eventsJsonStructSql)),
+    Query("q7_nation_trade", q7NationTrade, Oracle(q7NationTradeSql)),
+    Query("above_group_avg", aboveGroupAvg, Oracle(aboveGroupAvgSql)),
+    Query("window_rank_stats", windowRankStats, Oracle(windowRankStatsSql)),
+    Query("order_gap_days", orderGapDays, Oracle(orderGapDaysSql)),
+    Query("cube_volume", cubeVolume, Oracle(cubeVolumeSql)),
+    Query("median_price", medianPrice, Oracle(medianPriceSql)),
+    Query("events_compact_changes", eventsCompactChanges, Oracle(eventsCompactChangesSql)),
+    Query("event_transitions", eventTransitions, Oracle(eventTransitionsSql)),
+    Query("retention_cohorts", retentionCohorts, Oracle(retentionCohortsSql)),
+    Query("value_percentiles_by_type", valuePercentilesByType, Oracle(valuePercentilesByTypeSql)),
+    Query("clip_outliers", clipOutliers, Oracle(clipOutliersSql)),
+    Query("ndv_cube", ndvCube, Oracle(ndvCubeSql)),
+    Query("quantile_cube", quantileCube, Oracle(quantileCubeSql)),
+    Query("skew_report", skewReport, Oracle(skewReportSql)),
+    Query("cm_sketch_counts", cmSketchCounts, Oracle(cmSketchCountsSql)),
+    Query("profile_columns_approx", profileColumnsApprox, Oracle(profileColumnsApproxSql)),
+    Query("profile_columns", profileColumns, Oracle(profileColumnsSql)),
+    Query("dq_checks", dqChecks, Oracle(dqChecksSql)),
+    Query("funnel_conversion", funnelConversion, Oracle(funnelConversionSql)),
+    Query("min_cost_supplier", minCostSupplier, Oracle(minCostSupplierSql)),
+    Query("important_parts", importantParts, Oracle(importantPartsSql)),
+    Query("order_count_distribution", orderCountDistribution, Oracle(orderCountDistributionSql)),
+    Query("idle_rich_customers", idleRichCustomers, Oracle(idleRichCustomersSql)),
+    Query("grouping_sets_volume", groupingSetsVolume, Oracle(groupingSetsVolumeSql)),
+    Query("late_shippers", lateShippers, Oracle(lateShippersSql)),
+    Query("basket_affinity", basketAffinity, Oracle(basketAffinitySql)),
+    Query("revenue_gini", revenueGini, Oracle(revenueGiniSql)),
+    Query("funnel_steps", funnelSteps, Oracle(funnelStepsSql)),
+    Query("equi_depth_bins", equiDepthBins, Oracle(equiDepthBinsSql)),
+    Query("mode_per_group", modePerGroup, Oracle(modePerGroupSql)),
+    Query("q19_band_revenue", q19BandRevenue, Oracle(q19BandRevenueSql)),
+    Query("q4_priority_exists", q4PriorityExists, Oracle(q4PriorityExistsSql)),
+    Query("q6_forecast_revenue", q6ForecastRevenue, Oracle(q6ForecastRevenueSql)),
+    Query("q8_market_share", q8MarketShare, Oracle(q8MarketShareSql)),
+    Query("q9_profit_by_nation", q9ProfitByNation, Oracle(q9ProfitByNationSql)),
+    Query("q10_returned_items", q10ReturnedItems, Oracle(q10ReturnedItemsSql)),
+    Query("q15_top_supplier", q15TopSupplier, Oracle(q15TopSupplierSql)),
+    Query("q16_supplier_variety", q16SupplierVariety, Oracle(q16SupplierVarietySql)),
+    Query("q12_late_by_class", q12LateByClass, Oracle(q12LateByClassSql)),
+    Query("q17_small_qty_revenue", q17SmallQtyRevenue, Oracle(q17SmallQtyRevenueSql)),
+    Query("q20_dominant_suppliers", q20DominantSuppliers, Oracle(q20DominantSuppliersSql))
+  )
 }

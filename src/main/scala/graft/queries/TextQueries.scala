@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.TextFunctions
@@ -17,7 +17,7 @@ object TextQueries {
       TextFunctions.wsTokenCount(col("text")).as("n_ws_tokens"),
       TextFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens"))
 
-  private[graft] val textTokenCountSql =
+  private val textTokenCountSql =
     """SELECT doc_id,
       |  len(regexp_extract_all(text, '\S+')) AS n_ws_tokens,
       |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS n_bpe_tokens
@@ -27,7 +27,7 @@ object TextQueries {
     Tables.documents(spark, dir).select(
       col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
 
-  private[graft] val textLangIdSql =
+  private val textLangIdSql =
     """SELECT doc_id,
       |  CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
       |       WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
@@ -49,7 +49,7 @@ object TextQueries {
       TextFunctions.stopwordRatio(col("text")).as("stopword_ratio"),
       TextFunctions.qualityScore(col("text")).as("quality"))
 
-  private[graft] val textQualitySql =
+  private val textQualitySql =
     """SELECT doc_id, alpha_ratio, punct_ratio, stopword_ratio,
       |  alpha_ratio * 0.5 + stopword_ratio * 0.3 + (1.0 - punct_ratio) * 0.2 AS quality
       |FROM (SELECT doc_id,
@@ -70,7 +70,7 @@ object TextQueries {
       .groupBy(col("lang"), TextFunctions.langId(col("text")).as("lang_pred"))
       .agg(count(lit(1)).as("n_docs"))
 
-  private[graft] val langConfusionSql =
+  private val langConfusionSql =
     """WITH p AS (SELECT lang,
       |  CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
       |       WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
@@ -89,7 +89,7 @@ object TextQueries {
     Tables.documents(spark, dir).select(
       col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
 
-  private[graft] val textFingerprintSql =
+  private val textFingerprintSql =
     """SELECT doc_id,
       |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
       |FROM documents""".stripMargin
@@ -150,7 +150,7 @@ object TextQueries {
         col("top_bigram_char_frac") <= 0.2)
   }
 
-  private[graft] val gopherQualitySql =
+  private val gopherQualitySql =
     """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
       |  FROM documents),
       |g AS (SELECT doc_id,
@@ -216,7 +216,7 @@ object TextQueries {
         (size(col("h")) === 0).as("kept"))
   }
 
-  private[graft] val blocklistFilterSql =
+  private val blocklistFilterSql =
     """WITH w(w, ord) AS (VALUES ('slow merge', 1), ('crash', 2),
       |    ('a a', 3), ('leak', 4), ('slow scan', 5), ('big batch', 6),
       |    ('spark window', 7)),
@@ -243,7 +243,7 @@ object TextQueries {
       Sampling.bucket16(col("doc_id")).as("bucket"),
       Sampling.splitLabel(col("doc_id")).as("split"))
 
-  private[graft] val splitTrainTestSql =
+  private val splitTrainTestSql =
     """SELECT doc_id,
       |  CAST(strpos('0123456789abcdef',
       |       substr(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1 AS INT) AS bucket,
@@ -273,7 +273,7 @@ object TextQueries {
                            phoneRe, "<PHONE>")).as("red_md5"))
   }
 
-  private[graft] val piiRedactSql =
+  private val piiRedactSql =
     """WITH s AS (SELECT doc_id,
       |  text || ' contact user' || CAST(doc_id AS VARCHAR)
       |       || '@mail.example.com or +1-555-0' || CAST(doc_id AS VARCHAR) AS synth
@@ -338,7 +338,7 @@ object TextQueries {
           .as("red_md5"))
   }
 
-  private[graft] val piiRedactLuhnSql =
+  private val piiRedactLuhnSql =
     """WITH p AS (SELECT doc_id, text,
       |    '4' || lpad(CAST(doc_id % 99999999999999 AS VARCHAR), 14, '0')
       |      AS base15
@@ -396,7 +396,7 @@ object TextQueries {
       .withColumn("rk", row_number().over(w))
   }
 
-  private[graft] val vocabTopWordsSql =
+  private val vocabTopWordsSql =
     """WITH c AS (
       |  SELECT word, COUNT(*) AS n_occurrences
       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) t
@@ -427,7 +427,7 @@ object TextQueries {
       .withColumn("rk", row_number().over(w))
   }
 
-  private[graft] val bpeTopPairsSql =
+  private val bpeTopPairsSql =
     """WITH t AS (SELECT
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -501,7 +501,7 @@ object TextQueries {
         col("df"), col("score"))
   }
 
-  private[graft] val tfidfTopTermSql =
+  private val tfidfTopTermSql =
     """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
       |             FROM documents),
       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
@@ -556,7 +556,7 @@ object TextQueries {
         rep("dup_3gram_frac").as("dup_3gram_frac"))
   }
 
-  private[graft] val textRepetitionSql =
+  private val textRepetitionSql =
     """WITH g AS (SELECT doc_id,
       |    string_split(text, ' ') AS toks FROM documents),
       |p AS (SELECT doc_id,
@@ -598,7 +598,7 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"))
   }
 
-  private[graft] val docPackSql =
+  private val docPackSql =
     """WITH t AS (SELECT doc_id, source,
       |    len(string_split(text, ' ')) AS n_tokens FROM documents),
       |c AS (SELECT doc_id, source, n_tokens,
@@ -628,7 +628,7 @@ object TextQueries {
              floor(col("quality") * 65536).cast("long"))
   }
 
-  private[graft] val sampleByQualitySql =
+  private val sampleByQualitySql =
     """WITH q AS (SELECT doc_id, source,
       |  least(greatest(
       |    CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
@@ -671,7 +671,7 @@ object TextQueries {
         size(col("col")).cast("long").as("n_tokens"))
   }
 
-  private[graft] val docChunksSql =
+  private val docChunksSql =
     """WITH t AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents)
@@ -703,7 +703,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"), col("quality"))
   }
 
-  private[graft] val qualityFilterSql =
+  private val qualityFilterSql =
     """WITH q AS (SELECT doc_id, source,
       |  CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
       |    / CAST(greatest(length(text), 1) AS DOUBLE) * 0.5
@@ -739,7 +739,7 @@ object TextQueries {
       .toDF("doc_id", "source")
   }
 
-  private[graft] val samplePerSourceSql =
+  private val samplePerSourceSql =
     """WITH b AS (SELECT doc_id, source,
       |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 29, 1)) - 1) * 4096
       |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 30, 1)) - 1) * 256
@@ -763,7 +763,7 @@ object TextQueries {
       .select(col("bucket"), (col("bucket") * 10).as("lo_tokens"),
         col("n_docs"))
 
-  private[graft] val docLengthHistogramSql =
+  private val docLengthHistogramSql =
     """WITH t AS (SELECT least(
       |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) // 10,
       |    19) AS bucket FROM documents)
@@ -785,7 +785,7 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"), sum(kept).as("n_kept"))
   }
 
-  private[graft] val sourceMixtureSql =
+  private val sourceMixtureSql =
     """SELECT source, COUNT(*) AS n_docs,
       |  CAST(SUM(CASE WHEN
       |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1) * 16
@@ -805,7 +805,7 @@ object TextQueries {
         Map("src0" -> 4, "src1" -> 3, "src2" -> 2, "src3" -> 1))
       .select(col("doc_id"), col("source"))
 
-  private[graft] val mixtureRebalanceSql =
+  private val mixtureRebalanceSql =
     """WITH b AS (
       |  SELECT doc_id, source,
       |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 29, 1)) - 1) * 4096
@@ -857,7 +857,7 @@ object TextQueries {
            sum(when(col("f") === 1, 1L).otherwise(0L)).as("n_hapax"))
   }
 
-  private[graft] val rareTokenStatsSql =
+  private val rareTokenStatsSql =
     """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
       |            FROM documents),
       |pd AS (SELECT doc_id, tok, COUNT(*) AS cnt FROM tk GROUP BY 1, 2),
@@ -901,7 +901,7 @@ object TextQueries {
   def heavyHitters(spark: SparkSession, dir: String): DataFrame =
     heavyHittersBy(spark, dir, capacity = 8, k = 5)
 
-  private[graft] val heavyHittersSoundSql =
+  private val heavyHittersSoundSql =
     """WITH tk AS (SELECT lang, unnest(string_split(text, ' ')) AS tok
       |            FROM documents),
       |c AS (SELECT lang, tok AS token, COUNT(*) AS n_est
@@ -953,7 +953,7 @@ object TextQueries {
       .withColumn("rk", row_number().over(w))
   }
 
-  private[graft] val pmiTopPairsSql =
+  private val pmiTopPairsSql =
     """WITH dt AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
       |            FROM documents),
       |f AS (SELECT tok, COUNT(*) AS df FROM dt GROUP BY 1),
@@ -993,7 +993,7 @@ object TextQueries {
           .as("drift_scaled"))
   }
 
-  private[graft] val mixtureDriftSql =
+  private val mixtureDriftSql =
     """WITH c AS (SELECT lang, source,
       |    CAST(SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS cnt_a,
       |    CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cnt_b
@@ -1010,7 +1010,7 @@ object TextQueries {
   def dsirFit(spark: SparkSession, dir: String): DataFrame =
     Dsir.fit(Tables.documents(spark, dir), "text", col("lang") === "en")
 
-  private[graft] val dsirFitSql =
+  private val dsirFitSql =
     """WITH d AS (SELECT lang = 'en' AS flag,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -1039,7 +1039,7 @@ object TextQueries {
     Dsir.score(Tables.documents(spark, dir), "doc_id", "text", planted)
   }
 
-  private[graft] val dsirSoundSql =
+  private val dsirSoundSql =
     """WITH d AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -1096,7 +1096,7 @@ object TextQueries {
           col("n_docs").cast("double") * lit(0.05) + lit(2.0)).as("kept_ok"))
   }
 
-  private[graft] val qualityFilterApproxSql =
+  private val qualityFilterApproxSql =
     """SELECT source, COUNT(*) AS n_docs, true AS kept_ok
       |FROM documents GROUP BY 1""".stripMargin
 
@@ -1131,7 +1131,7 @@ object TextQueries {
           .as("coverage"))
   }
 
-  private[graft] val vocabCoverageSql =
+  private val vocabCoverageSql =
     """WITH c AS (SELECT word, COUNT(*) AS n FROM (
       |    SELECT unnest(string_split(
       |      regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS word
@@ -1169,7 +1169,7 @@ object TextQueries {
       .select(col("doc_id"), col("lang"))
   }
 
-  private[graft] val mixtureAlphaSql =
+  private val mixtureAlphaSql =
     """WITH c AS (SELECT lang, COUNT(*) AS n_s FROM documents GROUP BY 1),
       |m AS (SELECT MIN(n_s) AS n_min FROM c),
       |r AS (SELECT lang,
@@ -1199,7 +1199,7 @@ object TextQueries {
       .toDF("rank", "merged", "pair_count")
   }
 
-  private[graft] val bpeTrainSoundSql =
+  private val bpeTrainSoundSql =
     """SELECT CAST(rank AS INTEGER) AS rank, merged,
       |  CAST(pair_count AS BIGINT) AS pair_count
       |FROM (VALUES (1,'##es',9),(2,'##est',9),(3,'##ow',7),(4,'low',7),
@@ -1227,7 +1227,7 @@ object TextQueries {
       .toDF("piece", "piece_count")
   }
 
-  private[graft] val unigramTrainSoundSql =
+  private val unigramTrainSoundSql =
     """SELECT piece, CAST(piece_count AS BIGINT) AS piece_count
       |FROM (VALUES ('d',3),('e',2),('est',9),('ew',6),('i',3),('l',0),
       |             ('low',7),('n',6),('o',0),('r',2),('s',0),('t',0),
@@ -1291,7 +1291,7 @@ object TextQueries {
           .cast("long").as("n_unk"))
   }
 
-  private[graft] val wordpieceTokenizeSql: String = {
+  private val wordpieceTokenizeSql: String = {
     val values = wpVocab.map(v => s"('$v')").mkString(",")
     val keyOf = (l: Int) =>
       s"CASE WHEN pos = 1 THEN substr(wd, pos, $l) ELSE '##' || substr(wd, pos, $l) END"
@@ -1352,7 +1352,7 @@ object TextQueries {
               (col("r").cast("double") / col("n").cast("double")).as("pct"))
   }
 
-  private[graft] val docLengthPercentileSql =
+  private val docLengthPercentileSql =
     """WITH t AS (
       |  SELECT doc_id,
       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1375,7 +1375,7 @@ object TextQueries {
     Lm.novelty(docs, "doc_id", "text", ref)
   }
 
-  private[graft] val lmNoveltySql =
+  private val lmNoveltySql =
     """WITH d AS (SELECT doc_id, lang,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents),
@@ -1423,7 +1423,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"),
               col("w").cast("double").as("w"), col("est_w"))
 
-  private[graft] val samplePrioritySql =
+  private val samplePrioritySql =
     """WITH d AS (SELECT doc_id, source,
       |    CAST(least(16, 1 + n_chars // 256) AS DOUBLE) AS w,
       |      (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 29, 1)) - 1) * 4096
@@ -1458,7 +1458,7 @@ object TextQueries {
                             segTokens = 8, num = 1, den = 4)
   }
 
-  private[graft] val stripBoilerplateSql =
+  private val stripBoilerplateSql =
     """WITH d AS (SELECT doc_id, source,
       |    'nav menu home login search contact about ' || source || ' ' || text AS text
       |  FROM documents),
@@ -1492,7 +1492,7 @@ object TextQueries {
       Tables.documents(spark, dir).select(col("doc_id"), col("source")),
       "source", "doc_id", trainPct = 80, valPct = 10)
 
-  private[graft] val stratifiedSplitSql =
+  private val stratifiedSplitSql =
     """WITH r AS (SELECT doc_id, source,
       |    ROW_NUMBER() OVER (PARTITION BY source
       |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
@@ -1528,7 +1528,7 @@ object TextQueries {
         .as("n_composed"))
   }
 
-  private[graft] val nfcNormalizeSoundSql =
+  private val nfcNormalizeSoundSql =
     """WITH d AS (SELECT doc_id,
       |    regexp_replace(text, 'e', 'e' || chr(769), 'g') AS dec
       |  FROM documents WHERE doc_id < 5000)
@@ -1561,7 +1561,7 @@ object TextQueries {
           TextFunctions.normalize(col("text")), merges)).as("pieces"))
   }
 
-  private[graft] val bpeEncodeSoundSql =
+  private val bpeEncodeSoundSql =
     """WITH d AS (SELECT doc_id,
       |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS ws
       |  FROM documents WHERE doc_id < 5000),
@@ -1612,7 +1612,7 @@ object TextQueries {
           TextFunctions.bpeTokenCount(col("text")).cast("long").as("n_tokens")),
       "source", "doc_id", "n_tokens", budget = 800L)
 
-  private[graft] val mixtureTokenBudgetSql =
+  private val mixtureTokenBudgetSql =
     """WITH t AS (SELECT doc_id, source,
       |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens
       |  FROM documents),
@@ -1648,7 +1648,7 @@ object TextQueries {
     m.historyRows.toDF("epoch", "feature", "weight")
   }
 
-  private[graft] val perceptronSoundSql =
+  private val perceptronSoundSql =
     """WITH v AS (SELECT
       |    CAST(doc_id % 5 - 2 AS DOUBLE) AS f1,
       |    CAST(doc_id % 7 - 3 AS DOUBLE) AS f2,
@@ -1699,7 +1699,7 @@ object TextQueries {
       .select(col("doc_id"), col("margin"))
   }
 
-  private[graft] val perceptronScoreSql =
+  private val perceptronScoreSql =
     """WITH f AS (SELECT doc_id,
       |  CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
       |    / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio,
@@ -1760,7 +1760,7 @@ object TextQueries {
       .toDF("feature", "weight")
   }
 
-  private[graft] val perceptronAvgSoundSql =
+  private val perceptronAvgSoundSql =
     """WITH v AS (SELECT
       |    CAST(doc_id % 5 - 2 AS DOUBLE) AS f1,
       |    CAST(doc_id % 7 - 3 AS DOUBLE) AS f2,
@@ -1823,7 +1823,7 @@ object TextQueries {
       .select(col("doc_id"), col("p_keep"))
   }
 
-  private[graft] val sampleByClassifierSql =
+  private val sampleByClassifierSql =
     """WITH f AS (SELECT doc_id,
       |  CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
       |    / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio,
@@ -1845,4 +1845,62 @@ object TextQueries {
       |SELECT doc_id, p_keep FROM p
       |WHERE bucket < CAST(floor(p_keep * 65536) AS BIGINT)""".stripMargin
 
+
+  // ------------------------------------------------------------ registry
+
+  val queries: Seq[Query] = Seq(
+    Query("text_token_count", textTokenCount, Oracle(textTokenCountSql)),
+    Query("text_lang_id", textLangId, Oracle(textLangIdSql)),
+    Query("text_quality", textQuality, Oracle(textQualitySql)),
+    Query("gopher_quality", gopherQuality, Oracle(gopherQualitySql)),
+    Query("blocklist_filter", blocklistFilter, Oracle(blocklistFilterSql)),
+    Query("text_fingerprint", textFingerprint, Oracle(textFingerprintSql)),
+    Query("split_train_test", splitTrainTest, Oracle(splitTrainTestSql)),
+    Query("pii_redact", piiRedact, Oracle(piiRedactSql)),
+    Query("pii_redact_luhn", piiRedactLuhn, Oracle(piiRedactLuhnSql)),
+    Query("vocab_top_words", vocabTopWords, Oracle(vocabTopWordsSql)),
+    Query("tfidf_top_term", tfidfTopTerm, Oracle(tfidfTopTermSql)),
+    Query("text_repetition", textRepetition, Oracle(textRepetitionSql)),
+    Query("doc_pack", docPack, Oracle(docPackSql)),
+    Query("doc_chunks", docChunks, Oracle(docChunksSql)),
+    Query("source_mixture", sourceMixture, Oracle(sourceMixtureSql)),
+    Query("quality_filter", qualityFilter, Oracle(qualityFilterSql)),
+    Query("bpe_top_pairs", bpeTopPairs, Oracle(bpeTopPairsSql)),
+    Query("lang_confusion", langConfusion, Oracle(langConfusionSql)),
+    Query("sample_by_quality", sampleByQuality, Oracle(sampleByQualitySql)),
+    Query("sample_priority", samplePriority, Oracle(samplePrioritySql)),
+    Query("dsir_fit", dsirFit, Oracle(dsirFitSql)),
+    Query("dsir_sound", dsirSound, Oracle(dsirSoundSql)),
+    Query("dsir_select", dsirSelect, GatedBy("dsir_fit", "dsir_sound")),
+    Query("lm_novelty", lmNovelty, Oracle(lmNoveltySql)),
+    Query("lm_perplexity", lmPerplexity, GatedBy("lm_novelty")),
+    Query("wordpiece_tokenize", wordpieceTokenize, Oracle(wordpieceTokenizeSql)),
+    Query("bpe_train_sound", bpeTrainSound, Oracle(bpeTrainSoundSql)),
+    Query("vocab_coverage", vocabCoverage, Oracle(vocabCoverageSql)),
+    Query("mixture_alpha", mixtureAlpha, Oracle(mixtureAlphaSql)),
+    Query("stratified_split", stratifiedSplit, Oracle(stratifiedSplitSql)),
+    Query("nfc_normalize_sound", nfcNormalizeSound, Oracle(nfcNormalizeSoundSql)),
+    Query("bpe_encode_sound", bpeEncodeSound, Oracle(bpeEncodeSoundSql)),
+    Query("bpe_encode", bpeEncode, GatedBy("bpe_encode_sound")),
+    Query("mixture_token_budget", mixtureTokenBudget, Oracle(mixtureTokenBudgetSql)),
+    Query("perceptron_sound", perceptronSound, Oracle(perceptronSoundSql)),
+    Query("perceptron_avg_sound", perceptronAvgSound, Oracle(perceptronAvgSoundSql)),
+    Query("perceptron_score", perceptronScore, Oracle(perceptronScoreSql)),
+    Query("perceptron_filter", perceptronFilter, GatedBy("perceptron_sound", "perceptron_score")),
+    Query("sample_by_classifier", sampleByClassifier, Oracle(sampleByClassifierSql)),
+    Query("quality_filter_approx", qualityFilterApprox, Oracle(qualityFilterApproxSql)),
+    Query("bpe_train", bpeTrain, GatedBy("bpe_train_sound")),
+    Query("unigram_train_sound", unigramTrainSound, Oracle(unigramTrainSoundSql)),
+    Query("unigram_train", unigramTrain, GatedBy("unigram_train_sound")),
+    Query("sample_per_source", samplePerSource, Oracle(samplePerSourceSql)),
+    Query("doc_length_histogram", docLengthHistogram, Oracle(docLengthHistogramSql)),
+    Query("mixture_rebalance", mixtureRebalance, Oracle(mixtureRebalanceSql)),
+    Query("rare_token_stats", rareTokenStats, Oracle(rareTokenStatsSql)),
+    Query("heavy_hitters_sound", heavyHittersSound, Oracle(heavyHittersSoundSql)),
+    Query("heavy_hitters", heavyHitters, GatedBy("heavy_hitters_sound")),
+    Query("pmi_top_pairs", pmiTopPairs, Oracle(pmiTopPairsSql)),
+    Query("mixture_drift", mixtureDrift, Oracle(mixtureDriftSql)),
+    Query("doc_length_percentile", docLengthPercentile, Oracle(docLengthPercentileSql)),
+    Query("strip_boilerplate", stripBoilerplate, Oracle(stripBoilerplateSql))
+  )
 }

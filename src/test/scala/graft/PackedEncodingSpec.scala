@@ -18,7 +18,7 @@ import graft.queries.TextQueries
   *    non-negative finite doubles ONLY — the inversions outside that
   *    domain are pinned here so the contract is test-visible, not just
   *    scaladoc.
-  *  - tfidf_top_term's DECIMAL(38,0) argmax key (Queries.scala): the
+  *  - tfidf_top_term's DECIMAL(38,0) argmax key (TextQueries.scala): the
   *    domain is closed by construction (score = tf/df, tf ≥ 1, df ≥ 1
   *    ⇒ score ∈ (0, finite]); a NEGATIVE or −0.0 score fed through the
   *    key overflows the ANSI long subtraction and raises — loud, not

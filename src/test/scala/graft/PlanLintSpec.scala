@@ -165,8 +165,8 @@ class PlanLintSpec extends SparkSpec {
 
   test("the engine's own flagship passes the hard gate") {
     PlanLint.requireClean(
-      Queries.all("pipeline_material_demand")(spark, sfDir))
-    PlanLint.requireClean(Queries.all("curate_pipeline")(spark, sfDir))
+      SparkEntry.queries("pipeline_material_demand")(spark, sfDir))
+    PlanLint.requireClean(SparkEntry.queries("curate_pipeline")(spark, sfDir))
   }
 
   test("lintExecuted sees a runtime SMJ->BHJ conversion lint() cannot") {

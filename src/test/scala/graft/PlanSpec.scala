@@ -8,7 +8,7 @@ import graft.queries.{DedupQueries, TextQueries}
 class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    Queries.all(name)(spark, sfDir).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
   test("batch quality gates evaluate the stats pass ONCE per row (Generate barrier)") {
     // the r14 IngestStream finding applied to the batch paths (r16,
@@ -319,7 +319,7 @@ class PlanSpec extends SparkSpec {
       // AQE prints codegen spans only once stages have executed —
       // collect() materializes THIS queryExecution (count() would
       // build a separate one and leave this plan unexecuted)
-      val df = Queries.all(q)(spark, sfDir)
+      val df = SparkEntry.queries(q)(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       // executed AQE plans print codegen spans as "*(n) Operator"

@@ -4,7 +4,7 @@ import graft.queries.RelationalQueries
 class RelationalSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    Queries.all(name)(spark, sfDir).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
   test("q3/q5 broadcast their dimension sides") {
     assert(plan("q3_shipping_priority").contains("BroadcastHashJoin"))

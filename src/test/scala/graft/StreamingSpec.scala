@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
       .where(col("event_type") =!= "sentinel")
       .select("event_id", "user_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val batch = Queries.all("events_compact_changes")(spark, sfDir)
+    val batch = SparkEntry.queries("events_compact_changes")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val missing = batch -- streamed
     val extra = streamed -- batch

@@ -7,6 +7,10 @@ For each query in oracle_sql.json: register each parquet table as a
 DuckDB view, run the oracle SQL, load the Spark parquet result, sort
 columns by name, sort rows, and compare cell-by-cell (exact for
 non-floats, exact-bits for floats so we see hash risk early).
+
+If the dir also holds gated_by.json (query without an oracle -> its
+oracle twins, written by graft.Verify), each such query passes when its
+output has at least one row and every twin passed above.
 """
 import json, sys, glob, os
 import duckdb
@@ -50,7 +54,7 @@ def main(sf_dir, out_dir):
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_ok = 0
+    passed = set()
     for name, sql in sorted(oracles.items()):
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
@@ -95,9 +99,29 @@ def main(sf_dir, out_dir):
         if bad:
             print(f"FAIL {name}: {bad[:3]}")
         else:
-            n_ok += 1
+            passed.add(name)
             print(f"OK   {name} ({len(o)} rows)")
-    print(f"{n_ok}/{len(oracles)} ok")
+    print(f"{len(passed)}/{len(oracles)} ok")
+    gated_file = f"{out_dir}/gated_by.json"
+    if os.path.exists(gated_file):
+        check_gated(con, out_dir, json.load(open(gated_file)), passed)
+
+def check_gated(con, out_dir, gated, passed):
+    n_ok = 0
+    for name, twins in sorted(gated.items()):
+        res_dir = f"{out_dir}/{name}"
+        if not glob.glob(f"{res_dir}/*.parquet"):
+            print(f"FAIL {name}: no spark output"); continue
+        rows = con.execute(f"SELECT count(*) FROM read_parquet('{res_dir}/*.parquet')").fetchone()[0]
+        failed = [t for t in twins if t not in passed]
+        if rows == 0:
+            print(f"FAIL {name}: no rows")
+        elif failed:
+            print(f"FAIL {name}: twin(s) failed: {', '.join(failed)}")
+        else:
+            n_ok += 1
+            print(f"OK   {name} ({rows} rows, gated by {', '.join(twins)})")
+    print(f"{n_ok}/{len(gated)} gated ok")
 
 if __name__ == "__main__":
     main(sys.argv[1], sys.argv[2])
