@@ -1,64 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.obs.Profile
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. A small untimed warmup first — the first
   * query in a fresh JVM otherwise pays ~5s of classloading + codegen
   * that has nothing to do with the query being measured. */
 object Bench {
-
-  /** Sums executor task CPU time (ns) and task run time (ms) across
-    * all tasks. CPU time is the PRIMARY cross-round comparator (r18
-    * verdict item 1): executorRunTime is task WALL duration, which
-    * inflates under the very CPU oversubscription / I/O contention it
-    * was adopted to see through — the r18 driver capture summed 527
-    * task-s where the same-commit quiet capture summed 200.4 task-s.
-    * executorCpuTime is actual on-CPU nanoseconds and is stable across
-    * ambient load; runTime and wall stay as context. */
-  private final class TaskClock extends org.apache.spark.scheduler.SparkListener {
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) { runMs.addAndGet(m.executorRunTime); cpuNs.addAndGet(m.executorCpuTime) }
-    }
-  }
-
-  /** True iff the listener-bus reflection path has never failed; when
-    * false, per-query task attribution may bleed across query windows
-    * (advice r18: a silent 50 ms sleep fallback would leave the primary
-    * comparator mis-attributed with no indication in the output). */
-  @volatile private var listenerDrainOk = true
-
-  /** Drain the async listener bus so task-end events land in the
-    * query window that ran them (reflection: waitUntilEmpty is
-    * private[spark]; fall back to a short sleep, but flag it). */
-  private def drainListeners(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val busM = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-      val bus = busM.invoke(sc)
-      val wait0 = bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      wait0 match {
-        case Some(w) => w.invoke(bus)
-        case None => bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          .getOrElse(throw new NoSuchMethodException("waitUntilEmpty"))
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-      }
-    } catch { case _: Throwable =>
-      if (listenerDrainOk) {
-        listenerDrainOk = false
-        System.err.println(
-          "BENCH WARN: listenerBus.waitUntilEmpty reflection failed - " +
-          "per-query task_ms/task_cpu_ms may bleed across query windows " +
-          "(task_ms_drained:false in output)")
-      }
-      Thread.sleep(50)
-    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -161,46 +110,41 @@ object Bench {
     val loadBefore = loadavg()
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val clock = new TaskClock
-    spark.sparkContext.addSparkListener(clock)
-    drainListeners(spark) // flush warmup task events before pass 1
-    // per pass per query: (name, wall sec, task run ms, task cpu ms)
-    val suiteRuns: Seq[Seq[(String, Double, Long, Long)]] = (1 to passes).map { _ =>
+    // per pass per query: (wall sec, profile). Task CPU time is the
+    // PRIMARY cross-round comparator (r18 verdict item 1): task run time
+    // is task WALL duration and inflates under contention (the r18
+    // driver capture summed 527 task-s where the same commit quiet summed
+    // 200.4); CPU ns are stable across ambient load. Jobs and Exchanges
+    // are counts and repeat exactly across passes.
+    val suiteRuns: Seq[Seq[(Double, Profile)]] = (1 to passes).map { _ =>
       named.map { case (name, fn) =>
-        val tr0 = clock.runMs.get(); val tc0 = clock.cpuNs.get()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case t: Throwable =>
-                   System.err.println(s"BENCH FAIL $name: $t"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (dt, prof) = Profile.capture(spark) {
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case t: Throwable =>
+            System.err.println(s"BENCH FAIL $name: $t"); -1.0 } // -1 marks a failed query
+        }
         Blocks.freeAll(spark) // caches AND checkpoint blocks — clearCache
         // alone left every dedup query's member-table checkpoint resident
         // for the JVM lifetime, making later queries' times depend on
         // suite position (r4 regression)
-        drainListeners(spark) // attribute task-end events to THIS query
-        val taskMs = clock.runMs.get() - tr0
-        val cpuMs = (clock.cpuNs.get() - tc0) / 1000000L
-        (name, if (ok) dt else -1.0, taskMs, cpuMs) // -1 marks a failed query
+        (dt, prof)
       }
     }
-    // any failed run fails the query; otherwise best (min) across runs.
-    // task_cpu_ms takes the min across passes independently of wall (CPU
-    // is the stable signal — pairing it to the wall-winning pass would
-    // re-import wall noise); task_ms (runTime) pairs with the winning
-    // wall pass as before, kept for cross-round continuity/context.
-    val runsOf = named.map { case (name, _) =>
-      name -> suiteRuns.map(_.find(_._1 == name).get) }
-    val results = runsOf.map { case (name, runs) =>
-      name -> (if (runs.exists(_._2 < 0)) -1.0 else runs.map(_._2).min)
-    }
-    val taskMsOf = runsOf.map { case (name, runs) =>
-      name -> (if (runs.exists(_._2 < 0)) -1L
-               else runs.minBy(_._2)._3)
-    }
-    val cpuMsOf = runsOf.map { case (name, runs) =>
-      name -> (if (runs.exists(_._2 < 0)) -1L
-               else runs.map(_._4).min)
-    }
+    // any failed run fails the query (-1); otherwise best (min) across
+    // runs. task_cpu_ms takes the min across passes independently of
+    // wall (CPU is the stable signal — pairing it to the wall-winning
+    // pass would re-import wall noise); task_ms (runTime) pairs with the
+    // winning wall pass, kept for cross-round continuity/context; jobs
+    // and exchanges are the last pass's (per_pass holds every pass's).
+    val runsOf = named.map(_._1).zip(suiteRuns.transpose)
+    def perQuery[V](failed: V)(f: Seq[(Double, Profile)] => V): Seq[(String, V)] =
+      runsOf.map { case (name, runs) => name -> (if (runs.exists(_._1 < 0)) failed else f(runs)) }
+    val results = perQuery(-1.0)(_.map(_._1).min)
+    val taskMsOf = perQuery(-1L)(_.minBy(_._1)._2.taskRunMs)
+    val cpuMsOf = perQuery(-1L)(_.map(_._2.taskCpuNs).min / 1000000L)
+    val jobsOf = perQuery(-1L)(_.last._2.jobs.toLong)
+    val exchangesOf = perQuery(-1L)(_.last._2.exchanges.toLong)
     val loadAfter = loadavg()
     val (steal1, ticks1) = cpuTicks()
     val stealPct =
@@ -245,34 +189,28 @@ object Bench {
       }.mkString("{", ",", "}")
       s""""calibration":{"reference":"r15 quiet bench_results.json @ e96ca7a","controls":$rows,"machine_factor":${fmt(machineFactor)}}"""
     }
-    // per-query executor task CPU time: the PRIMARY cross-round
-    // comparator (r18 verdict item 1; see TaskClock doc). task_ms
-    // (runTime) and wall stay as context.
-    val cpuJson = cpuMsOf
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val taskJson = taskMsOf
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def longsJson(rs: Seq[(String, Long)]): String =
+      rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val taskTotalSec = taskMsOf.map(_._2).filter(_ >= 0).sum / 1e3
     val cpuTotalSec = cpuMsOf.map(_._2).filter(_ >= 0).sum / 1e3
     // per-pass per-query detail (r18 verdict item 1: BOTH r18 driver
     // passes were >=26 s on grep_regex_probe and nothing recorded could
-    // localize it to a pass) — [wall sec, task run ms, task cpu ms]
-    // per pass, bench_results.json only
-    val passJson = named.map { case (name, _) =>
-      val rows = suiteRuns.map { run =>
-        val (_, w, r, c) = run.find(_._1 == name).get
-        s"[${fmt(w)},$r,$c]"
+    // localize it to a pass) — [wall sec, task run ms, task cpu ms,
+    // jobs, exchanges] per pass, bench_results.json only
+    val passJson = runsOf.map { case (name, runs) =>
+      val rows = runs.map { case (w, p) =>
+        s"[${fmt(w)},${p.taskRunMs},${p.taskCpuNs / 1000000L},${p.jobs},${p.exchanges}]"
       }.mkString("[", ",", "]")
       s"\"" + name + "\":" + rows
     }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","task_cpu_total_sec":${fmt(cpuTotalSec)},"task_total_sec":${fmt(taskTotalSec)},"task_ms_drained":$listenerDrainOk,"queries":${qsJson(results)},"task_cpu_ms":$cpuJson,"task_ms":$taskJson,"per_pass":$passJson,"sf":"$sfDir","passes":$passes,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal_pct":${fmt(stealPct)},$calJson}"""
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","task_cpu_total_sec":${fmt(cpuTotalSec)},"task_total_sec":${fmt(taskTotalSec)},"queries":${qsJson(results)},"task_cpu_ms":${longsJson(cpuMsOf)},"task_ms":${longsJson(taskMsOf)},"jobs":${longsJson(jobsOf)},"exchanges":${longsJson(exchangesOf)},"per_pass":$passJson,"sf":"$sfDir","passes":$passes,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal_pct":${fmt(stealPct)},$calJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_results.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(_) => () }
     val failed = results.filter(_._2 < 0)
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(20).sortBy(_._1)
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","task_cpu_total_sec":${fmt(cpuTotalSec)},"task_total_sec":${fmt(taskTotalSec)},"task_ms_drained":$listenerDrainOk,"n_queries":${results.size},"n_failed":${failed.size},"machine_factor":${fmt(machineFactor)},"queries":${qsJson(failed ++ slowest)},"full":"bench_results.json","sf":"$sfDir","passes":$passes,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal_pct":${fmt(stealPct)}}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","task_cpu_total_sec":${fmt(cpuTotalSec)},"task_total_sec":${fmt(taskTotalSec)},"n_queries":${results.size},"n_failed":${failed.size},"machine_factor":${fmt(machineFactor)},"queries":${qsJson(failed ++ slowest)},"full":"bench_results.json","sf":"$sfDir","passes":$passes,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal_pct":${fmt(stealPct)}}"""
     println(line)
     spark.stop()
   }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.sources.{Manifest, MetaTable, AnnIndex, InvertedIndex,
   SegmentCatalog}
+import graft.Decision
 import graft.functions.TextFunctions
+import graft.obs.Profile
 
 /** Incremental curation: the production form of the one-shot
   * `curate_pipeline` flagship (#65). Each arriving batch runs
@@ -167,6 +169,9 @@ object Curate {
     * already-committed one when the batch's note is found on a
     * retained version — the replay path). An EMPTY input batch is a
     * no-op returning the current version (−1 before any commit).
+    * Each index append records a `curate.ann` / `curate.inv`
+    * [[graft.Decision]]: replayed, skipped (nothing to add), built or
+    * appended.
     *
     * `annMaxSegments` / `invMaxSegments` > 0 opt into inline index
     * auto-compaction AFTER the batch's atomic publish (the
@@ -302,8 +307,8 @@ object Curate {
     // then.
     // embeddings are corpus-aligned, not batch-carried, so this join
     // is unavoidable
-    val annBatch =
-      embeddings.join(accepted.select(col("doc_id").as("vec_id")), "vec_id")
+    val annBatch = embeddings.join(accepted.select(col("doc_id").as("vec_id")), "vec_id")
+      .select(col("vec_id"), col("embedding"))
     // the two index appends are INDEPENDENT (separate Manifest roots,
     // separate replay notes, inputs derived from the already-
     // checkpointed `budgeted`) and each is a sequence of small
@@ -313,24 +318,15 @@ object Curate {
     // them from two driver threads overlaps those job latencies;
     // Spark job submission is thread-safe and the scheduler
     // interleaves the small stages.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val annF = Future {
-      AnnIndex.segments.notedVersion(spark, roots.ann, note0).getOrElse {
-        val exists = Manifest.currentVersion(spark, roots.ann).isDefined
-        // accepted docs may lack embeddings: only the join can tell
-        if (nAccepted == 0 || annBatch.isEmpty)
-          Manifest.currentVersion(spark, roots.ann).getOrElse(-1L)
-        else if (!exists)
-          AnnIndex.build(spark,
-            annBatch.select(col("vec_id"), col("embedding")),
-            roots.ann, cells = annCells, nFiles = nFiles, note = note0)
-        else
-          AnnIndex.append(spark, roots.ann,
-            annBatch.select(col("vec_id"), col("embedding")),
-            nFiles = nFiles, note = note0).version
+    def indexVersion(op: String)(replayed: Option[Long], current: => Option[Long],
+                                 skip: => Boolean)(build: => Long, append: => Long): Long = {
+      val (route, v) = replayed.map(("replayed", _)).getOrElse {
+        if (skip) ("skipped", current.getOrElse(-1L))
+        else if (current.isEmpty) ("built", build)
+        else ("appended", append)
       }
+      Decision.record(Decision(op, route, 0, 0))
+      v
     }
     // accepted texts come off a CHECKPOINT, never a re-join of the raw
     // batch: the old batch⋈accepted form shuffled the batch's full
@@ -338,21 +334,23 @@ object Curate {
     // 1.67M-doc batch inside the dominant inv-append stage), so
     // `accepted` re-filters the budgeted checkpoint (join-free)
     val invBatch = accepted.select(col("doc_id"), col("text"))
-    val invF = Future {
-      InvertedIndex.segments.notedVersion(spark, roots.inv, note0).getOrElse {
-        val exists = Manifest.currentVersion(spark, roots.inv).isDefined
-        if (nAccepted == 0)
-          Manifest.currentVersion(spark, roots.inv).getOrElse(-1L)
-        else if (!exists)
-          InvertedIndex.build(spark, invBatch, roots.inv, nBuckets = nFiles,
-            nFiles = nFiles, note = note0)
-        else
-          InvertedIndex.append(spark, roots.inv, invBatch, nFiles = nFiles,
-            note = note0)
-      }
-    }
-    val annV = Await.result(annF, Duration.Inf)
-    val invV = Await.result(invF, Duration.Inf)
+    val (annV, invV) = Profile.both(spark)(
+      indexVersion("curate.ann")(
+        AnnIndex.segments.notedVersion(spark, roots.ann, note0),
+        Manifest.currentVersion(spark, roots.ann),
+        // accepted docs may lack embeddings: only the join can tell
+        nAccepted == 0 || annBatch.isEmpty)(
+        AnnIndex.build(spark, annBatch, roots.ann, cells = annCells,
+          nFiles = nFiles, note = note0),
+        AnnIndex.append(spark, roots.ann, annBatch, nFiles = nFiles, note = note0).version),
+      indexVersion("curate.inv")(
+        InvertedIndex.segments.notedVersion(spark, roots.inv, note0),
+        Manifest.currentVersion(spark, roots.inv),
+        nAccepted == 0)(
+        InvertedIndex.build(spark, invBatch, roots.inv, nBuckets = nFiles,
+          nFiles = nFiles, note = note0),
+        InvertedIndex.append(spark, roots.inv, invBatch, nFiles = nFiles,
+          note = note0)))
 
     // ---- stage 6: ONE atomic publish for the batch (catalog + state +
     // meta are all metadata-sized; the data went to _segments/ above)

@@ -112,47 +112,8 @@ object Dedup {
     * roughly (executor memory × partitions) / pair-row-size pairs
     * (~10⁹ pairs per TB of executor heap at 32 B/pair), pass
     * `"merge"`: sort-merge spills both sides and only pays an extra
-    * sort. Results are identical either way (DedupSpec pins this).
-    * `"auto"` lets the engine decide — see [[resolvePairHint]]. */
+    * sort. Results are identical either way (DedupSpec pins this). */
 
-  /** Resolution of `pairJoinHint = "auto"`: the engine can pick the
-    * SHJ/merge inversion point itself, because the variable that
-    * decides it — the distinct candidate-pair count — is computed
-    * anyway before the payload joins are planned. SHJ wins while the
-    * per-partition build table fits execution memory: at ~32 B per
-    * (long, long) build row, the default 2M pairs/partition ≈ 64 MB,
-    * comfortably inside a default executor's execution-memory share.
-    * Past numShufflePartitions × perPartition pairs, auto flips to
-    * sort-merge (spills both sides, pays one extra sort, cannot OOM).
-    * The count costs one extra job over the persisted bare-long pair
-    * stream — noise next to the band join that produced it; explicit
-    * hints skip the count entirely. The flip point is tunable via the
-    * session conf `spark.graft.autoShjPairsPerPartition` (DedupSpec
-    * forces a flip by setting it to 0). */
-  private final val AutoShjPairsPerPartition = 2000000L
-
-  private def resolvePairHint(hint: String,
-                              cands: DataFrame): (DataFrame, String) = {
-    if (hint != "auto") (cands, hint)
-    else {
-      val sess = cands.sparkSession
-      // persist ONLY for the duration of the count, then release: a
-      // persisted handle returned to the caller leaks one cached pair
-      // table per auto call in sessions that never call Blocks.freeAll
-      // (r6 advice). The downstream payload joins re-derive from
-      // lineage — cheaply, because the count already wrote the band
-      // join's shuffle files and recomputation of the same RDD lineage
-      // reuses them (the map stages show as "skipped" in the UI), so
-      // releasing the cache costs a shuffle re-read, not a re-join.
-      val cached = cands.persist()
-      val n = try cached.count() finally cached.unpersist(blocking = true)
-      val perPart = sess.conf
-        .get("spark.graft.autoShjPairsPerPartition",
-             AutoShjPairsPerPartition.toString).toLong
-      val parts = sess.sessionState.conf.numShufflePartitions
-      (cands, if (n > parts.toLong * perPart) "merge" else "shuffle_hash")
-    }
-  }
   /** Exact-dup-collapsed member table, the shared prep of the minhash
     * family: (id, gid) for every doc (two longs — feeds the expansion
     * joins) plus the two independent shingle-hash families (double
@@ -222,21 +183,20 @@ object Dedup {
     // BOTH sides, so it stays sort-merge (spillable) — stats-driven
     // broadcast of a "small" test-scale input would hide the scale
     // plan from the plan guards.
-    val candsRaw = banded.as("a")
+    val cands = banded.as("a")
       .join(banded.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
-    val cands = cands0.hint(hint)
+      .hint(pairJoinHint)
     // jaccard over shingle-hash SETS (intersect/union dedupe) — equal
     // to string-shingle jaccard modulo 64-bit collisions
     val upairs = cands
       .join(withShingles.select(col("id"), col("sh1").as("sh_a")),
             col("doc_a") === col("id")).drop("id")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(withShingles.select(col("id"), col("sh1").as("sh_b")),
             col("doc_b") === col("id")).drop("id")
       .withColumn("jaccard",
@@ -257,9 +217,9 @@ object Dedup {
       .distinct()
       .where(lit(1.0) >= tau)
     upairs.union(dupGroups)
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(mem.select(col("gid").as("doc_a"), col("id").as("ida")), "doc_a")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(mem.select(col("gid").as("doc_b"), col("id").as("idb")), "doc_b")
       .where(col("doc_a") =!= col("doc_b") || col("ida") < col("idb"))
       .select(least(col("ida"), col("idb")).as("doc_a"),
@@ -293,17 +253,16 @@ object Dedup {
     val (keepB, bandB) = bandedKeepers(memB, numHashes, bands, rows)
     // candidate (groupA, groupB) pairs: corpus-sized on both sides →
     // pinned sort-merge; distinct on bare longs before payloads attach
-    val candsRaw = bandA.as("a")
+    val cands = bandA.as("a")
       .join(bandB.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash"))
       .select(col("a.id").as("ga"), col("b.id").as("gb"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
-    val verified = cands0.hint(hint)
+    val verified = cands.hint(pairJoinHint)
       .join(keepA.select(col("id"), col("sh1").as("sh_a")),
             col("ga") === col("id")).drop("id")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(keepB.select(col("id"), col("sh1").as("sh_b")),
             col("gb") === col("id")).drop("id")
       .withColumn("jaccard",
@@ -312,9 +271,9 @@ object Dedup {
       .where(col("jaccard") >= tau)
       .select(col("ga"), col("gb"), col("jaccard"))
     verified
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(memA.select(col("gid").as("ga"), col("id").as("doc_a")), "ga")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(memB.select(col("gid").as("gb"), col("id").as("doc_b")), "gb")
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
@@ -805,7 +764,7 @@ object Dedup {
     val uniques = members.where(col("id") === col("gid"))
       .select(col("gid").as("id"), col("vec"))
     val banded = bandedBuckets(uniques, "id", "vec", bands, rows, dim)
-    val candsRaw = banded.as("a")
+    val cands = banded.as("a")
       .join(banded.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
@@ -813,11 +772,10 @@ object Dedup {
           expr("bit_count(a.bucket ^ b.bucket)") <= maxDiffBits)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
-    val upairs = cands0.hint(hint)
+    val upairs = cands.hint(pairJoinHint)
       .join(uniques.select(col("id"), col("vec").as("vec_a")),
             col("id_a") === col("id")).drop("id")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(uniques.select(col("id"), col("vec").as("vec_b")),
             col("id_b") === col("id")).drop("id")
       .select(col("id_a"), col("id_b"), cosine(col("vec_a"), col("vec_b")).as("cos"))
@@ -834,9 +792,9 @@ object Dedup {
       .distinct()
       .where(col("cos") >= tau)
     upairs.union(dupGroups)
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(members.select(col("gid").as("id_a"), col("id").as("ida")), "id_a")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(members.select(col("gid").as("id_b"), col("id").as("idb")), "id_b")
       .where(col("id_a") =!= col("id_b") || col("ida") < col("idb"))
       .select(least(col("ida"), col("idb")).as("id_a"),
@@ -874,27 +832,26 @@ object Dedup {
     }
     val (memA, uniqA, bandA) = prep(embA)
     val (memB, uniqB, bandB) = prep(embB)
-    val candsRaw = bandA.as("a")
+    val cands = bandA.as("a")
       .join(bandB.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           expr("bit_count(a.bucket ^ b.bucket)") <= maxDiffBits)
       .select(col("a.id").as("ga"), col("b.id").as("gb"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
-    val verified = cands0.hint(hint)
+    val verified = cands.hint(pairJoinHint)
       .join(uniqA.select(col("id"), col("vec").as("vec_a")),
             col("ga") === col("id")).drop("id")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(uniqB.select(col("id"), col("vec").as("vec_b")),
             col("gb") === col("id")).drop("id")
       .select(col("ga"), col("gb"),
               cosine(col("vec_a"), col("vec_b")).as("cos"))
       .where(col("cos") >= tau)
     verified
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(memA.select(col("gid").as("ga"), col("id").as("id_a")), "ga")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(memB.select(col("gid").as("gb"), col("id").as("id_b")), "gb")
       .select(col("id_a"), col("id_b"), col("cos"))
   }
@@ -957,8 +914,7 @@ object Dedup {
     * weighted vocab df agg → df-capped rejoin → k-rarest probe join →
     * bare (ga,gb) distinct → full-set verify via array_intersect →
     * member expansion. Payload joins after the distinct follow
-    * `pairJoinHint` ("auto" counts the bounded pair stream and picks
-    * SHJ vs sort-merge, [[resolvePairHint]]). */
+    * `pairJoinHint`. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        dfNum: Int = 1, dfDen: Int = 5, minNum: Int = 1,
                        minDen: Int = 2, maxJoinTokens: Int = 16,
@@ -1012,20 +968,19 @@ object Dedup {
       }
     // probe join stays sort-merge (both sides corpus-sized, spillable);
     // the distinct ships bare (long, long) pairs only
-    val candsRaw = probes.as("a")
+    val cands = probes.as("a")
       .join(rare.select(col("doc"), col("tok")).as("b").hint("merge"),
         col("a.tok") === col("b.tok") && col("a.doc") =!= col("b.doc"))
       .select(col("a.doc").as("ga"), col("b.doc").as("gb"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
     // exact shared-token count over the FULL capped vocabulary: expand
     // each candidate pair by A's rare tokens, match against B's on
     // (doc, tok), count — a streaming token-match count (the
     // pre-probe formulation's shape, restricted to candidates), all
     // bare longs + strings, no array aggregation anywhere
-    val verified = cands0.hint(hint)
+    val verified = cands.hint(pairJoinHint)
       .join(rare.select(col("doc").as("ga"), col("tok")), "ga")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(rare.select(col("doc").as("gb"), col("tok")), Seq("gb", "tok"))
       .groupBy("ga", "gb").agg(count(lit(1)).as("shared"))
       .join(sizes.withColumnRenamed("doc", "ga"), "ga")
@@ -1040,7 +995,7 @@ object Dedup {
       .select(col("doc").as("ga"), col("doc").as("gb"),
               lit(1.0).as("containment"))
       .where(lit(minDen) >= lit(minNum))
-    // member expansion pinned sort-merge, NOT `hint`: the pair hint's
+    // member expansion pinned sort-merge, NOT `pairJoinHint`: the pair hint's
     // sizing variable is the candidate-pair count, but these joins'
     // left side is member-expanded (pairs × group depth) and `mem` is
     // corpus-sized — at the 1000× tier (1000-deep dup groups) the
@@ -1131,15 +1086,14 @@ object Dedup {
         rareA.withColumn("rn", row_number().over(kw))
           .where(col("rn") <= maxJoinTokens).select("doc", "tok")
       }
-    val candsRaw = probes.as("a")
+    val cands = probes.as("a")
       .join(rareB.select(col("doc"), col("tok")).as("b").hint("merge"),
             col("a.tok") === col("b.tok"))
       .select(col("a.doc").as("ga"), col("b.doc").as("gb"))
       .distinct()
-    val (cands0, hint) = resolvePairHint(pairJoinHint, candsRaw)
-    cands0.hint(hint)
+    cands.hint(pairJoinHint)
       .join(rareA.select(col("doc").as("ga"), col("tok")), "ga")
-      .hint(hint)
+      .hint(pairJoinHint)
       .join(rareB.select(col("doc").as("gb"), col("tok")), Seq("gb", "tok"))
       .groupBy("ga", "gb").agg(count(lit(1)).as("shared"))
       .join(sizesA.withColumnRenamed("doc", "ga"), "ga")
@@ -1147,7 +1101,7 @@ object Dedup {
       .select(col("ga"), col("gb"),
         (col("shared").cast("double") / col("n_a").cast("double"))
           .as("containment"))
-      // member expansion pinned sort-merge (not `hint`) — the
+      // member expansion pinned sort-merge (not `pairJoinHint`) — the
       // containmentPairs rationale: member-expanded left + corpus-
       // sized member maps must never hash-build
       .hint("merge")

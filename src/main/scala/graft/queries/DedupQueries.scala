@@ -1183,8 +1183,8 @@ object DedupQueries {
     * fixed slice above) because BOTH sides of the compare are
     * quadratic-ish on this deliberately dup-dense corpus — at sf0.1
     * the unbounded pair count is ~1M and the bench line would be all
-    * gate, no signal. The UNBOUNDED form is probed by Scale100 over
-    * the full 500k-doc table (collapse-first, 26 s zero-spill). */
+    * gate, no signal. The UNBOUNDED form was probed at 100× over the
+    * full 500k-doc table (collapse-first, 26 s zero-spill; SCALE100.md). */
   def jaccardJoinExact(spark: SparkSession, dir: String): DataFrame =
     operators.SetJoin.prefixJaccardSelfJoin(
       Tables.documents(spark, dir).where(col("doc_id") < 2000),
@@ -1402,8 +1402,8 @@ object DedupQueries {
     // precedent): the DuckDB twin mirrors the k-rarest candidate
     // generation with three corpus-wide self-joins — fine at 20k docs,
     // >20 min at the 100x 500k-doc set. The bound covers the WHOLE
-    // table at the driver's sf0.01 gate; the unbounded operator is
-    // probed at 100x by Scale100 (10.9 s / 545 MB).
+    // table at the driver's sf0.01 gate; the unbounded operator was
+    // probed at 100x (10.9 s / 545 MB; SCALE100.md).
     Dedup.containmentPairs(
       Tables.documents(spark, dir).where(col("doc_id") < 20000),
       "doc_id", "text",

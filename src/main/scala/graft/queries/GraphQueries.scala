@@ -946,8 +946,8 @@ object GraphQueries {
     // at every driver SF (sf0.01 max 14999, sf0.1 max 149999) and
     // selects the first full copy at the 100x derived set — where the
     // DuckDB twin's co-occurrence self-join previously spilled ~70 GB
-    // and died unbounded. The unbounded engine path stays probed by
-    // Scale100/Scale1000.
+    // and died unbounded. The unbounded engine path was probed at 100x
+    // (SCALE100.md) and stays probed by Scale1000.
     // co-occurrence via Graph.coOccurrencePairs (r13): the r8-r12
     // collect_set + in-row expansion planned as ObjectHashAggregate,
     // whose sort fallback (128-key threshold) sorts the whole fact

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.TextFunctions
+import graft.obs.Profile
 import graft.queries.DedupQueries.{annBruteforceTopkSql, annQueries}
 
 /** Persisted-index (grep, BM25, ANN) and curation-pipeline queries. */
@@ -419,12 +420,9 @@ object IndexQueries {
       val ac = a.localCheckpoint(); val bc = b.localCheckpoint()
       ac.except(bc).union(bc.except(ac)).isEmpty
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // ANN: the thrice-appended index probed losslessly must equal
     // brute force over exactly the curated vectors
-    val annOkF = Future {
+    def annProbeOk: Boolean = {
       val finalVecs = emb
         .join(corpus.select(col("doc_id").as("vec_id")), "vec_id")
         .select(col("vec_id"), col("embedding")).localCheckpoint()
@@ -443,7 +441,7 @@ object IndexQueries {
     // verify spent ~17% of this gate on second-index writes; the
     // probe-vs-independent-recompute is the same append==rebuild
     // strength (stronger on tokenization identity) with zero writes.
-    val bm25OkF = Future {
+    def bm25ProbeOk: Boolean = {
       val finalDocs = derived
         .join(corpus.select(col("doc_id")), "doc_id")
         .select(col("doc_id"), col("text"))
@@ -452,8 +450,7 @@ object IndexQueries {
       val pD = bm25DirectTopK(finalDocs, terms, 10)
       sameRows(pA, pD)
     }
-    val annOk = Await.result(annOkF, Duration.Inf)
-    val bm25Ok = Await.result(bm25OkF, Duration.Inf)
+    val (annOk, bm25Ok) = Profile.both(spark)(annProbeOk, bm25ProbeOk)
     corpus.select(col("doc_id"), col("source"), col("quality"))
       .withColumn("ann_probe_ok", lit(annOk))
       .withColumn("bm25_probe_ok", lit(bm25Ok))

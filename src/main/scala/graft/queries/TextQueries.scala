@@ -1278,8 +1278,8 @@ object TextQueries {
     val toks = Wordpiece.tokenizeNative(col("text"), wpVocab)
     // bounded gate corpus (the dedup_simhash_sound rule): the DuckDB
     // twin is a RECURSIVE per-character MaxMatch — fine at 20k docs,
-    // an OOM at the 100x set. The unbounded native path is probed at
-    // 100x by Scale100 (15.8 s, and the native==HOF identity spec).
+    // an OOM at the 100x set. The unbounded native path was probed at
+    // 100x (15.8 s; SCALE100.md); the native==HOF identity spec pins it.
     Tables.documents(spark, dir).where(col("doc_id") < 20000)
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 import graft.functions.expressions.WordShingleHashes
+import graft.obs.Profile
 import graft.operators.{Dedup, Similarity}
 
 class DedupSpec extends SparkSpec {
@@ -70,13 +71,9 @@ class DedupSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try {
-      Dedup.minhashPairs(docs(), "doc_id", "text")
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(60000L))
-    } finally spark.listenerManager.unregister(listener)
+    // the capture drains the listener bus, so the checkpoint's event has landed
+    try Profile.capture(spark)(Dedup.minhashPairs(docs(), "doc_id", "text"))
+    finally spark.listenerManager.unregister(listener)
     assert(checkpoints.size === 1)
     val exprs = checkpoints.asScala.head.optimizedPlan
       .flatMap(_.expressions).flatMap(_.collect { case e => e })
@@ -255,43 +252,6 @@ class DedupSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
     assert(planOf("merge").contains("SortMergeJoin"))
     assert(planOf("shuffle_hash").contains("ShuffledHashJoin"))
-  }
-
-  test("auto pairJoinHint: SHJ under the flip point, merge past it, same rows") {
-    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 300)
-    val base = Dedup.minhashPairs(docs, "doc_id", "text",
-        pairJoinHint = "shuffle_hash")
-      .as[(Long, Long, Double)].collect().toSet
-    // under the default flip point the pair stream is tiny → SHJ
-    val auto = Dedup.minhashPairs(docs, "doc_id", "text", pairJoinHint = "auto")
-    assert(auto.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"))
-    assert(auto.as[(Long, Long, Double)].collect().toSet === base)
-    // force the inversion a dup-heavy corpus would hit for real: flip
-    // point 0 declares ANY pair volume too big for an in-memory build
-    // — auto must fall back to sort-merge with identical rows
-    spark.conf.set("spark.graft.autoShjPairsPerPartition", "0")
-    try {
-      val flipped = Dedup.minhashPairs(docs, "doc_id", "text",
-                                       pairJoinHint = "auto")
-      val plan = flipped.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"auto did not flip to merge\n$plan")
-      assert(!plan.contains("ShuffledHashJoin"), s"SHJ survived the flip\n$plan")
-      assert(flipped.as[(Long, Long, Double)].collect().toSet === base)
-    } finally spark.conf.unset("spark.graft.autoShjPairsPerPartition")
-
-    // the auto count's temporary persist must not outlive the call
-    // (r6 advice: it leaked one cached pair table per auto call in
-    // sessions that never run Blocks.freeAll). An auto-hinted call may
-    // leave exactly the persistent blocks an explicitly hinted one
-    // does (member-table checkpoints) — nothing more.
-    Blocks.freeAll(spark)
-    Dedup.minhashPairs(docs, "doc_id", "text",
-      pairJoinHint = "shuffle_hash").count()
-    val afterExplicit = spark.sparkContext.getPersistentRDDs.size
-    Blocks.freeAll(spark)
-    Dedup.minhashPairs(docs, "doc_id", "text", pairJoinHint = "auto").count()
-    assert(spark.sparkContext.getPersistentRDDs.size === afterExplicit,
-      "auto-hinted call leaked a persisted pair cache")
   }
 
   test("merge pairJoinHint: identical embedding-cosine pairs") {

@@ -1,9 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import graft.obs.Profile
 import graft.operators.Curate
 import graft.sources.{AnnIndex, GrepIndex, InvertedIndex, StatsIndex}
 
@@ -11,53 +12,14 @@ import graft.sources.{AnnIndex, GrepIndex, InvertedIndex, StatsIndex}
   * ([[graft.sources.MetaTable]]), and base tables take their schema
   * from one footer read there ([[graft.Tables]]): these calls start a
   * pinned number of Spark jobs, so a return to Spark-side metadata
-  * I/O or schema inference fails here. Jobs are counted by a
-  * listener, restricted to a job group set on the calling thread —
-  * except for calls that start jobs on other threads
-  * (`Curate.runBatch`'s index appends), where every job started
-  * during the call counts. */
+  * I/O or schema inference fails here. Jobs are counted by
+  * [[graft.obs.Profile]], which includes the jobs a call starts on
+  * other threads under its capture (`Curate.runBatch`'s index
+  * appends). */
 class MetadataJobsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val group = "metadata-jobs-spec"
-  private val started = new AtomicInteger(0)
-  private val startedAll = new AtomicInteger(0)
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      startedAll.incrementAndGet()
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-        started.incrementAndGet()
-    }
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
-  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(listener)
-
-  /** Block until every posted listener event has been handled. */
-  private def drain(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-      .invoke(bus, java.lang.Long.valueOf(60000L))
-  }
-
-  private def jobsOf(body: => Any): Int = {
-    drain()
-    val n0 = started.get()
-    spark.sparkContext.setJobGroup(group, "metadata job count")
-    try body finally spark.sparkContext.clearJobGroup()
-    drain()
-    started.get() - n0
-  }
-
-  /** Every job started while `body` runs, on any thread. */
-  private def allJobsOf(body: => Any): Int = {
-    drain()
-    val n0 = startedAll.get()
-    body
-    drain()
-    startedAll.get() - n0
-  }
+  private def jobsOf(body: => Any): Int = Profile.capture(spark)(body)._2.jobs
 
   private lazy val base = Files.createTempDirectory("metajobs").toString
   private lazy val texts = (1L to 40L).map(i => (i, s"needle$i shared text body ${i % 7}"))
@@ -109,18 +71,84 @@ class MetadataJobsSpec extends SparkSpec {
       "doc_id", "text", nFiles = 2)) === 8)
   }
 
+  private def batch(off: Long) = texts.select((col("doc_id") + off).as("doc_id"),
+    lit("s").as("source"), concat(col("text"), lit(s" batch$off")).as("text"))
+  private def embs(off: Long) = (1L to 40L).map(i => (i + off, Array(i.toFloat, 1f, 0f, 0f)))
+    .toDF("vec_id", "embedding")
+  private def runBatch(roots: Curate.Roots, off: Long): Long =
+    Curate.runBatch(spark, roots, batch(off), embs(off), qualityFloor = 0.0,
+      budgetPerSource = 1000000L)
+
+  private val markers = new AtomicInteger(0)
+
+  /** The id of a one-job marker run now. Job ids are sequential, so two
+    * markers bracket every job started between them, on any thread. */
+  private def marker(): Int = {
+    val sc = spark.sparkContext
+    val group = s"metajobs-marker-${markers.incrementAndGet()}"
+    sc.setJobGroup(group, "marker")
+    try Profile.capture(spark)(sc.parallelize(Seq(1), 1).count())
+    finally sc.clearJobGroup()
+    val Array(id) = sc.statusTracker.getJobIdsForGroup(group)
+    id
+  }
+
   test("a warm curate batch starts a pinned number of jobs, index appends included") {
     val roots = Curate.tempRoots("metajobs-warm")
-    def batch(off: Long) = texts.select((col("doc_id") + off).as("doc_id"),
-      lit("s").as("source"), concat(col("text"), lit(s" batch$off")).as("text"))
-    def embs(off: Long) = (1L to 40L).map(i => (i + off, Array(i.toFloat, 1f, 0f, 0f)))
-      .toDF("vec_id", "embedding")
-    Curate.runBatch(spark, roots, batch(0L), embs(0L), qualityFloor = 0.0,
-      budgetPerSource = 1000000L)
+    runBatch(roots, 0L)
     // the second batch appends to both indexes built by the first
-    assert(allJobsOf(Curate.runBatch(spark, roots, batch(100L), embs(100L),
-      qualityFloor = 0.0, budgetPerSource = 1000000L)) === 22)
+    assert(jobsOf(runBatch(roots, 100L)) === 22)
     assert(Curate.readCorpus(spark, roots).count() === 80L)
+  }
+
+  test("every job of a warm curate batch carries the caller's job group") {
+    // the index appends run on another thread: it must take the
+    // caller's local properties for each call, not keep the ones it
+    // had when it was created
+    val sc = spark.sparkContext
+    val roots = Curate.tempRoots("metajobs-groups")
+    runBatch(roots, 0L)
+    for (off <- Seq(100L, 200L)) {
+      val group = s"metajobs-batch-$off"
+      val before = marker()
+      sc.setJobGroup(group, "curate batch")
+      try runBatch(roots, off) finally sc.clearJobGroup()
+      val started = marker() - before - 1
+      assert(started === 22, group)
+      assert(sc.statusTracker.getJobIdsForGroup(group).length === started, group)
+    }
+  }
+
+  test("two concurrent curate batches each capture their own jobs and decisions") {
+    val sc = spark.sparkContext
+    val roots = Seq("a", "b").map(t => Curate.tempRoots(s"metajobs-conc-$t"))
+    roots.foreach(runBatch(_, 0L))
+    val pool = Executors.newFixedThreadPool(2)
+    val start = new CountDownLatch(1)
+    val before = marker()
+    val profiles = try {
+      val runs = roots.zipWithIndex.map { case (r, i) =>
+        pool.submit(new Callable[Profile] {
+          def call(): Profile = {
+            sc.setJobGroup(s"metajobs-conc-$i", "concurrent curate batch")
+            start.await()
+            try Profile.capture(spark)(runBatch(r, 100L))._2 finally sc.clearJobGroup()
+          }
+        })
+      }
+      start.countDown()
+      runs.map(_.get(5, TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    val started = marker() - before - 1
+    for ((p, i) <- profiles.zipWithIndex) {
+      assert(p.jobs === 22, s"batch $i")
+      // the capture's jobs are exactly the ones its thread's group ran
+      assert(sc.statusTracker.getJobIdsForGroup(s"metajobs-conc-$i").length === p.jobs)
+      // the ANN append records on the other thread, the inverted one on the caller's
+      assert(p.decisions.filter(_.op.startsWith("curate.")).sortBy(_.op) === Seq(
+        Decision("curate.ann", "appended", 0, 0), Decision("curate.inv", "appended", 0, 0)))
+    }
+    assert(profiles.map(_.jobs).sum === started)
   }
 
   test("building the curated corpus frame starts no job") {

@@ -25,7 +25,7 @@ import graft.queries.IndexQueries
   * pipeline instead of the production first-seen-heavy flow. The
   * budget (6M tokens/source) is sized to cut mid-stream in batch 3 so
   * the carried state is load-bearing, like the sf-gate. Per-batch
-  * rows carry wall + task_ms + shuffle/spill (StageMetrics).
+  * rows carry wall + task_ms + shuffle/spill ([[graft.obs.Profile]]).
   *
   * r19 adds the LONGRUN mode (r18 verdict item 3): ≥32 batches
   * through the REAL [[Curate.runBatch]] twice — leg A without index
@@ -154,27 +154,15 @@ object CurateProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new Scale100.StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val out = new StringBuilder
     val only = sys.env.get("CURATEPROBE_ONLY").map(_.split(",").toSet)
     def run(label: String, extra: => String = "")(body: => Long): Unit = {
       if (!only.forall(_.contains(label))) return
-      Thread.sleep(1000); metrics.reset()
-      val t0 = System.nanoTime()
-      val n = try body
-              catch { case t: Throwable =>
-                System.err.println(s"CURATEPROBE FAIL $label: $t"); -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      Blocks.freeAll(spark)
-      Thread.sleep(1000)
-      val m = metrics.snapshot
+      val (row, _) = ProbeRow(spark, label, "CURATEPROBE FAIL")(body)
       val ex = extra
-      val line = f"""{"query":"$label","rows":$n,"sec":$sec%.2f,""" +
-        m.map { case (k, v) => s""""$k":$v""" }.mkString("", ",", "") +
-        (if (ex.isEmpty) "}" else s",$ex}")
+      val line = row + (if (ex.isEmpty) "}" else s",$ex}")
       println("CURATEPROBE " + line)
       out.append(line).append('\n')
     }

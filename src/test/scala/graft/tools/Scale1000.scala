@@ -11,9 +11,10 @@ import graft.queries.RelationalQueries
   * scale-critical families run against a 1000× derived set
   * (`graft.ScaleN <sf0.1> /tmp/sf1000x 1000` — ~600M lineitem / 150M
   * orders / 100M events / 5M documents in 1000-DEEP exact-dup groups /
-  * 2M embeddings) under the same 16 GiB executor-like heap as
-  * Scale100. 100× was conquered (zero spill, zero exclusions); this
-  * tier exists to find the next wall before a user does.
+  * 2M embeddings) under the same 16 GiB executor-like heap as the
+  * 100× tier (SCALE100.md). 100× was conquered (zero spill, zero
+  * exclusions); this tier exists to find the next wall before a user
+  * does.
   *
   * The known-by-algebra wall this tier makes measurable: MEMBER-PAIR
   * EXPANSION. Collapse-first keeps all join work linear in the 5k
@@ -48,8 +49,6 @@ object Scale1000 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new Scale100.StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, dir).limit(1000).groupBy("l_returnflag").count().collect()
 
@@ -60,18 +59,9 @@ object Scale1000 {
     def run(label: String)(body: => Long): Unit = {
       decided = Nil
       if (!only.forall(_.contains(label))) return
-      Thread.sleep(1000); metrics.reset()
-      val t0 = System.nanoTime()
-      val (n, ds) = Decision.capture(try body
-              catch { case t: Throwable =>
-                System.err.println(s"SCALE FAIL $label: $t"); -1L })
-      decided = ds
-      val sec = (System.nanoTime() - t0) / 1e9
-      Blocks.freeAll(spark)
-      Thread.sleep(1000)
-      val m = metrics.snapshot
-      val line = f"""{"query":"$label","rows":$n,"sec":$sec%.2f,""" +
-        m.map { case (k, v) => s""""$k":$v""" }.mkString("", ",", "}")
+      val (row, p) = ProbeRow(spark, label, "SCALE FAIL")(body)
+      decided = p.decisions
+      val line = row + "}"
       println("SCALE1000 " + line)
       out.append(line).append('\n')
     }
@@ -285,7 +275,7 @@ object Scale1000 {
     // ---- family 12 (r13): containment / substring / semantic dedup
     // over the FULL 1000× corpus (registered gates bound their corpus
     // for the DuckDB twin; the operators here run unbounded — the
-    // Scale100 precedent, one tier up)
+    // 100× precedent of SCALE100.md, one tier up)
     runDf("dedup_containment_5m") {
       Dedup.containmentPairs(Tables.documents(spark, dir), "doc_id", "text",
         dfNum = 1, dfDen = 5, minNum = 1, minDen = 2, maxJoinTokens = 16)
@@ -303,8 +293,8 @@ object Scale1000 {
     // the resulting mutual-OR kNN graph is node-bounded (~1M supplier
     // nodes × k=20) at ANY data scale — that boundedness is exactly
     // the scale claim, so the iterative operators then run on
-    // identical materialized input, same discipline as Scale100's
-    // pair-graph block.
+    // identical materialized input, same discipline as the 100× tier's
+    // pair-graph block (SCALE100.md).
     val knnPath = s"$dir/__knn_edges"
     run("graph_knn_build_600m") {
       // the adopted operator shape (distinct + self-join; see
@@ -493,10 +483,11 @@ object Scale1000 {
     runDf("grep_index_probe_5m")(graft.sources.GrepIndex.probe(spark,
       grepRoot, Seq((0L, "merge part window"), (1L, "batch batch batch"),
         (2L, "customer line"), (3L, "zzzz never present"))))
+    // the last record of an op wins; "n/a" for a step that never ran
+    def last(op: String) = decided.findLast(_.op == op)
     if (!only.exists(o => !o.contains("grep_index_probe_5m")))
-      println("SCALE1000_NOTE grep route " +
-        Decisions.route(decided, "grep.route") + " postings file prune " +
-        Decisions.ratio(decided, "grep.postings"))
+      println("SCALE1000_NOTE grep route " + last("grep.route").fold("n/a")(_.route) +
+        " postings file prune " + last("grep.postings").fold("n/a")(d => s"${d.kept}/${d.total}"))
 
     args.lift(1).foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
