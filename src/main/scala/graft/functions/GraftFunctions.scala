@@ -22,6 +22,7 @@ object GraftFunctions {
   val WordpieceName = "graft_wordpiece"
   val BpeEncodeName = "graft_bpe_encode"
   val UnicodeNormalizeName = "graft_unicode_normalize"
+  val CollapseWsName = "graft_collapse_ws"
   val QualityStatsName = "graft_quality_stats"
   val TermCountsName = "graft_term_counts"
   val RepetitionStatsName = "graft_repetition_stats"
@@ -96,6 +97,9 @@ object GraftFunctions {
       (c0: Seq[Expression]) => { val c = arity(UnicodeNormalizeName,
           "text, form", 2, c0)
         graft.functions.expressions.UnicodeNormalize(c(0), c(1)) }),
+    (CollapseWsName, classOf[graft.functions.expressions.CollapseWhitespace],
+      (c0: Seq[Expression]) => { val c = arity(CollapseWsName, "text", 1, c0)
+        graft.functions.expressions.CollapseWhitespace(c(0)) }),
     (QualityStatsName, classOf[graft.functions.expressions.TextQualityStats],
       (c0: Seq[Expression]) => { val c = arity(QualityStatsName,
           "text", 1, c0)
@@ -266,6 +270,13 @@ object GraftFunctions {
   def unicodeNormalize(text: Column, form: String = "NFC"): Column = {
     SparkSession.getActiveSession.foreach(register)
     call_function(UnicodeNormalizeName, text, lit(form))
+  }
+
+  /** Each run of Java-regex `\s` bytes becomes one space, in one byte
+    * pass — see [[graft.functions.expressions.CollapseWhitespace]]. */
+  def collapseWs(text: Column): Column = {
+    SparkSession.getActiveSession.foreach(register)
+    call_function(CollapseWsName, text)
   }
 
   /** All four quality components in one codegen'd scan — see

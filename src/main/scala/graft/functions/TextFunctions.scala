@@ -6,18 +6,30 @@ import org.apache.spark.sql.functions._
 /** Text-analysis primitives for training-data pipelines.
   *
   * Everything here is composed from built-in codegen'd functions
-  * (`regexp_count`, `regexp_replace`, `md5`, …) — no UDFs — so the ops
-  * stay inside WholeStageCodegen and run at scan speed at 100 TB. Each
-  * has an exact DuckDB-SQL twin (same regex engine semantics for the
-  * patterns used: literal alternations + \b/\s/char classes, which RE2
-  * and Java regex agree on).
+  * (`regexp_count`, `lower`, `trim`, `md5`, …) and graft's native
+  * codegen'd expressions — no UDFs — so the ops stay inside
+  * WholeStageCodegen and run at scan speed at 100 TB. The native ones
+  * are the quality-stats scan and, inside [[normalize]], the
+  * whitespace collapse `graft_collapse_ws`
+  * ([[graft.functions.expressions.CollapseWhitespace]]), which turns
+  * each run of Java-regex `\s` bytes — exactly `[ \t\n\x0B\f\r]` —
+  * into one space, as `regexp_replace(x, "\\s+", " ")` does.
+  *
+  * Each op has an exact DuckDB-SQL twin (same regex engine semantics
+  * for the patterns used: literal alternations + \b/\s/char classes,
+  * which RE2 and Java regex agree on). One known gap: RE2's `\s` omits
+  * `\x0B` (vertical tab), so the oracles' `regexp_replace(…, '\s+',
+  * ' ', 'g')` leaves a vertical tab where graft writes a space; the
+  * oracles rely on the corpus holding no `\x0B`.
   */
 object TextFunctions {
 
-  /** Canonical form for dedup/fingerprint: lowercase, trim, collapse
-    * whitespace runs. */
+  /** Canonical form for dedup/fingerprint: lowercase, trim (spaces
+    * only, Spark's `trim`), then collapse each `\s` run to one space
+    * natively. `lower` stays Spark's, so Unicode case mapping is
+    * unchanged. */
   def normalize(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+    GraftFunctions.collapseWs(lower(trim(text)))
 
   /** Whitespace token count — counted as \S+ runs so leading/trailing
     * space and empty strings behave identically everywhere. */

@@ -54,6 +54,24 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Grams {
 
+  /** The row as the UTF-16 chars `u.toString` decodes it to: an
+    * all-ASCII row widens byte by byte, any other goes through
+    * `toString` (so malformed input decodes exactly as it does there). */
+  def utf16(u: UTF8String): Array[Char] = {
+    val base = u.getBaseObject
+    val start = u.getBaseOffset
+    val n = u.numBytes()
+    val cs = new Array[Char](n)
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, start + i)
+      if (b < 0) return u.toString.toCharArray
+      cs(i) = b.toChar
+      i += 1
+    }
+    cs
+  }
+
   /** Byte offset of each code-point boundary: offs(c) = byte offset of
     * code point c, offs(numChars) = numBytes. The same
     * numBytesForFirstByte walk `numChars`/`substring` use, so gram

@@ -94,30 +94,12 @@ object Dedup {
     }.getOrElse((maxHashes, maxHashes)) // 1-hash bands: max recall
   }
 
-  /** Near-duplicate pairs: MinHash-LSH candidates verified with exact
-    * n-gram Jaccard >= tau. Output: (doc_a, doc_b, jaccard). */
-  /** Default params: 16 hashes in 4 bands of 4 — band-match probability
-    * j^4 per band (j=jaccard): ~0.66 any-band at j=0.6, >0.99 at
-    * j=0.9, while 4-hash bands keep false candidates ~j^4-rare (r=3
-    * bands over a small-vocab corpus produced quadratic candidate
-    * explosions). */
-  /** `pairJoinHint` picks the join strategy where the candidate-pair
-    * stream meets a corpus-sized payload table (shingle sets /
-    * vectors). Default `shuffle_hash` builds on the pair side: pairs
-    * are bounded by the near-dup rate (exact dups are collapsed
-    * first), so the per-partition build table is small and the corpus
-    * payload streams past unsorted. That assumption INVERTS on an
-    * adversarial corpus where cross-group near-dup pairs approach
-    * O(corpus) — SHJ's build side must fit executor memory, so beyond
-    * roughly (executor memory × partitions) / pair-row-size pairs
-    * (~10⁹ pairs per TB of executor heap at 32 B/pair), pass
-    * `"merge"`: sort-merge spills both sides and only pays an extra
-    * sort. Results are identical either way (DedupSpec pins this). */
-
   /** Exact-dup-collapsed member table, the shared prep of the minhash
     * family: (id, gid) for every doc (two longs — feeds the expansion
-    * joins) plus the two independent shingle-hash families (double
-    * hashing) for keepers only — guarded by `when`, so the native
+    * joins), the group size `n_dups` (the same fp window's count; a
+    * keeper with `n_dups` > 1 heads a duplicate group), plus the two
+    * independent shingle-hash families (double hashing) for keepers
+    * only — guarded by `when`, so the native
     * [[graft.functions.expressions.WordShingleHashes]] kernel runs on
     * keepers only and non-keepers carry null. The text is normalized
     * ONCE, in the parallel scan stage: the fingerprint hashes it there
@@ -135,7 +117,8 @@ object Dedup {
         TextFunctions.normalize(col(textCol)).as("norm"))
       .withColumn("fp", TextFunctions.normalizedFingerprint(col("norm")))
       .withColumn("gid", min("id").over(wnd))
-      .select(col("id"), col("gid"),
+      .withColumn("n_dups", count(lit(1)).over(wnd))
+      .select(col("id"), col("gid"), col("n_dups"),
         when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 0)).as("sh1"),
         when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 1)).as("sh2"))
       .localCheckpoint()
@@ -145,14 +128,51 @@ object Dedup {
                             rows: Int): (DataFrame, DataFrame) = {
     val keepers = mem.where(col("id") === col("gid"))
       .select(col("id"), col("sh1"), col("sh2"))
-    val banded = keepers.select(col("id"),
-      posexplode(bandHashes(
+    val banded = keepers
+      .select(col("id"), bandHashes(
         minhashSignatureFromHashes(col("sh1"), col("sh2"), numHashes),
-        bands, rows))
-        .as(Seq("band_idx", "band_hash")))
+        bands, rows).as("bands"))
+      .select(col("id"), col("bands"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
     (keepers, banded)
   }
 
+  /** Band self-join condition of banded rows `a` and `b` (see
+    * [[bandedKeepers]]): they meet at band `band_idx` and at no lower
+    * band, so a candidate pair appears once, at its first shared band,
+    * and needs no `distinct`. The lower bands are compared position by
+    * position (band j of `a` against band j of `b`), unrolled over the
+    * constant band count — no lambda — so an equal 64-bit hash at two
+    * different positions never hides a pair. */
+  private[graft] def firstSharedBand(a: String, b: String, bands: Int): Column =
+    (0 until bands - 1).foldLeft(
+      col(s"$a.band_idx") === col(s"$b.band_idx") &&
+        col(s"$a.band_hash") === col(s"$b.band_hash")) { (c, j) =>
+      c && (col(s"$a.band_idx") <= j ||
+        col(s"$a.bands").getItem(j) =!= col(s"$b.bands").getItem(j))
+    }
+
+  /** Near-duplicate pairs: MinHash-LSH candidates verified with exact
+    * n-gram Jaccard >= tau. Output: (doc_a, doc_b, jaccard).
+    *
+    * Default params: 16 hashes in 4 bands of 4 — band-match probability
+    * j^4 per band (j=jaccard): ~0.66 any-band at j=0.6, >0.99 at
+    * j=0.9, while 4-hash bands keep false candidates ~j^4-rare (r=3
+    * bands over a small-vocab corpus produced quadratic candidate
+    * explosions).
+    *
+    * `pairJoinHint` picks the join strategy where the candidate-pair
+    * stream meets a corpus-sized payload table (shingle sets /
+    * vectors). Default `shuffle_hash` builds on the pair side: pairs
+    * are bounded by the near-dup rate (exact dups are collapsed
+    * first), so the per-partition build table is small and the corpus
+    * payload streams past unsorted. That assumption INVERTS on an
+    * adversarial corpus where cross-group near-dup pairs approach
+    * O(corpus) — SHJ's build side must fit executor memory, so beyond
+    * roughly (executor memory × partitions) / pair-row-size pairs
+    * (~10⁹ pairs per TB of executor heap at 32 B/pair), pass
+    * `"merge"`: sort-merge spills both sides and only pays an extra
+    * sort. Results are identical either way (DedupSpec pins this). */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                    tau: Double = 0.6,
@@ -171,13 +191,14 @@ object Dedup {
     //    extra shuffle stages on the same answer).
     val mem = memberTable(docs, idCol, textCol, n)
     val (withShingles, banded) = bandedKeepers(mem, numHashes, bands, rows)
-    // distinct BEFORE verification: jaccard on ~70-element arrays costs
-    // ~µs per pair, so the 4×-duplicated raw band stream must be
-    // deduped first. The distinct shuffles only (id, id) longs; the
-    // shingle payloads then attach via shuffled-hash joins with the
-    // PAIR stream as the build side (pairs are bounded by the near-dup
-    // rate; the corpus payload streams past, moving ONCE per pair
-    // side, never broadcast and never sorted). A broadcast here would
+    // one row per pair BEFORE verification: jaccard on ~70-element
+    // arrays costs ~µs per pair, so a pair is kept only at its first
+    // shared band (firstSharedBand), not once per shared band, and
+    // needs no distinct shuffle. The shingle payloads then attach via
+    // shuffled-hash joins with the PAIR stream as the build side
+    // (pairs are bounded by the near-dup rate; the corpus payload
+    // streams past, moving ONCE per pair side, never broadcast and
+    // never sorted). A broadcast here would
     // ship the whole corpus shingle table to every executor: O(corpus)
     // payload, OOM at 100 TB. The band self-join is corpus-sized on
     // BOTH sides, so it stays sort-merge (spillable) — stats-driven
@@ -185,11 +206,8 @@ object Dedup {
     // plan from the plan guards.
     val cands = banded.as("a")
       .join(banded.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
+        firstSharedBand("a", "b", bands) && col("a.id") < col("b.id"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .distinct()
       .hint(pairJoinHint)
     // jaccard over shingle-hash SETS (intersect/union dedupe) — equal
     // to string-shingle jaccard modulo 64-bit collisions
@@ -211,10 +229,9 @@ object Dedup {
     // instead of a separate corpus×corpus self-join. Cross-group ids
     // can interleave (re-order with least/greatest); self-pairs keep
     // the id< ordering the join condition can't impose.
-    val dupGroups = mem.where(col("id") =!= col("gid"))
+    val dupGroups = mem.where(col("id") === col("gid") && col("n_dups") > 1)
       .select(col("gid").as("doc_a"), col("gid").as("doc_b"),
               lit(1.0).as("jaccard"))
-      .distinct()
       .where(lit(1.0) >= tau)
     upairs.union(dupGroups)
       .hint(pairJoinHint)
@@ -252,13 +269,11 @@ object Dedup {
     val (keepA, bandA) = bandedKeepers(memA, numHashes, bands, rows)
     val (keepB, bandB) = bandedKeepers(memB, numHashes, bands, rows)
     // candidate (groupA, groupB) pairs: corpus-sized on both sides →
-    // pinned sort-merge; distinct on bare longs before payloads attach
+    // pinned sort-merge; each pair once, at its first shared band,
+    // before payloads attach
     val cands = bandA.as("a")
-      .join(bandB.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash"))
+      .join(bandB.as("b").hint("merge"), firstSharedBand("a", "b", bands))
       .select(col("a.id").as("ga"), col("b.id").as("gb"))
-      .distinct()
     val verified = cands.hint(pairJoinHint)
       .join(keepA.select(col("id"), col("sh1").as("sh_a")),
             col("ga") === col("id")).drop("id")

@@ -1261,7 +1261,7 @@ object TextQueries {
     * 'q' and every digit, bare and as "##" continuations, plus a few
     * real subwords — so most text tokenizes fully, 'q'-words hit the
     * whole-word-[UNK] path, and longest-match has real choices. */
-  private val wpVocab: Seq[String] = {
+  private[graft] val wpVocab: Seq[String] = {
     val chars = (('a' to 'z').filterNot(_ == 'q') ++ ('0' to '9')).map(_.toString)
     chars ++ chars.map("##" + _) ++
       Seq("the", "and", "ing", "ion", "er", "in", "on", "re", "at",

@@ -111,4 +111,43 @@ class BpeSpec extends SparkSpec {
       }
     }
   }
+
+  test("native bpe encode equals the String/tuple reference on every sf0.01 doc") {
+    import graft.functions.{GraftFunctions, TextFunctions}
+    val docs = Tables.documents(spark, sfDir10x)
+    val norm = TextFunctions.normalize(col("text"))
+    // the 8 merges `bpe_encode` trains, and `bpe_encode_sound`'s table
+    val trained = Bpe.trainFrom(docs, "text", numMerges = 8)
+      .map(m => s"${m.left} ${m.right}")
+    val planted = Seq("t ##h", "th ##e", "i ##n", "##e ##r")
+    for (merges <- Seq(trained, planted)) {
+      val rows = docs.select(norm.as("n"), GraftFunctions.bpeEncode(norm, merges).as("p"))
+        .as[(String, Seq[String])].collect()
+      assert(rows.length === docs.count())
+      val bad = rows.filter { case (n, p) => p != BpeReference.encode(n, merges) }
+      assert(bad.isEmpty, s"${bad.length} docs differ under $merges, first: " +
+        bad.headOption.map(_._1.take(80)))
+    }
+  }
+
+  test("native bpe encode equals the reference off ASCII and on duplicate ranks") {
+    // non-ASCII symbols in merges, a duplicated pair (its later rank is
+    // dead), chained continuation merges, a supplementary-plane char
+    // (two UTF-16 symbols, each read back as "?") and a merge naming a
+    // symbol that never occurs
+    val merges = Seq("é ##s", "##ü ##b", "é ##s", "s ##t", "st ##r", "##a ##ß",
+      "##ß ##e", "##e ##r", "##ü ##ber", "##b ##er", "中 ##文", "x ##\uD83D\uDE00",
+      "##\u00e9 ##\u00e9", "##a ##a")
+    val texts = Seq("éss über straße strasse", "中文 文中 中中文", "x\uD83D\uDE00 \uD83D\uDE00x",
+      "éééé baaaaa ñandú", "a", "", " ", "überbüber ##b")
+    for (t <- texts) {
+      assert(enc(t, merges) === BpeReference.encode(t, merges), s"text '$t'")
+      assert(enc(t, Seq("q ##q")) === BpeReference.encode(t, Seq("q ##q")), s"text '$t'")
+    }
+    // a duplicated pair keeps its first rank, which here beats the
+    // competing (##b, ##c) merge
+    val dup = Seq("a ##b", "##b ##c", "a ##b")
+    assert(enc("abc", dup) === Seq("ab", "##c"))
+    assert(BpeReference.encode("abc", dup) === Seq("ab", "##c"))
+  }
 }

@@ -60,6 +60,30 @@ class DedupSpec extends SparkSpec {
     assert(j14 === 1.0)
   }
 
+  test("band join keeps each pair once, at its first shared band, compared by position") {
+    val banded = Seq(
+      (1L, Seq(10L, 20L, 30L)),
+      (2L, Seq(11L, 10L, 30L)), // 10 at band 1: a cross-position collision with 1, 3, 4
+      (3L, Seq(10L, 20L, 31L)),
+      (4L, Seq(10L, 21L, 30L))).toDF("id", "bands")
+      .select(col("id"), col("bands"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+    val got = banded.as("a")
+      .join(banded.as("b"), Dedup.firstSharedBand("a", "b", 3) && col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id"), col("a.band_idx"))
+      .as[(Long, Long, Int)].collect().sorted.toSeq
+    // (1,3) share bands 0 and 1, (1,4) bands 0 and 2: each once, at 0;
+    // (1,2) and (2,4) share only band 2, kept although a's band 0 hash
+    // equals b's band 1 hash; (2,3) share none
+    assert(got === Seq((1L, 2L, 2), (1L, 3L, 0), (1L, 4L, 0), (2L, 4L, 2), (3L, 4L, 0)))
+    // the same rule inside minhashPairs: no pair twice on a real corpus
+    // with many bands per pair
+    val pairs = Dedup.minhashPairs(Tables.documents(spark, sfDir), "doc_id", "text",
+      numHashes = 16, bands = 8, tau = 0.2).select("doc_a", "doc_b")
+    val n = pairs.count()
+    assert(n > 0 && n === pairs.distinct().count())
+  }
+
   test("minhash member checkpoint hashes shingles natively: no lambda in its plan") {
     // the member table is the one checkpoint minhashPairs takes; its
     // projection must stay one native kernel per hash family, not the

@@ -211,6 +211,13 @@ class ExpressionSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](reg.lookupFunction(
       FunctionIdentifier(GraftFunctions.DotName), Seq(Literal(1))))
     assert(e.getMessage.contains("expects 2 arguments"))
+    // normalize's whitespace collapse: in the table, one argument
+    assert(GraftFunctions.builders.exists(_._1 == GraftFunctions.CollapseWsName))
+    assert(reg.lookupFunction(FunctionIdentifier(GraftFunctions.CollapseWsName),
+      Seq(Literal("a \t b"))).eval() === org.apache.spark.unsafe.types.UTF8String.fromString("a b"))
+    val ws = intercept[IllegalArgumentException](reg.lookupFunction(
+      FunctionIdentifier(GraftFunctions.CollapseWsName), Seq(Literal("a"), Literal("b"))))
+    assert(ws.getMessage.contains("graft_collapse_ws expects 1 arguments"))
   }
 
   test("graft_wordpiece SQL registration agrees with the Column API") {

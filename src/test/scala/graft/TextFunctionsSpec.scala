@@ -78,13 +78,88 @@ class TextFunctionsSpec extends SparkSpec {
       val (hof, nat) = both(s)
       assert(hof === nat, s"input '$s'")
     }
-    // and on real documents — every doc, full token sequences
+    // and on real documents — every doc, full token sequences — under
+    // this vocab and the production one of `wordpiece_tokenize`
     val docs = Tables.documents(spark, sfDir)
-    val mismatch = docs.select(
-        Wordpiece.tokenize(col("text"), vocab).as("hof"),
-        Wordpiece.tokenizeNative(col("text"), vocab).as("nat"))
-      .where(col("hof") =!= col("nat")).count()
-    assert(mismatch === 0)
+    for (v <- Seq(vocab, graft.queries.TextQueries.wpVocab)) {
+      val mismatch = docs.select(
+          Wordpiece.tokenize(col("text"), v).as("hof"),
+          Wordpiece.tokenizeNative(col("text"), v).as("nat"))
+        .where(col("hof") =!= col("nat")).count()
+      assert(mismatch === 0)
+    }
+  }
+
+  test("native graft_wordpiece equals the HOF past maxPieceLen and off ASCII") {
+    import graft.operators.Wordpiece
+    // the production vocab plus non-ASCII and supplementary-plane
+    // pieces, a bare "##" and a "###" entry (whose continuation piece
+    // is "#"). The native pieces are UTF-16 char ranges and the HOF's
+    // are code-point ranges, so the two differ only where a piece with
+    // a surrogate pair meets the maxPieceLen cap; no entry here does.
+    val vocab = graft.queries.TextQueries.wpVocab ++ Seq("é", "##é", "ñandú",
+      "##ü", "straße", "\uD83D\uDE00", "##\uD83D\uDE00", "a\uD83D\uDE00", "##", "###",
+      "#", "中文", "##文")
+    val words = Seq(
+      // longer than maxPieceLen (8, and 3 below): the cursor must cut
+      "internationalization", "abcdefghijklmnoprstuvwxyz0123456789",
+      "theandingion", "qqqqqqqqqqqq", "inginginginging",
+      // non-ASCII: BMP letters, pieces and [UNK]s
+      "café", "ñandú", "ñandúes", "über", "straße", "中文", "中文文", "日本",
+      "naïve", "\u00a0nbsp\u2003emsp",
+      // supplementary plane: emoji pieces whole, inside words, and alone
+      "\uD83D\uDE00", "a\uD83D\uDE00b", "x\uD83D\uDE00", "\uD83D\uDE00\uD83D\uDE00",
+      "\uD835\uDC00bc", "#", "##", "###", "a##b", "a###")
+    val row = words.mkString(" ")
+    for (maxLen <- Seq(8, 3)) {
+      val (hof, nat) = Seq(row).toDF("text")
+        .select(Wordpiece.tokenize(col("text"), vocab, maxLen).as("hof"),
+                Wordpiece.tokenizeNative(col("text"), vocab, maxLen).as("nat"))
+        .as[(Seq[String], Seq[String])].head()
+      assert(nat === hof, s"maxPieceLen $maxLen")
+      // and word by word, so a mismatch names its word
+      for (w <- words) {
+        val (h, n) = Seq(w).toDF("text")
+          .select(Wordpiece.tokenize(col("text"), vocab, maxLen).as("hof"),
+                  Wordpiece.tokenizeNative(col("text"), vocab, maxLen).as("nat"))
+          .as[(Seq[String], Seq[String])].head()
+        assert(n === h, s"word '$w' at maxPieceLen $maxLen")
+      }
+    }
+  }
+
+  test("graft_collapse_ws equals the regexp_replace whitespace collapse") {
+    import graft.functions.GraftFunctions
+    def both(df: org.apache.spark.sql.DataFrame) = df.select(
+      GraftFunctions.collapseWs(col("text")).as("nat"),
+      regexp_replace(col("text"), "\\s+", " ").as("re"))
+    val cases = Seq(
+      // runs of every Java-regex \s byte, alone and mixed
+      "a\tb", "a\nb", "a\u000Bb", "a\fb", "a\rb", "a  b", "a \t\n\u000B\f\r b",
+      "\t\tlead", "trail\r\n", " x ", "a b c", "no_ws_at_all",
+      // not \s: NBSP, U+2003, U+3000, U+0085 stay as they are
+      "a\u00a0b", "a\u2003\u2003b", "a\u00a0 \u00a0b", "a\u3000b", "a\u0085b",
+      // empty and all-whitespace
+      "", " ", "  ", "\t", " \t\n\u000B\f\r ",
+      // non-ASCII and surrogate pairs around runs
+      "café\t\tnaïve", "中文  文本", "\uD83D\uDE00\n\n\uD83D\uDE00", "x \uD835\uDC00  y",
+      "ä\u000B\u000Bö")
+    val rows = both(cases.toDF("text")).as[(String, String)].collect()
+    for (((nat, re), in) <- rows.zip(cases))
+      assert(nat === re, s"input '${in.map(c => f"\\u${c.toInt}%04x").mkString}'")
+    // null in, null out
+    assert(Seq(Tuple1(null: String)).toDF("text")
+      .select(GraftFunctions.collapseWs(col("text"))).head().isNullAt(0))
+    // every sf0.01 document, raw and through normalize's lower(trim(…))
+    val docs = Tables.documents(spark, sfDir10x)
+    for (t <- Seq(col("text"), lower(trim(col("text"))))) {
+      val mismatch = both(docs.select(t.as("text")))
+        .where(not(col("nat") <=> col("re"))).count()
+      assert(mismatch === 0)
+    }
+    assert(docs.select(TextFunctions.normalize(col("text")).as("n"),
+        regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("r"))
+      .where(not(col("n") <=> col("r"))).count() === 0)
   }
 
   test("graft_unicode_normalize: NFC composes, NFKC folds compatibility forms") {
