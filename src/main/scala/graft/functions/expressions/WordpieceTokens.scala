@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * position, and each (piece, continuation) probe compares a char
   * range of the row against an open-addressed
   * [[WordpieceTokens.VocabTable]]; a match emits the vocab entry's
-  * prebuilt UTF8String. Pieces are UTF-16 char ranges of at most
-  * maxPieceLen chars (Java `substring` semantics; a piece that splits
-  * a surrogate pair matches no entry).
+  * prebuilt UTF8String. Pieces are at most maxPieceLen CODE POINTS
+  * long, as in the HOF's `substr`/`length`: a surrogate pair counts
+  * once and is never split.
   *
   * vocab and maxPieceLen are foldable children (the NearestCentroid
   * convention), so the function also registers for SQL use.
@@ -85,41 +85,55 @@ case class WordpieceTokens(text: Expression, vocab: Expression,
   def doTokenize(u: UTF8String): ArrayData = {
     val s = Grams.utf16(u)
     val out = new scala.collection.mutable.ArrayBuffer[Any]
-    // per-row scratch: prefix hashes of the pieces at the cursor
+    // per-row scratch: hash and end offset of the pieces at the cursor
     val hs = new Array[Int](maxLenVal + 1)
+    val ends = new Array[Int](maxLenVal + 1)
     val len = s.length
     var start = 0
     while (start < len) {
       var end = start
       while (end < len && s(end) != ' ') end += 1
-      if (end > start) tokenizeWord(s, start, end, hs, out)
+      if (end > start) tokenizeWord(s, start, end, hs, ends, out)
       start = end + 1
     }
     new GenericArrayData(out.toArray)
   }
 
   private def tokenizeWord(s: Array[Char], from: Int, to: Int, hs: Array[Int],
+                           ends: Array[Int],
                            out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
     val t = table
     val mark = out.length
     var pos = from
     while (pos < to) {
       val cont = pos != from
-      val maxL = math.min(maxLenVal, to - pos)
+      // the pieces of 1..maxL code points at the cursor
       var h = 0
-      var k = 1
-      while (k <= maxL) { h = 31 * h + s(pos + k - 1); hs(k) = h; k += 1 }
+      var e = pos
+      var maxL = 0
+      while (maxL < maxLenVal && e < to) {
+        val c = s(e)
+        h = 31 * h + c
+        e += 1
+        if (Character.isHighSurrogate(c) && e < to && Character.isLowSurrogate(s(e))) {
+          h = 31 * h + s(e)
+          e += 1
+        }
+        maxL += 1
+        hs(maxL) = h
+        ends(maxL) = e
+      }
       // longest piece first
       var l = maxL
-      var hit = t.find(s, pos, l, hs(l), cont)
-      while (hit < 0 && l > 1) { l -= 1; hit = t.find(s, pos, l, hs(l), cont) }
+      var hit = t.find(s, pos, ends(l) - pos, hs(l), cont)
+      while (hit < 0 && l > 1) { l -= 1; hit = t.find(s, pos, ends(l) - pos, hs(l), cont) }
       if (hit < 0) { // whole-word [UNK], partial pieces dropped
         out.dropRightInPlace(out.length - mark)
         out += Unk
         return
       }
       out += t.token(hit)
-      pos += l
+      pos = ends(l)
     }
   }
 

@@ -94,63 +94,195 @@ object Dedup {
     }.getOrElse((maxHashes, maxHashes)) // 1-hash bands: max recall
   }
 
-  /** Exact-dup-collapsed member table, the shared prep of the minhash
-    * family: (id, gid) for every doc (two longs — feeds the expansion
-    * joins), the group size `n_dups` (the same fp window's count; a
-    * keeper with `n_dups` > 1 heads a duplicate group), plus the two
-    * independent shingle-hash families (double hashing) for keepers
-    * only — guarded by `when`, so the native
+  // --------------------------------------------------- banded-LSH pairs
+
+  /** Exact-duplicate collapse, the first step of every banded pair
+    * operator (and of [[SemDedup]]): ONE window over the dedup `key`
+    * gives every row of `rows` (which carries `id` and `key`) its
+    * group id `gid` (the min id) and group size `n_dups`. A keeper
+    * (id = gid) stands for its group; one with `n_dups` > 1 heads a
+    * duplicate group. Copies share every band, so without the collapse
+    * candidate volume is QUADRATIC in duplicate depth (a 1000-deep dup
+    * cluster inflates its candidates 10⁶×); LSH runs on keepers and
+    * pairs expand back through the groups at the end. Output: (id,
+    * gid, n_dups, `cols`…), checkpointed: it materializes once AND
+    * truncates lineage, so every AQE stage re-optimizes a leaf scan
+    * instead of the full window plan (plain .cache() left concurrent
+    * readers serialized on the cache-population lock, ~0.5 s of
+    * zero-CPU wait per stage). */
+  private[operators] def collapse(rows: DataFrame, key: String,
+                                  cols: Column*): DataFrame = {
+    val wnd = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    rows.withColumn("gid", min("id").over(wnd))
+      .withColumn("n_dups", count(lit(1)).over(wnd))
+      .select(Seq(col("id"), col("gid"), col("n_dups")) ++ cols: _*)
+      .localCheckpoint()
+  }
+
+  private def keepers(members: DataFrame): DataFrame =
+    members.where(col("id") === col("gid"))
+
+  /** A [[collapse]]d corpus ready for the band join: its `members` and
+    * one `banded` row per keeper and band, (id, the band source,
+    * band_idx, band_val). */
+  private final case class Banded(members: DataFrame, banded: DataFrame)
+
+  /** How a banded operator verifies a candidate (ga, gb): `score` of
+    * the two keepers' `payload` columns, named `name`, kept where
+    * `keep` holds. `dupScore`, over a keeper's own columns, scores the
+    * pairs inside its duplicate group. */
+  private final case class PairScore(name: String, payload: String,
+                                     score: (Column, Column) => Column,
+                                     keep: Column => Column, dupScore: Column)
+
+  /** Band join condition of banded rows `a` and `b`: they meet at band
+    * `band_idx` and at no lower band, so a candidate pair appears once,
+    * at its first shared band, and needs no `distinct`. `bandAt(side,
+    * j)` recomputes band j of a side's row from its band source; the
+    * lower bands are compared position by position (band j of `a`
+    * against band j of `b`), unrolled over the constant band count —
+    * no lambda — so an equal band value at two different positions
+    * never hides a pair. */
+  private[graft] def firstSharedBand(a: String, b: String, bands: Int,
+                                     bandAt: (String, Int) => Column): Column =
+    (0 until bands - 1).foldLeft(
+      col(s"$a.band_idx") === col(s"$b.band_idx") &&
+        col(s"$a.band_val") === col(s"$b.band_val")) { (c, j) =>
+      c && (col(s"$a.band_idx") <= j || bandAt(a, j) =!= bandAt(b, j))
+    }
+
+  /** Band j of a 64-bit signature cut into `rows`-bit bands. */
+  private def bitBand(sig: Column, j: Int, rows: Int): Column =
+    shiftright(sig, j * rows).bitwiseAND(lit((1L << rows) - 1))
+
+  /** `bandAt` of [[firstSharedBand]] for rows from [[bitBanded]]. */
+  private[graft] def bitBandAt(sig: String, rows: Int): (String, Int) => Column =
+    (side, j) => bitBand(col(s"$side.$sig"), j, rows)
+
+  /** One row per band of the 64-bit signature `sig` of every row of
+    * `df`: (id, sig, band_idx, band_val). */
+  private[graft] def bitBanded(df: DataFrame, sig: String, bands: Int,
+                               rows: Int): DataFrame =
+    df.select(col("id"), col(sig),
+      posexplode(array((0 until bands).map(bitBand(col(sig), _, rows)): _*))
+        .as(Seq("band_idx", "band_val")))
+
+  /** Steps 2-4 of every banded-LSH pair operator, after [[collapse]]:
+    *
+    *  2. Band join of `a`'s keepers against `b`'s, or against
+    *     themselves with ids ordered (`b` = None), on
+    *     [[firstSharedBand]] and the operator's cheap `prefilter`. It
+    *     is corpus-sized on BOTH sides, so it is pinned sort-merge
+    *     (spillable; a stats-driven broadcast of a small test-scale
+    *     input would also hide the scale plan from the plan guards).
+    *  3. Verify, one row per candidate. A payload the banded rows
+    *     carry (the simhash signature) scores inside the band join;
+    *     any other attaches through shuffled-hash joins whose build
+    *     side is the PAIR stream, bounded by the near-dup rate since
+    *     exact dups are collapsed, while the corpus payload streams
+    *     past: it moves once per pair side, is never sorted, and is
+    *     never broadcast (O(corpus) per executor, OOM at 100 TB). The
+    *     build side must fit executor memory per partition, so a
+    *     corpus whose cross-group near-dup pairs approach O(corpus)
+    *     is outside this plan's range.
+    *  4. Expand group pairs to member pairs through two shuffled-hash
+    *     joins (the pair stream builds, the corpus-sized member table
+    *     streams). Self pairs first union the (gid, gid) pair of every
+    *     duplicate group, scored `dupScore`, so within-group pairs fall
+    *     out of the same joins instead of a separate corpus×corpus
+    *     self-join, and then re-order the ids, which cross-group pairs
+    *     can interleave. Across pairs are corpus-qualified by
+    *     construction.
+    *
+    * Output: (`out`._1, `out`._2, `v`.name). */
+  private def bandedPairs(a: Banded, b: Option[Banded], bands: Int,
+                          bandAt: (String, Int) => Column, v: PairScore,
+                          out: (String, String),
+                          prefilter: Column = lit(true)): DataFrame = {
+    val other = b.getOrElse(a)
+    val ordered = if (b.isEmpty) col("a.id") < col("b.id") else lit(true)
+    val cands = a.banded.as("a")
+      .join(other.banded.as("b").hint("merge"),
+        firstSharedBand("a", "b", bands, bandAt) && ordered && prefilter)
+    val ids = Seq(col("a.id").as("ga"), col("b.id").as("gb"))
+    val scored =
+      if (a.banded.columns.contains(v.payload))
+        cands.select(ids :+ v.score(col(s"a.${v.payload}"),
+                                    col(s"b.${v.payload}")).as(v.name): _*)
+      else {
+        def payload(s: Banded, p: String) =
+          keepers(s.members).select(col("id"), col(v.payload).as(p))
+        cands.select(ids: _*)
+          .hint("shuffle_hash")
+          .join(payload(a, "p_a"), col("ga") === col("id")).drop("id")
+          .hint("shuffle_hash")
+          .join(payload(other, "p_b"), col("gb") === col("id")).drop("id")
+          .select(col("ga"), col("gb"), v.score(col("p_a"), col("p_b")).as(v.name))
+      }
+    val verified = scored.where(v.keep(col(v.name)))
+    def groups(s: Banded, g: String, id: String) =
+      s.members.select(col("gid").as(g), col("id").as(id))
+    if (b.isDefined)
+      verified
+        .hint("shuffle_hash").join(groups(a, "ga", out._1), "ga")
+        .hint("shuffle_hash").join(groups(other, "gb", out._2), "gb")
+        .select(col(out._1), col(out._2), col(v.name))
+    else {
+      val dups = keepers(a.members).where(col("n_dups") > 1)
+        .select(col("gid").as("ga"), col("gid").as("gb"), v.dupScore.as(v.name))
+        .where(v.keep(col(v.name)))
+      verified.union(dups)
+        .hint("shuffle_hash").join(groups(a, "ga", "ida"), "ga")
+        .hint("shuffle_hash").join(groups(a, "gb", "idb"), "gb")
+        .where(col("ga") =!= col("gb") || col("ida") < col("idb"))
+        .select(least(col("ida"), col("idb")).as(out._1),
+                greatest(col("ida"), col("idb")).as(out._2), col(v.name))
+    }
+  }
+
+  // ----------------------------------------------------- minhash pairs
+
+  /** [[collapse]]d minhash side, keyed on the 128-bit content
+    * fingerprint. Keepers carry the two independent shingle-hash
+    * families (double hashing), guarded by `when` so the native
     * [[graft.functions.expressions.WordShingleHashes]] kernel runs on
     * keepers only and non-keepers carry null. The text is normalized
     * ONCE, in the parallel scan stage: the fingerprint hashes it there
     * and the normalized text (not the raw one) crosses the window
-    * shuffle to feed the kernel. ONE window shuffle, checkpointed:
-    * materializes once AND truncates lineage, so every AQE stage
-    * re-optimizes a leaf scan instead of the full window+shingle plan
-    * (plain .cache() left concurrent readers serialized on the
-    * cache-population lock, ~0.5 s of zero-CPU wait per stage). */
-  private def memberTable(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int): DataFrame = {
-    val wnd = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+    * shuffle to feed the kernel. Each keeper's banded rows carry its
+    * band-hash array, the band source of [[firstSharedBand]]. */
+  private def minhashBanded(docs: DataFrame, idCol: String, textCol: String,
+                            n: Int, numHashes: Int, bands: Int): Banded = {
     val keeper = col("id") === col("gid")
-    docs.select(col(idCol).as("id"),
-        TextFunctions.normalize(col(textCol)).as("norm"))
-      .withColumn("fp", TextFunctions.normalizedFingerprint(col("norm")))
-      .withColumn("gid", min("id").over(wnd))
-      .withColumn("n_dups", count(lit(1)).over(wnd))
-      .select(col("id"), col("gid"), col("n_dups"),
-        when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 0)).as("sh1"),
-        when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 1)).as("sh2"))
-      .localCheckpoint()
-  }
-
-  private def bandedKeepers(mem: DataFrame, numHashes: Int, bands: Int,
-                            rows: Int): (DataFrame, DataFrame) = {
-    val keepers = mem.where(col("id") === col("gid"))
-      .select(col("id"), col("sh1"), col("sh2"))
-    val banded = keepers
+    val mem = collapse(
+      docs.select(col(idCol).as("id"),
+          TextFunctions.normalize(col(textCol)).as("norm"))
+        .withColumn("fp", TextFunctions.normalizedFingerprint(col("norm"))),
+      "fp",
+      when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 0)).as("sh1"),
+      when(keeper, GraftFunctions.wordShingleHashes(col("norm"), n, 1)).as("sh2"))
+    val banded = keepers(mem)
       .select(col("id"), bandHashes(
         minhashSignatureFromHashes(col("sh1"), col("sh2"), numHashes),
-        bands, rows).as("bands"))
+        bands, numHashes / bands).as("bands"))
       .select(col("id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    (keepers, banded)
+        posexplode(col("bands")).as(Seq("band_idx", "band_val")))
+    Banded(mem, banded)
   }
 
-  /** Band self-join condition of banded rows `a` and `b` (see
-    * [[bandedKeepers]]): they meet at band `band_idx` and at no lower
-    * band, so a candidate pair appears once, at its first shared band,
-    * and needs no `distinct`. The lower bands are compared position by
-    * position (band j of `a` against band j of `b`), unrolled over the
-    * constant band count — no lambda — so an equal 64-bit hash at two
-    * different positions never hides a pair. */
-  private[graft] def firstSharedBand(a: String, b: String, bands: Int): Column =
-    (0 until bands - 1).foldLeft(
-      col(s"$a.band_idx") === col(s"$b.band_idx") &&
-        col(s"$a.band_hash") === col(s"$b.band_hash")) { (c, j) =>
-      c && (col(s"$a.band_idx") <= j ||
-        col(s"$a.bands").getItem(j) =!= col(s"$b.bands").getItem(j))
-    }
+  /** `bandAt` of [[firstSharedBand]] for [[minhashBanded]] rows. */
+  private val bandItem: (String, Int) => Column =
+    (side, j) => col(s"$side.bands").getItem(j)
+
+  /** Jaccard over shingle-hash SETS (intersect/union dedupe) — equal to
+    * string-shingle jaccard modulo 64-bit collisions; jaccard on
+    * ~70-element arrays costs ~µs per pair, which is why it runs once
+    * per candidate. Exact dups are jaccard 1.0 by construction. */
+  private def jaccardAtLeast(tau: Double): PairScore =
+    PairScore("jaccard", "sh1",
+      (a, b) => size(array_intersect(a, b)).cast("double") /
+        size(array_union(a, b)).cast("double"),
+      _ >= tau, lit(1.0))
 
   /** Near-duplicate pairs: MinHash-LSH candidates verified with exact
     * n-gram Jaccard >= tau. Output: (doc_a, doc_b, jaccard).
@@ -159,89 +291,12 @@ object Dedup {
     * j^4 per band (j=jaccard): ~0.66 any-band at j=0.6, >0.99 at
     * j=0.9, while 4-hash bands keep false candidates ~j^4-rare (r=3
     * bands over a small-vocab corpus produced quadratic candidate
-    * explosions).
-    *
-    * `pairJoinHint` picks the join strategy where the candidate-pair
-    * stream meets a corpus-sized payload table (shingle sets /
-    * vectors). Default `shuffle_hash` builds on the pair side: pairs
-    * are bounded by the near-dup rate (exact dups are collapsed
-    * first), so the per-partition build table is small and the corpus
-    * payload streams past unsorted. That assumption INVERTS on an
-    * adversarial corpus where cross-group near-dup pairs approach
-    * O(corpus) — SHJ's build side must fit executor memory, so beyond
-    * roughly (executor memory × partitions) / pair-row-size pairs
-    * (~10⁹ pairs per TB of executor heap at 32 B/pair), pass
-    * `"merge"`: sort-merge spills both sides and only pays an extra
-    * sort. Results are identical either way (DedupSpec pins this). */
+    * explosions). */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                   tau: Double = 0.6,
-                   pairJoinHint: String = "shuffle_hash"): DataFrame = {
-    val rows = numHashes / bands
-    // 0. collapse exact duplicates first: every copy of a duplicated
-    //    doc shares every band, so candidate volume is QUADRATIC in
-    //    duplicate depth (a 1000-deep dup cluster inflates its
-    //    candidates 10⁶×) — real corpora are duplicate-heavy, which
-    //    would melt the band join at scale. LSH runs on unique texts
-    //    (keyed by the 128-bit content fingerprint, like exact dedup);
-    //    pairs expand back through the groups at the end, and
-    //    within-group pairs are emitted directly at jaccard 1.0.
-    //    One window over the fingerprint yields the member→group map
-    //    AND the unique set (the former groupBy + join-back spent two
-    //    extra shuffle stages on the same answer).
-    val mem = memberTable(docs, idCol, textCol, n)
-    val (withShingles, banded) = bandedKeepers(mem, numHashes, bands, rows)
-    // one row per pair BEFORE verification: jaccard on ~70-element
-    // arrays costs ~µs per pair, so a pair is kept only at its first
-    // shared band (firstSharedBand), not once per shared band, and
-    // needs no distinct shuffle. The shingle payloads then attach via
-    // shuffled-hash joins with the PAIR stream as the build side
-    // (pairs are bounded by the near-dup rate; the corpus payload
-    // streams past, moving ONCE per pair side, never broadcast and
-    // never sorted). A broadcast here would
-    // ship the whole corpus shingle table to every executor: O(corpus)
-    // payload, OOM at 100 TB. The band self-join is corpus-sized on
-    // BOTH sides, so it stays sort-merge (spillable) — stats-driven
-    // broadcast of a "small" test-scale input would hide the scale
-    // plan from the plan guards.
-    val cands = banded.as("a")
-      .join(banded.as("b").hint("merge"),
-        firstSharedBand("a", "b", bands) && col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .hint(pairJoinHint)
-    // jaccard over shingle-hash SETS (intersect/union dedupe) — equal
-    // to string-shingle jaccard modulo 64-bit collisions
-    val upairs = cands
-      .join(withShingles.select(col("id"), col("sh1").as("sh_a")),
-            col("doc_a") === col("id")).drop("id")
-      .hint(pairJoinHint)
-      .join(withShingles.select(col("id"), col("sh1").as("sh_b")),
-            col("doc_b") === col("id")).drop("id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .where(col("jaccard") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // expand group pairs to member pairs through ONE join pipeline:
-    // verified cross-group pairs union the (gid, gid) self-pairs of
-    // duplicated groups (exact dups — jaccard 1.0 by construction), so
-    // within-group pairs fall out of the same two expansion joins
-    // instead of a separate corpus×corpus self-join. Cross-group ids
-    // can interleave (re-order with least/greatest); self-pairs keep
-    // the id< ordering the join condition can't impose.
-    val dupGroups = mem.where(col("id") === col("gid") && col("n_dups") > 1)
-      .select(col("gid").as("doc_a"), col("gid").as("doc_b"),
-              lit(1.0).as("jaccard"))
-      .where(lit(1.0) >= tau)
-    upairs.union(dupGroups)
-      .hint(pairJoinHint)
-      .join(mem.select(col("gid").as("doc_a"), col("id").as("ida")), "doc_a")
-      .hint(pairJoinHint)
-      .join(mem.select(col("gid").as("doc_b"), col("id").as("idb")), "doc_b")
-      .where(col("doc_a") =!= col("doc_b") || col("ida") < col("idb"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
-  }
+                   tau: Double = 0.6): DataFrame =
+    bandedPairs(minhashBanded(docs, idCol, textCol, n, numHashes, bands), None,
+      bands, bandItem, jaccardAtLeast(tau), ("doc_a", "doc_b"))
 
   /** Cross-corpus near-dup pairs: every (docA, docB) with n-gram
     * jaccard >= tau where docA ∈ docsA and docB ∈ docsB — the
@@ -261,37 +316,10 @@ object Dedup {
   def minhashPairsAcross(docsA: DataFrame, docsB: DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                         tau: Double = 0.6,
-                         pairJoinHint: String = "shuffle_hash"): DataFrame = {
-    val rows = numHashes / bands
-    val memA = memberTable(docsA, idCol, textCol, n)
-    val memB = memberTable(docsB, idCol, textCol, n)
-    val (keepA, bandA) = bandedKeepers(memA, numHashes, bands, rows)
-    val (keepB, bandB) = bandedKeepers(memB, numHashes, bands, rows)
-    // candidate (groupA, groupB) pairs: corpus-sized on both sides →
-    // pinned sort-merge; each pair once, at its first shared band,
-    // before payloads attach
-    val cands = bandA.as("a")
-      .join(bandB.as("b").hint("merge"), firstSharedBand("a", "b", bands))
-      .select(col("a.id").as("ga"), col("b.id").as("gb"))
-    val verified = cands.hint(pairJoinHint)
-      .join(keepA.select(col("id"), col("sh1").as("sh_a")),
-            col("ga") === col("id")).drop("id")
-      .hint(pairJoinHint)
-      .join(keepB.select(col("id"), col("sh1").as("sh_b")),
-            col("gb") === col("id")).drop("id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .where(col("jaccard") >= tau)
-      .select(col("ga"), col("gb"), col("jaccard"))
-    verified
-      .hint(pairJoinHint)
-      .join(memA.select(col("gid").as("ga"), col("id").as("doc_a")), "ga")
-      .hint(pairJoinHint)
-      .join(memB.select(col("gid").as("gb"), col("id").as("doc_b")), "gb")
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+                         tau: Double = 0.6): DataFrame =
+    bandedPairs(minhashBanded(docsA, idCol, textCol, n, numHashes, bands),
+      Some(minhashBanded(docsB, idCol, textCol, n, numHashes, bands)),
+      bands, bandItem, jaccardAtLeast(tau), ("doc_a", "doc_b"))
 
   // ------------------------------------------------------------ simhash
 
@@ -335,65 +363,59 @@ object Dedup {
     * within hamming 3 agrees on >= 1 chunk), so the gate demands
     * recall 1.0, not a probabilistic bound.
     *
-    * Identical signatures collapse first (same rationale as the
-    * minhash/embedding step 0, with a sharper twist: the signature IS
-    * the dedup key, so collapsing by it is lossless — a member's
-    * hamming to ANY signature equals its group signature's hamming,
-    * making the expansion exact, not approximate). Duplicate-heavy
-    * corpora make this the difference between the chunk join seeing
-    * O(distinct sigs) and O(corpus) rows: measured at the 100×
-    * derived set (500k docs in 100-deep dup groups), the uncollapsed
-    * join ran 25 s with 6.9 GB spilled — quadratic member pairing in
-    * every chunk bucket. */
+    * Identical signatures collapse first, and with a sharper twist
+    * than the minhash/embedding collapse: the signature IS the dedup
+    * key, so collapsing by it is lossless — a member's hamming to ANY
+    * signature equals its group signature's hamming, making the
+    * expansion exact, not approximate. Duplicate-heavy corpora make
+    * this the difference between the chunk join seeing O(distinct
+    * sigs) and O(corpus) rows: measured at the 100× derived set (500k
+    * docs in 100-deep dup groups), the uncollapsed join ran 25 s with
+    * 6.9 GB spilled — quadratic member pairing in every chunk bucket.
+    * The hamming of two longs is ~free, so it is computed and filtered
+    * inside the chunk join. */
   def simhashPairsFromSigs(sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    // one window shuffle on the signature yields the member→group map
-    // AND the unique set; localCheckpoint (not cache) so the three
-    // readers below see a materialized leaf (see memberTable)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("simhash"))
-    val members = sigs.select(col("id"), col("simhash"))
-      .withColumn("gid", min("id").over(w))
-      .localCheckpoint()
-    val uniques = members.where(col("id") === col("gid"))
-      .select(col("gid").as("id"), col("simhash"))
-    val chunked = uniques.selectExpr("id", "simhash",
-      "posexplode(transform(sequence(0, 3), j -> (shiftright(simhash, j * 16) & 65535L))) AS (chunk_idx, chunk_val)")
-    // hamming filter BEFORE distinct: bit_count of two longs is ~free,
-    // and near-dup clusters in real corpora make the raw candidate set
-    // quadratic — distinct-ing it first shuffles millions of pairs that
-    // the filter would drop anyway
-    // chunk self-join: O(distinct sigs) on both sides — pinned to
-    // sort-merge like the minhash band join (a broadcast would ship
-    // the whole signature table)
-    val upairs = chunked.as("a")
-      .join(chunked.as("b").hint("merge"),
-        col("a.chunk_idx") === col("b.chunk_idx") &&
-          col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-              expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-    // expand group pairs to member pairs through the same ONE join
-    // pipeline as minhashPairs: within-group pairs are hamming 0 by
-    // construction (identical signatures), cross-group pairs inherit
-    // the group hamming exactly. The pair stream is bounded by the
-    // near-dup rate → build side of the shuffled-hash expansion joins;
-    // the member table is corpus-sized and streams past.
-    val dupGroups = members.where(col("id") =!= col("gid"))
-      .select(col("gid").as("doc_a"), col("gid").as("doc_b"),
-              lit(0).cast("integer").as("hamming"))
-      .distinct()
-    upairs.union(dupGroups)
-      .hint("shuffle_hash")
-      .join(members.select(col("gid").as("doc_a"), col("id").as("ida")), "doc_a")
-      .hint("shuffle_hash")
-      .join(members.select(col("gid").as("doc_b"), col("id").as("idb")), "doc_b")
-      .where(col("doc_a") =!= col("doc_b") || col("ida") < col("idb"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"), col("hamming"))
+    val mem = collapse(sigs.select(col("id"), col("simhash")), "simhash",
+      col("simhash"))
+    bandedPairs(Banded(mem, bitBanded(keepers(mem), "simhash", 4, 16)), None,
+      4, bitBandAt("simhash", 16),
+      PairScore("hamming", "simhash", (a, b) => bit_count(a.bitwiseXOR(b)),
+        _ <= maxHamming, lit(0)),
+      ("doc_a", "doc_b"))
   }
 
   // ------------------------------------------------ cluster resolution
+
+  /** Unpersist the block-manager blocks behind a localCheckpoint'd
+    * frame (no-op for anything else). Checkpoint blocks are NOT freed
+    * by `spark.catalog.clearCache()`, so iterative operators must
+    * release each round's blocks themselves or a long-lived session
+    * accrues block-manager state without bound. */
+  private def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** Run `body` with constraint propagation OFF, as the iterative
+    * components loops need: localCheckpoint captures the origin plan's
+    * `constraints` into the LogicalRDD (LogicalRDD.fromDataset →
+    * rewriteStatsAndConstraints), and under chained checkpoints the
+    * captured set can reference attributes of an EARLIER round's
+    * LogicalRDD — the next round's Union then dies in
+    * UnionBase.rewriteConstraints (`key not found: id#…`). With the
+    * flag off the capture is skipped at the source. Nothing is lost:
+    * every join in those loops is a bare equi-join on non-null ids —
+    * there are no filters for InferFiltersFromConstraints to derive. */
+  private def withoutConstraintPropagation(pairs: DataFrame)(
+      body: => DataFrame): DataFrame = {
+    val sess = pairs.sparkSession
+    val cpKey = "spark.sql.constraintPropagation.enabled"
+    val cpSaved = sess.conf.get(cpKey, "true")
+    sess.conf.set(cpKey, "false")
+    try body finally sess.conf.set(cpKey, cpSaved)
+  }
 
   /** Connected components over a near-dup pair graph — the step that
     * turns pairwise matches (minhash/simhash/cosine output) into
@@ -408,35 +430,8 @@ object Dedup {
     *
     * Output: (doc_id, cluster_rep) for every node of the pair graph,
     * rep = min id in the component. */
-  /** Unpersist the block-manager blocks behind a localCheckpoint'd
-    * frame (no-op for anything else). Checkpoint blocks are NOT freed
-    * by `spark.catalog.clearCache()`, so iterative operators must
-    * release each round's blocks themselves or a long-lived session
-    * accrues block-manager state without bound. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  def clusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // Constraint propagation is OFF for the whole loop: localCheckpoint
-    // captures the origin plan's `constraints` into the LogicalRDD
-    // (LogicalRDD.fromDataset → rewriteStatsAndConstraints), and under
-    // chained checkpoints the captured set can reference attributes of
-    // an EARLIER round's LogicalRDD — the next round's Union then dies
-    // in UnionBase.rewriteConstraints (`key not found: id#…`). With the
-    // flag off the capture is skipped at the source. Nothing is lost:
-    // every join here is a bare equi-join on non-null ids — there are
-    // no filters for InferFiltersFromConstraints to derive.
-    val sess = pairs.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpSaved = sess.conf.get(cpKey, "true")
-    sess.conf.set(cpKey, "false")
-    try clustersImpl(pairs, aCol, bCol)
-    finally sess.conf.set(cpKey, cpSaved)
-  }
+  def clusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    withoutConstraintPropagation(pairs)(clustersImpl(pairs, aCol, bCol))
 
   private def clustersImpl(pairs: DataFrame, aCol: String,
                            bCol: String): DataFrame = {
@@ -527,15 +522,8 @@ object Dedup {
     * Round cost: 2 groupBy + 2 join shuffles vs the jump loop's 1+2 —
     * prefer [[clusters]] for ordinary shallow dup graphs; use this
     * when components with super-node hubs are expected. */
-  def clustersStar(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val sess = pairs.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpSaved = sess.conf.get(cpKey, "true")
-    sess.conf.set(cpKey, "false") // same Catalyst failure mode as clusters():
-    // chained localCheckpoints capture stale union constraints
-    try clustersStarImpl(pairs, aCol, bCol)
-    finally sess.conf.set(cpKey, cpSaved)
-  }
+  def clustersStar(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    withoutConstraintPropagation(pairs)(clustersStarImpl(pairs, aCol, bCol))
 
   private def clustersStarImpl(pairs: DataFrame, aCol: String,
                                bCol: String): DataFrame = {
@@ -678,14 +666,9 @@ object Dedup {
     * Vectors are NOT carried through the explode; join them back by id
     * so the banded shuffle moves only (id, band) pairs. */
   def bandedBuckets(embeddings: DataFrame, idCol: String, vecCol: String,
-                    bands: Int, rows: Int, dim: Int): DataFrame = {
-    val mask = (1L << rows) - 1
-    withBucket(embeddings, idCol, vecCol, bands * rows, dim)
-      .selectExpr("id", "bucket",
-        s"""posexplode(transform(sequence(0, ${bands - 1}),
-           |  j -> shiftright(bucket, j * $rows) & $mask))
-           |AS (band_idx, band_val)""".stripMargin)
-  }
+                    bands: Int, rows: Int, dim: Int): DataFrame =
+    bitBanded(withBucket(embeddings, idCol, vecCol, bands * rows, dim),
+      "bucket", bands, rows)
 
   /** Banding that fits the 64-bit sign bucket and meets `targetRecall`
     * at cosine `tau`, with rows as long as possible — longer rows mean
@@ -717,16 +700,15 @@ object Dedup {
   def embeddingCosinePairsAuto(embeddings: DataFrame, idCol: String,
                                vecCol: String, tau: Double = 0.4,
                                targetRecall: Double = 0.9,
-                               dim: Int = 64,
-                               pairJoinHint: String = "shuffle_hash"): DataFrame = {
+                               dim: Int = 64): DataFrame = {
     val (bands, rows) = bandingFor(tau, targetRecall)
-    embeddingCosinePairs(embeddings, idCol, vecCol, tau, bands, rows,
-                         dim, pairJoinHint)
+    embeddingCosinePairs(embeddings, idCol, vecCol, tau, bands, rows, dim)
   }
 
   /** Embedding near-dup pairs: banded sign-LSH candidates verified with
-    * exact cosine >= tau. Output: (id_a, id_b, cos). */
-  /** Default banding 8×8 uses the full 64-bit bucket and targets the
+    * exact cosine >= tau. Output: (id_a, id_b, cos).
+    *
+    * Default banding 8×8 uses the full 64-bit bucket and targets the
     * HIGH-cosine dedup regime: a true cos ≥ 0.9 pair shares a band
     * w.p. ≈ 0.93, while near-orthogonal background pairs (the bulk of
     * any real corpus) collide 2.5× less often than the former 5×6
@@ -737,84 +719,13 @@ object Dedup {
     * callers sweeping for moderate-similarity pairs should pass wider,
     * shorter bands (e.g. bands=5, rows=6) and accept the larger
     * candidate volume. LSH recall here is probabilistic by design;
-    * the exact-duplicate collapse below is unaffected (recall 1.0 for
+    * the exact-duplicate collapse is unaffected (recall 1.0 for
     * identical vectors regardless of banding). */
   def embeddingCosinePairs(embeddings: DataFrame, idCol: String,
                            vecCol: String, tau: Double = 0.4,
                            bands: Int = 8, rows: Int = 8,
-                           dim: Int = 64,
-                           pairJoinHint: String = "shuffle_hash"): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    // 1. free prefilter — sign-bucket hamming rides along with the
-    //    banded rows (one long). cos >= tau pairs flip each bit with
-    //    p = acos(tau)/pi, so diff-bits ~ Binomial(m, p); cut at
-    //    mean + 4σ — a statistical bound (≈3e-5 miss rate), not the
-    //    bare expectation, which would shave ~4% of true pairs
-    // 2. distinct the surviving (id, id) pairs — cheap long-pair
-    //    shuffle, collapses the ≤bands-way band duplication BEFORE
-    //    the vector payloads attach
-    // 3. shuffled-hash join the vector table per pair side (build =
-    //    the bounded pair stream, probe = the corpus) and verify
-    //    cosine with the codegen'd dot. The vectors move once per
-    //    side; broadcasting them instead would ship the full corpus
-    //    embedding table (billions × 64 floats at target scale) to
-    //    every executor.
-    val m = bands * rows
-    val p = math.acos(tau) / math.Pi
-    val maxDiffBits =
-      math.ceil(m * p + 4.0 * math.sqrt(m * p * (1 - p))).toInt
-    // 0. collapse exact-duplicate vectors first (same rationale as
-    //    minhashPairs: candidate volume is quadratic in duplicate
-    //    depth — copies share every band). One shuffle on the vector
-    //    value yields the member→group map AND the unique set; LSH
-    //    runs on uniques, pairs expand back through the groups.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec"))
-    val members = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("gid", min("id").over(w))
-      .localCheckpoint() // feeds uniques, both payload joins, the
-      // dup-group pass and both expansion joins — checkpoint (not
-      // cache) so lineage truncates and concurrent readers don't
-      // serialize on cache population (see minhashPairs)
-    val uniques = members.where(col("id") === col("gid"))
-      .select(col("gid").as("id"), col("vec"))
-    val banded = bandedBuckets(uniques, "id", "vec", bands, rows, dim)
-    val cands = banded.as("a")
-      .join(banded.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.id") < col("b.id") &&
-          expr("bit_count(a.bucket ^ b.bucket)") <= maxDiffBits)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val upairs = cands.hint(pairJoinHint)
-      .join(uniques.select(col("id"), col("vec").as("vec_a")),
-            col("id_a") === col("id")).drop("id")
-      .hint(pairJoinHint)
-      .join(uniques.select(col("id"), col("vec").as("vec_b")),
-            col("id_b") === col("id")).drop("id")
-      .select(col("id_a"), col("id_b"), cosine(col("vec_a"), col("vec_b")).as("cos"))
-      .where(col("cos") >= tau)
-    // expand group pairs to member pairs through ONE join pipeline
-    // (same shape as minhashPairs): verified cross-group pairs union
-    // the (gid, gid) self-pairs of duplicated groups — identical
-    // vectors, cos(v,v), which is 1.0 for any nonzero vector and NULL
-    // (dropped) for zero vectors, exactly as the uncollapsed pipeline
-    // verified them. No separate corpus×corpus intra self-join.
-    val dupGroups = members.where(col("id") =!= col("gid"))
-      .select(col("gid").as("id_a"), col("gid").as("id_b"),
-              cosine(col("vec"), col("vec")).as("cos"))
-      .distinct()
-      .where(col("cos") >= tau)
-    upairs.union(dupGroups)
-      .hint(pairJoinHint)
-      .join(members.select(col("gid").as("id_a"), col("id").as("ida")), "id_a")
-      .hint(pairJoinHint)
-      .join(members.select(col("gid").as("id_b"), col("id").as("idb")), "id_b")
-      .where(col("id_a") =!= col("id_b") || col("ida") < col("idb"))
-      .select(least(col("ida"), col("idb")).as("id_a"),
-              greatest(col("ida"), col("idb")).as("id_b"), col("cos"))
-  }
+                           dim: Int = 64): DataFrame =
+    embeddingPairs(embeddings, None, idCol, vecCol, tau, bands, rows, dim)
 
   /** Cross-corpus embedding near-dup pairs: every (vecA, vecB) with
     * cosine >= tau where vecA ∈ embA and vecB ∈ embB — the vector
@@ -828,47 +739,37 @@ object Dedup {
                                  idCol: String, vecCol: String,
                                  tau: Double = 0.4,
                                  bands: Int = 8, rows: Int = 8,
-                                 dim: Int = 64,
-                                 pairJoinHint: String = "shuffle_hash"): DataFrame = {
+                                 dim: Int = 64): DataFrame =
+    embeddingPairs(embA, Some(embB), idCol, vecCol, tau, bands, rows, dim)
+
+  /** The banded pairs of [[embeddingCosinePairs]] (`embB` = None) and
+    * [[embeddingCosinePairsAcross]]: vectors collapse on their value,
+    * keepers band their sign bucket, and cosine verifies, with the
+    * codegen'd dot, the candidates that pass a free prefilter — the
+    * bucket hamming, which rides along with the banded rows (one
+    * long). cos >= tau pairs flip each bit with p = acos(tau)/π, so
+    * diff-bits ~ Binomial(m, p); the cut sits at mean + 4σ, a
+    * statistical bound (≈3e-5 miss rate), not the bare expectation,
+    * which would shave ~4% of true pairs. A duplicate group's pairs
+    * score cos(v, v): 1.0 for any nonzero vector and NULL (dropped)
+    * for a zero vector, exactly as uncollapsed pairs would verify. */
+  private def embeddingPairs(embA: DataFrame, embB: Option[DataFrame],
+                             idCol: String, vecCol: String, tau: Double,
+                             bands: Int, rows: Int, dim: Int): DataFrame = {
     graft.functions.GraftFunctions.register(embA.sparkSession)
+    def side(emb: DataFrame): Banded = {
+      val mem = collapse(emb.select(col(idCol).as("id"), col(vecCol).as("vec")),
+        "vec", col("vec"))
+      Banded(mem, bandedBuckets(keepers(mem), "id", "vec", bands, rows, dim))
+    }
     val m = bands * rows
     val p = math.acos(tau) / math.Pi
     val maxDiffBits =
       math.ceil(m * p + 4.0 * math.sqrt(m * p * (1 - p))).toInt
-    def prep(emb: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec"))
-      val members = emb
-        .select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .withColumn("gid", min("id").over(w))
-        .localCheckpoint()
-      val uniques = members.where(col("id") === col("gid"))
-        .select(col("gid").as("id"), col("vec"))
-      (members, uniques, bandedBuckets(uniques, "id", "vec", bands, rows, dim))
-    }
-    val (memA, uniqA, bandA) = prep(embA)
-    val (memB, uniqB, bandB) = prep(embB)
-    val cands = bandA.as("a")
-      .join(bandB.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          expr("bit_count(a.bucket ^ b.bucket)") <= maxDiffBits)
-      .select(col("a.id").as("ga"), col("b.id").as("gb"))
-      .distinct()
-    val verified = cands.hint(pairJoinHint)
-      .join(uniqA.select(col("id"), col("vec").as("vec_a")),
-            col("ga") === col("id")).drop("id")
-      .hint(pairJoinHint)
-      .join(uniqB.select(col("id"), col("vec").as("vec_b")),
-            col("gb") === col("id")).drop("id")
-      .select(col("ga"), col("gb"),
-              cosine(col("vec_a"), col("vec_b")).as("cos"))
-      .where(col("cos") >= tau)
-    verified
-      .hint(pairJoinHint)
-      .join(memA.select(col("gid").as("ga"), col("id").as("id_a")), "ga")
-      .hint(pairJoinHint)
-      .join(memB.select(col("gid").as("gb"), col("id").as("id_b")), "gb")
-      .select(col("id_a"), col("id_b"), col("cos"))
+    bandedPairs(side(embA), embB.map(side), bands, bitBandAt("bucket", rows),
+      PairScore("cos", "vec", cosine, _ >= tau, cosine(col("vec"), col("vec"))),
+      ("id_a", "id_b"),
+      bit_count(col("a.bucket").bitwiseXOR(col("b.bucket"))) <= maxDiffBits)
   }
 
   // ----------------------------------------------------- containment
@@ -928,12 +829,11 @@ object Dedup {
     * Shape: collapse window → per-unique-doc distinct-token explode →
     * weighted vocab df agg → df-capped rejoin → k-rarest probe join →
     * bare (ga,gb) distinct → full-set verify via array_intersect →
-    * member expansion. Payload joins after the distinct follow
-    * `pairJoinHint`. */
+    * member expansion. Payload joins after the distinct build on the
+    * bare pair side (shuffle_hash). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        dfNum: Int = 1, dfDen: Int = 5, minNum: Int = 1,
-                       minDen: Int = 2, maxJoinTokens: Int = 16,
-                       pairJoinHint: String = "shuffle_hash"): DataFrame = {
+                       minDen: Int = 2, maxJoinTokens: Int = 16): DataFrame = {
     // collapse: ONE groupBy on the 128-bit fingerprint, BARE columns
     // only (fp, id) — min/count stay inside codegen'd HashAggregate.
     // Array- or text-carrying alternatives both measured slow at
@@ -993,9 +893,9 @@ object Dedup {
     // (doc, tok), count — a streaming token-match count (the
     // pre-probe formulation's shape, restricted to candidates), all
     // bare longs + strings, no array aggregation anywhere
-    val verified = cands.hint(pairJoinHint)
+    val verified = cands.hint("shuffle_hash")
       .join(rare.select(col("doc").as("ga"), col("tok")), "ga")
-      .hint(pairJoinHint)
+      .hint("shuffle_hash")
       .join(rare.select(col("doc").as("gb"), col("tok")), Seq("gb", "tok"))
       .groupBy("ga", "gb").agg(count(lit(1)).as("shared"))
       .join(sizes.withColumnRenamed("doc", "ga"), "ga")
@@ -1010,8 +910,8 @@ object Dedup {
       .select(col("doc").as("ga"), col("doc").as("gb"),
               lit(1.0).as("containment"))
       .where(lit(minDen) >= lit(minNum))
-    // member expansion pinned sort-merge, NOT `pairJoinHint`: the pair hint's
-    // sizing variable is the candidate-pair count, but these joins'
+    // member expansion pinned sort-merge, NOT shuffle_hash: a pair
+    // join's sizing variable is the candidate-pair count, but these joins'
     // left side is member-expanded (pairs × group depth) and `mem` is
     // corpus-sized — at the 1000× tier (1000-deep dup groups) the
     // forced SHJ build exceeded per-task execution memory and the job
@@ -1054,8 +954,7 @@ object Dedup {
                              idCol: String, textCol: String,
                              dfNum: Int = 1, dfDen: Int = 5,
                              minNum: Int = 1, minDen: Int = 2,
-                             maxJoinTokens: Int = 16,
-                             pairJoinHint: String = "shuffle_hash"): DataFrame = {
+                             maxJoinTokens: Int = 16): DataFrame = {
     def collapse(docs: DataFrame): (DataFrame, DataFrame) = {
       val base = docs.select(col(idCol).as("id"),
           TextFunctions.fingerprint(col(textCol)).as("fp"))
@@ -1106,9 +1005,9 @@ object Dedup {
             col("a.tok") === col("b.tok"))
       .select(col("a.doc").as("ga"), col("b.doc").as("gb"))
       .distinct()
-    cands.hint(pairJoinHint)
+    cands.hint("shuffle_hash")
       .join(rareA.select(col("doc").as("ga"), col("tok")), "ga")
-      .hint(pairJoinHint)
+      .hint("shuffle_hash")
       .join(rareB.select(col("doc").as("gb"), col("tok")), Seq("gb", "tok"))
       .groupBy("ga", "gb").agg(count(lit(1)).as("shared"))
       .join(sizesA.withColumnRenamed("doc", "ga"), "ga")
@@ -1116,7 +1015,7 @@ object Dedup {
       .select(col("ga"), col("gb"),
         (col("shared").cast("double") / col("n_a").cast("double"))
           .as("containment"))
-      // member expansion pinned sort-merge (not `pairJoinHint`) — the
+      // member expansion pinned sort-merge (not shuffle_hash) — the
       // containmentPairs rationale: member-expanded left + corpus-
       // sized member maps must never hash-build
       .hint("merge")

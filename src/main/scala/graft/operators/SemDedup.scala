@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -43,14 +42,11 @@ object SemDedup {
       s"keepRule must be min_id|far_from_centroid, got $keepRule")
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
 
-    // 0. exact-dup collapse (embeddingCosinePairs pattern): one
+    // 0. exact-dup collapse (the banded pair operators' step 1): one
     //    shuffle on the vector value gives member→gid and the unique
     //    set; the pair graph runs on uniques only.
-    val w = Window.partitionBy(col("vec"))
-    val members = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("gid", min("id").over(w))
-      .localCheckpoint()
+    val members = Dedup.collapse(
+      embeddings.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", col("vec"))
     val uniques = members.where(col("id") === col("gid"))
       .select(col("gid").as("id"), col("vec"))
 

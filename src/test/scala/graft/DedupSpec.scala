@@ -67,15 +67,29 @@ class DedupSpec extends SparkSpec {
       (3L, Seq(10L, 20L, 31L)),
       (4L, Seq(10L, 21L, 30L))).toDF("id", "bands")
       .select(col("id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+        posexplode(col("bands")).as(Seq("band_idx", "band_val")))
     val got = banded.as("a")
-      .join(banded.as("b"), Dedup.firstSharedBand("a", "b", 3) && col("a.id") < col("b.id"))
+      .join(banded.as("b"), Dedup.firstSharedBand("a", "b", 3,
+        (s, j) => col(s"$s.bands").getItem(j)) && col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id"), col("a.band_idx"))
       .as[(Long, Long, Int)].collect().sorted.toSeq
     // (1,3) share bands 0 and 1, (1,4) bands 0 and 2: each once, at 0;
     // (1,2) and (2,4) share only band 2, kept although a's band 0 hash
     // equals b's band 1 hash; (2,3) share none
     assert(got === Seq((1L, 2L, 2), (1L, 3L, 0), (1L, 4L, 0), (2L, 4L, 2), (3L, 4L, 0)))
+    // the bit form: 16-bit bands of a 64-bit signature, recomputed from
+    // the signature by shift and mask. (11, 12) share chunks 1 and 3;
+    // (11, 13) have chunk values 1 and 2 at swapped positions
+    def sig(c: Long*): Long = c.zipWithIndex.map { case (v, j) => v << (16 * j) }.sum
+    val sigs = Seq((11L, sig(1, 2, 3, 4)), (12L, sig(9, 2, 8, 4)),
+                   (13L, sig(2, 1, 7, 9))).toDF("id", "sig")
+    val bits = Dedup.bitBanded(sigs, "sig", 4, 16)
+    val gotBits = bits.as("a")
+      .join(bits.as("b"), Dedup.firstSharedBand("a", "b", 4,
+        Dedup.bitBandAt("sig", 16)) && col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id"), col("a.band_idx"))
+      .as[(Long, Long, Int)].collect().toSeq
+    assert(gotBits === Seq((11L, 12L, 1)))
     // the same rule inside minhashPairs: no pair twice on a real corpus
     // with many bands per pair
     val pairs = Dedup.minhashPairs(Tables.documents(spark, sfDir), "doc_id", "text",
@@ -259,32 +273,6 @@ class DedupSpec extends SparkSpec {
     val r1 = lsh.where(col("rk") === 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(r1 === Set((0L, 0L), (1L, 1L), (2L, 2L)))
-  }
-
-  test("merge pairJoinHint: identical minhash pairs, sort-merge payload join") {
-    // the sort-merge fallback for adversarial duplicate-heavy corpora
-    // (where the pair stream outgrows SHJ's in-memory build side) must
-    // change ONLY the physical join, never the rows
-    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 300)
-    def run(hint: String) =
-      Dedup.minhashPairs(docs, "doc_id", "text", pairJoinHint = hint)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(run("merge") === run("shuffle_hash"))
-    assert(run("shuffle_hash").nonEmpty) // testdata plants near-dups
-    val planOf = (hint: String) =>
-      Dedup.minhashPairs(docs, "doc_id", "text", pairJoinHint = hint)
-        .queryExecution.executedPlan.toString
-    assert(planOf("merge").contains("SortMergeJoin"))
-    assert(planOf("shuffle_hash").contains("ShuffledHashJoin"))
-  }
-
-  test("merge pairJoinHint: identical embedding-cosine pairs") {
-    val emb = Tables.embeddings(spark, sfDir)
-    def run(hint: String) =
-      Dedup.embeddingCosinePairs(emb, "vec_id", "embedding",
-          tau = 0.9, pairJoinHint = hint)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(run("merge") === run("shuffle_hash"))
   }
 
   test("simhash pigeonhole finds EVERY hamming<=3 pair at 10x dup depth") {

@@ -82,10 +82,22 @@ class PlanSpec extends SparkSpec {
 
   test("dedup verify joins never broadcast the corpus payload") {
     // the signature/vector payload tables are O(corpus): a broadcast
-    // here OOMs every executor at 100 TB — pairs must shuffle-join
+    // here OOMs every executor at 100 TB — pairs must shuffle-join,
+    // the pair stream as the shuffled-hash build side
     for (q <- Seq("dedup_minhash_pairs", "dedup_embedding_cosine", "dedup_simhash")) {
       val p = plan(q)
       assert(!p.contains("BroadcastExchange"), s"$q: corpus-sized broadcast\n$p")
+      assert(p.contains("ShuffledHashJoin"), s"$q: no shuffled-hash pair join\n$p")
+    }
+    // a candidate pair appears once, at its first shared band, so no
+    // aggregate dedups the pair stream by its two ids
+    val pairIds = Set("ga", "gb", "doc_a", "doc_b", "id_a", "id_b")
+    for (q <- Seq("dedup_simhash", "dedup_embedding_cosine")) {
+      val p = plan(q)
+      val pairAggs = "Aggregate\\(keys=\\[([^\\]]*)\\]".r.findAllMatchIn(p)
+        .map(_.group(1).split(", ").map(_.takeWhile(_ != '#')).toSet)
+        .filter(keys => (keys & pairIds).size >= 2).toList
+      assert(pairAggs.isEmpty, s"$q: aggregate over the pair ids\n$p")
     }
   }
 

@@ -94,12 +94,11 @@ class TextFunctionsSpec extends SparkSpec {
     import graft.operators.Wordpiece
     // the production vocab plus non-ASCII and supplementary-plane
     // pieces, a bare "##" and a "###" entry (whose continuation piece
-    // is "#"). The native pieces are UTF-16 char ranges and the HOF's
-    // are code-point ranges, so the two differ only where a piece with
-    // a surrogate pair meets the maxPieceLen cap; no entry here does.
+    // is "#"). Both cap pieces at maxPieceLen code points: at cap 3,
+    // "a\uD83D\uDE00b" (4 UTF-16 chars) is one piece, not "a\uD83D\uDE00" + "##b".
     val vocab = graft.queries.TextQueries.wpVocab ++ Seq("é", "##é", "ñandú",
-      "##ü", "straße", "\uD83D\uDE00", "##\uD83D\uDE00", "a\uD83D\uDE00", "##", "###",
-      "#", "中文", "##文")
+      "##ü", "straße", "\uD83D\uDE00", "##\uD83D\uDE00", "a\uD83D\uDE00",
+      "a\uD83D\uDE00b", "##", "###", "#", "中文", "##文")
     val words = Seq(
       // longer than maxPieceLen (8, and 3 below): the cursor must cut
       "internationalization", "abcdefghijklmnoprstuvwxyz0123456789",
