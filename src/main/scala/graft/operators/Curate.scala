@@ -394,18 +394,17 @@ object Curate {
   def compact(spark: SparkSession, roots: Roots, nFiles: Int = 4,
               retain: Int = 16): Long = {
     val cur = segments.resolve(spark, roots.curation, None)
-    val nSegs = segments.catalogOf(spark, roots.curation, None).size
-    val corpusSeg = {
-      val c = readCorpus(spark, roots)
-      if (c.isEmpty) None
-      else Some(writeSegment(spark, roots.curation, CorpusKind,
-        c.repartitionByRange(nFiles, col("doc_id"))))
-    }
-    val ledgerSeg = {
-      val l = readLedger(spark, roots)
-      if (l.isEmpty) None
-      else Some(writeSegment(spark, roots.curation, LedgerKind,
-        l.repartitionByRange(nFiles, col("fp"))))
+    val catalog = segments.catalogOf(spark, roots.curation, Some(cur))
+    // a kind with no rows (by the catalog's n_rows, no job) gets no
+    // segment
+    val folded = Seq((CorpusKind, corpusSchema, "doc_id"),
+                     (LedgerKind, ledgerSchema, "fp")).flatMap {
+      case (kind, schema, key) =>
+        val segs = catalog.filter(_.kind == kind)
+        if (segs.map(_.nRows).sum == 0) None
+        else Some(writeSegment(spark, roots.curation, kind,
+          spark.read.schema(schema).parquet(segs.map(_.path): _*)
+            .repartitionByRange(nFiles, col(key))))
     }
     // state and index pins carry forward unchanged; the note marks the
     // version as a compaction (it can never collide with a batch note)
@@ -413,9 +412,9 @@ object Curate {
       subDir(spark, roots.curation, cur, "state"), stateSchema)
     val pins = MetaTable.read(spark,
       subDir(spark, roots.curation, cur, "meta"), metaSchema).head
-    val note = s"compaction-of-$nSegs"
-    segments.replace(spark, roots.curation, corpusSeg.toSeq ++ ledgerSeg.toSeq,
-      retain, note, writeMeta(spark, state, Row(pins.get(0), pins.get(1), note)))
+    val note = s"compaction-of-${catalog.size}"
+    segments.replace(spark, roots.curation, folded, retain, note,
+      writeMeta(spark, state, Row(pins.get(0), pins.get(1), note)))
   }
 
   /** Delete segments referenced by NO retained version — the payload

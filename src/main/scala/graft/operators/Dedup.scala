@@ -151,9 +151,11 @@ object Dedup {
       c && (col(s"$a.band_idx") <= j || bandAt(a, j) =!= bandAt(b, j))
     }
 
-  /** Band j of a 64-bit signature cut into `rows`-bit bands. */
+  /** Band j of a 64-bit signature cut into `rows`-bit bands, `rows` in
+    * 1..64. The mask is an unsigned shift: `(1L << 64) - 1` would be 0,
+    * since Java takes shift counts mod 64. */
   private def bitBand(sig: Column, j: Int, rows: Int): Column =
-    shiftright(sig, j * rows).bitwiseAND(lit((1L << rows) - 1))
+    shiftright(sig, j * rows).bitwiseAND(lit(-1L >>> (64 - rows)))
 
   /** `bandAt` of [[firstSharedBand]] for rows from [[bitBanded]]. */
   private[graft] def bitBandAt(sig: String, rows: Int): (String, Int) => Column =

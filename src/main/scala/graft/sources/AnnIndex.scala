@@ -56,7 +56,7 @@ import graft.Decision
   * stay correct regardless (probes re-rank with true cosines; stale
   * centroids only cost recall at narrow nprobe, never correctness).
   */
-object AnnIndex {
+object AnnIndex extends SegmentIndex {
 
   private val SegmentsDir = "segments"
 
@@ -71,6 +71,8 @@ object AnnIndex {
     * `codesPath` = no codes for this segment. */
   final case class Segment(path: String, nRows: Long, meanCos: Double,
                            codesPath: String)
+
+  protected def defaultRetain = 2
 
   private def centroidsPath(dataDir: String) = s"$dataDir/centroids"
   private def codebooksPath(dataDir: String) = s"$dataDir/codebooks"
@@ -97,8 +99,20 @@ object AnnIndex {
     StructField("subspace", IntegerType), StructField("code", IntegerType),
     StructField("codeword", ArrayType(FloatType, containsNull = false))))
 
+  // the segment tables' schemas, fixed by writeSegment: reads pass
+  // them, so no scan starts a schema-inference job
+  private val VectorsSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("ccos", DoubleType)))
+  private val CodesSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType))))
+
   /** One immutable cell-clustered segment + its stats index (and,
-    * with codebooks, the parallel PQ code table). */
+    * with codebooks, the parallel PQ code table). Ids are stored as
+    * longs and vectors as float32 ([[VectorsSchema]]), the type of the
+    * centroids they are scored against. */
   private def writeSegment(spark: SparkSession, root: String, df: DataFrame,
                            idCol: String, vecCol: String,
                            centroids: Seq[(Int, Array[Float])],
@@ -111,8 +125,8 @@ object AnnIndex {
     // nearest-cell assignment is the zero-exchange literal-centroid
     // argmax (Similarity.assignCells); the only shuffle is the range
     // partition that CREATES the cell clustering the probes prune on
-    val assigned = df.select(col(idCol).as("vec_id"),
-        col(vecCol).as("embedding"))
+    val assigned = df.select(col(idCol).cast("long").as("vec_id"),
+        col(vecCol).cast(VectorsSchema("embedding").dataType).as("embedding"))
       // `cosine` mode: identical argmax to ivfTopK's dot_norm (the
       // scores differ by the row-constant positive ‖x‖), and the score
       // IS the assignment cosine the drift stat needs
@@ -138,7 +152,7 @@ object AnnIndex {
     val codesSeg = codebooks match {
       case Some(cbs) =>
         // encode from the WRITTEN segment (assignment not recomputed),
-        // read with the written frame's schema (no inference job);
+        // read with the segment schema (no inference job);
         // the codes ride their own cell-clustered table + stats index,
         // so probePq prunes code FILES exactly like probe prunes
         // vector files — and reads ~dim·32/(m·log2 ksub) times fewer
@@ -147,7 +161,7 @@ object AnnIndex {
         // enumerated cell layout — the range sampler re-ran pqEncode
         Layout.repartitionByKeyRange(
             Similarity.pqEncode(
-              spark.read.schema(laid.schema).parquet(seg)
+              spark.read.schema(VectorsSchema).parquet(seg)
                 .select(col("cell"), col("vec_id"), col("embedding")),
               "embedding", cbs)
               .select(col("cell"), col("vec_id"), col("codes")),
@@ -187,11 +201,6 @@ object AnnIndex {
         centroidsPath(segments.dataDir(spark, root, version)), CentroidsSchema)
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
-
-  /** The segment catalog of `version`, read on the driver. */
-  def catalogOf(spark: SparkSession, root: String,
-                version: Option[Long] = None): Seq[Segment] =
-    segments.catalogOf(spark, root, version)
 
   /** The persisted PQ codebooks of `version`, if the index carries
     * them (always tiny: m × ksub × dim/m floats). */
@@ -311,6 +320,7 @@ object AnnIndex {
     * parquet scan) so pruning can only skip work, never change
     * results. Records files kept/total as an `ann.cells` decision. */
   private def prunedCellRead(spark: SparkSession, segPaths: Seq[String],
+                             schema: StructType,
                              probeCells: Seq[Long]): DataFrame = {
     // one metadata scan for ALL segments (r20) — the per-segment form
     // cost one driver-serial job per segment per probe
@@ -320,8 +330,8 @@ object AnnIndex {
     Decision.record(Decision("ann.cells", "pruned", kept.size,
       pruned.map(_._2.size).sum))
     (if (kept.isEmpty)
-       spark.read.parquet(segPaths.head).limit(0) // schema, no rows
-     else spark.read.parquet(kept: _*))
+       spark.read.schema(schema).parquet(segPaths.head).limit(0)
+     else spark.read.schema(schema).parquet(kept: _*))
       .where(col("cell").isInCollection(probeCells.map(_.toInt)))
   }
 
@@ -334,7 +344,7 @@ object AnnIndex {
     val (probes, probeCells) =
       rankProbes(spark, dataDir, queries, idCol, vecCol, nprobe)
     val segPaths = catalogOf(spark, root, version).map(_.path)
-    val corpus = prunedCellRead(spark, segPaths, probeCells)
+    val corpus = prunedCellRead(spark, segPaths, VectorsSchema, probeCells)
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("embedding").as("cvec"))
     val w = Window.partitionBy(col("query_id"))
@@ -374,7 +384,8 @@ object AnnIndex {
       rankProbes(spark, dataDir, queries, idCol, vecCol, nprobe)
     // ADC stage: decode corpus-side of the join (once per corpus row,
     // not once per (query, row) pair — the pqTopK lesson)
-    val codes = prunedCellRead(spark, catalog.map(_.codesPath), probeCells)
+    val codes = prunedCellRead(spark, catalog.map(_.codesPath), CodesSchema,
+      probeCells)
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         Similarity.pqDecode(col("codes"), codebooks).as("xhat"))
     val approxW = Window.partitionBy(col("query_id"))
@@ -386,7 +397,8 @@ object AnnIndex {
       .select(col("query_id"), col("neighbor_id"))
     // exact re-rank: candidates came from probed cells, so the raw
     // fetch prunes to the SAME cell files (bounded id join on top)
-    val raw = prunedCellRead(spark, catalog.map(_.path), probeCells)
+    val raw = prunedCellRead(spark, catalog.map(_.path), VectorsSchema,
+      probeCells)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cvec"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -399,27 +411,27 @@ object AnnIndex {
       .select(col("query_id"), col("neighbor_id"), col("rk"), col("cos"))
   }
 
-  /** Compact every segment of the current version into ONE freshly
-    * cell-clustered segment — the index's OPTIMIZE step. Streaming
-    * ingestion leaves one small segment per micro-batch; each probe
-    * then pays per-segment stats lookups and opens many small files
-    * per probed cell. Compaction rewrites the union under the SAME
-    * frozen centroids (and codebooks — the code table is re-derived,
-    * so a PQ index stays ADC-searchable), publishes a single-segment
-    * catalog as the next version, and leaves the old segments to
-    * [[vacuumSegments]] once retention drops the versions naming
-    * them. Results are unchanged by construction: same rows, same
-    * assignment expression, same probe path. `nFiles` re-sizes the
-    * layout for the COMPACTED row count — the moment to restore
-    * ~1 cell/file after many tiny appends. */
-  def compactSegments(spark: SparkSession, root: String,
-                      nFiles: Int = 16, retain: Int = 2,
-                      maxRetries: Int = 0): Long = {
+  /** ANN compaction: streaming ingestion leaves one small segment per
+    * micro-batch; each probe then pays per-segment stats lookups and
+    * opens many small files per probed cell. Compaction rewrites the
+    * union through [[writeSegment]] under the SAME frozen centroids
+    * (and codebooks — the code table is re-derived, so a PQ index
+    * stays ADC-searchable). Results are unchanged by construction:
+    * same rows, same assignment expression, same probe path. `nFiles`
+    * re-sizes the layout for the COMPACTED row count — the moment to
+    * restore ~1 cell/file after many tiny appends. Cost (r18,
+    * SCALE1000.md): lossless probe 3.4 → 8.8 s from 1 → 32 segments;
+    * compaction 4.6 s at the 2M-vector tier — cells re-cluster against
+    * the frozen centroids, no retrain — so it pays for itself within a
+    * probe or two. */
+  def compactSegments(spark: SparkSession, root: String, nFiles: Int,
+                      retain: Int, maxRetries: Int): Long = {
     val centroids = centroidsOf(spark, root)
     val catalog = catalogOf(spark, root)
     require(catalog.nonEmpty, s"no ANN index at $root")
     val codebooks = codebooksOf(spark, root)
-    val union = spark.read.parquet(catalog.map(_.path): _*)
+    val union = spark.read.schema(VectorsSchema)
+      .parquet(catalog.map(_.path): _*)
       .select(col("vec_id"), col("embedding"))
     val seg = writeSegment(spark, root, union, "vec_id", "embedding",
       centroids, nFiles, codebooks)
@@ -427,27 +439,4 @@ object AnnIndex {
       s"compaction-of-${catalog.size}", maxRetries,
       writeModel(spark, centroids, codebooks))
   }
-
-  /** Compact only when the live catalog exceeds `maxSegments` (r18
-    * segment-count economics, SCALE1000.md: lossless probe 3.4 →
-    * 8.8 s from 1 → 32 segments; compaction cost 4.6 s at the
-    * 2M-vector tier — cells re-cluster against the FROZEN centroids,
-    * no retrain — so it pays for itself within a probe or two).
-    * Returns Some(version) when compaction ran. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-                      maxSegments: Int = 8, nFiles: Int = 16,
-                      retain: Int = 2): Option[Long] = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    if (catalogOf(spark, root).size <= maxSegments) None
-    else Some(compactSegments(spark, root, nFiles, retain))
-  }
-
-  /** Delete segments referenced by NO retained version
-    * ([[SegmentCatalog.vacuum]]; [[Manifest.vacuum]] only GCs metadata
-    * dirs). Returns the removed paths. */
-  def vacuumSegments(spark: SparkSession, root: String,
-                     minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
-                     staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] =
-    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 }

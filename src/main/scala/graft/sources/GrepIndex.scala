@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Decision
@@ -87,7 +87,7 @@ import graft.functions.GraftFunctions
   * Patterns shorter than 3 code points carry no trigram and are
   * rejected loudly: route those through a plain filtered scan, where
   * no index can help. */
-object GrepIndex {
+object GrepIndex extends SegmentIndex {
 
   private val SegmentsDir = "segments"
 
@@ -101,6 +101,8 @@ object GrepIndex {
   final case class Segment(postings: String, stats: String,
                            docs: String, nDocs: Long)
 
+  protected def defaultRetain = 4
+
   /** The catalog lifecycle: `catalog/` rows (postings, stats, docs,
     * n_docs) sorted by postings path, segments under `segments/`. */
   private[graft] val segments = new SegmentCatalog[Segment]("grep index",
@@ -112,8 +114,8 @@ object GrepIndex {
     r => Segment(r.getString(0), r.getString(1), r.getString(2), r.getLong(3)),
     _.postings, g => Seq(g.postings, g.stats, g.docs), _.nDocs)
 
-  // the segment tables' schemas, fixed by writeSegment: reads pass
-  // them, so no scan starts a schema-inference job
+  // the segment tables' schemas, fixed by the layout writers below:
+  // reads pass them, so no scan starts a schema-inference job
   private val PostingsSchema = StructType(Seq(
     StructField("h", LongType), StructField("doc_id", LongType)))
   private val StatsSchema = StructType(Seq(
@@ -121,11 +123,64 @@ object GrepIndex {
   private val DocsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  /** The segment catalog of `version` (default: current), read on the
-    * driver. */
-  def catalogOf(spark: SparkSession, root: String,
-                version: Option[Long] = None): Seq[Segment] =
-    segments.catalogOf(spark, root, version)
+  /** Fresh, uniquely named segment dirs under `root`; the doc count is
+    * filled in by the caller. */
+  private def freshSegment(root: String): Segment = {
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    Segment(s"$root/$SegmentsDir/post-$token",
+      s"$root/$SegmentsDir/stats-$token", s"$root/$SegmentsDir/docs-$token", 0L)
+  }
+
+  /** The postings layout, shared by append and compaction: (h, doc_id)
+    * h-range clustered, sorted by h, [[StatsIndex]]'d on h.
+    * SMALL row groups (4 MB vs the 128 MB scan default): an index
+    * segment is read by POINT probes, and parquet's min/max skipping
+    * works at row-group grain — at 128 MB a 32-file 1.4B-posting
+    * fleet has ~1-4 groups per file, so a 16-hash probe decompressed
+    * ~500M rows (r17 measured: the probe lost to the scan on IO it
+    * never needed); at 4 MB the same probe touches ~16 groups of
+    * ~400k rows. Bulk writers keep the big default; index segments
+    * are the one layout whose reader is always selective.
+    * h-range clustering WITHOUT the RangePartitioner sampling pass
+    * (r19, guide §2.4): trigram hashes are xxhash64-uniform, so
+    * fixed-width ranges of the long domain replace sampled
+    * boundaries — repartitionByRange ran the whole gram-explode
+    * chain TWICE per segment (once for the sampler, once to write). */
+  private def writePostings(spark: SparkSession, postings: DataFrame,
+                            path: String, nFiles: Int): Unit = {
+    Layout.repartitionByHashRange(postings, col("h"), math.max(nFiles, 1))
+      .sortWithinPartitions("h")
+      .write.option("parquet.block.size", 4 * 1024 * 1024)
+      .mode("overwrite").parquet(path)
+    StatsIndex.write(spark, path, Seq("h"))
+  }
+
+  /** The (h, df) stats layout: the postings' h-range clustering. */
+  private def writeStats(stats: DataFrame, path: String, nFiles: Int): Unit =
+    Layout.repartitionByHashRange(stats, col("h"), math.max(nFiles, 1))
+      .sortWithinPartitions("h")
+      .write.mode("errorifexists").parquet(path)
+
+  /** The (doc_id, text) docs layout: doc_id-range clustered, sorted,
+    * [[StatsIndex]]'d on doc_id. 8 MB groups for the postings' reason:
+    * the verify fetch reads candidate RANGES (file prune + pushed
+    * range), and a smaller group bounds how much non-candidate text
+    * decompresses around each hit. `obs`, when given, counts the rows
+    * on the write's own execution (the Curate r14 discipline: one scan
+    * job per segment fewer than a post-write re-read count()). It sits
+    * DOWNSTREAM of the range exchange: the RangePartitioner's sampling
+    * pass executes the exchange's CHILD a second time, and a
+    * CollectMetrics below the exchange would double-count through the
+    * sampler. */
+  private def writeDocs(spark: SparkSession, docs: DataFrame, path: String,
+                        nFiles: Int, obs: Option[Observation]): Unit = {
+    val laid = docs.repartitionByRange(math.max(nFiles, 1), col("doc_id"))
+      .sortWithinPartitions("doc_id")
+    obs.fold(laid)(o => laid.observe(o, count(lit(1)).as("n")))
+      .write.option("parquet.block.size", 8 * 1024 * 1024)
+      .mode("overwrite").parquet(path)
+    StatsIndex.write(spark, path, Seq("doc_id"))
+  }
 
   /** Trigram only `docs`, write one immutable segment triple. Only the
     * BATCH is read — nothing touches prior segments (the lifecycle
@@ -133,65 +188,21 @@ object GrepIndex {
   private def writeSegment(spark: SparkSession, docs: DataFrame,
                            idCol: String, textCol: String,
                            root: String, nFiles: Int): Segment = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val post = s"$root/$SegmentsDir/post-$token"
-    val stat = s"$root/$SegmentsDir/stats-$token"
-    val dcs = s"$root/$SegmentsDir/docs-$token"
-    val postings = docs.select(
+    val seg = freshSegment(root)
+    writePostings(spark, docs.select(
         col(idCol).cast("long").as("doc_id"),
         explode(array_distinct(
           GraftFunctions.charGramHashes(col(textCol), 3))).as("h"))
-      .select(col("h"), col("doc_id"))
-    // SMALL row groups (4 MB vs the 128 MB scan default): an index
-    // segment is read by POINT probes, and parquet's min/max skipping
-    // works at row-group grain — at 128 MB a 32-file 1.4B-posting
-    // fleet has ~1-4 groups per file, so a 16-hash probe decompressed
-    // ~500M rows (r17 measured: the probe lost to the scan on IO it
-    // never needed); at 4 MB the same probe touches ~16 groups of
-    // ~400k rows. Bulk writers keep the big default; index segments
-    // are the one layout whose reader is always selective.
-    // h-range clustering WITHOUT the RangePartitioner sampling pass
-    // (r19, guide §2.4): trigram hashes are xxhash64-uniform, so
-    // fixed-width ranges of the long domain replace sampled
-    // boundaries — repartitionByRange ran the whole gram-explode
-    // chain TWICE per segment (once for the sampler, once to write)
-    Layout.repartitionByHashRange(postings, col("h"), math.max(nFiles, 1))
-      .sortWithinPartitions("h")
-      .write.option("parquet.block.size", 4 * 1024 * 1024)
-      .mode("overwrite").parquet(post)
-    StatsIndex.write(spark, post, Seq("h"))
+      .select(col("h"), col("doc_id")), seg.postings, nFiles)
     // df from the WRITTEN postings (one cheap re-agg of persisted
     // data, never a recompute of the gram pass): postings carry one
     // row per (doc, gram), so count = the segment's df
-    Layout.repartitionByHashRange(
-        spark.read.schema(PostingsSchema).parquet(post)
-          .groupBy(col("h")).agg(count(lit(1)).as("df")),
-        col("h"), math.max(nFiles, 1))
-      .sortWithinPartitions("h")
-      .write.mode("errorifexists").parquet(stat)
-    // docs get 8 MB groups for the same reason: the verify fetch
-    // reads candidate RANGES (file prune + pushed range), and a
-    // smaller group bounds how much non-candidate text decompresses
-    // around each hit
-    // doc count rides the write's own execution (observe — the Curate
-    // r14 discipline): an exact integer count, identical to the
-    // post-write re-read count() it replaces, minus one scan job per
-    // segment (build + append each write one)
-    // NOTE the observe sits DOWNSTREAM of the range exchange: the
-    // RangePartitioner's sampling pass executes the exchange's CHILD
-    // a second time, and a CollectMetrics below the exchange would
-    // double-count through the sampler
-    val obs = org.apache.spark.sql.Observation()
-    docs.select(col(idCol).cast("long").as("doc_id"),
-                col(textCol).as("text"))
-      .repartitionByRange(math.max(nFiles, 1), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .observe(obs, count(lit(1)).as("n"))
-      .write.option("parquet.block.size", 8 * 1024 * 1024)
-      .mode("overwrite").parquet(dcs)
-    StatsIndex.write(spark, dcs, Seq("doc_id"))
-    segments.stage(spark,
-      Segment(post, stat, dcs, obs.get("n").asInstanceOf[Long]))
+    writeStats(spark.read.schema(PostingsSchema).parquet(seg.postings)
+      .groupBy(col("h")).agg(count(lit(1)).as("df")), seg.stats, nFiles)
+    val obs = Observation()
+    writeDocs(spark, docs.select(col(idCol).cast("long").as("doc_id"),
+      col(textCol).as("text")), seg.docs, nFiles, Some(obs))
+    segments.stage(spark, seg.copy(nDocs = obs.get("n").asInstanceOf[Long]))
   }
 
   /** Build the index at `root` from (idCol, textCol) documents,
@@ -235,76 +246,32 @@ object GrepIndex {
     segments.append(spark, root, seg, retain, note, maxRetries, _ => ())
   }
 
-  /** Fold every live segment into ONE freshly clustered segment and
-    * publish it as the next version — the OPTIMIZE step after many
-    * small streaming appends (per-file h-clustering holds per
-    * segment, but fleet-level ranges overlap more with every append,
-    * so StatsIndex pruning degrades gracefully toward reading more
-    * files; compaction restores ~1 range per file). Postings and docs
-    * rewrite once; df stats and n_docs fold by exact integer sums, so
-    * probes are unchanged (spec-gated). Old segments stay until
-    * [[vacuumSegments]]. `maxRetries > 0` opts into CAS-retry:
-    * segments appended since the fold began survive the merge
-    * ([[SegmentCatalog.mergedCatalog]]); a conflicting concurrent
-    * COMPACTION throws regardless (folding the same rows twice would
-    * duplicate them). */
-  def compactSegments(spark: SparkSession, root: String,
-                      nFiles: Int = 16, retain: Int = 4,
-                      maxRetries: Int = 0): Long = {
+  /** Grep compaction: per-segment h-clustering holds, but fleet-level
+    * ranges overlap more with every append, so StatsIndex pruning
+    * degrades toward reading more files; compaction restores ~1 range
+    * per file. Postings and docs rewrite once through the append
+    * path's layout writers; df stats and n_docs fold by exact integer
+    * sums, so probes are unchanged (spec-gated). Cost (r18,
+    * SCALE1000.md): probe wall grew 3.0 → 14.9 s from 1 → 32 segments
+    * and compaction restored 1.2 s. This is the expensive one of the
+    * three indexes (a global re-sort of the posting mass — 167 s at
+    * the 5M-doc tier), so size `maxSegments` to amortize over the
+    * probe rate rather than compacting eagerly; it pays for itself in
+    * ~12 probes there. */
+  def compactSegments(spark: SparkSession, root: String, nFiles: Int,
+                      retain: Int, maxRetries: Int): Long = {
     val catalog = catalogOf(spark, root)
     require(catalog.nonEmpty, s"no grep index at $root")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val post = s"$root/$SegmentsDir/post-$token"
-    val stat = s"$root/$SegmentsDir/stats-$token"
-    val dcs = s"$root/$SegmentsDir/docs-$token"
-    Layout.repartitionByHashRange(
-        spark.read.schema(PostingsSchema).parquet(catalog.map(_.postings): _*),
-        col("h"), math.max(nFiles, 1))
-      .sortWithinPartitions("h")
-      .write.option("parquet.block.size", 4 * 1024 * 1024)
-      .mode("overwrite").parquet(post)
-    StatsIndex.write(spark, post, Seq("h"))
-    Layout.repartitionByHashRange(
-        spark.read.schema(StatsSchema).parquet(catalog.map(_.stats): _*)
-          .groupBy(col("h")).agg(sum(col("df")).as("df")),
-        col("h"), math.max(nFiles, 1))
-      .sortWithinPartitions("h")
-      .write.mode("errorifexists").parquet(stat)
-    spark.read.schema(DocsSchema).parquet(catalog.map(_.docs): _*)
-      .repartitionByRange(math.max(nFiles, 1), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.option("parquet.block.size", 8 * 1024 * 1024)
-      .mode("overwrite").parquet(dcs)
-    StatsIndex.write(spark, dcs, Seq("doc_id"))
-    val seg = segments.stage(spark,
-      Segment(post, stat, dcs, catalog.map(_.nDocs).sum))
-    segments.fold(spark, root, catalog, seg, retain, "", maxRetries, _ => ())
+    val seg = freshSegment(root).copy(nDocs = catalog.map(_.nDocs).sum)
+    writePostings(spark, spark.read.schema(PostingsSchema)
+      .parquet(catalog.map(_.postings): _*), seg.postings, nFiles)
+    writeStats(spark.read.schema(StatsSchema).parquet(catalog.map(_.stats): _*)
+      .groupBy(col("h")).agg(sum(col("df")).as("df")), seg.stats, nFiles)
+    writeDocs(spark, spark.read.schema(DocsSchema)
+      .parquet(catalog.map(_.docs): _*), seg.docs, nFiles, None)
+    segments.fold(spark, root, catalog, segments.stage(spark, seg), retain,
+      "", maxRetries, _ => ())
   }
-
-  /** Compact only when the live catalog exceeds `maxSegments` — the
-    * policy the r18 segment-count economics justify (SCALE1000.md:
-    * probe wall grew 3.0 → 14.9 s from 1 → 32 segments as StatsIndex
-    * pruning degraded to keeping every file; compaction restored
-    * 1.2 s). Grep compaction is the expensive one of the three
-    * indexes (a global re-sort of the posting mass — 167 s at the
-    * 5M-doc tier), so size `maxSegments` to amortize over the probe
-    * rate rather than compacting eagerly; it pays for itself in ~12
-    * probes there. Returns Some(version) when compaction ran. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-                      maxSegments: Int = 8, nFiles: Int = 16,
-                      retain: Int = 4): Option[Long] = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    if (catalogOf(spark, root).size <= maxSegments) None
-    else Some(compactSegments(spark, root, nFiles, retain))
-  }
-
-  /** Delete segments referenced by NO retained version
-    * ([[SegmentCatalog.vacuum]]). Returns removed segment paths. */
-  def vacuumSegments(spark: SparkSession, root: String,
-                     minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
-                     staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] =
-    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 
   /** Verified matches (pattern_id, doc_id) for a bounded literal
     * pattern set, against the CURRENT committed catalog version.

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,8 +24,7 @@ import graft.Decision
   *    appends by integer addition).
   *  - `<root>/segments/post-<tok>/` — (bucket, term, doc_id, tf, dl,
   *    d0) posting rows (d0 flags one designated row per doc so segment
-  *    stats re-derive from the written file by a flat filtered scan;
-  *    compacted segments drop it — their stats are integer sums),
+  *    stats re-derive from the written file by a flat filtered scan),
   *    bucket = pmod(xxhash64(term), nBuckets), clustered
   *    via repartitionByRange(bucket, term) + sortWithinPartitions so a
   *    probe's bucket set prunes FILES ([[StatsIndex]] over `bucket`)
@@ -52,7 +51,7 @@ import graft.Decision
   * corpus statistics are exact sums, so appended indexes equal
   * from-scratch builds exactly (spec-gated).
   */
-object InvertedIndex {
+object InvertedIndex extends SegmentIndex {
 
   private val SegmentsDir = "segments"
 
@@ -60,6 +59,8 @@ object InvertedIndex {
     * corpus contribution. */
   final case class Segment(postings: String, dictionary: String,
                            nDocs: Long, sumDl: Long, nBuckets: Int)
+
+  protected def defaultRetain = 2
 
   /** The catalog lifecycle: `catalog/` rows (postings, dictionary,
     * n_docs, sum_dl, n_buckets) sorted by postings path, segments
@@ -75,10 +76,72 @@ object InvertedIndex {
       r.getInt(4)),
     _.postings, g => Seq(g.postings, g.dictionary), _.nDocs)
 
+  // the segment tables' schemas, fixed by the layout writers below:
+  // reads pass them, so no scan starts a schema-inference job
+  private val PostingsSchema = StructType(Seq(
+    StructField("bucket", IntegerType), StructField("term", StringType),
+    StructField("doc_id", LongType), StructField("tf", LongType),
+    StructField("dl", IntegerType), StructField("d0", BooleanType)))
+  private val DictionarySchema = StructType(Seq(
+    StructField("bucket", IntegerType), StructField("term", StringType),
+    StructField("df", LongType)))
+
   /** The term→bucket map — xxhash64 so engine-side bucket derivation
     * at probe time is the same expression that clustered the write. */
   def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(xxhash64(term), lit(nBuckets.toLong)).cast("int")
+
+  /** Fresh, uniquely named segment dirs under `root`; the corpus stats
+    * are filled in by the caller. */
+  private def freshSegment(root: String, nBuckets: Int): Segment = {
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    Segment(s"$root/$SegmentsDir/post-$token",
+      s"$root/$SegmentsDir/dict-$token", 0L, 0L, nBuckets)
+  }
+
+  /** The postings layout, shared by append and compaction. Bucket-range
+    * clustering WITHOUT the RangePartitioner sampling pass: buckets
+    * are an enumerable [0, nBuckets) domain, so boundaries need no
+    * sampling — repartitionByRange ran the whole tokenize+term-count
+    * chain TWICE per segment (once for the sampler, once for the
+    * write). Files hold contiguous whole buckets, so StatsIndex file
+    * pruning is as tight as the range layout's (tighter: a bucket
+    * never straddles files). `obs`, when given, observes n_docs (`n`)
+    * and sum_dl (`s`) on the write's own execution (the
+    * Curate.writeSegment r14 discipline, applied here in r19): exact
+    * INTEGER sums over the d0 rows, order-independent, so the values
+    * are byte-identical to a post-write `where(d0).agg(...)` re-read,
+    * minus one scan job per segment. */
+  private def writePostings(spark: SparkSession, postings: DataFrame,
+                            path: String, nBuckets: Int, nFiles: Int,
+                            obs: Option[Observation]): Unit = {
+    val laid = Layout.repartitionByKeyRange(postings, col("bucket"),
+        nBuckets, math.max(nFiles, 1))
+      .sortWithinPartitions("bucket", "term")
+      .select("bucket", "term", "doc_id", "tf", "dl", "d0")
+    obs.fold(laid)(o => laid.observe(o,
+        count(when(col("d0"), lit(1))).as("n"),
+        sum(when(col("d0"), col("dl"))).as("s")))
+      .write.mode("errorifexists").parquet(path)
+    StatsIndex.write(spark, path, Seq("bucket"))
+  }
+
+  /** The dictionary layout: (bucket, term, df) from the WRITTEN
+    * postings at `post` (one cheap re-agg of what was persisted, never
+    * a recompute of the tokenization): postings carry one row per
+    * (doc, term), so count = df. Same bucket clustering, stats-indexed
+    * on bucket. */
+  private def writeDictionary(spark: SparkSession, post: String,
+                              path: String, nBuckets: Int,
+                              nFiles: Int): Unit = {
+    Layout.repartitionByKeyRange(
+        spark.read.schema(PostingsSchema).parquet(post)
+          .groupBy(col("bucket"), col("term")).agg(count(lit(1)).as("df")),
+        col("bucket"), nBuckets, math.max(math.min(nFiles, nBuckets), 1))
+      .sortWithinPartitions("bucket", "term")
+      .write.mode("errorifexists").parquet(path)
+    StatsIndex.write(spark, path, Seq("bucket"))
+  }
 
   /** Tokenize `docs` (the bm25Search normalize+split, so index scores
     * replay the in-query retriever exactly), write one bucket-clustered
@@ -86,10 +149,8 @@ object InvertedIndex {
   private def writeSegment(spark: SparkSession, root: String,
                            docs: DataFrame, idCol: String, textCol: String,
                            nBuckets: Int, nFiles: Int): Segment = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val post = s"$root/$SegmentsDir/post-$token"
-    val dict = s"$root/$SegmentsDir/dict-$token"
-    val toks = docs.select(col(idCol).as("doc_id"),
+    val seg = freshSegment(root, nBuckets)
+    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
       split(TextFunctions.normalize(col(textCol)), " ").as("toks"))
     // tf is a PER-DOCUMENT statistic — count it inside the row (one
     // native hash-map scan of the token array, graft_term_counts)
@@ -107,56 +168,16 @@ object InvertedIndex {
         col("col.term").as("term"), col("col.tf").as("tf"),
         (col("pos") === 0).as("d0"))
       .withColumn("bucket", bucketOf(col("term"), nBuckets))
-    // bucket-range clustering WITHOUT the RangePartitioner sampling
-    // pass: buckets are an enumerable [0, nBuckets) domain, so
-    // boundaries need no sampling — repartitionByRange ran the whole
-    // tokenize+term-count chain TWICE per segment (once for the
-    // sampler, once for the write). Files hold contiguous whole
-    // buckets, so StatsIndex file pruning is as tight as the range
-    // layout's (tighter: a bucket never straddles files).
-    val laid = Layout.repartitionByKeyRange(posting, col("bucket"),
-        nBuckets, math.max(nFiles, 1))
-      .sortWithinPartitions("bucket", "term")
-    // segment stats ride the write's own execution via observe (the
-    // Curate.writeSegment r14 discipline, applied here in r19): n_docs
-    // and sum_dl are exact INTEGER sums — order-independent, so the
-    // observed values are byte-identical to the old post-write
-    // `where(d0).agg(...)` re-read they replace, minus one scan job
-    // per segment (this path runs twice per bm25_index_incremental
-    // and once per curate batch).
-    val obs = org.apache.spark.sql.Observation()
-    val postings = laid.select("bucket", "term", "doc_id", "tf", "dl", "d0")
-    postings
-      .observe(obs,
-        count(when(col("d0"), lit(1))).as("n"),
-        sum(when(col("d0"), col("dl"))).as("s"))
-      .write.mode("errorifexists").parquet(post)
-    StatsIndex.write(spark, post, Seq("bucket"))
-    // dictionary + stats from the WRITTEN postings (one cheap re-agg
-    // of what was persisted, never a recompute of the tokenization):
-    // postings carry one row per (doc, term), so count = df; the
-    // re-read takes the written frame's schema (no inference job)
-    val written = spark.read.schema(postings.schema).parquet(post)
-    Layout.repartitionByKeyRange(
-        written.groupBy(col("bucket"), col("term"))
-          .agg(count(lit(1)).as("df")),
-        col("bucket"), nBuckets, math.max(math.min(nFiles, nBuckets), 1))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("errorifexists").parquet(dict)
-    StatsIndex.write(spark, dict, Seq("bucket"))
+    val obs = Observation()
+    writePostings(spark, posting, seg.postings, nBuckets, nFiles, Some(obs))
+    writeDictionary(spark, seg.postings, seg.dictionary, nBuckets, nFiles)
     // exactly one d0=true row per doc (every doc has >= 1 token: split
     // of even an empty string yields [""]), so n_docs/sum_dl are the
     // observed flat sums over exactly the written rows
     val n = obs.get("n").asInstanceOf[Long]
     val s = obs.get("s") match { case null => 0L; case v => v.asInstanceOf[Long] }
-    segments.stage(spark, Segment(post, dict, n, s, nBuckets))
+    segments.stage(spark, seg.copy(nDocs = n, sumDl = s))
   }
-
-  /** The segment catalog of `version` (default: current), read on the
-    * driver. */
-  def catalogOf(spark: SparkSession, root: String,
-                version: Option[Long] = None): Seq[Segment] =
-    segments.catalogOf(spark, root, version)
 
   /** Tokenize the corpus once, publish version 0-or-next. `nFiles`
     * sizes the posting segment (nFiles ≈ nBuckets gives ~1 bucket per
@@ -198,6 +219,7 @@ object InvertedIndex {
     * parquet) so pruning can only skip work, never change results.
     * Records files kept/total as an `inv.buckets` [[graft.Decision]]. */
   private def prunedBucketRead(spark: SparkSession, segPaths: Seq[String],
+                               schema: StructType,
                                buckets: Seq[Long]): DataFrame = {
     // one metadata scan for ALL segments (r20) — the per-segment form
     // cost one driver-serial job per segment per probe
@@ -207,8 +229,8 @@ object InvertedIndex {
     Decision.record(Decision("inv.buckets", "pruned", kept.size,
       pruned.map(_._2.size).sum))
     (if (kept.isEmpty)
-       spark.read.parquet(segPaths.head).limit(0)
-     else spark.read.parquet(kept: _*))
+       spark.read.schema(schema).parquet(segPaths.head).limit(0)
+     else spark.read.schema(schema).parquet(kept: _*))
       .where(col("bucket").isInCollection(buckets.map(_.toInt)))
   }
 
@@ -243,10 +265,12 @@ object InvertedIndex {
       .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
     val nDocs = catalog.map(_.nDocs).sum
     val avgdl = catalog.map(_.sumDl).sum.toDouble / nDocs.toDouble
-    val post = prunedBucketRead(spark, catalog.map(_.postings), buckets)
+    val post = prunedBucketRead(spark, catalog.map(_.postings), PostingsSchema,
+      buckets)
       .where(col("term").isInCollection(terms))
     // global df = exact per-segment sums; |terms| rows → broadcast
-    val df = prunedBucketRead(spark, catalog.map(_.dictionary), buckets)
+    val df = prunedBucketRead(spark, catalog.map(_.dictionary), DictionarySchema,
+      buckets)
       .where(col("term").isInCollection(terms))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val perTerm = post.join(broadcast(df), "term")
@@ -275,68 +299,30 @@ object InvertedIndex {
       .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
   }
 
-  /** Compact every segment of the current version into ONE freshly
-    * bucket-clustered posting+dictionary pair — the index's OPTIMIZE
-    * step (the [[AnnIndex.compactSegments]] economics: streamed
-    * appends leave one small segment pair per micro-batch, and each
-    * probe then pays per-segment stats lookups and opens many small
-    * files per probed bucket). Posting rows are the atoms — (doc,
-    * term, tf, dl) never changes meaning across segments — so
-    * compaction is a pure re-layout of their union; the dictionary
-    * and stats are re-derived from the compacted postings exactly as
-    * [[build]] derives them, so probes are unchanged by construction.
-    * Publishes a single-segment catalog as the next version; old
-    * segments fall to [[vacuumSegments]] once retention drops the
-    * versions naming them. */
-  def compactSegments(spark: SparkSession, root: String,
-                      nFiles: Int = 16, retain: Int = 2,
-                      maxRetries: Int = 0): Long = {
+  /** Inverted compaction: streamed appends leave one small segment
+    * pair per micro-batch, and each probe then pays per-segment stats
+    * lookups and opens many small files per probed bucket. Posting
+    * rows are the atoms — (doc, term, tf, dl, d0) never changes meaning
+    * across segments — so compaction is a pure re-layout of their
+    * union through the append path's postings writer; the dictionary
+    * re-derives from the compacted postings exactly as [[build]]
+    * derives it, and n_docs/sum_dl fold by integer sums, so probes are
+    * unchanged by construction. Cost (r18, SCALE1000.md): probe
+    * 7.4 → 13.7 s from 1 → 32 segments; compaction 14.5 s at the
+    * 5M-doc tier — postings fold by bucket without a global re-sort —
+    * so it pays for itself within ~2 probes. */
+  def compactSegments(spark: SparkSession, root: String, nFiles: Int,
+                      retain: Int, maxRetries: Int): Long = {
     val catalog = catalogOf(spark, root)
     require(catalog.nonEmpty, s"no inverted index at $root")
     val nBuckets = catalog.head.nBuckets
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val post = s"$root/$SegmentsDir/post-$token"
-    val dict = s"$root/$SegmentsDir/dict-$token"
-    val postings = Layout.repartitionByKeyRange(
-        spark.read.parquet(catalog.map(_.postings): _*),
-        col("bucket"), nBuckets, math.max(nFiles, 1))
-      .sortWithinPartitions("bucket", "term")
-      .select("bucket", "term", "doc_id", "tf", "dl")
-    postings.write.mode("errorifexists").parquet(post)
-    StatsIndex.write(spark, post, Seq("bucket"))
-    val written = spark.read.schema(postings.schema).parquet(post)
-    Layout.repartitionByKeyRange(
-        written.groupBy(col("bucket"), col("term"))
-          .agg(count(lit(1)).as("df")),
-        col("bucket"), nBuckets, math.max(math.min(nFiles, nBuckets), 1))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("errorifexists").parquet(dict)
-    StatsIndex.write(spark, dict, Seq("bucket"))
-    // exact stats recompose by integer addition — no rescan needed
-    val seg = segments.stage(spark, Segment(post, dict,
-      catalog.map(_.nDocs).sum, catalog.map(_.sumDl).sum, nBuckets))
-    segments.fold(spark, root, catalog, seg, retain, "", maxRetries, _ => ())
+    val seg = freshSegment(root, nBuckets).copy(
+      nDocs = catalog.map(_.nDocs).sum, sumDl = catalog.map(_.sumDl).sum)
+    writePostings(spark, spark.read.schema(PostingsSchema)
+        .parquet(catalog.map(_.postings): _*),
+      seg.postings, nBuckets, nFiles, None)
+    writeDictionary(spark, seg.postings, seg.dictionary, nBuckets, nFiles)
+    segments.fold(spark, root, catalog, segments.stage(spark, seg), retain,
+      "", maxRetries, _ => ())
   }
-
-  /** Compact only when the live catalog exceeds `maxSegments` (r18
-    * segment-count economics, SCALE1000.md: probe 7.4 → 13.7 s from
-    * 1 → 32 segments; compaction cost 14.5 s at the 5M-doc tier —
-    * postings fold by bucket without a global re-sort — so it pays
-    * for itself within ~2 probes). Returns Some(version) when
-    * compaction ran. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-                      maxSegments: Int = 8, nFiles: Int = 16,
-                      retain: Int = 2): Option[Long] = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    if (catalogOf(spark, root).size <= maxSegments) None
-    else Some(compactSegments(spark, root, nFiles, retain))
-  }
-
-  /** Delete segments referenced by NO retained version
-    * ([[SegmentCatalog.vacuum]]). Returns removed segment paths. */
-  def vacuumSegments(spark: SparkSession, root: String,
-                     minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
-                     staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
-      : Seq[String] =
-    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 }

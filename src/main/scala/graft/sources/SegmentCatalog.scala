@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   *  - the publish comes in three shapes: [[replace]] (a build defines
   *    the catalog), [[append]] (prior catalog plus one segment) and
   *    [[fold]] (compaction, through [[mergedCatalog]]);
-  *  - [[vacuum]] deletes segment dirs no retained version names.
+  *  - [[vacuum]] deletes segment dirs no retained version names;
+  *  - [[SegmentIndex]] is the maintenance an index exposes on top.
   *
   * This is the only caller of Manifest's commit and staging
   * primitives outside Manifest itself, so every write path crosses the
@@ -167,4 +168,62 @@ final class SegmentCatalog[S](
     Manifest.vacuumUnreferenced(spark, segmentRoot(root), referenced,
       minAgeMs, staleStagingMs)
   }
+}
+
+/** The maintenance half of an index's segment log, written once for
+  * [[GrepIndex]], [[InvertedIndex]] and [[AnnIndex]]. An index gives
+  * its [[segments]] catalog and its [[compactSegments]] (how its
+  * segments re-derive as one); the catalog read, the compaction
+  * policy and vacuum are here. Callers see one `retain` default per
+  * index ([[defaultRetain]]). */
+trait SegmentIndex {
+
+  /** One immutable segment of the index. */
+  type Segment
+
+  private[graft] def segments: SegmentCatalog[Segment]
+
+  /** The `retain` default of this index's writers and maintenance. */
+  protected def defaultRetain: Int
+
+  /** The segment catalog of `version` (default: current), read on the
+    * driver. */
+  def catalogOf(spark: SparkSession, root: String,
+                version: Option[Long] = None): Seq[Segment] =
+    segments.catalogOf(spark, root, version)
+
+  /** Fold every live segment into ONE freshly laid-out segment and
+    * publish it as the next version — the OPTIMIZE step after many
+    * small (streamed) appends. Probes are unchanged. Old segments stay
+    * until [[vacuumSegments]]. `maxRetries > 0` opts into CAS-retry:
+    * segments appended since the fold began survive the merge
+    * ([[SegmentCatalog.mergedCatalog]]); a conflicting concurrent
+    * COMPACTION throws regardless (folding the same rows twice would
+    * duplicate them). */
+  def compactSegments(spark: SparkSession, root: String,
+                      nFiles: Int = 16, retain: Int = defaultRetain,
+                      maxRetries: Int = 0): Long
+
+  /** Compact only when the live catalog exceeds `maxSegments` — the
+    * policy the r18 segment-count economics justify (SCALE1000.md:
+    * probe latency grows with segment count as StatsIndex pruning
+    * degrades; each index's [[compactSegments]] gives its cost and
+    * payback). Reads only the catalog, on the driver, below the
+    * threshold. Returns Some(version) when compaction ran. */
+  def compactIfNeeded(spark: SparkSession, root: String,
+                      maxSegments: Int = 8, nFiles: Int = 16,
+                      retain: Int = defaultRetain): Option[Long] = {
+    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
+    if (catalogOf(spark, root).size <= maxSegments) None
+    else Some(compactSegments(spark, root, nFiles, retain))
+  }
+
+  /** Delete segments referenced by NO retained version
+    * ([[SegmentCatalog.vacuum]]; [[Manifest.vacuum]] only GCs metadata
+    * dirs). Returns the removed paths. */
+  def vacuumSegments(spark: SparkSession, root: String,
+                     minAgeMs: Long = Manifest.DefaultVacuumAgeMs,
+                     staleStagingMs: Long = Manifest.DefaultStaleStagingMs)
+      : Seq[String] =
+    segments.vacuum(spark, root, minAgeMs, staleStagingMs)
 }

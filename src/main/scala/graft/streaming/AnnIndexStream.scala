@@ -10,17 +10,7 @@ import graft.sources.AnnIndex
   * the ingest pipeline land in the searchable artifact continuously,
   * without a nightly rebuild, assigned against the index's FROZEN
   * centroids exactly like a batch [[graft.sources.AnnIndex.append]].
-  *
-  * Sink discipline: `foreachBatch` + the index's own Manifest CAS
-  * commit. Structured Streaming replays a micro-batch after a crash
-  * (at-least-once at the sink boundary), so each append is tagged
-  * with its micro-batch id as the version's commit NOTE — written
-  * inside the staged data dir, hence published atomically WITH the
-  * version. A replayed batch finds its note on a retained version and
-  * skips: exactly-once ingestion, with the dedup memory bounded by
-  * Manifest retention (replays are immediate; retention spans them).
-  * A crash BEFORE the CAS leaves only an unreferenced staging dir
-  * (GC'd), never a half-visible version.
+  * Sink discipline: [[StreamMarkers.once]].
   *
   * Drift surfaces per batch through `onBatch` — the streaming twin of
   * the batch drift report: a feed whose distribution departs from the
@@ -29,32 +19,24 @@ import graft.sources.AnnIndex
 object AnnIndexStream {
 
   /** Append one micro-batch idempotently. Returns None when `batchId`
-    * already committed (replay) or the batch is empty. */
+    * already committed (replay) or the batch is empty. `maxSegments >
+    * 0` opts into inline auto-compaction after the append
+    * ([[graft.sources.AnnIndex.compactIfNeeded]]). */
   def appendBatch(root: String, batch: DataFrame, batchId: Long,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   nFiles: Int = 16, driftTolerance: Double = 0.05,
                   retain: Int = 4,
                   maxSegments: Int = 0): Option[AnnIndex.AppendResult] = {
     val spark = batch.sparkSession
-    val note = s"stream-batch-$batchId"
-    // Two-layer replay dedup — see [[StreamMarkers]]: notes cover the
-    // immediate replay, the durable marker covers replays that arrive
-    // after retention GC'd the noted version.
-    val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      AnnIndex.segments.notedVersion(spark, root, note).isDefined
-    if (replayed || batch.isEmpty) None
-    else {
-      val r = AnnIndex.append(spark, root, batch, idCol, vecCol,
-        nFiles, driftTolerance, retain, note)
-      StreamMarkers.record(spark, root, batchId)
-      // opt-in inline auto-compaction (cheap: cells re-cluster against
-      // the frozen centroids, no retrain — 4.6 s at the 2M-vector
-      // tier, paying for itself within a probe or two; SCALE1000 r18)
-      if (maxSegments > 0)
-        AnnIndex.compactIfNeeded(spark, root, maxSegments,
-          nFiles = nFiles, retain = retain)
-      Some(r)
-    }
+    StreamMarkers.once(spark, root, batchId, AnnIndex.segments, batch)(
+        AnnIndex.append(spark, root, batch, idCol, vecCol, nFiles,
+          driftTolerance, retain, _))
+      .map { r =>
+        if (maxSegments > 0)
+          AnnIndex.compactIfNeeded(spark, root, maxSegments,
+            nFiles = nFiles, retain = retain)
+        r
+      }
   }
 
   /** The writer: wire to `.option("checkpointLocation", …).start()`.

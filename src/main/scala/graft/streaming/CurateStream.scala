@@ -14,17 +14,11 @@ import graft.operators.Curate
   * foreachBatch runs micro-batches sequentially in arrival order (the
   * doc_id-order precondition runBatch documents).
   *
-  * Exactly-once, the [[InvertedIndexStream]] discipline extended to
-  * the COMPOSITION:
-  *   - the micro-batch id rides the curation commit as its meta
-  *     batch_note (written inside the staged dir → published
-  *     atomically with the version); a replayed batch finds it on a
-  *     retained version and skips;
-  *   - a durable [[StreamMarkers]] high-water record outside the GC'd
-  *     version dirs catches replays arriving after retention advanced;
-  *   - the inner index appends carry the SAME note, so a crash between
-  *     an index append and the outer commit does not double-append on
-  *     replay — runBatch reuses the noted index version.
+  * Exactly-once: [[StreamMarkers.once]] over the curation root, with
+  * the micro-batch note also riding the curation meta's batch_note.
+  * The inner index appends carry the SAME note, so a crash between an
+  * index append and the outer commit does not double-append on
+  * replay — runBatch reuses the noted index version.
   */
 object CurateStream {
 
@@ -42,17 +36,10 @@ object CurateStream {
                 annMaxSegments: Int = 0,
                 invMaxSegments: Int = 0): Option[Long] = {
     val spark = batch.sparkSession
-    val note = s"stream-batch-$batchId"
-    val replayed = StreamMarkers.seen(spark, roots.curation, batchId) ||
-      Curate.segments.notedVersion(spark, roots.curation, note).isDefined
-    if (replayed || batch.isEmpty) None
-    else {
-      val v = Curate.runBatch(spark, roots, batch, embeddings,
-        qualityFloor, budgetPerSource, annCells, nFiles, note,
-        annMaxSegments = annMaxSegments, invMaxSegments = invMaxSegments)
-      StreamMarkers.record(spark, roots.curation, batchId)
-      Some(v)
-    }
+    StreamMarkers.once(spark, roots.curation, batchId, Curate.segments, batch)(
+      Curate.runBatch(spark, roots, batch, embeddings, qualityFloor,
+        budgetPerSource, annCells, nFiles, _,
+        annMaxSegments = annMaxSegments, invMaxSegments = invMaxSegments))
   }
 
   /** The writer: wire to `.option("checkpointLocation", …).start()`.

@@ -14,17 +14,7 @@ import graft.sources.GrepIndex
   * frequencies and the corpus doc count recompose at probe time by
   * exact integer sums, so a stream-built index answers every probe —
   * including the index-vs-scan route decision — identically to the
-  * batch build (spec-gated).
-  *
-  * Sink discipline: `foreachBatch` + the index's Manifest CAS commit,
-  * micro-batch id as the version's commit note — written inside the
-  * staged dir, hence published atomically with the version. A
-  * replayed batch finds its note on a retained version (or the
-  * durable [[StreamMarkers]] high-water record, covering replays
-  * past the retention horizon) and skips: exactly-once ingestion
-  * with dedup memory bounded by retention. Orphan segments from a
-  * crash mid-batch are reclaimed by
-  * [[graft.sources.GrepIndex.vacuumSegments]]. */
+  * batch build (spec-gated). Sink discipline: [[StreamMarkers.once]]. */
 object GrepIndexStream {
 
   /** Append one micro-batch idempotently. Returns the committed
@@ -36,27 +26,21 @@ object GrepIndexStream {
     * tier, SCALE1000.md r18), so an inline compact stalls the stream
     * for that long; probe-latency-sensitive deployments with heavy
     * corpora should prefer an out-of-band maintenance job. Replay
-    * dedup is unaffected: compaction versions carry no batch note,
-    * and the durable [[StreamMarkers]] high-water record covers
-    * replays arriving after retention GC'd a noted version. */
+    * dedup is unaffected: compaction runs after the batch's marker is
+    * recorded, and compaction versions carry no batch note. */
   def appendBatch(root: String, batch: DataFrame, batchId: Long,
                   idCol: String = "doc_id", textCol: String = "text",
                   nFiles: Int = 4, retain: Int = 4,
                   maxSegments: Int = 0): Option[Long] = {
     val spark = batch.sparkSession
-    val note = s"stream-batch-$batchId"
-    val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      GrepIndex.segments.notedVersion(spark, root, note).isDefined
-    if (replayed || batch.isEmpty) None
-    else {
-      val v = GrepIndex.append(spark, root, batch, idCol, textCol,
-        nFiles, retain, note)
-      StreamMarkers.record(spark, root, batchId)
-      if (maxSegments > 0)
-        GrepIndex.compactIfNeeded(spark, root, maxSegments,
-          nFiles = nFiles, retain = retain)
-      Some(v)
-    }
+    StreamMarkers.once(spark, root, batchId, GrepIndex.segments, batch)(
+        GrepIndex.append(spark, root, batch, idCol, textCol, nFiles, retain, _))
+      .map { v =>
+        if (maxSegments > 0)
+          GrepIndex.compactIfNeeded(spark, root, maxSegments,
+            nFiles = nFiles, retain = retain)
+        v
+      }
   }
 
   /** The writer: wire to `.option("checkpointLocation", …).start()`.

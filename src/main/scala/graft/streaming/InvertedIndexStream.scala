@@ -12,13 +12,7 @@ import graft.sources.InvertedIndex
   * micro-batch tokenizes ONLY itself into one posting+dictionary
   * segment pair; corpus statistics recompose at probe time by exact
   * integer sums, so a stream-built index equals the batch build
-  * BIT-exactly (spec-gated).
-  *
-  * Sink discipline: `foreachBatch` + the index's Manifest CAS commit,
-  * micro-batch id as the version's commit note — written inside the
-  * staged dir, hence published atomically with the version. A
-  * replayed batch finds its note on a retained version and skips:
-  * exactly-once ingestion with dedup memory bounded by retention.
+  * BIT-exactly (spec-gated). Sink discipline: [[StreamMarkers.once]].
   * After many small appends, [[graft.sources.InvertedIndex
   * .compactSegments]] is the OPTIMIZE step restoring ~1 bucket/file.
   */
@@ -26,34 +20,23 @@ object InvertedIndexStream {
 
   /** Append one micro-batch idempotently. Returns the committed
     * version, or None when `batchId` already committed (replay) or
-    * the batch is empty. */
+    * the batch is empty. `maxSegments > 0` opts into inline
+    * auto-compaction after the append
+    * ([[graft.sources.InvertedIndex.compactIfNeeded]]). */
   def appendBatch(root: String, batch: DataFrame, batchId: Long,
                   idCol: String = "doc_id", textCol: String = "text",
                   nFiles: Int = 16, retain: Int = 4,
                   maxSegments: Int = 0): Option[Long] = {
     val spark = batch.sparkSession
-    val note = s"stream-batch-$batchId"
-    // Two-layer replay dedup: the retained-version notes catch the
-    // immediate replay (incl. a crash between commit and marker); the
-    // durable [[StreamMarkers]] high-water record catches replays
-    // arriving after retention has GC'd the noted version (long
-    // recovery gap) — without it such a batch double-appends and
-    // corrupts the recomposed df/BM25 stats.
-    val replayed = StreamMarkers.seen(spark, root, batchId) ||
-      InvertedIndex.segments.notedVersion(spark, root, note).isDefined
-    if (replayed || batch.isEmpty) None
-    else {
-      val v = InvertedIndex.append(spark, root, batch, idCol, textCol,
-        nFiles, retain, note)
-      StreamMarkers.record(spark, root, batchId)
-      // opt-in inline auto-compaction (cheap for this index: bucket
-      // fold, no global re-sort — 14.5 s at the 5M-doc tier, paying
-      // for itself within ~2 probes; SCALE1000.md r18)
-      if (maxSegments > 0)
-        InvertedIndex.compactIfNeeded(spark, root, maxSegments,
-          nFiles = nFiles, retain = retain)
-      Some(v)
-    }
+    StreamMarkers.once(spark, root, batchId, InvertedIndex.segments, batch)(
+        InvertedIndex.append(spark, root, batch, idCol, textCol, nFiles,
+          retain, _))
+      .map { v =>
+        if (maxSegments > 0)
+          InvertedIndex.compactIfNeeded(spark, root, maxSegments,
+            nFiles = nFiles, retain = retain)
+        v
+      }
   }
 
   /** The writer: wire to `.option("checkpointLocation", …).start()`.

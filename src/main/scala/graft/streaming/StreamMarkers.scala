@@ -1,16 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.SegmentCatalog
 
 /** Durable exactly-once replay guard for index-append sinks.
   *
-  * The commit-note check in [[AnnIndexStream]]/[[InvertedIndexStream]]
-  * scans only the notes of currently RETAINED versions, so a replayed
-  * micro-batch arriving after more than `retain` subsequent commits
-  * (a long recovery gap) would not be detected and would silently
-  * double-append — double-counting postings/vectors and corrupting
-  * BM25/df stats. This record lives OUTSIDE the GC'd version dirs:
+  * The commit-note check of [[once]] scans only the notes of
+  * currently RETAINED versions, so a replayed micro-batch arriving
+  * after more than `retain` subsequent commits (a long recovery gap)
+  * would not be detected and would silently double-append —
+  * double-counting postings/vectors and corrupting BM25/df stats.
+  * This record lives OUTSIDE the GC'd version dirs:
   * one empty marker file per committed batch id under
   * `<root>/_stream/`, plus one `query-<id>` identity file naming the
   * streaming query the root belongs to.
@@ -94,12 +95,43 @@ object StreamMarkers {
         n.stripPrefix("batch-").toLong }
   }
 
+  /** The sink discipline of every segment-log stream sink
+    * ([[GrepIndexStream]], [[InvertedIndexStream]], [[AnnIndexStream]],
+    * [[CurateStream]]), written once. `foreachBatch` + the root's own
+    * Manifest CAS commit: Structured Streaming replays a micro-batch
+    * after a crash (at-least-once at the sink boundary), so `write`
+    * gets the note `stream-batch-<batchId>` to commit as its version's
+    * note — written inside the staged data dir, hence published
+    * atomically WITH the version. Two-layer replay dedup: a batch
+    * whose note is on a retained version of `catalog` at `root`
+    * (the immediate replay, including a crash between commit and
+    * marker), or whose durable marker is recorded (a replay arriving
+    * after retention GC'd the noted version), is skipped — without
+    * the marker such a batch double-appends and corrupts recomposed
+    * stats. An empty batch is skipped too. Otherwise `write` runs and
+    * the marker is recorded. Returns None when skipped. A crash
+    * BEFORE the CAS leaves only unreferenced staged dirs (reclaimed by
+    * the index's `vacuumSegments`), never a half-visible version. */
+  def once[T](spark: SparkSession, root: String, batchId: Long,
+              catalog: SegmentCatalog[_], batch: DataFrame)
+             (write: String => T): Option[T] = {
+    val note = s"stream-batch-$batchId"
+    if (seen(spark, root, batchId) ||
+        catalog.notedVersion(spark, root, note).isDefined || batch.isEmpty)
+      None
+    else {
+      val r = write(note)
+      record(spark, root, batchId)
+      Some(r)
+    }
+  }
+
   /** Highest batch id ever recorded for this index root, if any. */
   def lastBatch(spark: SparkSession, root: String): Option[Long] =
     recordedIds(spark, root).maxOption
 
   /** True iff `batchId` was already committed — replayed micro-batches
-    * must be skipped by the caller. Throws when the calling streaming
+    * are skipped by [[once]]. Throws when the calling streaming
     * query is not the one that owns this root (see object doc). */
   def seen(spark: SparkSession, root: String, batchId: Long): Boolean = {
     guardQueryIdentity(spark, root)

@@ -90,6 +90,17 @@ class DedupSpec extends SparkSpec {
       .select(col("a.id"), col("b.id"), col("a.band_idx"))
       .as[(Long, Long, Int)].collect().toSeq
     assert(gotBits === Seq((11L, 12L, 1)))
+    // one 64-row band is the whole signature: only equal signatures
+    // pair, however many bits the others share
+    val wide = Seq((21L, sig(1, 2, 3, 4)), (22L, sig(1, 2, 3, 4)),
+                   (23L, sig(1, 2, 3, 5)), (24L, -1L)).toDF("id", "sig")
+    val wideBits = Dedup.bitBanded(wide, "sig", 1, 64)
+    val gotWide = wideBits.as("a")
+      .join(wideBits.as("b"), Dedup.firstSharedBand("a", "b", 1,
+        Dedup.bitBandAt("sig", 64)) && col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id"), col("a.band_idx"))
+      .as[(Long, Long, Int)].collect().toSeq
+    assert(gotWide === Seq((21L, 22L, 0)))
     // the same rule inside minhashPairs: no pair twice on a real corpus
     // with many bands per pair
     val pairs = Dedup.minhashPairs(Tables.documents(spark, sfDir), "doc_id", "text",

@@ -58,12 +58,20 @@ class GrepIndexStreamSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet === wantIdx)
 
     // compaction folds the streamed segments into one; probes and the
-    // doc count are unchanged
-    assert(GrepIndex.catalogOf(spark, root).size >= 2)
-    val nDocs = GrepIndex.catalogOf(spark, root).map(_.nDocs).sum
+    // doc count are unchanged, and its tables keep the appended layout
+    val folded = GrepIndex.catalogOf(spark, root)
+    assert(folded.size >= 2)
+    val nDocs = folded.map(_.nDocs).sum
     GrepIndex.compactSegments(spark, root, nFiles = 8)
     assert(GrepIndex.catalogOf(spark, root).size === 1)
     assert(GrepIndex.catalogOf(spark, root).map(_.nDocs).sum === nDocs)
+    val compacted = GrepIndex.catalogOf(spark, root).head
+    def schemaOf(p: String) = spark.read.parquet(p).schema
+    for (f <- folded) {
+      assert(schemaOf(compacted.postings) === schemaOf(f.postings))
+      assert(schemaOf(compacted.stats) === schemaOf(f.stats))
+      assert(schemaOf(compacted.docs) === schemaOf(f.docs))
+    }
     assert(probed(root, Double.MaxValue) === wantIdx)
     // vacuum reclaims the now-unreferenced pre-compaction segments
     // once retention passes them; with the default retain they are

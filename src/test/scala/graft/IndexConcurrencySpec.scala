@@ -122,19 +122,43 @@ class IndexConcurrencySpec extends SparkSpec {
   test("only SegmentCatalog calls Manifest's commit and staging primitives") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def text(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
     val call = ("""Manifest\.(markStaging|clearStaging|discardStaged|""" +
       """vacuumUnreferenced|commitWith)\s*\(""").r
     val owners = Set("SegmentCatalog.scala", "Manifest.scala")
-    val hits = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !owners.contains(p.getFileName.toString))
+    val hits = files.filterNot(p => owners.contains(p.getFileName.toString))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (line, i) if call.findFirstIn(line).isDefined =>
             s"$p:${i + 1}: ${line.trim}"
         }
-      }.toList
+      }
     if (hits.nonEmpty) fail(hits.mkString("\n"))
+    // the stream replay guard: StreamMarkers' seen/record are called
+    // only inside StreamMarkers.once
+    val external = """StreamMarkers\.(seen|record)\s*\(""".r
+    val outside = files.flatMap(p =>
+      external.findAllIn(text(p)).map(m => s"$p: $m"))
+    if (outside.nonEmpty) fail(outside.mkString("\n"))
+    val markers = text(root.resolve("graft/streaming/StreamMarkers.scala"))
+    val once = markers.indexOf("def once")
+    val onceEnd = markers.indexOf("\n  def ", once + 1)
+    assert(once >= 0 && onceEnd > once)
+    for (m <- """(?<!def )\b(seen|record)\(spark""".r.findAllMatchIn(markers))
+      assert(m.start > once && m.start < onceEnd,
+        s"StreamMarkers.${m.group(1)} called outside once")
+    // segment maintenance is defined once, beside the catalog
+    // (catalogOf twice: the catalog's own and the indexes' shared one)
+    val defs = for {
+      p <- files if p.startsWith(root.resolve("graft/sources"))
+      name <- Seq("catalogOf", "compactIfNeeded", "vacuumSegments")
+      _ <- s"""\\bdef $name\\b""".r.findAllIn(text(p))
+    } yield (name, p.getFileName.toString)
+    assert(defs.groupMapReduce(_._1)(_ => 1)(_ + _) ===
+      Map("catalogOf" -> 2, "compactIfNeeded" -> 1, "vacuumSegments" -> 1))
+    assert(defs.map(_._2).toSet === Set("SegmentCatalog.scala"))
   }
 
   test("real append with maxRetries still publishes once, no retry taken") {

@@ -43,9 +43,20 @@ class InvertedIndexStreamSpec extends SparkSpec {
     assert(asRows(InvertedIndex.probe(spark, root, terms, k = 10)) === want)
     // compaction folds the streamed segment pairs into one and probes
     // unchanged — the OPTIMIZE step after many micro-batches
-    assert(InvertedIndex.catalogOf(spark, root).size >= 2)
+    val folded = InvertedIndex.catalogOf(spark, root)
+    assert(folded.size >= 2)
     InvertedIndex.compactSegments(spark, root, nFiles = 8)
     assert(InvertedIndex.catalogOf(spark, root).size === 1)
+    // corpus stats fold by integer sums, and the compacted tables keep
+    // the appended layout (d0 included)
+    val compacted = InvertedIndex.catalogOf(spark, root).head
+    assert(compacted.nDocs === folded.map(_.nDocs).sum)
+    assert(compacted.sumDl === folded.map(_.sumDl).sum)
+    def schemaOf(p: String) = spark.read.parquet(p).schema
+    for (f <- folded) {
+      assert(schemaOf(compacted.postings) === schemaOf(f.postings))
+      assert(schemaOf(compacted.dictionary) === schemaOf(f.dictionary))
+    }
     assert(asRows(InvertedIndex.probe(spark, root, terms, k = 10)) === want)
   }
 

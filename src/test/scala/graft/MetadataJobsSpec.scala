@@ -151,6 +151,35 @@ class MetadataJobsSpec extends SparkSpec {
     assert(profiles.map(_.jobs).sum === started)
   }
 
+  test("one BM25 probe and one ANN probe start a pinned number of jobs") {
+    val roots = curated
+    val queries = Seq((1L, Array(1f, 1f, 0f, 0f)), (2L, Array(2f, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    assert(jobsOf(InvertedIndex.probe(spark, roots.inv, Seq("needle3", "shared"),
+      k = 5).collect()) === 7)
+    assert(jobsOf(AnnIndex.probe(spark, roots.ann, queries, k = 3, nprobe = 2)
+      .collect()) === 9)
+  }
+
+  test("segment maintenance plans on the driver: pinned jobs") {
+    val (grep, roots) = (grepRoot, curated)
+    // below the threshold the policy reads only the catalog
+    assert(jobsOf(GrepIndex.compactIfNeeded(spark, grep)) === 0)
+    assert(jobsOf(InvertedIndex.compactIfNeeded(spark, roots.inv)) === 0)
+    assert(jobsOf(AnnIndex.compactIfNeeded(spark, roots.ann)) === 0)
+    assert(jobsOf(GrepIndex.vacuumSegments(spark, grep)) === 0)
+    assert(jobsOf(InvertedIndex.vacuumSegments(spark, roots.inv)) === 0)
+    assert(jobsOf(AnnIndex.vacuumSegments(spark, roots.ann)) === 0)
+    assert(jobsOf(Curate.vacuumSegments(spark, roots)) === 0)
+    // the curation compaction: the range sample, the exchange and the
+    // write of each non-empty kind; emptiness comes from the catalog
+    val cur = Curate.tempRoots("metajobs-compact")
+    runBatch(cur, 0L)
+    runBatch(cur, 100L)
+    assert(jobsOf(Curate.compact(spark, cur)) === 6)
+    assert(Curate.readCorpus(spark, cur).count() === 80L)
+  }
+
   test("building the curated corpus frame starts no job") {
     val roots = curated
     assert(jobsOf(Curate.readCorpus(spark, roots)) === 0)
